@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens, word_shingles
-from ..session import scoped_persist
+from ..session import query_scope, scoped
 
 NUM_HASHES = 32
 ROWS_PER_BAND = 2
@@ -91,6 +91,7 @@ def doc_shingle_hashes(docs: DataFrame, n: int = SHINGLE_WORDS) -> DataFrame:
     )
 
 
+@scoped
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -115,10 +116,10 @@ def ngram_jaccard_pairs(
     MinHash+LSH twin (``minhash_lsh_dup_pairs``), whose candidate
     volume is bounded by the band structure instead of df².
 
-    ``shingles`` injects a caller-persisted ``doc_shingles`` frame (the
-    ANN family's ``shared`` pattern) so a multi-method sweep like
-    ``neardup_recall_report`` builds the shingle table once."""
-    sh = shingles if shingles is not None else scoped_persist(doc_shingles(docs))
+    ``shingles`` injects a caller-persisted ``doc_shingles`` frame so a
+    multi-method sweep like ``neardup_recall_report`` builds the
+    shingle table once."""
+    sh = shingles if shingles is not None else query_scope().persist(doc_shingles(docs))
     sizes = sh.select("doc_id", F.size("shingles").alias("n"))
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
     a = ex.select(F.col("doc_id").alias("doc_a"), "s")
@@ -223,6 +224,7 @@ def _band_buckets(sig: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def minhash_lsh_dup_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -235,15 +237,14 @@ def minhash_lsh_dup_pairs(
     The shingle-hash table feeds three consumers (signatures + both
     sides of the verification join) — persist it so the scan/shingle
     work runs once; the hash form (``doc_shingle_hashes``) keeps the
-    cache small and cheap to build. The cache is scoped: the next
-    scoped persist anywhere in the package releases it, so registry
+    cache small and cheap to build. The cache lives in the query scope
+    (released when the next top-level build starts), so registry
     sweeps don't accumulate cached blocks. ``shingle_hashes`` injects
-    a caller-persisted frame (the shared-sweep pattern; see
-    ``neardup_recall_report``)."""
+    a caller-persisted frame (see ``neardup_recall_report``)."""
     sh = (
         shingle_hashes
         if shingle_hashes is not None
-        else scoped_persist(doc_shingle_hashes(docs))
+        else query_scope().persist(doc_shingle_hashes(docs))
     )
     return _verified_lsh_pairs(sh, threshold)
 
@@ -408,6 +409,7 @@ CONTAM_BENCH_MOD = 25  # doc_id % 25 == 0 → deterministic "benchmark" set
 CONTAINMENT_THRESHOLD = 0.5
 
 
+@scoped
 def docs_contamination(docs: DataFrame) -> DataFrame:
     """Benchmark-contamination check (the decontamination step of an
     LLM training pipeline): for every training doc, the fraction of its
@@ -424,7 +426,7 @@ def docs_contamination(docs: DataFrame) -> DataFrame:
     sizes, hit counting) — scope-persisted so the shingle build runs
     once per action, also when this whole query is a subtree of
     ``curated_documents`` (measured 4× there without it)."""
-    sh = scoped_persist(doc_shingles(docs))
+    sh = query_scope().persist(doc_shingles(docs))
     is_bench = F.col("doc_id") % CONTAM_BENCH_MOD == 0
     bench = (
         sh.filter(is_bench)
@@ -457,6 +459,7 @@ def docs_contamination(docs: DataFrame) -> DataFrame:
 CONTAM_BLOOM_BITS = 1 << 20
 
 
+@scoped
 def docs_contamination_bloom(docs: DataFrame) -> DataFrame:
     """The 100 TB twin of ``docs_contamination``: a broadcast BLOOM
     FILTER over the benchmark shingles prefilters the corpus side, and
@@ -483,7 +486,7 @@ def docs_contamination_bloom(docs: DataFrame) -> DataFrame:
     the same idea for equi-joins; this is the explicit form with a
     hand-set bucket count, kept exact so the oracle is the plain
     computation."""
-    sh = scoped_persist(doc_shingles(docs))
+    sh = query_scope().persist(doc_shingles(docs))
     is_bench = F.col("doc_id") % CONTAM_BENCH_MOD == 0
     bench = (
         sh.filter(is_bench)
@@ -518,6 +521,7 @@ def docs_contamination_bloom(docs: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def ngram_containment_pairs(
     docs: DataFrame,
     threshold: float = CONTAINMENT_THRESHOLD,
@@ -543,7 +547,7 @@ def ngram_containment_pairs(
     the aggregated pair result instead, which is smaller than the
     posting list by the dedup factor. ``shingles`` injects a
     caller-persisted frame (shared-sweep pattern)."""
-    sh = shingles if shingles is not None else scoped_persist(doc_shingles(docs))
+    sh = shingles if shingles is not None else query_scope().persist(doc_shingles(docs))
     sizes = sh.select("doc_id", F.size("shingles").alias("n"))
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
     a = ex.select(F.col("doc_id").alias("doc_a"), "s")
@@ -726,9 +730,8 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return votes.withColumns(chunks).select("doc_id", *chunks.keys())
 
 
-def simhash_dup_pairs(
-    docs: DataFrame, max_hamming: int = 3, chain: bool = False
-) -> DataFrame:
+@scoped
+def simhash_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with SimHash hamming distance ≤ max_hamming,
     blocked by the pigeonhole principle on 16-bit chunks (d ≤ 3 < 4
     chunks ⇒ at least one chunk matches exactly).
@@ -741,13 +744,11 @@ def simhash_dup_pairs(
     spread across tasks (a 16-bit chunk domain WILL have hot buckets at
     corpus scale, and AQE skew-split only helps a join).
 
-    ``chain=True`` joins the caller's persist scope instead of opening
-    a new one — REQUIRED when a sweep caller (neardup_recall_report)
-    holds its own chained frames: a non-chained persist here would
-    release the caller's whole chain at plan-build time and every
-    shared frame would silently recompute (measured 3x on the
-    report)."""
-    sig = scoped_persist(simhash_signatures(docs), chain=chain)
+    Called from a sweep (neardup_recall_report), the signature cache
+    joins the sweep's scope, so the sweep's own cached frames stay
+    alive (releasing them at plan-build time made every shared frame
+    recompute — measured 3x on the report)."""
+    sig = query_scope().persist(simhash_signatures(docs))
     chunk_arr = F.array(
         *[
             F.struct(F.lit(j).alias("chunk_idx"), F.col(f"c{j}").alias("chunk_val"))
@@ -900,6 +901,7 @@ def pack_documents(
 DUP_SPAN_K = 8
 
 
+@scoped
 def dup_span_stats(docs: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     """Exact duplicated-span coverage (the RefinedWeb / "exact
     substring dedup" signal, positionally approximated with k-token
@@ -917,7 +919,7 @@ def dup_span_stats(docs: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     final per-doc count. Work ∝ token volume + k·|dup grams|; no
     windows, no driver collect."""
     toks = docs.select("doc_id", tokens("text").alias("t")).filter(F.size("t") > 0)
-    sh = scoped_persist(
+    sh = query_scope().persist(
         toks.filter(F.size("t") >= k)
         .select(
             "doc_id",
@@ -960,6 +962,7 @@ def dup_span_stats(docs: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     )
 
 
+@scoped
 def remove_dup_spans(docs: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     """Exact-substring dedup REMOVAL (the RefinedWeb rewrite step that
     ``dup_span_stats`` only measures): every token position covered by
@@ -983,7 +986,7 @@ def remove_dup_spans(docs: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     value-hash-oracled (oracles.py mirrors it with string_agg ORDER BY
     in DuckDB)."""
     toks = docs.select("doc_id", tokens("text").alias("t")).filter(F.size("t") > 0)
-    sh = scoped_persist(
+    sh = query_scope().persist(
         toks.filter(F.size("t") >= k)
         .select(
             "doc_id",
@@ -1116,6 +1119,7 @@ def mixture_sample_documents(docs: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def neardup_recall_report(docs: DataFrame) -> DataFrame:
     """Near-dup index-quality dashboard — the dedup-family analog of
     ``ann_recall_report``: precision/recall of every SCALABLE pair
@@ -1137,24 +1141,24 @@ def neardup_recall_report(docs: DataFrame) -> DataFrame:
     dashboard itself oracle-able).
 
     The shingle tables (string form for jaccard/containment, hash form
-    for minhash) and the truth set are persisted ONCE in one chained
-    scope and injected into every method — the shared-frame lesson of
+    for minhash) and the truth set are persisted ONCE in the report's
+    query scope and injected into every method — the shared-frame lesson of
     ann_recall_report applied here from the start (each method would
     otherwise re-tokenize and re-shingle the corpus)."""
     # The string-shingle cache is expensive to WRITE (~25-char strings
     # through columnar compression) but it feeds FOUR instantiations —
     # both sides of the truth self-join and both sides of containment's
     # — so caching still wins (uncached: 60s, cached: 11s at sf0.1).
-    sh_str = scoped_persist(doc_shingles(docs))
-    sh_hash = scoped_persist(doc_shingle_hashes(docs), chain=True)
-    truth = scoped_persist(
-        ngram_jaccard_pairs(docs, shingles=sh_str).select("doc_a", "doc_b"),
-        chain=True,
+    scope = query_scope()
+    sh_str = scope.persist(doc_shingles(docs))
+    sh_hash = scope.persist(doc_shingle_hashes(docs))
+    truth = scope.persist(
+        ngram_jaccard_pairs(docs, shingles=sh_str).select("doc_a", "doc_b")
     )
     total = truth.agg(F.count("*").alias("n_true"))
     methods = (
         ("minhash_lsh", lambda d: minhash_lsh_dup_pairs(d, shingle_hashes=sh_hash)),
-        ("simhash", lambda d: simhash_dup_pairs(d, chain=True)),
+        ("simhash", simhash_dup_pairs),
         ("containment", lambda d: ngram_containment_pairs(d, shingles=sh_str)),
     )
     # r10 (VERDICT r9 item 6, guide §2.3/§5): each method's pair
@@ -1188,14 +1192,20 @@ def neardup_recall_report(docs: DataFrame) -> DataFrame:
             F.coalesce("n_pairs", F.lit(0)).cast("long").alias("n_pairs"),
             F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
             F.col("n_true").cast("long").alias("n_true"),
-            F.when(
-                F.col("n_pairs") > 0,
-                F.round(F.col("n_hit") / F.col("n_pairs").cast("double"), 6),
-            ).alias("precision"),
-            F.when(
-                F.col("n_true") > 0,
-                F.round(F.col("n_hit") / F.col("n_true").cast("double"), 6),
-            ).alias("recall"),
+        )
+        # ratios over the coalesced counts: a zero-pair method gets
+        # recall 0.0 (the oracle's COUNT = 0), not NULL
+        .withColumns(
+            {
+                "precision": F.when(
+                    F.col("n_pairs") > 0,
+                    F.round(F.col("n_hit") / F.col("n_pairs").cast("double"), 6),
+                ),
+                "recall": F.when(
+                    F.col("n_true") > 0,
+                    F.round(F.col("n_hit") / F.col("n_true").cast("double"), 6),
+                ),
+            }
         )
     )
 
@@ -1354,6 +1364,7 @@ def clean_documents_keep_best(docs: DataFrame, threshold: float = 0.8) -> DataFr
     )
 
 
+@scoped
 def docs_dedup_report(docs: DataFrame) -> DataFrame:
     """One-row dedup-pipeline observability report — the numbers a
     curation run logs after every stage: corpus size, exact-dup group
@@ -1384,7 +1395,7 @@ def docs_dedup_report(docs: DataFrame) -> DataFrame:
     # refreshed A/B (min-of-3, same session) measured the shared form
     # FASTER (8.29s vs 8.64s at sf0.1) — and it is the right shape at
     # scale: one contamination scan instead of two.
-    contam_tbl = scoped_persist(docs_contamination(docs), chain=True)
+    contam_tbl = query_scope().persist(docs_contamination(docs))
     contam = (
         contam_tbl
         .filter(F.col("contamination_ratio") > CURATED_MAX_CONTAM)
@@ -1403,6 +1414,7 @@ def docs_dedup_report(docs: DataFrame) -> DataFrame:
 SEG_WORDS = 10
 
 
+@scoped
 def dedup_segments(docs: DataFrame, k: int = SEG_WORDS) -> DataFrame:
     """C4-style segment-level dedup (Raffel et al. 2020 deduplicate
     "any three-sentence span"; here the unit is a consecutive
@@ -1427,7 +1439,7 @@ def dedup_segments(docs: DataFrame, k: int = SEG_WORDS) -> DataFrame:
     Cross-engine determinism: integer positions, a MIN keeper rule,
     and position-ordered concat — fully value-hash-oracled (DuckDB
     mirror groups by the same md5 and orders string_agg by seg_idx)."""
-    toks = scoped_persist(
+    toks = query_scope().persist(
         docs.select("doc_id", tokens("text").alias("t")).filter(F.size("t") > 0)
     )
     n_seg = F.ceil(F.size("t") / F.lit(k)).cast("int")
@@ -1473,6 +1485,7 @@ def dedup_segments(docs: DataFrame, k: int = SEG_WORDS) -> DataFrame:
 INCR_MOD = 3  # doc_id % INCR_MOD == 0 → incoming batch; else established corpus
 
 
+@scoped
 def dedup_incremental(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Incremental (cross-corpus) near-dup dedup: screen an INCOMING
     batch against an ESTABLISHED corpus — the shape every production
@@ -1501,7 +1514,7 @@ def dedup_incremental(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     1-(1-j²)^16 LSH-recall argument as ``minhash_lsh_dup_pairs``
     (miss p ≈ 8e-8 at j = 0.8; deterministic, parity-asserted)."""
     is_new = F.col("doc_id") % INCR_MOD == 0
-    sh = scoped_persist(doc_shingle_hashes(docs))
+    sh = query_scope().persist(doc_shingle_hashes(docs))
     buckets = _band_buckets(minhash_signatures(sh, shingles=sh))
     cand = (
         buckets.filter(is_new)
@@ -1650,6 +1663,7 @@ def split_leakage_report(
     )
 
 
+@scoped
 def docs_ngram_novelty(docs: DataFrame) -> DataFrame:
     """Crawl-saturation metric: per document, the fraction of its
     distinct word shingles appearing for the FIRST time in doc_id
@@ -1678,7 +1692,7 @@ def docs_ngram_novelty(docs: DataFrame) -> DataFrame:
     # tokenize+shingle+hash pass ran twice per execution. The hash-array
     # form is the documented cheap-to-cache representation
     # (doc_shingle_hashes docstring).
-    sh = scoped_persist(doc_shingle_hashes(docs))
+    sh = query_scope().persist(doc_shingle_hashes(docs))
     base = sh.select("doc_id", F.size("hs").cast("long").alias("n_grams"))
     ex = sh.select("doc_id", F.explode("hs").alias("g"))
     first = ex.groupBy("g").agg(F.min("doc_id").alias("doc_id"))

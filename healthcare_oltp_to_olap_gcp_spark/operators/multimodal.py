@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import query_scope, scoped
+
 META_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -272,6 +274,7 @@ def multimodal_phash(with_payload: DataFrame) -> DataFrame:
     return with_payload.select("doc_id", "payload").mapInPandas(gen, PH_SCHEMA)
 
 
+@scoped
 def multimodal_phash_pairs(
     with_payload: DataFrame, max_hamming: int = PH_MAX_HAMMING
 ) -> DataFrame:
@@ -288,9 +291,7 @@ def multimodal_phash_pairs(
     bit extraction is Python (Arrow-batched, the multimodal decode
     seam). Everything is exact integers ⇒ full value-hash oracle via
     DuckDB hex math (multimodal_audio_energy's convention)."""
-    from ..session import scoped_persist
-
-    h = scoped_persist(multimodal_phash(with_payload))
+    h = query_scope().persist(multimodal_phash(with_payload))
     band_val = F.aggregate(
         F.slice("bits", F.col("k") * PH_BAND_BITS + 1, PH_BAND_BITS),
         F.lit(0).cast("long"),

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import tokens
-from ..session import scoped_persist
+from ..session import query_scope, scoped
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -66,55 +66,49 @@ DEFAULT_K = 10
 # θ = the ⌈V/2⌉-th smallest df value (exact integer rank rule).
 
 
-def _bm25_frames(docs: DataFrame, df_cap: bool, shared: dict | None = None):
-    """Shared frame construction for the scorer and the work-proxy:
-    (tf, df, dl, stats, qt). ``qt`` is the (query, term) probe side
-    AFTER the df-cap semi-join when ``df_cap``, so candidate work
-    measured on these frames is exactly the work the scorer does.
-
-    ``shared`` lets a multi-method caller (retrieval_quality_report's
-    four retrievers) tokenize and persist the postings ONCE — the tf
-    persist then CHAINS into the caller's scope instead of evicting
-    its other cached frames (the truth table), r7.
+def _postings(docs: DataFrame) -> DataFrame:
+    """The (doc_id, term, tf, dl) postings, tokenized and persisted
+    ONCE per query scope and docs frame, so a multi-method caller
+    (retrieval_quality_report's six retrievers) tokenizes once (r7).
 
     r9 OPTIMIZATION (guide §2.4 — remove shuffles outright): the
     postings are hash-partitioned by ``doc_id`` (not round-robin), so
     the (doc_id, term) aggregation needs NO second exchange (subset
     rule) and every later doc-keyed consumer — the candidate joins in
-    the WAND contribution table, the exchange-free ``dl`` re-derivation below —
-    reuses the persisted partitioning. The per-doc length ``dl`` is
-    attached to every posting row as a partition-local window sum —
-    the length norm stored next to each posting at index-build time,
-    exactly Lucene's per-doc norms — which deletes the doc-keyed
-    dl-join (an exchange of every candidate row) from every scorer."""
-    if shared is not None and shared.get("tf") is not None:
-        tf = shared["tf"]
-    else:
+    the WAND contribution table, the exchange-free ``dl`` re-derivation
+    in ``_bm25_frames`` — reuses the persisted partitioning. The
+    per-doc length ``dl`` is attached to every posting row as a
+    partition-local window sum — the length norm stored next to each
+    posting at index-build time, exactly Lucene's per-doc norms — which
+    deletes the doc-keyed dl-join (an exchange of every candidate row)
+    from every scorer."""
+    scope = query_scope()
+
+    def build():
         par = docs.sparkSession.sparkContext.defaultParallelism
         tok = docs.repartition(par, "doc_id").select(
             "doc_id", F.explode(tokens("text")).alias("term")
         )
         # postings (doc, term, tf, dl): one tokenize, one exchange; dl
         # rides every posting row (index-time norms)
-        tf = scoped_persist(
+        return scope.persist(
             tok.groupBy("doc_id", "term")
             .agg(F.count("*").alias("tf"))
-            .withColumn("dl", F.sum("tf").over(Window.partitionBy("doc_id"))),
-            chain=shared is not None,
+            .withColumn("dl", F.sum("tf").over(Window.partitionBy("doc_id")))
         )
-        if shared is not None:
-            shared["tf"] = tf
+
+    return scope.memo(("postings", docs), build)
+
+
+def _bm25_frames(docs: DataFrame, df_cap: bool):
+    """Shared frame construction for the scorer and the work-proxy:
+    (tf, df, dl, stats, qt). ``qt`` is the (query, term) probe side
+    AFTER the df-cap semi-join when ``df_cap``, so candidate work
+    measured on these frames is exactly the work the scorer does."""
+    tf = _postings(docs)
     # compat frame for callers that want one row per doc; derived
     # WITHOUT an exchange (tf is doc_id-partitioned)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    # r9: a multi-probe caller (rm3's two passes + cap semi-joins,
-    # retrieval_quality_report's six retrievers) references the
-    # vocab-sized df (and under the cap, its θ-window) several times
-    # per execution — stash the tiny frames in ``shared`` so the agg
-    # and the cap window run once per caller scope.
-    dfk = "df_cap" if df_cap else "df"
-    if shared is not None and shared.get(dfk) is not None:
-        return tf, shared[dfk], dl, shared["stats"], shared[dfk + "_qt"]
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     if df_cap:
         # θ = ⌈V/2⌉-th smallest df: rank the vocab by (df, term), take
@@ -150,15 +144,24 @@ def _bm25_frames(docs: DataFrame, df_cap: bool, shared: dict | None = None):
         # just a scoring filter (the inner df join below would already
         # make the RESULT identical)
         qt = qt.join(df.select("term"), "term", "left_semi")
-    if shared is not None:
-        df = scoped_persist(df, chain=True)
-        if shared.get("stats") is None:
-            shared["stats"] = scoped_persist(stats, chain=True)
-        stats = shared["stats"]
-        shared[dfk], shared[dfk + "_qt"] = df, qt
     return tf, df, dl, stats, qt
 
 
+def _persist_vocab(docs: DataFrame, df_cap: bool) -> None:
+    """r9: persist the vocab-sized ``df`` (under the cap, with its
+    θ-window) and ``stats`` frames of ``_bm25_frames`` for a
+    multi-probe caller (rm3's two passes + cap semi-joins,
+    retrieval_quality_report's six retrievers), so the agg and the cap
+    window run once per query scope. Every later ``_bm25_frames`` call
+    rebuilds the same plans, which Spark's cache manager answers from
+    these copies."""
+    scope = query_scope()
+    _, df, _, stats, _ = _bm25_frames(docs, df_cap)
+    scope.memo(("df", docs, df_cap), lambda: scope.persist(df))
+    scope.memo(("stats", docs), lambda: scope.persist(stats))
+
+
+@scoped
 def bm25_candidate_rows(docs: DataFrame, df_cap: bool = False) -> int:
     """Work proxy for the BM25 probe: the number of candidate
     (query, posting) rows the scorer materializes — |tf ⋈ qt| after the
@@ -212,11 +215,11 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+@scoped
 def bm25_topk(
     docs: DataFrame,
     k: int = DEFAULT_K,
     df_cap: bool = False,
-    shared: dict | None = None,
     workload: DataFrame | None = None,
 ) -> DataFrame:
     """Exact BM25 top-k retrieval: every ``doc_id % QUERY_MOD == 0``
@@ -249,7 +252,7 @@ def bm25_topk(
     does not grow with the corpus, and parameterizing it makes that
     deployment claim measurable (see ``bm25_workload_topk``). ``None``
     leaves the default path — and its plan — untouched."""
-    tf, df, dl, stats, qt = _bm25_frames(docs, df_cap, shared)
+    tf, df, dl, stats, qt = _bm25_frames(docs, df_cap)
     if workload is not None:
         qt = qt.join(F.broadcast(workload), "query_id", "left_semi")
     idf, weight = _okapi_exprs()
@@ -314,6 +317,7 @@ def bm25_workload_topk(
     return bm25_topk(docs, k=k, workload=wl)
 
 
+@scoped
 def bm25_chunk_maxp_topk(
     docs: DataFrame, k: int = DEFAULT_K
 ) -> DataFrame:
@@ -353,7 +357,6 @@ def bm25_chunk_maxp_topk(
     expressions (6-dp-rounded DECIMAL-summed contributions); the MaxP
     argmax is a (score, -chunk_idx) struct max — full value-hash
     oracle, chunking mirrored in DuckDB via list_slice."""
-    from ..session import scoped_persist
     from .textquality import chunk_documents
 
     # r9 (guide §2.4, the _bm25_frames restructure applied chunk-level):
@@ -363,7 +366,7 @@ def bm25_chunk_maxp_topk(
     # sum; df folds into the broadcast query side. The per-candidate
     # df/dl shuffle joins are gone.
     chunks = chunk_documents(docs)
-    ctf = scoped_persist(
+    ctf = query_scope().persist(
         chunks.select(
             "doc_id", "chunk_idx", F.explode(tokens("chunk_text")).alias("term")
         )
@@ -434,6 +437,7 @@ def bm25_chunk_maxp_topk(
     )
 
 
+@scoped
 def bm25_index_stats_report(docs: DataFrame) -> DataFrame:
     """Lexical index-health dashboard (r9) — the BM25 sibling of
     ``similarity.ann_index_balance_report``: one row of the inverted-
@@ -566,7 +570,7 @@ def _score_pairs_c(contrib: DataFrame, qt, cand: DataFrame) -> DataFrame:
     )
 
 
-def _wand_candidates(docs: DataFrame, k: int, shared: dict | None = None):
+def _wand_candidates(docs: DataFrame, k: int):
     """Shared machinery for ``bm25_wand_topk`` and its work proxy:
     returns (tf, df, dl, stats, qt, cand) where ``cand`` is the pruned
     candidate (query_id, doc_id) set MaxScore admits.
@@ -586,18 +590,16 @@ def _wand_candidates(docs: DataFrame, k: int, shared: dict | None = None):
          unioned with the seed docs.
     Queries with fewer than k seed candidates get no θ row and keep
     every term essential (falls back to the exact full probe)."""
-    tf, df, dl, stats, qt = _bm25_frames(docs, False, shared)
-    from ..session import scoped_persist
-
-    # chain=True: tf was persisted by _bm25_frames in this same scope
-    qt = scoped_persist(qt, chain=True)
+    tf, df, dl, stats, qt = _bm25_frames(docs, False)
+    scope = query_scope()
+    qt = scope.persist(qt)
     # r10: ONE persisted contribution table serves the upper bounds,
     # the seed lists, the seed scoring and the final probe (see
     # _contributions) — the ub scan, theta broadcast build and final
     # scoring previously each re-derived the postings fragment
-    contrib = scoped_persist(_contributions(tf, df, stats, qt), chain=True)
+    contrib = scope.persist(_contributions(tf, df, stats, qt))
     ub = _term_bounds(contrib)
-    qub = scoped_persist(qt.join(F.broadcast(ub), "term"), chain=True)
+    qub = scope.persist(qt.join(F.broadcast(ub), "term"))
     w_seed = Window.partitionBy("query_id").orderBy(
         F.col("ub").desc(), "term"
     )
@@ -606,11 +608,10 @@ def _wand_candidates(docs: DataFrame, k: int, shared: dict | None = None):
         .filter(F.col("_rn") == 1)
         .select("query_id", "term")
     )
-    seed = scoped_persist(
+    seed = scope.persist(
         contrib.join(F.broadcast(seed_terms), "term")
         .filter(F.col("doc_id") != F.col("query_id"))
-        .select("query_id", "doc_id"),
-        chain=True,
+        .select("query_id", "doc_id")
     )
     w_rank = Window.partitionBy("query_id").orderBy(
         F.col("_s").desc(), F.col("doc_id")
@@ -641,9 +642,8 @@ def _wand_candidates(docs: DataFrame, k: int, shared: dict | None = None):
     return contrib, qt, seed, cand
 
 
-def bm25_wand_topk(
-    docs: DataFrame, k: int = DEFAULT_K, shared: dict | None = None
-) -> DataFrame:
+@scoped
+def bm25_wand_topk(docs: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """BM25 top-k with WAND/MaxScore upper-bound pruning — the 100 TB
     add-on the module docstring documents: instead of scoring every
     (query term × posting) row, per-term score upper bounds (index
@@ -661,10 +661,11 @@ def bm25_wand_topk(
     vocabularies the essential-list cut removes the boilerplate
     high-df lists that dominate Σ df — the measured candidate-row cut
     is asserted on a skewed corpus in tests/test_curation_ops.py."""
-    contrib, qt, _seed, cand = _wand_candidates(docs, k, shared)
+    contrib, qt, _seed, cand = _wand_candidates(docs, k)
     return _rank_topk(_score_pairs_c(contrib, qt, cand), k)
 
 
+@scoped
 def bm25_wand_candidate_rows(docs: DataFrame, k: int = DEFAULT_K) -> int:
     """Work proxy for the WAND path, comparable row-for-row with
     ``bm25_candidate_rows``: the number of (query, doc, term)
@@ -687,13 +688,13 @@ def bm25_wand_candidate_rows(docs: DataFrame, k: int = DEFAULT_K) -> int:
 RERANK_M = 25  # first-stage candidate depth per query
 
 
+@scoped
 def bm25_rerank_topk(
     docs: DataFrame,
     embeddings: DataFrame,
     m: int = RERANK_M,
     k: int = DEFAULT_K,
     df_cap: bool = False,
-    shared: dict | None = None,
     cand: DataFrame | None = None,
 ) -> DataFrame:
     """Two-stage retrieval — the shape every production RAG stack runs:
@@ -724,33 +725,15 @@ def bm25_rerank_topk(
     recall stage's candidate work by the capped posting lists while the
     rerank stage is unchanged; separately oracled, like the bm25 twins
     themselves."""
-    from ..functions.vectors import as_double, normalized
+    from ..functions.vectors import dot
 
     # ``cand`` lets a multi-retriever caller (retrieval_quality_report)
     # inject ONE persisted stage-1 ranked frame instead of re-probing
     # the postings per cascade variant (r7)
     if cand is None:
-        cand = bm25_topk(docs, k=m, df_cap=df_cap, shared=shared)
+        cand = bm25_topk(docs, k=m, df_cap=df_cap)
     cand = cand.select("query_id", "doc_id", F.col("rank").alias("bm25_rank"))
-    # r10 (guide §5 reuse): a shared-frame caller (the quality report,
-    # which runs BOTH cascade variants) already persists the normalized
-    # corpus and query frames — reuse them instead of re-normalizing
-    # the embedding table per cascade (same normalize expression, so
-    # values are identical); standalone calls keep the original plan.
-    if shared is not None and shared.get("corpus") is not None:
-        emb = shared["corpus"].select(
-            F.col("neighbor_id").alias("vec_id"), F.col("cv").alias("nv")
-        )
-        qv = shared["qs"]
-    else:
-        emb = embeddings.select(
-            "vec_id", normalized(as_double("embedding")).alias("nv")
-        )
-        qv = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("nv").alias("qv")
-        )
-    from ..functions.vectors import dot
-
+    emb, qv = _rerank_vectors(embeddings)
     scored = (
         emb.join(F.broadcast(cand), emb.vec_id == cand.doc_id)
         .join(F.broadcast(qv), "query_id")
@@ -771,9 +754,41 @@ def bm25_rerank_topk(
     )
 
 
+def _rerank_vectors(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The rerank stage's (vec_id, nv) document vectors and (query_id,
+    qv) query vectors, memoized per embeddings frame in the query
+    scope; standalone calls get the plain normalized table."""
+    from ..functions.vectors import as_double, normalized
+
+    def plain():
+        emb = embeddings.select("vec_id", normalized(as_double("embedding")).alias("nv"))
+        qv = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+            F.col("vec_id").alias("query_id"), F.col("nv").alias("qv")
+        )
+        return emb, qv
+
+    return query_scope().memo(("rerank_vectors", embeddings), plain)
+
+
+def _reuse_rerank_vectors(embeddings: DataFrame, corpus: DataFrame, qs: DataFrame) -> None:
+    """r10 (guide §5 reuse): memoize a caller's persisted ``_corpus`` /
+    ``_queries`` frames as the rerank vectors, so a caller running BOTH
+    cascade variants (the quality report) never re-normalizes the
+    embedding table (same normalize expression, so values are
+    identical)."""
+    query_scope().memo(
+        ("rerank_vectors", embeddings),
+        lambda: (
+            corpus.select(F.col("neighbor_id").alias("vec_id"), F.col("cv").alias("nv")),
+            qs,
+        ),
+    )
+
+
 BM25_INCR_MOD = 3  # doc_id % BM25_INCR_MOD == 0 → incoming batch
 
 
+@scoped
 def bm25_index_incremental(docs: DataFrame) -> DataFrame:
     """Incremental BM25-index maintenance — the lexical sibling of
     ``ann_index_incremental`` (and the Lucene segment-merge story): an
@@ -805,7 +820,7 @@ def bm25_index_incremental(docs: DataFrame) -> DataFrame:
     # r9: hash-partition by doc_id — the (doc_id, term) aggregation
     # then needs no second exchange (subset rule, guide §2.4) and the
     # round-robin sort-before-repartition cost is gone.
-    tf = scoped_persist(
+    tf = query_scope().persist(
         docs.repartition(par, "doc_id")
         .select("doc_id", F.explode(tokens("text")).alias("term"))
         .groupBy("doc_id", "term")
@@ -850,6 +865,7 @@ def _gain(rank_col: F.Column) -> F.Column:
     ).cast("decimal(18,8)")
 
 
+@scoped
 def retrieval_quality_report(
     docs: DataFrame, embeddings: DataFrame, k: int = DEFAULT_K
 ) -> DataFrame:
@@ -883,22 +899,21 @@ def retrieval_quality_report(
     on tiny ranked lists and the report collapses to 4 rows. Every
     gain term is rounded-then-DECIMAL-summed (order-independent), all
     ranks are total orders ⇒ full value-hash oracle."""
-    from ..session import scoped_persist
     from .similarity import _corpus, _queries, ann_brute_topk
 
-    # one shared cache scope for all six retrievers: the normalized
-    # corpus/query frames feed the truth pass AND hybrid_rrf's dense
-    # list; the postings persist (keyed "tf" by _bm25_frames) feeds
-    # every lexical stage
-    shared: dict = {}
-    shared["corpus"] = scoped_persist(_corpus(embeddings))
-    shared["qs"] = scoped_persist(_queries(embeddings), chain=True)
-    truth = scoped_persist(
-        ann_brute_topk(embeddings, k, shared=shared).select(
+    # one query scope for all six retrievers: the normalized
+    # corpus/query frames feed the truth pass, hybrid_rrf's dense list
+    # and both rerank cascades; the postings (``_postings``) and vocab
+    # (``_persist_vocab``) persists feed every lexical stage
+    scope = query_scope()
+    corpus = scope.persist(_corpus(embeddings))
+    qs = scope.persist(_queries(embeddings))
+    truth = scope.persist(
+        ann_brute_topk(embeddings, k).select(
             "query_id", F.col("neighbor_id").alias("doc_id")
-        ),
-        chain=True,
+        )
     )
+    _reuse_rerank_vectors(embeddings, corpus, qs)
     # per-query ideal DCG over its |truth| positions (k when the corpus
     # has at least k+1 docs; exact either way)
     per_q_truth = truth.groupBy("query_id").agg(F.count("*").alias("n_rel"))
@@ -919,39 +934,32 @@ def retrieval_quality_report(
     # frame (RRF_M == RERANK_M), and rm3's feedback docs are the
     # uncapped top-fb_m prefix. Only rm3's pass 2 probes the postings
     # again (its term set is genuinely different).
-    lex25 = scoped_persist(
-        bm25_topk(docs, k=RERANK_M, shared=shared), chain=True
-    )
-    lex25c = scoped_persist(
-        bm25_topk(docs, k=RERANK_M, df_cap=True, shared=shared), chain=True
-    )
+    _persist_vocab(docs, False)
+    lex25 = scope.persist(bm25_topk(docs, k=RERANK_M))
+    _persist_vocab(docs, True)
+    lex25c = scope.persist(bm25_topk(docs, k=RERANK_M, df_cap=True))
     methods = (
         ("bm25", lambda: lex25.filter(F.col("rank") <= k)),
         ("bm25_dfcap", lambda: lex25c.filter(F.col("rank") <= k)),
         (
             "bm25_rerank",
-            lambda: bm25_rerank_topk(
-                docs, embeddings, k=k, shared=shared, cand=lex25
-            ),
+            lambda: bm25_rerank_topk(docs, embeddings, k=k, cand=lex25),
         ),
         (
             "bm25_rerank_dfcap",
             lambda: bm25_rerank_topk(
-                docs, embeddings, k=k, df_cap=True, shared=shared, cand=lex25c
+                docs, embeddings, k=k, df_cap=True, cand=lex25c
             ),
         ),
         (
             "hybrid_rrf",
-            lambda: hybrid_rrf_topk(
-                docs, embeddings, k=k, shared=shared, lex=lex25
-            ),
+            lambda: hybrid_rrf_topk(docs, embeddings, k=k, lex=lex25),
         ),
         (
             "rm3",
             lambda: rm3_expansion_topk(
                 docs,
                 k=k,
-                shared=shared,
                 fb=lex25.filter(F.col("rank") <= RM3_FB_M).select(
                     "query_id", "doc_id"
                 ),
@@ -1029,7 +1037,6 @@ def hybrid_rrf_topk(
     m: int = RRF_M,
     k: int = DEFAULT_K,
     c: int = RRF_C,
-    shared: dict | None = None,
     lex: DataFrame | None = None,
     dense: DataFrame | None = None,
 ) -> DataFrame:
@@ -1079,10 +1086,10 @@ def hybrid_rrf_topk(
     # topk_fn pattern): brute by default, the IVF-Flat index in the
     # registered deployment twin ``hybrid_rrf_ivf_topk`` (r8).
     if lex is None:
-        lex = bm25_topk(docs, k=m, shared=shared)
+        lex = bm25_topk(docs, k=m)
     lex = lex.select("query_id", "doc_id", F.col("rank").alias("lex_rank"))
     if dense is None:
-        dense = ann_brute_topk(embeddings, k=m, shared=shared)
+        dense = ann_brute_topk(embeddings, k=m)
     dense = dense.select(
         "query_id",
         F.col("neighbor_id").alias("doc_id"),
@@ -1110,13 +1117,13 @@ def hybrid_rrf_topk(
     )
 
 
+@scoped
 def hybrid_rrf_ivf_topk(
     docs: DataFrame,
     embeddings: DataFrame,
     m: int = RRF_M,
     k: int = DEFAULT_K,
     c: int = RRF_C,
-    shared: dict | None = None,
 ) -> DataFrame:
     """The DEPLOYMENT twin of ``hybrid_rrf_topk`` (VERDICT r7 item 3):
     the dense list comes from the hash-seeded IVF-Flat index (one
@@ -1126,19 +1133,21 @@ def hybrid_rrf_ivf_topk(
     only ranks, so this is ``hybrid_rrf_topk`` with both retrievers
     swapped for their bounded forms — and because both constituents'
     rankings are themselves value-hash-oracled, the fused ranking
-    carries a full value-hash oracle too."""
-    from .similarity import ivf_flat_ann_topk
+    carries a full value-hash oracle too. The vocab frames and the
+    16-cell corpus assignment are persisted in the query scope."""
+    from .similarity import _corpus, _ivf_assign, _seeded_cents, ivf_flat_ann_topk
 
-    shared = {} if shared is None else shared
+    _persist_vocab(docs, True)
+    corpus = _corpus(embeddings)
+    query_scope().persist(_ivf_assign(corpus, _seeded_cents(corpus, 16)))
     return hybrid_rrf_topk(
         docs,
         embeddings,
         m=m,
         k=k,
         c=c,
-        shared=shared,
-        lex=bm25_topk(docs, k=m, df_cap=True, shared=shared),
-        dense=ivf_flat_ann_topk(embeddings, k=m, shared=shared),
+        lex=bm25_topk(docs, k=m, df_cap=True),
+        dense=ivf_flat_ann_topk(embeddings, k=m),
     )
 
 
@@ -1147,13 +1156,13 @@ RM3_E = 5  # expansion terms per query
 RM3_LAMBDA = 0.6  # weight on the original query model
 
 
+@scoped
 def rm3_expansion_topk(
     docs: DataFrame,
     fb_m: int = RM3_FB_M,
     e: int = RM3_E,
     lam: float = RM3_LAMBDA,
     k: int = DEFAULT_K,
-    shared: dict | None = None,
     fb: DataFrame | None = None,
     df_cap: bool = False,
 ) -> DataFrame:
@@ -1192,14 +1201,12 @@ def rm3_expansion_topk(
     chosen for expansion), and pass 2's probe carries only capped
     terms, bounding its posting expansion the same way. Separately
     value-hash-oracled, like bm25_dfcap/rerank_dfcap."""
-    shared = {} if shared is None else shared
+    _persist_vocab(docs, df_cap)
     # ``fb`` injects prebuilt feedback pairs (query_id, doc_id) — the
-    # report slices them out of its shared stage-1 frame (r7)
+    # report slices them out of its persisted stage-1 frame (r7)
     if fb is None:
-        fb = bm25_topk(docs, k=fb_m, df_cap=df_cap, shared=shared).select(
-            "query_id", "doc_id"
-        )
-    tf, df, dl, stats, _ = _bm25_frames(docs, df_cap=df_cap, shared=shared)
+        fb = bm25_topk(docs, k=fb_m, df_cap=df_cap).select("query_id", "doc_id")
+    tf, df, dl, stats, _ = _bm25_frames(docs, df_cap)
     # under the cap, only capped-vocabulary terms participate anywhere
     # (relevance model, original query model, pass-2 probe)
     rm_tf = (
@@ -1299,9 +1306,8 @@ LM_MU = 1000.0  # Dirichlet pseudo-count μ (Zhai & Lafferty 2001 report
 #                 LMDirichletSimilarity defaults to 2000)
 
 
-def lm_dirichlet_topk(
-    docs: DataFrame, k: int = DEFAULT_K, shared: dict | None = None
-) -> DataFrame:
+@scoped
+def lm_dirichlet_topk(docs: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """Query-likelihood retrieval with Dirichlet smoothing — the OTHER
     classical lexical ranker (Zhai & Lafferty 2001; Lucene's
     ``LMDirichletSimilarity``), completing the family next to Okapi
@@ -1340,7 +1346,7 @@ def lm_dirichlet_topk(
 
     Reference parity: the reference has no search surface (SURVEY §1);
     LLM-pipeline extension surface, same as ``bm25_topk``."""
-    tf, _df, dl, stats, _qt = _bm25_frames(docs, False, shared)
+    tf, _df, dl, stats, _qt = _bm25_frames(docs, False)
     cf = tf.groupBy("term").agg(F.sum("tf").cast("long").alias("cf"))
     qt = tf.filter(F.col("doc_id") % QUERY_MOD == 0).select(
         F.col("doc_id").alias("query_id"), "term", F.col("tf").alias("qtf")
@@ -1400,9 +1406,8 @@ def lm_dirichlet_topk(
     return _rank_topk(scored, k)
 
 
-def tfidf_doc_similarity_topk(
-    docs: DataFrame, k: int = DEFAULT_K, shared: dict | None = None
-) -> DataFrame:
+@scoped
+def tfidf_doc_similarity_topk(docs: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """"More like this": for every query-slice document, the top-k most
     similar OTHER documents by TF-IDF cosine — the related-documents /
     near-dup-exploration query (Lucene's MoreLikeThis, Elasticsearch
@@ -1431,7 +1436,7 @@ def tfidf_doc_similarity_topk(
     whose every term is corpus-ubiquitous (df = N ⇒ zero vector) have
     undefined cosine and are excluded from both sides, in both
     engines, by the ``nrm > 0`` guard."""
-    tf, df, _dl, stats, _qt = _bm25_frames(docs, False, shared)
+    tf, df, _dl, stats, _qt = _bm25_frames(docs, False)
     # r9 (guide §2.4): ONE persisted weighted-postings frame carries
     # the ltc weight AND the per-doc norm (a partition-local window sum
     # on the postings' doc_id partitioning — the norm stored next to
@@ -1439,7 +1444,7 @@ def tfidf_doc_similarity_topk(
     # an explicit broadcast of the vocab-sized table. qw/qnorm/dots all
     # read this one cache — the doc-keyed norm shuffle join and the
     # three recomputations of the weight frame are gone.
-    w2 = scoped_persist(
+    w2 = query_scope().persist(
         tf.join(F.broadcast(df), "term")
         .crossJoin(F.broadcast(stats))
         .select(
@@ -1459,8 +1464,7 @@ def tfidf_doc_similarity_topk(
                 .cast("double")
             ),
         )
-        .filter(F.col("nrm") > 0),
-        chain=True,
+        .filter(F.col("nrm") > 0)
     )
     qw = w2.filter(F.col("doc_id") % QUERY_MOD == 0).select(
         F.col("doc_id").alias("query_id"), "term", F.col("w").alias("qw")

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.localframe import local_frame
 from ..functions.vectors import as_double, dot, normalized
+from ..session import query_scope, scoped
 
 DEFAULT_K = 10
 QUERY_MOD = 50  # vec_id % 50 == 0 → deterministic query subset
@@ -64,34 +65,40 @@ def _dot_cols(a: str, b: str, dim: int = DIM) -> F.Column:
     return acc
 
 
-def _queries(embeddings: DataFrame, shared: dict | None = None) -> DataFrame:
-    """Normalized query frame (query_id, qv). ``shared`` lets a caller
-    running SEVERAL index builds over the same corpus (ann_recall_report)
-    inject one persisted frame instead of re-normalizing per method."""
-    if shared is not None and shared.get("qs") is not None:
-        return shared["qs"]
+def _queries(embeddings: DataFrame) -> DataFrame:
+    """Normalized query frame (query_id, qv). A caller running SEVERAL
+    index builds over the same corpus (ann_recall_report) persists it
+    once; every method rebuilds the same plan, which Spark's cache
+    manager answers from the persisted copy."""
     return embeddings.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"), normalized(as_double("embedding")).alias("qv")
     )
 
 
-def _corpus(embeddings: DataFrame, shared: dict | None = None) -> DataFrame:
+def _corpus(embeddings: DataFrame) -> DataFrame:
     """Normalized corpus frame (neighbor_id, cv), repartitioned for the
-    scan; ``shared`` injects the persisted copy (see ``_queries``)."""
-    if shared is not None and shared.get("corpus") is not None:
-        return shared["corpus"]
+    scan (persisted by multi-method callers, see ``_queries``)."""
     return embeddings.repartition(_par(embeddings)).select(
         F.col("vec_id").alias("neighbor_id"),
         normalized(as_double("embedding")).alias("cv"),
     )
 
 
-def _base(embeddings: DataFrame, shared: dict | None = None) -> DataFrame:
+def _base(embeddings: DataFrame) -> DataFrame:
     """Raw (vec_id, embedding) frame, repartitioned — for code builders
     that read raw coordinates (sign bits), not the normalized array."""
-    if shared is not None and shared.get("base") is not None:
-        return shared["base"]
     return embeddings.repartition(_par(embeddings)).select("vec_id", "embedding")
+
+
+def _seeded_cents(src: DataFrame, n: int) -> DataFrame:
+    """(cent_id, centroid): the ``n`` vectors of a normalized
+    (neighbor_id, cv) frame ranked first by md5(neighbor_id) — the
+    deterministic draw every hash-seeded index uses."""
+    return (
+        src.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
+        .limit(n)
+        .select(F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid"))
+    )
 
 
 def _query_cols(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
@@ -164,14 +171,16 @@ def _rank_cells(vec_col: str) -> F.Column:
     return F.array_sort(scores, cmp)
 
 
-def ann_brute_topk(
-    embeddings: DataFrame, k: int = DEFAULT_K, shared: dict | None = None
-) -> DataFrame:
+def ann_brute_topk(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """Exact top-k cosine neighbors for the deterministic query subset.
     Query side broadcast; corpus never shuffles until the (tiny) top-k
     window."""
-    corpus = _unroll(_corpus(embeddings, shared), "neighbor_id", "cv", "c")
-    qcols = _unroll(_queries(embeddings, shared), "query_id", "qv", "q")
+    return _brute_topk(_corpus(embeddings), _queries(embeddings), k)
+
+
+def _brute_topk(corpus: DataFrame, qs: DataFrame, k: int) -> DataFrame:
+    corpus = _unroll(corpus, "neighbor_id", "cv", "c")
+    qcols = _unroll(qs, "query_id", "qv", "q")
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id")
     )
@@ -322,6 +331,7 @@ PAIR_BANDS = 8
 PAIR_BAND_BITS = 8
 
 
+@scoped
 def embedding_neardup_lsh_pairs(
     embeddings: DataFrame, threshold: float = 0.95
 ) -> DataFrame:
@@ -340,9 +350,7 @@ def embedding_neardup_lsh_pairs(
     DuckDB oracle mirrors the construction with the planes inlined, so
     the check is exact, not statistical."""
     planes = _hyperplanes(DIM, PAIR_BANDS * PAIR_BAND_BITS)
-    from ..session import scoped_persist
-
-    nvs = scoped_persist(
+    nvs = query_scope().persist(
         embeddings.repartition(_par(embeddings)).select(
             "vec_id", normalized(as_double("embedding")).alias("nv")
         )
@@ -386,7 +394,6 @@ def ivf_flat_ann_topk(
     k: int = DEFAULT_K,
     n_centroids: int = 16,
     n_probe: int = 4,
-    shared: dict | None = None,
 ) -> DataFrame:
     """IVF with deterministic hash-seeded centroids — the oracle-checked
     twin of ``ivf_ann_topk``: instead of KMeans (iterative, not
@@ -397,29 +404,12 @@ def ivf_flat_ann_topk(
     best cells and rerank exactly. Same inverted-file scale shape as
     the KMeans variant (corpus streams once, centroid table broadcast,
     per-query work ~n_probe/n_centroids of the corpus); slightly lower
-    recall, fully deterministic."""
-    corpus = _corpus(embeddings, shared)
-    cent = (
-        corpus.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(n_centroids)
-        .select(F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid"))
-    )
-    assigned = None
-    if shared is not None:
-        # The corpus assignment depends only on (corpus, n_centroids) —
-        # a multi-pass caller (ivf_probe_sweep's four widths, the recall
-        # reports) scores the corpus ONCE and every width/probe reuses
-        # the persisted cell table (r7).
-        key = f"_ivf_assigned_{n_centroids}"
-        assigned = shared.get(key)
-        if assigned is None:
-            from ..session import scoped_persist
-
-            assigned = scoped_persist(_ivf_assign(corpus, cent), chain=True)
-            shared[key] = assigned
-    return _ivf_flat_body(
-        corpus, _queries(embeddings, shared), cent, k, n_probe, assigned=assigned
-    )
+    recall, fully deterministic. A multi-pass caller (ivf_probe_sweep's
+    four widths, the recall reports) persists the corpus assignment
+    once (``_persist_recall_inputs``) and every width reuses it (r7)."""
+    corpus = _corpus(embeddings)
+    cent = _seeded_cents(corpus, n_centroids)
+    return _ivf_flat_body(corpus, _queries(embeddings), cent, k, n_probe)
 
 
 def _ivf_assign(corpus: DataFrame, cent: DataFrame) -> DataFrame:
@@ -498,11 +488,7 @@ def ivf_flat_workload_topk(
     frame. Separately value-hash-oracled (the cut changes the result
     set, not the arithmetic)."""
     corpus = _corpus(embeddings)
-    cent = (
-        corpus.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(n_centroids)
-        .select(F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid"))
-    )
+    cent = _seeded_cents(corpus, n_centroids)
     qs = _queries(embeddings).orderBy("query_id").limit(n_queries)
     return _ivf_flat_body(corpus, qs, cent, k, n_probe)
 
@@ -511,39 +497,26 @@ IVF_FIT_SAMPLE = 4096
 IVF_FIT_ROUNDS = 10
 
 
-def _fit_sample_matrix(
-    corpus: DataFrame, fit_sample: int, shared: dict | None = None
-):
-    """The md5-ranked bounded fit sample as a float64 numpy matrix,
-    collected ONCE per caller scope (r10, guide §5 reuse):
-    ``pq_trained_ann_topk``, ``ivf_flat_trained_ann_topk`` and
-    ``ivfpq_trained_ann_topk`` all draw the IDENTICAL sample (same
-    draw rule, same ``fit_sample``), and the trained recall report was
-    paying three sequential TakeOrdered+collect driver jobs for one
-    draw. Returns None on an empty corpus."""
+def _fit_sample_matrix(embeddings: DataFrame, fit_sample: int):
+    """The md5-ranked bounded fit sample of ``embeddings``' normalized
+    corpus as a float64 numpy matrix, collected ONCE per query scope
+    (r10, guide §5 reuse): ``pq_trained_ann_topk``,
+    ``ivf_flat_trained_ann_topk`` and ``ivfpq_trained_ann_topk`` all
+    draw the IDENTICAL sample (same draw rule, same ``fit_sample``),
+    and the trained recall report was paying three sequential
+    TakeOrdered+collect driver jobs for one draw. Returns None on an
+    empty corpus (memoized too)."""
     import numpy as np
 
-    key = f"_fit_sample_{fit_sample}"
-    if shared is not None and shared.get(key) is not None:
-        return shared[key]
-    rows = (
-        corpus.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(fit_sample)
-        .select("cv")
-        .collect()
-    )
-    x = np.array([r.cv for r in rows], dtype=np.float64) if rows else None
-    if shared is not None:
-        shared[key] = x
-    return x
+    def collect():
+        rows = _seeded_cents(_corpus(embeddings), fit_sample).select("centroid").collect()
+        return np.array([r.centroid for r in rows], dtype=np.float64) if rows else None
+
+    return query_scope().memo(("fit_sample", embeddings, fit_sample), collect)
 
 
 def _trained_centroids(
-    spark,
-    corpus: DataFrame,
-    n_cells: int,
-    fit_sample: int = IVF_FIT_SAMPLE,
-    shared: dict | None = None,
+    embeddings: DataFrame, n_cells: int, fit_sample: int = IVF_FIT_SAMPLE
 ):
     """Spherical-KMeans centroid fit on a DETERMINISTIC bounded sample
     (the ``fit_sample`` rows ranked first by md5(vec_id) — the same
@@ -562,16 +535,20 @@ def _trained_centroids(
     hash-seeded twins remain the value-hash-oracled controls.
 
     r10: the sample collect routes through ``_fit_sample_matrix`` and
-    the whole (cent, x, assign) fit is memoized in ``shared`` — the
-    trained recall report runs ivf_flat_trained and ivfpq_trained over
-    the SAME (n_cells, fit_sample), so the second fit (collect job +
-    driver Lloyd) disappears."""
+    the whole (cent, x, assign) fit is memoized per (embeddings, n_cells,
+    fit_sample) in the query scope — the trained recall report runs
+    ivf_flat_trained and ivfpq_trained over the SAME fit, so the second
+    fit (collect job + driver Lloyd) disappears."""
+    return query_scope().memo(
+        ("trained_fit", embeddings, n_cells, fit_sample),
+        lambda: _lloyd_fit(embeddings, n_cells, fit_sample),
+    )
+
+
+def _lloyd_fit(embeddings: DataFrame, n_cells: int, fit_sample: int):
     import numpy as np
 
-    fit_key = f"_trained_fit_{n_cells}_{fit_sample}"
-    if shared is not None and shared.get(fit_key) is not None:
-        return shared[fit_key]
-    x = _fit_sample_matrix(corpus, fit_sample, shared)
+    x = _fit_sample_matrix(embeddings, fit_sample)
     if x is None:
         return None, None, None
     centers = x[: min(n_cells, len(x))].copy()
@@ -586,22 +563,20 @@ def _trained_centroids(
                 if norm > 0.0:
                     centers[c] = mu / norm
     cent = local_frame(
-        spark,
+        embeddings.sparkSession,
         [(int(i), [float(v) for v in c]) for i, c in enumerate(centers)],
         "cent_id long, centroid array<double>",
     )
-    if shared is not None:
-        shared[fit_key] = (cent, x, assign)
     return cent, x, assign
 
 
+@scoped
 def ivf_flat_trained_ann_topk(
     embeddings: DataFrame,
     k: int = DEFAULT_K,
     n_centroids: int = 16,
     n_probe: int = 4,
     fit_sample: int = IVF_FIT_SAMPLE,
-    shared: dict | None = None,
 ) -> DataFrame:
     """IVF-Flat with sampled-spherical-KMeans centroids — the trained
     twin of ``ivf_flat_ann_topk`` behind the same parameterized
@@ -617,15 +592,12 @@ def ivf_flat_trained_ann_topk(
 
     Rows-only correctness: the Lloyd fit isn't SQL-portable; the
     seeded twin remains the value-hash-oracled control."""
-    corpus = _corpus(embeddings, shared)
-    cent, _, _ = _trained_centroids(
-        embeddings.sparkSession, corpus, n_centroids, fit_sample, shared
-    )
+    cent, _, _ = _trained_centroids(embeddings, n_centroids, fit_sample)
     if cent is None:
         return embeddings.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank long"
         )
-    return _ivf_flat_body(corpus, _queries(embeddings, shared), cent, k, n_probe)
+    return _ivf_flat_body(_corpus(embeddings), _queries(embeddings), cent, k, n_probe)
 
 
 ANN_INCR_MOD = 3  # vec_id % ANN_INCR_MOD == 0 → incoming batch
@@ -637,11 +609,7 @@ def _ivf_index(est: DataFrame, n_centroids: int):
     the ESTABLISHED corpus (md5-ranked, the package's deterministic
     seed rule) and the established vectors' cell assignments. Returns
     (cent, assigned) where assigned = (vec_id, cv, cell, cent_sim)."""
-    cent = (
-        est.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(n_centroids)
-        .select(F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid"))
-    )
+    cent = _seeded_cents(est, n_centroids)
     assigned = (
         est.join(F.broadcast(_cents_row(cent)))
         .withColumn("_best", F.element_at(_rank_cells("cv"), 1))
@@ -731,7 +699,6 @@ def ann_lsh_topk(
     embeddings: DataFrame,
     k: int = DEFAULT_K,
     dim: int = 64,
-    shared: dict | None = None,
 ) -> DataFrame:
     """Approximate top-k with multi-probe LSH: each query probes its own
     hyperplane-sign bucket plus every 1-bit-flip neighbor bucket (the
@@ -740,10 +707,8 @@ def ann_lsh_topk(
     by (1 + n_planes) — cheap, since queries are the broadcast side —
     while recall jumps vs single-bucket LSH."""
     planes = _hyperplanes(dim)
-    corpus = _corpus(embeddings, shared).withColumn(
-        "bucket", _bucket(F.col("cv"), planes)
-    )
-    base = _queries(embeddings, shared).withColumn("bucket", _bucket(F.col("qv"), planes))
+    corpus = _corpus(embeddings).withColumn("bucket", _bucket(F.col("cv"), planes))
+    base = _queries(embeddings).withColumn("bucket", _bucket(F.col("qv"), planes))
     probes = F.array(
         F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(len(planes))]
     )
@@ -791,6 +756,7 @@ def knn_label_vote(embeddings: DataFrame, k: int = DEFAULT_K, topk_fn=None) -> D
     )
 
 
+@scoped
 def knn_graph_edges(
     embeddings: DataFrame,
     k: int = DEFAULT_K,
@@ -823,15 +789,9 @@ def knn_graph_edges(
     The mutual flag is a self-join of the |n|·k edge list on the
     reversed pair key. Fully deterministic (md5 centroid draw, rounded
     dots, id tie-breaks) ⇒ value-hash oracle end to end."""
-    from ..session import scoped_persist
-
     corpus = _corpus(embeddings)
-    cent = (
-        corpus.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(n_centroids)
-        .select(F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid"))
-    )
-    scored = scoped_persist(
+    cent = _seeded_cents(corpus, n_centroids)
+    scored = (
         corpus.select(F.col("neighbor_id").alias("vec_id"), F.col("cv").alias("nv"))
         .join(F.broadcast(_cents_row(cent)))
         .select(
@@ -853,7 +813,7 @@ def knn_graph_edges(
         F.col("vec_id").alias("src_id"), F.col("nv").alias("sv"), "cell"
     )
     w = Window.partitionBy("src_id").orderBy(F.col("sim").desc(), F.col("dst_id"))
-    edges = scoped_persist(
+    edges = query_scope().persist(
         probes.join(assigned.hint("shuffle_hash"), "cell")
         .filter(F.col("src_id") != F.col("dst_id"))
         .withColumn("sim", F.round(dot(F.col("sv"), F.col("dv")), 6))
@@ -884,6 +844,7 @@ SEMDEDUP_TAU = 0.4
 SEMDEDUP_CELLS = 16
 
 
+@scoped
 def semdedup_embeddings(
     embeddings: DataFrame,
     tau: float = SEMDEDUP_TAU,
@@ -916,18 +877,12 @@ def semdedup_embeddings(
     for the self-join, zero driver collects. The 64-dim dot is unrolled
     to a flat codegen'd product-sum (_dot_cols).
     """
-    from ..session import scoped_persist
-
     corpus = _corpus(embeddings)
-    cent = (
-        corpus.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(n_cells)
-        .select(F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid"))
-    )
+    cent = _seeded_cents(corpus, n_cells)
     # Persisted: feeds both self-join sides and the final kept-mark.
     # Per-row argmax over the one-row broadcast centroid array — no
     # n·C frame, no assignment window (r6 verdict item 1).
-    assigned = scoped_persist(
+    assigned = query_scope().persist(
         corpus.join(F.broadcast(_cents_row(cent)))
         .withColumn("_best", F.element_at(_rank_cells("cv"), 1))
         .select(
@@ -1164,7 +1119,6 @@ def sq8_ann_topk(
     embeddings: DataFrame,
     k: int = DEFAULT_K,
     margin: int = SQ_MARGIN,
-    shared: dict | None = None,
 ) -> DataFrame:
     """Scalar-quantized (SQ8) ANN: a single global scale s = max|x|
     over the normalized corpus defines a SYMMETRIC int8 grid
@@ -1191,7 +1145,7 @@ def sq8_ann_topk(
     against broadcast query codes, per-query TakeOrdered-style window
     cut, then an equi-join back to the corpus vectors for the exact
     rerank."""
-    corpus = _corpus(embeddings, shared)
+    corpus = _corpus(embeddings)
     brow = corpus.agg(
         F.max(F.array_max(F.transform(F.col("cv"), lambda x: F.abs(x)))).alias("_s")
     )
@@ -1208,7 +1162,7 @@ def sq8_ann_topk(
         "neighbor_id", _codes(F.col("cv")).alias("cc")
     )
     qcodes = (
-        _queries(embeddings, shared)
+        _queries(embeddings)
         .crossJoin(F.broadcast(brow))
         .select("query_id", _codes(F.col("qv")).alias("qc"))
     )
@@ -1228,7 +1182,7 @@ def sq8_ann_topk(
         .filter(F.col("_rn") <= k + margin)
         .select("query_id", "neighbor_id")
     )
-    qs = _queries(embeddings, shared)
+    qs = _queries(embeddings)
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         corpus.join(F.broadcast(cand), "neighbor_id")
@@ -1254,7 +1208,6 @@ def pq_ann_topk(
     m: int = PQ_M,
     n_codes: int = PQ_CODES,
     margin: int = PQ_MARGIN,
-    shared: dict | None = None,
 ) -> DataFrame:
     """Product-quantization ANN (PQ + ADC): vectors are split into
     ``m`` subspaces; per subspace, each sub-vector is assigned to its
@@ -1280,7 +1233,7 @@ def pq_ann_topk(
     per-term LUT dots are rounded then summed as exact DECIMAL, so the
     ADC ranking is order-independent and engine-portable."""
     sub = DIM // m
-    corpus = _corpus(embeddings, shared)
+    corpus = _corpus(embeddings)
     seeds = (
         corpus.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
         .limit(n_codes)
@@ -1292,7 +1245,7 @@ def pq_ann_topk(
         F.col("cid").cast("long").alias("cid"),
         F.slice("centroid", F.col("j") * sub + 1, sub).alias("csub"),
     )
-    return _pq_adc_topk(corpus, _queries(embeddings, shared), cw, k, m, margin)
+    return _pq_adc_topk(corpus, _queries(embeddings), cw, k, m, margin)
 
 
 def _cw_row(cw: DataFrame) -> DataFrame:
@@ -1448,7 +1401,6 @@ def ivfpq_ann_topk(
     m: int = PQ_M,
     n_codes: int = PQ_CODES,
     margin: int = PQ_MARGIN,
-    shared: dict | None = None,
 ) -> DataFrame:
     """IVF-PQ — the FAISS billion-scale production layout, composed
     from this repo's two oracled quantizers: a coarse inverted file
@@ -1472,13 +1424,11 @@ def ivfpq_ann_topk(
     Fully deterministic (rounded dots, md5 draws, lexical tie-breaks):
     value-hash-oracled end to end despite being a two-level
     approximate index — the hash-seeded stand-in for KMeans-trained
-    cells/codebooks, which slot in exactly like pq_trained's."""
-    corpus = _corpus(embeddings, shared)
-    cent = (
-        corpus.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(n_cells)
-        .select(F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid"))
-    )
+    cells/codebooks, which slot in exactly like pq_trained's. The
+    coarse table is ``ivf_flat_ann_topk``'s md5-ranked draw, so a
+    multi-method caller's persisted corpus assignment serves both (r7)."""
+    corpus = _corpus(embeddings)
+    cent = _seeded_cents(corpus, n_cells)
 
     def cw_fn(assigned):
         # global residual codewords: per-subspace slices of the n_codes
@@ -1499,29 +1449,7 @@ def ivfpq_ann_topk(
             "j", "cid", F.slice("crv", F.col("j") * sub + 1, sub).alias("csub")
         )
 
-    assigned_base = None
-    if shared is not None:
-        # the coarse table is the SAME md5-ranked draw as
-        # ivf_flat_ann_topk's, so a multi-method caller (the recall
-        # reports) reuses the cached corpus assignment (r7)
-        key = f"_ivf_assigned_{n_cells}"
-        assigned_base = shared.get(key)
-        if assigned_base is None:
-            from ..session import scoped_persist
-
-            assigned_base = scoped_persist(_ivf_assign(corpus, cent), chain=True)
-            shared[key] = assigned_base
-    return _ivfpq_body(
-        corpus,
-        _queries(embeddings, shared),
-        cent,
-        cw_fn,
-        k,
-        m,
-        n_probe,
-        margin,
-        assigned_base=assigned_base,
-    )
+    return _ivfpq_body(corpus, _queries(embeddings), cent, cw_fn, k, m, n_probe, margin)
 
 
 def _ivfpq_body(
@@ -1533,24 +1461,19 @@ def _ivfpq_body(
     m: int,
     n_probe: int,
     margin: int,
-    assigned_base: DataFrame | None = None,
 ) -> DataFrame:
     """Shared IVF-PQ machinery given a (cent_id, centroid) coarse table
     and a ``cw_fn(assigned) -> (j, cid, csub)`` residual-codebook
     source: cell assignment + residuals, residual encoding, probed-cell
     ADC with the q·c(cell) term added back, exact rerank. Source-
     agnostic — serves the hash-seeded (oracle-checked) and the
-    sampled-KMeans-trained variants with the identical plan shape.
-    ``assigned_base`` optionally injects a precomputed (neighbor_id,
-    cv, cell) assignment (the cross-method cache, r7)."""
+    sampled-KMeans-trained variants with the identical plan shape."""
     sub = DIM // m
     # Per-row argmax cell pick over the one-row broadcast centroid
     # array (no n·C frame, r6 verdict item 1), then a C-row broadcast
     # HASH join on the winning cell fetches the centroid vector the
     # residual needs — still zero shuffles, zero row amplification.
-    if assigned_base is None:
-        assigned_base = _ivf_assign(corpus, cent)
-    assigned = assigned_base.join(
+    assigned = _ivf_assign(corpus, cent).join(
         F.broadcast(cent.select(F.col("cent_id").alias("cell"), "centroid")),
         "cell",
     ).select(
@@ -1614,6 +1537,7 @@ def _ivfpq_body(
     )
 
 
+@scoped
 def ivfpq_trained_ann_topk(
     embeddings: DataFrame,
     k: int = DEFAULT_K,
@@ -1623,7 +1547,6 @@ def ivfpq_trained_ann_topk(
     n_codes: int = PQ_CODES,
     margin: int = PQ_MARGIN,
     fit_sample: int = IVF_FIT_SAMPLE,
-    shared: dict | None = None,
 ) -> DataFrame:
     """IVF-PQ with BOTH levels trained (VERDICT r5 item 7): coarse
     cells from the sampled-spherical-KMeans fit (shared with
@@ -1640,9 +1563,8 @@ def ivfpq_trained_ann_topk(
     import numpy as np
 
     sub = DIM // m
-    corpus = _corpus(embeddings, shared)
     spark = embeddings.sparkSession
-    cent, x, assign = _trained_centroids(spark, corpus, n_cells, fit_sample, shared)
+    cent, x, assign = _trained_centroids(embeddings, n_cells, fit_sample)
     if cent is None:
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank long"
@@ -1671,14 +1593,7 @@ def ivfpq_trained_ann_topk(
         rows += [(j, i, [float(v) for v in c]) for i, c in enumerate(cb)]
     cw = local_frame(spark, rows, "j int, cid long, csub array<double>")
     return _ivfpq_body(
-        corpus,
-        _queries(embeddings, shared),
-        cent,
-        lambda assigned: cw,
-        k,
-        m,
-        n_probe,
-        margin,
+        _corpus(embeddings), _queries(embeddings), cent, lambda assigned: cw, k, m, n_probe, margin
     )
 
 
@@ -1689,7 +1604,6 @@ def bq_ann_topk(
     embeddings: DataFrame,
     k: int = DEFAULT_K,
     margin: int = BQ_MARGIN,
-    shared: dict | None = None,
 ) -> DataFrame:
     """Binary-quantization ANN: each vector is compressed to its 64
     SIGN bits packed into two longs; candidates are ranked by Hamming
@@ -1720,7 +1634,7 @@ def bq_ann_topk(
     (ham, neighbor_id) order), so the value-hash oracle is unchanged.
     Re-scanning codes beats persisting the |Q|·|corpus| joined frame:
     XOR+popcount on two longs is ALU-bound, the sort was the cost."""
-    corpus = _corpus(embeddings, shared)
+    corpus = _corpus(embeddings)
 
     def _pack(raw: F.Column, lo: int, hi: int) -> F.Column:
         acc = None
@@ -1739,9 +1653,9 @@ def bq_ann_topk(
             _pack(raw, 32, 64).alias(f"{prefix}hi"),
         )
 
-    ccodes = _codes(_base(embeddings, shared), "neighbor_id", "c")
+    ccodes = _codes(_base(embeddings), "neighbor_id", "c")
     qcodes = _codes(
-        _base(embeddings, shared).filter(F.col("vec_id") % QUERY_MOD == 0),
+        _base(embeddings).filter(F.col("vec_id") % QUERY_MOD == 0),
         "query_id",
         "q",
     )
@@ -1778,7 +1692,7 @@ def bq_ann_topk(
         .filter(F.col("_rn") <= k + margin)
         .select("query_id", "neighbor_id")
     )
-    qs = _queries(embeddings, shared)
+    qs = _queries(embeddings)
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         corpus.join(F.broadcast(cand), "neighbor_id")
@@ -1793,6 +1707,7 @@ def bq_ann_topk(
 PQ_FIT_SAMPLE = 4096
 
 
+@scoped
 def pq_trained_ann_topk(
     embeddings: DataFrame,
     k: int = DEFAULT_K,
@@ -1800,7 +1715,6 @@ def pq_trained_ann_topk(
     n_codes: int = PQ_CODES,
     margin: int = PQ_MARGIN,
     fit_sample: int = PQ_FIT_SAMPLE,
-    shared: dict | None = None,
 ) -> DataFrame:
     """True product quantization: per-SUBSPACE codebooks fit by KMeans
     (Jégou et al.'s construction) instead of ``pq_ann_topk``'s
@@ -1827,11 +1741,10 @@ def pq_trained_ann_topk(
     ``pq_ann_topk`` stays the value-hash-oracled control and tests
     assert recall(trained) >= recall(seeded) against the brute top-k."""
     sub = DIM // m
-    corpus = _corpus(embeddings, shared)
     # r10: the sample draw is IDENTICAL to _trained_centroids' (same
-    # md5 rule, same fit_sample) — route through the shared matrix so
-    # a multi-method caller collects it once (guide §5 reuse)
-    x = _fit_sample_matrix(corpus, fit_sample, shared)
+    # md5 rule, same fit_sample) — route through the scope-memoized
+    # matrix so a multi-method caller collects it once (guide §5 reuse)
+    x = _fit_sample_matrix(embeddings, fit_sample)
     if x is None:
         return embeddings.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank long"
@@ -1856,7 +1769,7 @@ def pq_trained_ann_topk(
     cw = local_frame(
         embeddings.sparkSession, rows, "j int, cid long, csub array<double>"
     )
-    return _pq_adc_topk(corpus, _queries(embeddings, shared), cw, k, m, margin)
+    return _pq_adc_topk(_corpus(embeddings), _queries(embeddings), cw, k, m, margin)
 
 
 def hard_negative_mining(
@@ -1902,6 +1815,7 @@ def hard_negative_mining(
     )
 
 
+@scoped
 def ann_recall_report(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """Index-quality dashboard: recall@k of every approximate ANN path
     (IVF-Flat, multi-probe LSH, SQ8, PQ, IVF-PQ, binary/Hamming)
@@ -1912,20 +1826,14 @@ def ann_recall_report(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     Each method's |Q|·k frame inner-joins the brute frame on
     (query_id, neighbor_id); recall = hits / |brute|. The normalized
     corpus, query, and raw-code base frames are persisted ONCE and
-    injected into every method via ``shared`` (r4 verdict item 4: each
-    method used to re-normalize + re-repartition the corpus and
-    re-derive the query set independently — 7 redundant builds); the
-    brute result is chained into the same persist scope. Per-method
-    output is ONE row, so the final union stays tiny however large the
-    corpus. Exact integer counts + one rounded division keep it
-    value-hash oracle-checked end to end."""
-    from ..session import scoped_persist
-
-    shared = _shared_frames(embeddings)
-    brute = scoped_persist(
-        ann_brute_topk(embeddings, k, shared).select("query_id", "neighbor_id"),
-        chain=True,
-    )
+    every method reads them (r4 verdict item 4: each method used to
+    re-normalize + re-repartition the corpus and re-derive the query
+    set independently — 7 redundant builds), as is the brute result;
+    see ``_persist_recall_inputs``. Per-method output is ONE row, so
+    the final union stays tiny however large the corpus. Exact integer
+    counts + one rounded division keep it value-hash oracle-checked
+    end to end."""
+    brute = _persist_recall_inputs(embeddings, k)
     total = brute.agg(F.count("*").alias("n_total"))
     methods = (
         ("ivf_flat", ivf_flat_ann_topk),
@@ -1935,25 +1843,30 @@ def ann_recall_report(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
         ("ivfpq", ivfpq_ann_topk),
         ("bq", bq_ann_topk),
     )
-    return _recall_rows(brute, total, embeddings, k, methods, shared)
+    return _recall_rows(brute, total, embeddings, k, methods)
 
 
-def _shared_frames(embeddings: DataFrame) -> dict:
-    """Persist the three frames every ANN method derives from the
-    embeddings table — normalized corpus, normalized queries, raw code
-    base — so an N-method sweep builds each once instead of N times.
-    All three chain into one scoped-persist scope (released together
-    at the next builder's first non-chained scoped_persist)."""
-    from ..session import scoped_persist
+def _persist_recall_inputs(embeddings: DataFrame, k: int) -> DataFrame:
+    """Persist, in the open query scope, the frames every method of an
+    N-method ANN sweep derives from the embeddings table — normalized
+    corpus, normalized queries, raw code base, and the 16-cell seeded
+    IVF assignment ``ivf_flat_ann_topk`` and ``ivfpq_ann_topk`` probe —
+    so each builds once instead of N times. The methods rebuild the
+    same plans; Spark's cache manager answers them from these copies.
+    Returns the exact brute-force truth (query_id, neighbor_id),
+    persisted as well."""
+    scope = query_scope()
+    corpus = scope.persist(_corpus(embeddings))
+    scope.persist(_queries(embeddings))
+    scope.persist(_base(embeddings))
+    brute = scope.persist(
+        ann_brute_topk(embeddings, k).select("query_id", "neighbor_id")
+    )
+    scope.persist(_ivf_assign(corpus, _seeded_cents(corpus, 16)))
+    return brute
 
-    return {
-        "corpus": scoped_persist(_corpus(embeddings)),
-        "qs": scoped_persist(_queries(embeddings), chain=True),
-        "base": scoped_persist(_base(embeddings), chain=True),
-    }
 
-
-def _recall_rows(brute, total, embeddings, k, methods, shared=None) -> DataFrame:
+def _recall_rows(brute, total, embeddings, k, methods) -> DataFrame:
     """r10 (VERDICT r9 item 1, guide §2.3/§5): the N method top-k
     frames union under a ``method`` tag into ONE hit-join against the
     persisted brute truth and ONE per-method aggregation, instead of N
@@ -1965,7 +1878,7 @@ def _recall_rows(brute, total, embeddings, k, methods, shared=None) -> DataFrame
     oracle carries (row ORDER changes — the gate sorts rows)."""
     tagged = None
     for name, fn in methods:
-        t = fn(embeddings, k, shared=shared).select(
+        t = fn(embeddings, k).select(
             F.lit(name).alias("method"), "query_id", "neighbor_id"
         )
         tagged = t if tagged is None else tagged.unionByName(t)
@@ -1977,21 +1890,31 @@ def _recall_rows(brute, total, embeddings, k, methods, shared=None) -> DataFrame
     mframe = brute.sparkSession.range(1).select(
         F.explode(F.array(*[F.lit(n) for n, _ in methods])).alias("method")
     )
-    return (
+    return _with_recall(
         mframe.join(hits, "method", "left")
         .crossJoin(F.broadcast(total))
         .select(
             "method",
             F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
             F.col("n_total").cast("long").alias("n_total"),
-            F.when(
-                F.col("n_total") > 0,
-                F.round(F.col("n_hit") / F.col("n_total").cast("double"), 6),
-            ).alias("recall"),
         )
     )
 
 
+def _with_recall(counts: DataFrame) -> DataFrame:
+    """Append recall = n_hit / n_total (6 dp) over the COALESCED hit
+    count, so a zero-hit row gets 0.0 like the oracle's COUNT, not
+    NULL."""
+    return counts.withColumn(
+        "recall",
+        F.when(
+            F.col("n_total") > 0,
+            F.round(F.col("n_hit") / F.col("n_total").cast("double"), 6),
+        ),
+    )
+
+
+@scoped
 def ann_recall_report_trained(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """Head-to-head recall of every KMeans-trained index against its
     hash-seeded control — the three trained/seeded pairs (PQ, IVF-Flat,
@@ -2001,13 +1924,7 @@ def ann_recall_report_trained(embeddings: DataFrame, k: int = DEFAULT_K) -> Data
     SQL-portable); tests assert recall(trained) >= recall(seeded) per
     pair so the 'training raises recall' claim is measured, not
     assumed."""
-    from ..session import scoped_persist
-
-    shared = _shared_frames(embeddings)
-    brute = scoped_persist(
-        ann_brute_topk(embeddings, k, shared).select("query_id", "neighbor_id"),
-        chain=True,
-    )
+    brute = _persist_recall_inputs(embeddings, k)
     total = brute.agg(F.count("*").alias("n_total"))
     methods = (
         ("pq", pq_ann_topk),
@@ -2017,7 +1934,7 @@ def ann_recall_report_trained(embeddings: DataFrame, k: int = DEFAULT_K) -> Data
         ("ivfpq", ivfpq_ann_topk),
         ("ivfpq_trained", ivfpq_trained_ann_topk),
     )
-    return _recall_rows(brute, total, embeddings, k, methods, shared)
+    return _recall_rows(brute, total, embeddings, k, methods)
 
 
 def centroid_auc_report(embeddings: DataFrame) -> DataFrame:
@@ -2095,6 +2012,7 @@ def centroid_auc_report(embeddings: DataFrame) -> DataFrame:
 IVF_SWEEP_PROBES = (1, 2, 4, 8)
 
 
+@scoped
 def ivf_probe_sweep(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """IVF probe-width tuning curve: recall@k of ``ivf_flat_ann_topk``
     at n_probe ∈ {1, 2, 4, 8} against the exact brute-force top-k —
@@ -2109,18 +2027,12 @@ def ivf_probe_sweep(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     globally better than it — contradicting its membership in the
     exact top-k (asserted in tests, not just assumed).
 
-    Cost shape: the ``_shared_frames`` persist serves all four widths
-    (corpus normalized/assigned once per width but never re-derived);
+    Cost shape: the ``_persist_recall_inputs`` persists serve all four
+    widths (corpus normalized and assigned once, never re-derived);
     the brute denominator is scope-persisted once. Each width's
     output is |Q|·k rows collapsed to one count — the report row set
     is 4 rows whatever the corpus."""
-    from ..session import scoped_persist
-
-    shared = _shared_frames(embeddings)
-    brute = scoped_persist(
-        ann_brute_topk(embeddings, k, shared).select("query_id", "neighbor_id"),
-        chain=True,
-    )
+    brute = _persist_recall_inputs(embeddings, k)
     total = brute.agg(F.count("*").alias("n_total"))
     # r10 (VERDICT r9 item 1's pattern, guide §2.3/§5): one hit-join +
     # one per-width aggregation over the tagged union of the four
@@ -2129,7 +2041,7 @@ def ivf_probe_sweep(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     # arithmetic, row order left to the gate's sort.
     tagged = None
     for p in IVF_SWEEP_PROBES:
-        t = ivf_flat_ann_topk(embeddings, k, n_probe=p, shared=shared).select(
+        t = ivf_flat_ann_topk(embeddings, k, n_probe=p).select(
             F.lit(p).cast("long").alias("n_probe"), "query_id", "neighbor_id"
         )
         tagged = t if tagged is None else tagged.unionByName(t)
@@ -2143,17 +2055,13 @@ def ivf_probe_sweep(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
             F.array(*[F.lit(p).cast("long") for p in IVF_SWEEP_PROBES])
         ).alias("n_probe")
     )
-    return (
+    return _with_recall(
         pframe.join(hits, "n_probe", "left")
         .crossJoin(F.broadcast(total))
         .select(
             "n_probe",
             F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
             F.col("n_total").cast("long").alias("n_total"),
-            F.when(
-                F.col("n_total") > 0,
-                F.round(F.col("n_hit") / F.col("n_total").cast("double"), 6),
-            ).alias("recall"),
         )
     )
 
@@ -2783,11 +2691,7 @@ def ann_index_balance_report(
     fires is ``ann_index_retrain`` below — re-draw centroids on the
     current corpus and verify balance + recall recover."""
     corpus = _corpus(embeddings)
-    cent = (
-        corpus.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(n_centroids)
-        .select(F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid"))
-    )
+    cent = _seeded_cents(corpus, n_centroids)
     return _balance_row(_ivf_assign(corpus, cent), cent)
 
 
@@ -2821,6 +2725,7 @@ def _balance_row(assigned: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def ann_index_retrain(
     embeddings: DataFrame,
     k: int = DEFAULT_K,
@@ -2862,16 +2767,11 @@ def ann_index_retrain(
     frame; all comparisons run on |Q|·k rows. Corpus and query frames
     are persisted once and shared across the brute pass and both
     probes (the recall-report convention)."""
-    from ..session import scoped_persist
-
-    shared = {
-        "corpus": scoped_persist(_corpus(embeddings)),
-        "qs": scoped_persist(_queries(embeddings), chain=True),
-    }
-    corpus, qs = shared["corpus"], shared["qs"]
-    brute = scoped_persist(
-        ann_brute_topk(embeddings, k, shared).select("query_id", "neighbor_id"),
-        chain=True,
+    scope = query_scope()
+    corpus = scope.persist(_corpus(embeddings))
+    qs = scope.persist(_queries(embeddings))
+    brute = scope.persist(
+        ann_brute_topk(embeddings, k).select("query_id", "neighbor_id")
     )
     total = brute.agg(F.count("*").cast("long").alias("n_total"))
     est = corpus.filter(F.col("neighbor_id") % ANN_INCR_MOD != 0)
@@ -2885,14 +2785,8 @@ def ann_index_retrain(
     tagged = None
     balance = {}
     for state, src in states:
-        cent = (
-            src.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-            .limit(n_centroids)
-            .select(
-                F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid")
-            )
-        )
-        assigned = scoped_persist(_ivf_assign(corpus, cent), chain=True)
+        cent = _seeded_cents(src, n_centroids)
+        assigned = scope.persist(_ivf_assign(corpus, cent))
         balance[state] = _balance_row(assigned, cent).withColumn(
             "index_state", F.lit(state)
         )
@@ -2909,7 +2803,7 @@ def ann_index_retrain(
         F.explode(F.array(*[F.lit(s) for s, _ in states])).alias("index_state")
     )
     rows = balance["stale"].unionByName(balance["retrained"])
-    return (
+    return _with_recall(
         rows.join(sframe.join(hits, "index_state", "left"), "index_state")
         .crossJoin(F.broadcast(total))
         .select(
@@ -2923,10 +2817,6 @@ def ann_index_retrain(
             "imbalance_factor",
             F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
             "n_total",
-            F.when(
-                F.col("n_total") > 0,
-                F.round(F.col("n_hit") / F.col("n_total").cast("double"), 6),
-            ).alias("recall"),
         )
     )
 
@@ -2959,11 +2849,9 @@ def ann_filtered_topk(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     filter (half the corpus never leaves the source); query side
     broadcast, corpus never shuffles until the tiny top-k window.
     Same O(|Q|·n_kept) bound as ann_topk on the kept fraction."""
-    shared = {
-        "corpus": _corpus(embeddings.filter(F.expr(ANN_FILTER_PRED))),
-        "qs": _queries(embeddings),
-    }
-    return ann_brute_topk(embeddings, k, shared)
+    return _brute_topk(
+        _corpus(embeddings.filter(F.expr(ANN_FILTER_PRED))), _queries(embeddings), k
+    )
 
 
 def ann_filtered_ivf_topk(
@@ -2993,11 +2881,7 @@ def ann_filtered_ivf_topk(
     deterministic given the md5-seeded draw ⇒ separate full
     value-hash oracle, same as the unfiltered seeded twin."""
     corpus = _corpus(embeddings)
-    cent = (
-        corpus.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(n_centroids)
-        .select(F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid"))
-    )
+    cent = _seeded_cents(corpus, n_centroids)
     assigned = _ivf_assign(corpus, cent).join(
         _filter_ids(embeddings), "neighbor_id", "left_semi"
     )

@@ -26,6 +26,7 @@ from ..functions.text import (
     token_count,
     tokens,
 )
+from ..session import query_scope, scoped
 
 
 def token_stats(docs: DataFrame) -> DataFrame:
@@ -628,6 +629,7 @@ def quality_model_scores(docs: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def source_kl(docs: DataFrame) -> DataFrame:
     """Per-source KL divergence of the source's unigram distribution
     against the whole-corpus distribution — the drift/outlier signal
@@ -645,8 +647,6 @@ def source_kl(docs: DataFrame) -> DataFrame:
     second scan), one term-keyed join, and a broadcast of the tiny
     per-source totals. Work is proportional to corpus token volume;
     no windows, no driver collect."""
-    from ..session import scoped_persist
-
     par = docs.sparkSession.sparkContext.defaultParallelism
     tok = docs.repartition(par).select(
         "source", F.explode(tokens("text")).alias("term")
@@ -654,7 +654,7 @@ def source_kl(docs: DataFrame) -> DataFrame:
     # Four consumers derive from the (source, term) counts (corpus
     # rollup, per-source totals, grand total, contribution join) —
     # persist so the explode+partial-agg subtree runs once.
-    st = scoped_persist(tok.groupBy("source", "term").agg(F.count("*").alias("c_st")))
+    st = query_scope().persist(tok.groupBy("source", "term").agg(F.count("*").alias("c_st")))
     s_tot = st.groupBy("source").agg(
         F.sum("c_st").cast("long").alias("n_s"),
         F.count("*").cast("long").alias("distinct_terms"),
@@ -693,6 +693,7 @@ def source_kl(docs: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def docs_perplexity(docs: DataFrame) -> DataFrame:
     """CCNet-style unigram-LM perplexity filtering: score every document
     by its cross-entropy under the corpus's own unigram distribution —
@@ -709,15 +710,13 @@ def docs_perplexity(docs: DataFrame) -> DataFrame:
     the corpus frequency table derives from it, no second scan), a
     term-keyed join, per-doc aggregation, and a one-row broadcast of
     the grand total. Work ∝ corpus token volume."""
-    from ..session import scoped_persist
-
     par = docs.sparkSession.sparkContext.defaultParallelism
     # r9: hash by doc_id — the persisted (doc_id, term) counts build
     # with one exchange and the per-doc rollup reuses the layout
     tok = docs.repartition(par, "doc_id").select(
         "doc_id", F.explode(tokens("text")).alias("term")
     )
-    dt = scoped_persist(tok.groupBy("doc_id", "term").agg(F.count("*").alias("c_dt")))
+    dt = query_scope().persist(tok.groupBy("doc_id", "term").agg(F.count("*").alias("c_dt")))
     freq = dt.groupBy("term").agg(F.sum("c_dt").cast("long").alias("c_t"))
     n_all = freq.agg(F.sum("c_t").cast("long").alias("n_all"))
     per_doc = (
@@ -739,6 +738,7 @@ def docs_perplexity(docs: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def docs_ccnet_buckets(docs: DataFrame) -> DataFrame:
     """CCNet's head/middle/tail split (Wenzek et al. 2020): rank every
     document by its LM perplexity and cut the corpus at the 1/3 and 2/3
@@ -753,11 +753,9 @@ def docs_ccnet_buckets(docs: DataFrame) -> DataFrame:
     flip a bucket (the value_percentiles parity argument). At 100 TB
     swap in approx_percentile for the boundary pass; buckets are a
     one-scan CASE either way."""
-    from ..session import scoped_persist
-
-    # chain=True: docs_perplexity scope-persisted its (doc, term)
-    # counts; keep them alive while pp itself materializes.
-    pp = scoped_persist(docs_perplexity(docs), chain=True)
+    # docs_perplexity's persisted (doc, term) counts share this scope,
+    # so they stay cached while pp itself materializes.
+    pp = query_scope().persist(docs_perplexity(docs))
     b = pp.agg(
         F.round(F.expr("percentile(perplexity, 0.3333333333333333)"), 6).alias("b1"),
         F.round(F.expr("percentile(perplexity, 0.6666666666666666)"), 6).alias("b2"),
@@ -808,6 +806,7 @@ def _hashed_grams(docs: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
+@scoped
 def dsir_importance_weights(
     docs: DataFrame,
     target_lang: str = DSIR_TARGET_LANG,
@@ -834,9 +833,7 @@ def dsir_importance_weights(
     counts), bucket tables capped at ``n_buckets`` rows and broadcast,
     totals a one-row broadcast — work ∝ corpus token volume, no
     corpus-sized shuffle beyond the (doc, bucket) aggregation."""
-    from ..session import scoped_persist
-
-    db = scoped_persist(
+    db = query_scope().persist(
         _hashed_grams(docs, n_buckets)
         .groupBy("doc_id", "lang", "bucket")
         .agg(F.count("*").alias("c_db"))
@@ -986,6 +983,7 @@ def docs_length_histogram(docs: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def docs_bigram_perplexity(docs: DataFrame) -> DataFrame:
     """Bigram-LM perplexity per document (the CCNet-faithful upgrade of
     ``docs_perplexity``): cross-entropy under the corpus's own MLE
@@ -1000,8 +998,6 @@ def docs_bigram_perplexity(docs: DataFrame) -> DataFrame:
     higher-order transform; (doc, x, y) counts are scope-persisted —
     the corpus bigram table AND its prefix rollup both derive from
     them; joins run bigram- and prefix-keyed with map-side partials."""
-    from ..session import scoped_persist
-
     par = docs.sparkSession.sparkContext.defaultParallelism
     toks = tokens("text")
     pairs = F.filter(
@@ -1022,7 +1018,7 @@ def docs_bigram_perplexity(docs: DataFrame) -> DataFrame:
         .select("doc_id", F.explode(pairs).alias("b"))
         .select("doc_id", F.col("b.x").alias("x"), F.col("b.y").alias("y"))
     )
-    dxy = scoped_persist(
+    dxy = query_scope().persist(
         bi.groupBy("doc_id", "x", "y").agg(F.count("*").alias("c_dxy"))
     )
     xy = dxy.groupBy("x", "y").agg(F.sum("c_dxy").cast("long").alias("c_xy"))
@@ -1370,6 +1366,7 @@ def bpe_merges(
 BPE_ENCODE_CHECKPOINT_EVERY = 8
 
 
+@scoped
 def bpe_encode(
     docs: DataFrame,
     merges: DataFrame | None = None,
@@ -1414,9 +1411,7 @@ def bpe_encode(
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("cnt"))
     )
-    from ..session import scoped_persist
-
-    wc = scoped_persist(wc)
+    wc = query_scope().persist(wc)
     enc = wc.select("term").distinct().select(
         "term", F.split("term", "").alias("syms")
     )
@@ -1943,6 +1938,7 @@ def _uni_logprobs(counts: dict) -> dict:
     return {p: math.log((c + 1) / tot) for p, c in counts.items()}
 
 
+@scoped
 def unigram_lm_vocab(
     docs: DataFrame, em_rounds: int = UNI_EM_ROUNDS
 ) -> DataFrame:
@@ -1973,9 +1969,7 @@ def unigram_lm_vocab(
     table against a pure-python reference running the identical
     algorithm, at two SFs."""
     spark = docs.sparkSession
-    from ..session import scoped_persist
-
-    words_df = scoped_persist(
+    words_df = query_scope().persist(
         docs.select(F.explode(tokens("text")).alias("term"))
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("n"))
@@ -2054,6 +2048,7 @@ def unigram_lm_vocab(
     )
 
 
+@scoped
 def unigram_encode(docs: DataFrame, vocab: DataFrame | None = None) -> DataFrame:
     """Unigram-LM ENCODE: Viterbi-segment the corpus under a trained
     piece table; per-document accounting
@@ -2067,8 +2062,6 @@ def unigram_encode(docs: DataFrame, vocab: DataFrame | None = None) -> DataFrame
     The piece table rides in as a closure broadcast (model artifact).
     Rows-only (inherits the trainer); per-word segmentations pinned
     against the shared ``_uni_viterbi`` in tests."""
-    from ..session import scoped_persist
-
     if vocab is None:
         vocab = unigram_lm_vocab(docs)
     logp = {r.piece: r.log_prob for r in vocab.collect()}
@@ -2081,7 +2074,7 @@ def unigram_encode(docs: DataFrame, vocab: DataFrame | None = None) -> DataFrame
                 out.append((term, len(seg)))
             yield pd.DataFrame(out, columns=["term", "n_pieces_w"])
 
-    wc = scoped_persist(
+    wc = query_scope().persist(
         docs.select("doc_id", F.explode(tokens("text")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").cast("long").alias("cnt"))

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.keys import money_sum
+from ..session import query_scope, scoped
 
 Q1_CUTOFF = "2001-09-02"
 Q3_DATE = "1998-06-01"
@@ -1567,6 +1568,7 @@ def hist_daily_merge_percentiles(
     return _hist_percentiles_from(merged, width)
 
 
+@scoped
 def value_percentiles_2pass(events: DataFrame, n_bins: int = 1024) -> DataFrame:
     """EXACT p50/p90/p99 per event type without any per-group sort —
     the distributed selection algorithm (two histogram passes, in the
@@ -1588,9 +1590,7 @@ def value_percentiles_2pass(events: DataFrame, n_bins: int = 1024) -> DataFrame:
     within target buckets (data/n_bins rows, worst-case bounded by
     value-tie skew). The exact twin's ``percentile()`` instead sorts
     every group's full value list in one task."""
-    from ..session import scoped_persist
-
-    vals = scoped_persist(
+    vals = query_scope().persist(
         events.filter(F.col("value").isNotNull()).select("event_type", "value")
     )
     stats = vals.groupBy("event_type").agg(
@@ -2270,6 +2270,7 @@ def part_pagerank(
     )
 
 
+@scoped
 def part_triangles(lineitem: DataFrame) -> DataFrame:
     """Triangle counts + local clustering coefficient per part over the
     undirected co-purchase graph — the standard graph-health metric
@@ -2302,15 +2303,14 @@ def part_triangles(lineitem: DataFrame) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    from ..session import scoped_persist
-
+    scope = query_scope()
     # r9 (guide §5 caching rule — reused AND expensive to recompute):
     # ``deg`` feeds the two ranking joins AND the final report join,
     # and ``oriented`` feeds THREE consumers (both wedge legs + the
     # closing-edge probe); unpersisted, the pairs⋈deg⋈deg double join
     # re-ran per consumer (measured 60s → 23s at sf0.1 from these two
     # persists alone).
-    deg = scoped_persist(
+    deg = scope.persist(
         pairs.select(F.col("pa").alias("node"))
         .unionAll(pairs.select(F.col("pb").alias("node")))
         .groupBy("node")
@@ -2323,13 +2323,12 @@ def part_triangles(lineitem: DataFrame) -> DataFrame:
     lower_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))
     )
-    oriented = scoped_persist(
+    oriented = scope.persist(
         ranked.select(
             F.when(lower_first, F.col("pa")).otherwise(F.col("pb")).alias("src"),
             F.when(lower_first, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
             F.when(lower_first, F.col("db")).otherwise(F.col("da")).alias("dst_deg"),
-        ),
-        chain=True,
+        )
     )
     e1 = oriented.select("src", F.col("dst").alias("y"), F.col("dst_deg").alias("dy"))
     e2 = oriented.select("src", F.col("dst").alias("z"), F.col("dst_deg").alias("dz"))

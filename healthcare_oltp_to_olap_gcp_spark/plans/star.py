@@ -25,11 +25,12 @@ BY keys with partitionBy + sortWithinPartitions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, DataFrameWriter, Window
 from pyspark.sql import functions as F
 
 from ..functions.keys import surrogate_key
-from ..session import scoped_persist
+from ..session import query_scope, scoped
+
 
 def dedup_order() -> tuple[F.Column, ...]:
     """Dedup survivor ordering: newest ts wins, with a deterministic
@@ -138,41 +139,40 @@ def dim_source(fact: DataFrame) -> DataFrame:
     )
 
 
-def fact_events_star(fact: DataFrame) -> DataFrame:
-    """Star fact: fact ⋈ all dims on natural keys, keep surrogate keys +
-    measure + degenerate event_id, ref sql/bq_fact_vitals_star.sql.
-
-    Dims are broadcast — the fact side never shuffles, which is the
-    property that matters at 100 TB.
+def _join_dims(fact: DataFrame, how: str) -> DataFrame:
+    """The fact joined to all four broadcast dims on natural keys.
 
     The fact is persisted: it feeds four dimension builds plus the
     final join, and Spark reuses no exchanges across those subtrees
     (measured: 5 scans / 15 window recomputes without the persist).
     The production shape is refresh_model, which materializes the fact
-    to parquet and reads it back for the dims. ``scoped_persist``
-    releases the previous query's cache so a full registry sweep does
-    not accumulate cached blocks.
-    """
-    fact = scoped_persist(fact)
-    du = F.broadcast(dim_user(fact))
-    de = F.broadcast(dim_event_type(fact))
-    db = F.broadcast(dim_band(fact))
-    ds = F.broadcast(dim_source(fact))
+    to parquet and reads it back for the dims. The cache lives until
+    the next top-level query build (``session.scoped``)."""
+    fact = query_scope().persist(fact)
     return (
-        fact.join(du, "user_id")
-        .join(de, "event_type")
-        .join(db, "band")
-        .join(ds, F.col("src") == F.col("source"))
-        .select(
-            "user_key",
-            "event_type_key",
-            "band_key",
-            "source_key",
-            F.to_date("ts").alias("date_key"),
-            "event_id",
-            F.col("value").alias("measure_value"),
-            "ts",
-        )
+        fact.join(F.broadcast(dim_user(fact)), "user_id", how)
+        .join(F.broadcast(dim_event_type(fact)), "event_type", how)
+        .join(F.broadcast(dim_band(fact)), "band", how)
+        .join(F.broadcast(dim_source(fact)), F.col("src") == F.col("source"), how)
+    )
+
+
+@scoped
+def fact_events_star(fact: DataFrame) -> DataFrame:
+    """Star fact: fact ⋈ all dims on natural keys, keep surrogate keys +
+    measure + degenerate event_id, ref sql/bq_fact_vitals_star.sql.
+
+    Dims are broadcast — the fact side never shuffles, which is the
+    property that matters at 100 TB."""
+    return _join_dims(fact, "inner").select(
+        "user_key",
+        "event_type_key",
+        "band_key",
+        "source_key",
+        F.to_date("ts").alias("date_key"),
+        "event_id",
+        F.col("value").alias("measure_value"),
+        "ts",
     )
 
 
@@ -197,26 +197,27 @@ def sanity_row_counts(fact: DataFrame, star: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def sanity_missing_dims(fact: DataFrame) -> DataFrame:
     """ref README 'No Missing Dimensions' — rows whose natural keys
     fail to resolve in any dimension (should be 0)."""
-    fact = scoped_persist(fact)
-    du = F.broadcast(dim_user(fact))
-    de = F.broadcast(dim_event_type(fact))
-    db = F.broadcast(dim_band(fact))
-    ds = F.broadcast(dim_source(fact))
-    joined = (
-        fact.join(du, "user_id", "left")
-        .join(de, "event_type", "left")
-        .join(db, "band", "left")
-        .join(ds, F.col("src") == F.col("source"), "left")
-    )
-    return joined.filter(
+    return _join_dims(fact, "left").filter(
         F.col("user_key").isNull()
         | F.col("event_type_key").isNull()
         | F.col("band_key").isNull()
         | F.col("source_key").isNull()
     ).agg(F.count("*").alias("rows_missing_any_dimension"))
+
+
+def _star_writer(star: DataFrame) -> DataFrameWriter:
+    """The writer ``write_star`` and ``write_star_incremental`` share:
+    one file per day partition, clustered row groups."""
+    return (
+        star.repartition("date_key")
+        .sortWithinPartitions("user_key", "event_type_key")
+        .write.mode("overwrite")
+        .partitionBy("date_key")
+    )
 
 
 def write_star(star: DataFrame, path: str) -> None:
@@ -230,13 +231,7 @@ def write_star(star: DataFrame, path: str) -> None:
     - ``sortWithinPartitions(user_key, event_type_key)`` → clustered
       parquet row groups, so min/max row-group stats prune key lookups.
     """
-    (
-        star.repartition("date_key")
-        .sortWithinPartitions("user_key", "event_type_key")
-        .write.mode("overwrite")
-        .partitionBy("date_key")
-        .parquet(path)
-    )
+    _star_writer(star).parquet(path)
 
 
 def write_star_incremental(star_delta: DataFrame, path: str) -> None:
@@ -247,21 +242,10 @@ def write_star_incremental(star_delta: DataFrame, path: str) -> None:
     100 TB table per cycle is a non-starter; rewriting the 1-2 days the
     delta touches is O(delta)).
 
-    Uses ``partitionOverwriteMode=dynamic`` scoped to this write, so a
-    concurrent full ``write_star`` keeps static-overwrite semantics."""
-    spark = star_delta.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            star_delta.repartition("date_key")
-            .sortWithinPartitions("user_key", "event_type_key")
-            .write.mode("overwrite")
-            .partitionBy("date_key")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    ``partitionOverwriteMode=dynamic`` is a per-write option, so the
+    session conf (and any concurrent full ``write_star``) keeps
+    static-overwrite semantics."""
+    _star_writer(star_delta).option("partitionOverwriteMode", "dynamic").parquet(path)
 
 
 INCREMENTAL_CUTOFF = "2024-01-24"

@@ -9,9 +9,15 @@ same code hold from sf0.001 up to 100 TB.
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Callable
+from contextvars import ContextVar
+from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(app_name: str = "hc-olap-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -61,31 +67,82 @@ def get_spark(app_name: str = "hc-olap-spark", shuffle_partitions: int | None = 
     )
 
 
-_SCOPED_CACHES: list[DataFrame] = []
-
-
-def scoped_persist(df: DataFrame, *, chain: bool = False) -> DataFrame:
-    """Persist ``df``, releasing any frame previously persisted through
-    this helper.
+class QueryScope:
+    """The cached frames and memoized values of one top-level query build.
 
     Query builders persist intermediates that feed several subtrees of
-    ONE returned plan (e.g. the star fact feeding four dimension builds);
-    that cache must survive the query's execution but nothing after it.
-    Since the registry runs queries sequentially, releasing the previous
-    scoped cache at the next build bounds cached-block growth across a
-    full ``queries()`` sweep. Releasing early is always safe — an
-    unpersisted frame recomputes, it never returns wrong data.
+    ONE returned plan (e.g. the star fact feeding four dimension builds).
+    Builders return lazy frames that their callers run later, so the
+    cache must outlive the builder call; it is released when the next
+    top-level build starts (see ``scoped``). Releasing early is always
+    safe — an unpersisted frame recomputes, it never returns wrong data.
 
-    ``chain=True`` keeps the previously persisted frames alive — for a
-    builder whose ONE scope needs several cached intermediates (e.g.
-    ann_recall_report's shared corpus + query + brute frames); the whole
-    chain is released together at the next non-chained call."""
-    if not chain:
-        for old in _SCOPED_CACHES:
+    ``memo`` keys hold their source DataFrame objects themselves, so a
+    value built from one corpus can never be returned for another."""
+
+    def __init__(self) -> None:
+        self.open = False
+        self._frames: list[DataFrame] = []
+        self._memo: dict = {}
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` until this scope is released. Spark's cache
+        manager matches cached frames by plan, so every later subtree
+        that rebuilds the same plan reads this copy: a multi-method
+        builder persists a shared input once and its methods need not
+        be handed the persisted object."""
+        self._frames.append(df)
+        return df.persist()
+
+    def memo(self, key: tuple, build: Callable[[], Any]) -> Any:
+        """``build()`` once per ``key`` in this scope; ``None`` counts."""
+        if key not in self._memo:
+            self._memo[key] = build()
+        return self._memo[key]
+
+    def release(self) -> None:
+        for df in self._frames:
             try:
-                old.unpersist()
+                df.unpersist()
             except Exception:
                 pass
-        _SCOPED_CACHES.clear()
-    _SCOPED_CACHES.append(df)
-    return df.persist()
+        self._frames.clear()
+        self._memo.clear()
+
+
+_SCOPE: ContextVar[QueryScope | None] = ContextVar("query_scope", default=None)
+
+
+def query_scope() -> QueryScope:
+    """The scope of the builder being built; outside any builder, the
+    most recent top-level scope (frames persisted there are released
+    with it)."""
+    scope = _SCOPE.get()
+    if scope is None:
+        scope = QueryScope()
+        _SCOPE.set(scope)
+    return scope
+
+
+def scoped(builder: Callable[..., T]) -> Callable[..., T]:
+    """Run ``builder`` in a query scope. A call nested in another scoped
+    builder joins its open scope; a top-level call first releases the
+    previous top-level scope, so a sequential registry sweep holds at
+    most one query's cached blocks."""
+
+    @functools.wraps(builder)
+    def run(*args, **kwargs):
+        scope = _SCOPE.get()
+        if scope is not None and scope.open:
+            return builder(*args, **kwargs)
+        if scope is not None:
+            scope.release()
+        scope = QueryScope()
+        _SCOPE.set(scope)
+        scope.open = True
+        try:
+            return builder(*args, **kwargs)
+        finally:
+            scope.open = False
+
+    return run

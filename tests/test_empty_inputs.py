@@ -29,6 +29,13 @@ def empty_dir(tmp_path_factory):
     return str(d)
 
 
+def test_trained_recall_report_survives_empty_tables(spark, empty_dir):
+    """Default-tier sample of the sweep below: the trained recall report
+    takes the empty-corpus fit path (a None fit sample, memoized once
+    per query scope) in three of its six methods."""
+    assert entry.queries()["ann_recall_report_trained"](spark, empty_dir).count() == 6
+
+
 @pytest.mark.fullsweep
 def test_all_queries_survive_empty_tables(spark, empty_dir):
     failures = {}

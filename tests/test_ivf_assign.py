@@ -89,8 +89,9 @@ def test_perrow_assignment_equals_window_form_seeded(spark):
 
 
 def test_perrow_assignment_equals_window_form_trained(spark):
-    corpus = _corpus(_emb(spark))
-    cent, _, _ = _trained_centroids(spark, corpus, 16)
+    emb = _emb(spark)
+    corpus = _corpus(emb)
+    cent, _, _ = _trained_centroids(emb, 16)
     assert _rows(_perrow_assign(corpus, cent, 4)) == _rows(
         _legacy_assign(corpus, cent, 4)
     )

@@ -38,6 +38,7 @@ SMOKE_KEYS = [
     "bm25_wand_topk",
     "bm25_chunk_maxp_topk",
     "bm25_rerank_topk",
+    "bm25_rerank_dfcap_topk",
     "hybrid_rrf_topk",
     "rm3_expansion_topk",
     "rm3_dfcap_expansion_topk",
@@ -53,6 +54,7 @@ SMOKE_KEYS = [
     "bq_ann_topk",
     "ann_recall_report",
     "ivf_probe_sweep",
+    "ann_index_retrain",
     "ann_filtered_topk",
     "knn_graph_components",
     "semdedup_embeddings",

@@ -1,0 +1,143 @@
+"""The query scope (session.QueryScope): cached frames live until the
+next top-level build, nested builders share one scope, memoized values
+are keyed by their source frame, and zero-hit report rows read 0.0."""
+
+from __future__ import annotations
+
+import numpy as np
+from pyspark.sql import functions as F
+
+from healthcare_oltp_to_olap_gcp_spark.catalog import table
+from healthcare_oltp_to_olap_gcp_spark.operators import retrieval, similarity
+from healthcare_oltp_to_olap_gcp_spark.plans import star
+from healthcare_oltp_to_olap_gcp_spark.session import QueryScope, query_scope, scoped
+
+from .conftest import SF001
+from .helpers import normalize
+
+
+def _facts(spark):
+    events = table(spark, SF001, "events")
+    return (
+        star.fact_events(events.filter(F.col("event_id") % 2 == 0)),
+        star.fact_events(events.filter(F.col("event_id") % 2 == 1)),
+    )
+
+
+def test_next_top_level_build_releases_previous_frames(spark):
+    first, second = _facts(spark)
+    star.fact_events_star(first)
+    assert first.is_cached
+    star.sanity_missing_dims(second)
+    assert not first.is_cached
+    assert second.is_cached
+
+
+def test_nested_builders_share_one_scope(spark):
+    first, second = _facts(spark)
+
+    @scoped
+    def both():
+        return star.fact_events_star(first), star.sanity_missing_dims(second)
+
+    both()
+    assert first.is_cached and second.is_cached
+    star.fact_events_star(first)  # a new top-level build
+    assert not second.is_cached
+
+
+def test_memo_builds_once_and_caches_none():
+    scope = QueryScope()
+    calls = []
+
+    def build():
+        calls.append(1)
+        return None
+
+    assert scope.memo(("k",), build) is None
+    assert scope.memo(("k",), build) is None
+    assert len(calls) == 1
+
+
+def _fit_jobs(spark, group, fit):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fit()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fit_sample_is_per_corpus_and_empty_corpus_collects_once(spark):
+    emb = table(spark, SF001, "embeddings")
+    even = emb.filter(F.col("vec_id") % 2 == 0)
+    empty = emb.filter(F.col("vec_id") < 0)
+
+    @scoped
+    def fits():
+        return (
+            similarity._fit_sample_matrix(emb, 64),
+            similarity._fit_sample_matrix(even, 64),
+            similarity._fit_sample_matrix(emb, 64),
+        )
+
+    x_all, x_even, x_again = fits()
+    assert x_again is x_all  # memoized in the scope
+    assert not np.array_equal(x_all, x_even)  # no corpus hits another's entry
+    assert np.array_equal(scoped(similarity._fit_sample_matrix)(even, 64), x_even)
+
+    @scoped
+    def empty_twice():
+        assert similarity._fit_sample_matrix(empty, 64) is None
+        assert similarity._fit_sample_matrix(empty, 64) is None
+
+    assert _fit_jobs(spark, "empty_fit_once", empty_twice) == 1
+    # two scopes collect twice: the job count above is not vacuous
+    assert _fit_jobs(spark, "empty_fit_twice", lambda: (empty_twice(), empty_twice())) == 2
+
+
+def test_bm25_rerank_with_or_without_memoized_vectors(spark):
+    docs = table(spark, SF001, "documents")
+    emb = table(spark, SF001, "embeddings")
+    want = normalize(retrieval.bm25_rerank_topk(docs, emb).toPandas())
+
+    @scoped
+    def corpus_only():
+        # a scope holding only a persisted corpus, no query frame
+        query_scope().persist(similarity._corpus(emb))
+        return retrieval.bm25_rerank_topk(docs, emb)
+
+    @scoped
+    def report_vectors():
+        # the quality report's path: its persisted frames become the
+        # rerank vectors
+        scope = query_scope()
+        corpus = scope.persist(similarity._corpus(emb))
+        qs = scope.persist(similarity._queries(emb))
+        retrieval._reuse_rerank_vectors(emb, corpus, qs)
+        return retrieval.bm25_rerank_topk(docs, emb)
+
+    assert want
+    assert normalize(corpus_only().toPandas()) == want
+    assert normalize(report_vectors().toPandas()) == want
+
+
+def test_zero_hit_method_has_recall_zero(spark):
+    emb = table(spark, SF001, "embeddings")
+
+    def no_hits(embeddings, k):
+        return embeddings.sparkSession.createDataFrame([], "query_id long, neighbor_id long")
+
+    @scoped
+    def report():
+        brute = similarity._persist_recall_inputs(emb, similarity.DEFAULT_K)
+        total = brute.agg(F.count("*").alias("n_total"))
+        methods = (("ivf_flat", similarity.ivf_flat_ann_topk), ("none", no_hits))
+        return similarity._recall_rows(brute, total, emb, similarity.DEFAULT_K, methods)
+
+    rows = {r.method: r for r in report().collect()}
+    assert rows["none"].n_total > 0
+    assert rows["none"].n_hit == 0
+    assert rows["none"].recall == 0.0
+    assert rows["ivf_flat"].recall > 0.0

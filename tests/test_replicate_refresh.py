@@ -98,6 +98,7 @@ def test_write_star_incremental_rewrites_only_touched_partitions(spark, tmp_path
     delta = full.filter(F.col("date_key") == F.lit(target)).withColumn(
         "measure_value", F.col("measure_value") * 2
     )
+    conf_before = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     star_plan.write_star_incremental(delta, path)
 
     got = spark.read.parquet(path)
@@ -106,8 +107,6 @@ def test_write_star_incremental_rewrites_only_touched_partitions(spark, tmp_path
     # untouched partitions keep their exact files
     for d, files in others_before.items():
         assert sorted(os.listdir(f"{path}/date_key={d}")) == files
-    # the overwrite mode is restored after the scoped write
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        != "dynamic"
-    )
+    # dynamic overwrite is a per-write option: the session conf is untouched
+    assert conf_before.upper() == "STATIC"
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == conf_before
