@@ -750,78 +750,62 @@ def _streaming_pipeline():
     return pipeline
 
 
-# The driver's correctness gate checks the FIRST 50 entries of QUERIES in
-# insertion order (confirmed rounds 1-8). Window composition for round 9
-# (VERDICT r8 item 1 — the full r4-checked cohort crosses the staleness
-# line the moment CORRECTNESS_r09 lands):
-#   head  operators new in r9 (no driver row can exist yet);
-#   then  the MANDATORY staleness cohort: ALL 35 keys whose last driver
-#         row is r4 (age 6 once r9's row lands — deferring any of them
-#         recreates r7's red gate in r10), oldest-first alphabetical;
-#   tail  r5-checked fill, oldest-first alphabetical, displaced
-#         one-for-one as new operators land (the remaining r5 keys are
-#         age 4 after this round and lead the r10 rotation; batch 2's
-#         five operators displaced bpe_encode_documents..clean_documents
-#         back into that r10 cohort).
-# Everything not in the window keeps identical coverage through
-# tests/test_parity.py at sf0.001 + sf0.01, and tools/window_check.py
-# (wired into the test suite) fails CI if ANY registered query has
-# never been driver-checked or has gone >= 6 rounds without a fresh
-# row while outside the current window.
+# The driver's correctness gate checks the first 50 entries of QUERIES;
+# they are the 50 keys with the oldest driver CORRECTNESS row, oldest-first
+# then alphabetical, so tools/window_check.py's staleness gate holds.
 _PRIORITY = [
-    # -- new in round 9 --
-    "bm25_workload_topk",
-    "bm25_chunk_maxp_topk",
-    "ann_index_retrain",
-    "ivf_flat_workload_topk",
-    "bm25_index_stats_report",
-    "lm_dirichlet_topk",
-    "tfidf_doc_similarity_topk",
-    "ann_filtered_topk",
-    "ann_filtered_ivf_topk",
-    "ann_twostage_truncated_topk",
-    # -- mandatory: last driver row r4 (age 6 once r9's row lands) --
-    "clean_documents_keep_best",
-    "cms_token_counts",
-    "curated_documents",
-    "customer_rfm_segments",
-    "docs_bigram_perplexity",
-    "docs_dedup_report",
-    "docs_length_histogram",
-    "docs_remove_dup_spans",
-    "dup_span_stats",
-    "embedding_neardup_lsh_pairs",
-    "events_cusum_changepoints",
-    "events_daily_rollup_incremental",
-    "events_debounce",
-    "events_hourly_robust_anomalies",
-    "events_snapshot_diff",
-    "fact_events_streamed",
-    "langid_confusion",
-    "ngram_containment_pairs",
-    "ngram_dup_pairs",
-    "orders_revenue_concentration",
-    "part_copurchase_lift",
-    "part_pagerank",
-    "part_triangles",
-    "q21_waiting_suppliers",
-    "session_window_agg",
-    "sessionize",
-    "temperature_sample_documents",
-    "theta_anotb_segment_users",
-    "theta_daily_merge_events",
-    "theta_intersect_segment_users",
-    "theta_segment_users",
-    "theta_union_segment_users",
-    "token_typo_pairs",
-    "view_purchase_attribution",
-    "vocab_coverage",
-    # -- fill: last driver row r5, oldest-first alphabetical --
-    "ann_gemm_topk",
-    "ann_lsh_topk",
-    "ann_recall_report",
-    "ann_recall_report_trained",
-    "ann_topk",
+    # -- last driver row r5 --
+    "bpe_encode_documents",
+    "bpe_merges",
+    "bq_ann_topk",
+    "centroid_auc_report",
+    "clean_documents",
+    "dedup_components",
+    "dedup_incremental",
+    "dedup_segments",
+    "docs_ccnet_buckets",
+    "docs_contamination_bloom",
+    "docs_ngram_novelty",
+    "docs_perplexity",
+    "dsir_importance_weights",
+    "dsir_sample_documents",
+    "dup_source_matrix",
+    "embedding_classifier_report",
+    "event_type_transitions",
+    "events_seasonality",
+    "hard_negative_mining",
+    "ivf_probe_sweep",
+    "knn_graph_components",
+    "knn_label_vote",
+    "minhash_lsh_dup_pairs",
+    "mixture_sample_documents",
+    "multimodal_audio_energy",
+    "neardup_recall_report",
+    "pq_ann_topk",
+    "pq_trained_ann_topk",
+    "quality_auc_report",
+    "quality_signal_corr",
+    "scd2_user_band",
+    "session_paths_topk",
+    "simhash_dup_pairs",
+    "split_leakage_report",
+    "sq8_ann_topk",
+    "unimax_sample_documents",
+    "user_retention_cohorts",
+    "value_range_join",
+    "vocab_growth_fit",
+    # -- last driver row r6 --
+    "bloom_prejoin_revenue",
+    "bm25_rerank_dfcap_topk",
+    "bm25_rerank_topk",
+    "customers_without_orders",
+    "dataset_card_report",
+    "dim_band",
+    "dim_event_type",
+    "dim_source",
+    "dim_time",
+    "dim_user",
+    "domain_mixture_weights",
 ]
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -17,6 +17,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def newest_per_key(
+    df: DataFrame, key: str, order: tuple[F.Column, ...]
+) -> DataFrame:
+    """The survivor rule every dedup and MERGE here shares: per ``key``,
+    keep the first row under ``order`` (one hash shuffle on the key and
+    a ``row_number`` window)."""
+    w = Window.partitionBy(key).orderBy(*order)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def merge_upsert(
     existing: DataFrame,
     updates: DataFrame,
@@ -31,12 +45,7 @@ def merge_upsert(
     tagged = updates.withColumn("_prio", F.lit(0)).unionByName(
         existing.withColumn("_prio", F.lit(1))
     )
-    w = Window.partitionBy(key).orderBy(F.col("_prio"), *tiebreak)
-    return (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_prio", "_rn")
-    )
+    return newest_per_key(tagged, key, (F.col("_prio"), *tiebreak)).drop("_prio")
 
 
 def simulated_updates(events: DataFrame) -> DataFrame:

@@ -2448,6 +2448,34 @@ def events_seasonality(events: DataFrame) -> DataFrame:
 DRIFT_BINS = 10
 
 
+def drift_bin() -> F.Column:
+    """``value``'s bin against frozen per-type edges ``vmin``/``vmax``:
+    ``DRIFT_BINS`` equal-width bins, out-of-range values clamped to the
+    edge bins, and a constant reference range is a single bin."""
+    nb = float(DRIFT_BINS)
+    raw_bin = F.floor(
+        (F.col("value") - F.col("vmin"))
+        / ((F.col("vmax") - F.col("vmin")) / F.lit(nb))
+    )
+    return (
+        F.when(F.col("vmax") == F.col("vmin"), F.lit(0))
+        .otherwise(
+            F.least(F.lit(nb - 1.0), F.greatest(F.lit(0.0), raw_bin)).cast("int")
+        )
+        .alias("bin")
+    )
+
+
+def psi_term() -> F.Column:
+    """One bin's PSI term from ``ref_c``/``n_ref`` and ``cur_c``/``n_cur``:
+    Laplace +0.5 smoothing, rounded to 10 dp as a DECIMAL so the
+    per-type sum is exact in both engines."""
+    smooth = F.lit(0.5 * DRIFT_BINS)
+    p = (F.col("ref_c") + F.lit(0.5)) / (F.col("n_ref") + smooth)
+    q = (F.col("cur_c") + F.lit(0.5)) / (F.col("n_cur") + smooth)
+    return F.round((p - q) * F.log(p / q), 10).cast("decimal(18,10)").alias("t")
+
+
 def events_drift_report(events: DataFrame) -> DataFrame:
     """Distribution-drift monitor — PSI + two-sample KS per event_type
     between the first and second half of the observed time range (r7;
@@ -2513,19 +2541,8 @@ def events_drift_report(events: DataFrame) -> DataFrame:
             "sum_cur"
         ),
     )
-    nb = float(DRIFT_BINS)
-    raw_bin = F.floor(
-        (F.col("value") - F.col("vmin"))
-        / ((F.col("vmax") - F.col("vmin")) / F.lit(nb))
-    )
     binned = tagged.join(edges, "event_type").select(
-        "event_type",
-        "is_ref",
-        F.when(F.col("vmax") == F.col("vmin"), F.lit(0))
-        .otherwise(
-            F.least(F.lit(nb - 1.0), F.greatest(F.lit(0.0), raw_bin)).cast("int")
-        )
-        .alias("bin"),
+        "event_type", "is_ref", drift_bin()
     )
     grid = edges.select(
         "event_type",
@@ -2540,15 +2557,9 @@ def events_drift_report(events: DataFrame) -> DataFrame:
         F.coalesce("ref_c", F.lit(0)).alias("ref_c"),
         F.coalesce("cur_c", F.lit(0)).alias("cur_c"),
     )
-    smooth = F.lit(0.5 * DRIFT_BINS)
-    p = (F.col("ref_c") + F.lit(0.5)) / (F.col("n_ref") + smooth)
-    q = (F.col("cur_c") + F.lit(0.5)) / (F.col("n_cur") + smooth)
     psi = (
         fullb.join(per_type.select("event_type", "n_ref", "n_cur"), "event_type")
-        .select(
-            "event_type",
-            F.round((p - q) * F.log(p / q), 10).cast("decimal(18,10)").alias("t"),
-        )
+        .select("event_type", psi_term())
         .groupBy("event_type")
         .agg(F.sum("t").alias("s"))
     )

@@ -5,7 +5,9 @@ The reference schedules BigQuery scripts (`build_fact_vitals_15min`,
 "Schedule Model to Refresh") with the ordering convention fact → dims →
 star. Here the whole refresh is one function so the ordering is
 structural, not a scheduling convention; each table materializes as
-parquet and the star uses the freshly built dims.
+parquet. The dims and the star both read the materialized fact: the
+star re-derives its dims from it (``fact_events_star``) rather than
+reading the dim tables just written.
 """
 
 from __future__ import annotations

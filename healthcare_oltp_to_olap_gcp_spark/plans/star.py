@@ -25,10 +25,11 @@ BY keys with partitionBy + sortWithinPartitions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, DataFrameWriter, Window
+from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 from ..functions.keys import surrogate_key
+from ..operators.merge import newest_per_key
 from ..session import query_scope, scoped
 
 
@@ -68,13 +69,7 @@ def prepared_events(events: DataFrame) -> DataFrame:
 def fact_events(events: DataFrame) -> DataFrame:
     """Deduplicated fact: newest row per event_id (idempotent wrt.
     replication overlap), ref sql/bq_fact_vitals.sql:14-17."""
-    w = Window.partitionBy("event_id").orderBy(*dedup_order())
-    return (
-        prepared_events(events)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return newest_per_key(prepared_events(events), "event_id", dedup_order())
 
 
 def dim_time(fact: DataFrame) -> DataFrame:
@@ -263,13 +258,7 @@ def fact_events_incremental(events: DataFrame, cutoff: str = INCREMENTAL_CUTOFF)
     cut = F.lit(cutoff).cast("timestamp")
     base = fact_events(events.filter(F.col("ts") < cut))
     delta = prepared_events(events.filter(F.col("ts") >= cut))
-    w = Window.partitionBy("event_id").orderBy(*dedup_order())
-    return (
-        base.unionByName(delta)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return newest_per_key(base.unionByName(delta), "event_id", dedup_order())
 
 
 def write_star_zorder(star: DataFrame, path: str) -> None:

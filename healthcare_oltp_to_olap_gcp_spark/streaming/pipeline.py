@@ -153,29 +153,24 @@ def session_agg_stream(
 
 
 def _stage_stream_src(
-    spark: SparkSession,
-    frame: DataFrame,
-    prefix: str,
-    sentinel: DataFrame | None = None,
-) -> str:
-    """Stage a batch frame as a multi-file stream source (7 part files
-    → several availableNow micro-batches under maxFilesPerTrigger=4),
-    optionally appending a watermark-sentinel file whose processing
-    order is ENFORCED, not assumed (ADVICE r8): FileStreamSource
-    batches files in modification-time order, and if the sentinel ever
-    sorted into an EARLIER micro-batch than a real-event file, the
-    watermark would advance past those real rows and silently drop
-    them as late (worst for the left-outer interval join, which would
-    also emit wrong unmatched views). Same-millisecond writes make
-    that ordering a race on a fast local FS — so after appending the
-    sentinel this helper explicitly sets the new file's mtime to
-    max(real-file mtimes) + 2 s via the Hadoop FS API, making the
-    sentinel provably the last file of the drain."""
-    import tempfile
-
-    src = tempfile.mkdtemp(prefix=prefix) + "/src"
+    frame: DataFrame, src: str, sentinel: DataFrame | None = None
+) -> None:
+    """Stage a batch frame at ``src`` as a multi-file stream source (7
+    part files → several availableNow micro-batches under
+    maxFilesPerTrigger=4), optionally appending a watermark-sentinel
+    file whose processing order is ENFORCED, not assumed (ADVICE r8):
+    FileStreamSource batches files in modification-time order, and if
+    the sentinel ever sorted into an EARLIER micro-batch than a
+    real-event file, the watermark would advance past those real rows
+    and silently drop them as late (worst for the left-outer interval
+    join, which would also emit wrong unmatched views). Same-millisecond
+    writes make that ordering a race on a fast local FS — so after
+    appending the sentinel this helper explicitly sets the new file's
+    mtime to max(real-file mtimes) + 2 s via the Hadoop FS API, making
+    the sentinel provably the last file of the drain."""
     frame.write.mode("overwrite").parquet(src)
     if sentinel is not None:
+        spark = frame.sparkSession
         jvm = spark.sparkContext._jvm
         hpath = jvm.org.apache.hadoop.fs.Path(src)
         fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
@@ -193,36 +188,52 @@ def _stage_stream_src(
         for name, st in _parts().items():
             if name not in before:
                 fs.setTimes(st.getPath(), latest + 2_000, -1)
-    return src
 
 
-def _sentinel_events(spark: SparkSession, rows) -> DataFrame:
-    """JVM-side literal events frame for watermark sentinels (r9,
-    guide §4 — eliminate the Python boundary): a Python-row
-    ``createDataFrame`` is RDD-backed, so EVERY action on it (the
-    staged sentinel write) pays a Python-worker roundtrip — measured
-    ~6 s per staged sentinel file at sf0.1 vs 0.2 s for this SQL
-    VALUES LocalRelation, which the JVM evaluates with no Python
-    involvement. ``rows`` are (event_id, user_id, event_type) — value
-    0.0, props '{}' and a NULL ts (always overwritten by the caller's
-    ``withColumn``) are fixed by the sentinel contract."""
+# Sentinel rows (event_id, user_id, event_type). The single-sentinel
+# queries use a type no real event has, so its own never-closed window
+# is droppable; the interval joins need one sentinel per side, under
+# never-occurring users that cannot pair with each other.
+SENTINEL_TYPE = "zz_watermark_sentinel"
+JOIN_SENTINELS = [(-1, -1, "view"), (-2, -2, "purchase")]
+
+
+def _watermark_sentinel(events: DataFrame, rows) -> DataFrame | None:
+    """Sentinel events stamped 30 days past max(ts): staged as the
+    drain's last file, they advance the watermark past every real
+    event, so an availableNow drain finalizes and emits ALL real
+    windows/sessions/evictions in append mode. None when ``events`` is
+    empty — the caller then returns its empty result without starting
+    a stream.
+
+    ``rows`` are (event_id, user_id, event_type); value 0.0 and props
+    '{}' are fixed. The frame is a SQL VALUES LocalRelation (r9, guide
+    §4 — eliminate the Python boundary): a Python-row
+    ``createDataFrame`` is RDD-backed, so the staged sentinel write
+    would pay a Python-worker roundtrip — measured ~6 s per staged
+    sentinel file at sf0.1 vs 0.2 s for the LocalRelation, which the
+    JVM evaluates with no Python involvement."""
+    mx = events.agg(F.max(F.unix_micros("ts"))).first()[0]
+    if mx is None:
+        return None
     vals = ", ".join(
         f"(CAST({eid} AS BIGINT), CAST(NULL AS TIMESTAMP),"
         f" CAST({uid} AS BIGINT), '{etype}', CAST(0.0 AS DOUBLE), '{{}}')"
         for eid, uid, etype in rows
     )
-    return spark.sql(
+    return events.sparkSession.sql(
         "SELECT * FROM VALUES "
         + vals
         + " AS t(event_id, ts, user_id, event_type, value, props)"
+    ).withColumn(
+        "ts", F.timestamp_micros(F.lit(mx + 30 * 24 * 3600 * 1_000_000))
     )
 
 
 def _drop_staging(src: str) -> None:
-    """Remove a drained staging tree (the mkdtemp base holding ``src``).
-    Safe once the drain's awaitTermination returned: every streamed
-    registry query drains into a MEMORY sink, whose rows live in the
-    driver — without this, repeated driver/bench sweeps at sf1
+    """Remove a staging tree (the mkdtemp base holding ``src``). Every
+    streamed registry query drains into a MEMORY sink, whose rows live
+    in the driver — without this, repeated driver/bench sweeps at sf1
     accumulate gigabytes of orphaned event copies (ADVICE r8)."""
     import os
     import shutil
@@ -230,27 +241,34 @@ def _drop_staging(src: str) -> None:
     shutil.rmtree(os.path.dirname(src), ignore_errors=True)
 
 
-def _drain_memory_sink(df: DataFrame, query_name: str, mode: str) -> DataFrame:
-    """Shared availableNow drain into a memory sink (r9): the number of
-    STATE partitions a streaming query plans with is the session's
-    ``spark.sql.shuffle.partitions`` at first start, and every
-    micro-batch commits one state-store delta PER PARTITION PER
-    stateful operator — at 32 partitions the tiny bench streams spend
-    their drain in state-file churn, not data (measured 13.7 s → 7 s
-    on the stream-stream interval join at sf0.1 with 8 partitions).
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` (default 8) sizes it; a production
-    deploy sizes state partitions to throughput/keyspace the same way
-    (this is the knob Spark itself offers for exactly this trade). Set
+# State partitions of every memory-sink drain (r9): the number of STATE
+# partitions a streaming query plans with is the session's
+# ``spark.sql.shuffle.partitions`` at first start, and every
+# micro-batch commits one state-store delta PER PARTITION PER stateful
+# operator — at 32 partitions the tiny bench streams spend their drain
+# in state-file churn, not data (measured 13.7 s → 7 s on the
+# stream-stream interval join at sf0.1 with 8 partitions). A production
+# deploy sizes state partitions to throughput/keyspace the same way.
+STREAM_SHUFFLE_PARTITIONS = 8
+
+
+def drain_memory_sink(df: DataFrame, query_name: str, mode: str) -> DataFrame:
+    """Drain everything currently available (availableNow) into the
+    memory sink ``query_name`` under output ``mode`` ("append" for
+    stream-stream joins and watermark-finalized aggregations, "update"
+    for stateful operators, "complete" for unwatermarked aggregates) and
+    return the sink as a batch DataFrame.
+
+    The state partition count (``STREAM_SHUFFLE_PARTITIONS``) is set
     only for the stream's planning window and restored right after —
     batch queries in the same session are untouched; results are
     partition-count-independent (hash-partitioned keyed state)."""
-    import os
-
     session = df.sparkSession
     prev = session.conf.get("spark.sql.shuffle.partitions")
-    stream_shuffle = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
     try:
-        session.conf.set("spark.sql.shuffle.partitions", stream_shuffle)
+        session.conf.set(
+            "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
+        )
         q = (
             df.writeStream.format("memory")
             .queryName(query_name)
@@ -264,10 +282,29 @@ def _drain_memory_sink(df: DataFrame, query_name: str, mode: str) -> DataFrame:
     return session.table(query_name)
 
 
-def run_available_now_append(df: DataFrame, query_name: str) -> DataFrame:
-    """Drain to a memory sink in append mode (stream-stream joins and
-    watermark-finalized aggregations emit append-only)."""
-    return _drain_memory_sink(df, query_name, "append")
+def _staged_drain(
+    frame: DataFrame,
+    prefix: str,
+    query_name: str,
+    build,
+    mode: str = "append",
+    sentinel: DataFrame | None = None,
+) -> DataFrame:
+    """The streamed registry queries' shared shape: stage ``frame`` (and
+    an optional watermark sentinel) as a file-stream source in a fresh
+    temp dir, drain ``build(src)`` — the streaming query over that
+    source path — into the memory sink ``query_name``, and remove the
+    staging tree even when staging, the build or the drain raises.
+    Removal is safe once the drain returned: the sink's rows live in
+    the driver."""
+    import tempfile
+
+    src = tempfile.mkdtemp(prefix=prefix) + "/src"
+    try:
+        _stage_stream_src(frame, src, sentinel)
+        return drain_memory_sink(build(src), query_name, mode)
+    finally:
+        _drop_staging(src)
 
 
 RUNNING_OUTPUT_SCHEMA = "user_id long, total_events long, total_value double"
@@ -318,34 +355,21 @@ def running_user_totals(stream: DataFrame) -> DataFrame:
     )
 
 
-def run_available_now_update(df: DataFrame, query_name: str) -> DataFrame:
-    """Drain to a memory sink in update mode (required for stateful
-    operators); returns every emitted update row."""
-    return _drain_memory_sink(df, query_name, "update")
-
-
-def run_available_now(agg: DataFrame, query_name: str = "hourly_agg") -> DataFrame:
-    """Drain everything currently available into a memory sink and
-    return the result as a batch DataFrame (test/verification mode)."""
-    return _drain_memory_sink(agg, query_name, "complete")
-
-
 def incremental_fact_sink(stream: DataFrame, store_dir: str, store=None):
     """Streaming star-fact maintenance (foreachBatch): every micro-batch
     MERGEs into a fact store, keeping the newest row per event_id — the
     streaming form of plans/star.fact_events_incremental and the
     reference's scheduled Dataflow replication job.
 
-    Storage is pluggable through sources/factstore.FactStore: the
-    default ``VersionedParquetStore`` writes a complete ``v=N`` snapshot
-    per batch and readers take the max version (poor-man's snapshot
-    isolation — all parquet-only storage can offer), pruning versions
-    past ``RETAIN_VERSIONS``; a lakehouse deploy passes
-    ``DeltaFactStore`` (or an Iceberg equivalent) and the same sink
-    becomes a transactional MERGE that rewrites only matched files.
-    The dedup semantics (newest-wins under plans/star.dedup_order) are
-    identical either way — the converges-to-batch tests run through
-    this interface."""
+    Storage is pluggable through ``store``: the default
+    sources/factstore.VersionedParquetStore writes a complete ``v=N``
+    snapshot per batch and readers take the max version (poor-man's
+    snapshot isolation — all parquet-only storage can offer); a
+    lakehouse deploy passes a store with the same ``merge`` method over
+    a Delta or Iceberg table, and the same sink becomes a transactional
+    MERGE that rewrites only matched files. The dedup semantics
+    (newest-wins under plans/star.dedup_order) are identical either
+    way."""
     from ..plans.star import dedup_order, prepared_events
     from ..sources.factstore import VersionedParquetStore
 
@@ -363,46 +387,6 @@ def incremental_fact_sink(stream: DataFrame, store_dir: str, store=None):
     )
 
 
-# Newest version = the live snapshot; one predecessor kept so an
-# in-flight reader of the previous max never loses its files mid-scan.
-RETAIN_VERSIONS = 2
-
-
-def _fs_and_versions(spark: SparkSession, store_dir: str):
-    """List v=N child dirs through the Hadoop FileSystem API, so the
-    store can live on any supported filesystem (local, HDFS, GCS, S3),
-    not just a driver-local path."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(store_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return fs, []
-    versions = []
-    for status in fs.listStatus(path):
-        name = status.getPath().getName()
-        if name.startswith("v="):
-            try:
-                versions.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return fs, versions
-
-
-def _prune_versions(spark: SparkSession, store_dir: str, keep: int = RETAIN_VERSIONS) -> None:
-    jvm = spark._jvm
-    fs, versions = _fs_and_versions(spark, store_dir)
-    for v in sorted(versions)[:-keep]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_dir}/v={v}"), True)
-
-
-def read_fact_store(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    """Latest snapshot of the versioned fact store (max version dir)."""
-    _, versions = _fs_and_versions(spark, store_dir)
-    if not versions:
-        return None
-    return spark.read.parquet(f"{store_dir}/v={max(versions)}")
-
-
 def fact_events_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming surface as an oracle-checkable registry query:
     stage the events table as a multi-file stream source, drain it
@@ -417,6 +401,7 @@ def fact_events_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..catalog import table
+    from ..sources.factstore import VersionedParquetStore
 
     events = table(spark, sf_dir, "events")
     base = tempfile.mkdtemp(prefix="hc_stream_fact_")
@@ -436,7 +421,7 @@ def fact_events_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the returned frame lazily READS the store snapshot — only the
     # consumed src staging is removable here (ADVICE r8 cleanup)
     shutil.rmtree(src, ignore_errors=True)
-    return read_fact_store(spark, store)
+    return VersionedParquetStore(store).read(spark)
 
 
 DOCS_SCHEMA = StructType(
@@ -610,10 +595,12 @@ def ann_index_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "vec_id long, cell long, cent_sim double, is_new boolean"
         )
-    src = _stage_stream_src(spark, emb.repartition(7), "hc_stream_emb_")
-    assigned = index_assign_stream(read_embeddings_stream(spark, src), cent)
-    out = run_available_now_append(assigned, "ann_index_streamed")
-    _drop_staging(src)
+    out = _staged_drain(
+        emb.repartition(7),
+        "hc_stream_emb_",
+        "ann_index_streamed",
+        lambda src: index_assign_stream(read_embeddings_stream(spark, src), cent),
+    )
     return out.select(
         "vec_id",
         "cell",
@@ -640,27 +627,12 @@ def drift_bin_counts_stream(
     aggregation, but its event TIME still advances the watermark —
     which is what closes the final real windows under an availableNow
     drain."""
-    from ..plans.analytics import DRIFT_BINS
+    from ..plans.analytics import drift_bin
 
-    nb = float(DRIFT_BINS)
-    raw_bin = F.floor(
-        (F.col("value") - F.col("vmin"))
-        / ((F.col("vmax") - F.col("vmin")) / F.lit(nb))
-    )
     return (
         stream.withWatermark("ts", watermark)
         .join(F.broadcast(edges), "event_type")
-        .select(
-            "ts",
-            "event_type",
-            F.when(F.col("vmax") == F.col("vmin"), F.lit(0))
-            .otherwise(
-                F.least(F.lit(nb - 1.0), F.greatest(F.lit(0.0), raw_bin)).cast(
-                    "int"
-                )
-            )
-            .alias("bin"),
-        )
+        .select("ts", "event_type", drift_bin())
         .groupBy(F.window("ts", "1 day").alias("win"), "event_type", "bin")
         .agg(F.count("*").cast("long").alias("cnt"))
         .select(
@@ -693,55 +665,38 @@ def events_drift_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     +0.5 smoothing, 10-dp rounding, DECIMAL sum, 6-dp final), so the
     DuckDB oracle mirrors the whole chain."""
     from ..catalog import table
-    from ..plans.analytics import DRIFT_BINS
+    from ..plans.analytics import DRIFT_BINS, drift_bin, psi_term
 
     events = table(spark, sf_dir, "events")
-    ev = events.withColumn("us", F.unix_micros(F.col("ts")))
-    b = ev.agg(F.min("us").alias("mn"), F.max("us").alias("mx")).collect()[0]
-    if b.mn is None:
+    sentinel = _watermark_sentinel(events, [(-1, -1, SENTINEL_TYPE)])
+    if sentinel is None:
         return spark.createDataFrame(
             [],
             "window_start timestamp, event_type string, n_cur long, psi double",
         )
+    ev = events.withColumn("us", F.unix_micros(F.col("ts")))
+    b = ev.agg(F.min("us").alias("mn"), F.max("us").alias("mx")).collect()[0]
     mid = b.mn + (b.mx - b.mn) // 2
     ref = ev.filter(F.col("us") <= mid)
     edges = ref.groupBy("event_type").agg(
         F.min("value").alias("vmin"), F.max("value").alias("vmax")
     )
-    # stage the current half as files + the watermark sentinel
+    # the current half is the stream, followed by the watermark sentinel
     cur = ev.filter(F.col("us") > mid).select(*EVENTS_SCHEMA.fieldNames())
-    sentinel = _sentinel_events(
-        spark, [(-1, -1, "zz_watermark_sentinel")]
-    ).withColumn(
-        "ts", F.timestamp_micros(F.lit(b.mx + 30 * 24 * 3600 * 1_000_000))
-    )
-    src = _stage_stream_src(
-        spark, cur.repartition(7), "hc_stream_drift_", sentinel
-    )
-    counts = run_available_now_append(
-        drift_bin_counts_stream(read_events_stream(spark, src), edges),
+    counts = _staged_drain(
+        cur.repartition(7),
+        "hc_stream_drift_",
         "events_drift_streamed_counts",
+        lambda src: drift_bin_counts_stream(read_events_stream(spark, src), edges),
+        sentinel=sentinel,
     )
-    _drop_staging(src)
     # batch scoring of the drained histogram series vs the reference.
     # Grid completion starts from the REFERENCE side (independent
     # lineage) crossed with the per-window totals, whose aggregate
     # output is re-aliased — the memory-sink table reuses one
     # attribute set across reads, so joining two projections of it
     # directly raises "conflicting references".
-    nb = float(DRIFT_BINS)
-    raw_bin = F.floor(
-        (F.col("value") - F.col("vmin"))
-        / ((F.col("vmax") - F.col("vmin")) / F.lit(nb))
-    )
-    refb = ref.join(edges, "event_type").select(
-        "event_type",
-        F.when(F.col("vmax") == F.col("vmin"), F.lit(0))
-        .otherwise(
-            F.least(F.lit(nb - 1.0), F.greatest(F.lit(0.0), raw_bin)).cast("int")
-        )
-        .alias("bin"),
-    )
+    refb = ref.join(edges, "event_type").select("event_type", drift_bin())
     refc = refb.groupBy("event_type", "bin").agg(
         F.count("*").cast("long").alias("ref_c")
     )
@@ -782,15 +737,12 @@ def events_drift_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_cur",
         F.coalesce(counts["cnt"], F.lit(0)).alias("cur_c"),
     )
-    smooth = F.lit(0.5 * DRIFT_BINS)
-    p = (F.col("ref_c") + F.lit(0.5)) / (F.col("n_ref") + smooth)
-    q = (F.col("cur_c") + F.lit(0.5)) / (F.col("n_cur") + smooth)
     return (
         full.select(
             F.col("ws").alias("window_start"),
             F.col("et").alias("event_type"),
             "n_cur",
-            F.round((p - q) * F.log(p / q), 10).cast("decimal(18,10)").alias("t"),
+            psi_term(),
         )
         .groupBy("window_start", "event_type", "n_cur")
         .agg(F.round(F.sum("t").cast("double"), 6).alias("psi"))
@@ -816,29 +768,20 @@ def sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import table
 
     events = table(spark, sf_dir, "events")
-    b = events.agg(F.max("ts").alias("mx")).collect()[0]
-    if b.mx is None:
+    sentinel = _watermark_sentinel(events, [(-1, -1, SENTINEL_TYPE)])
+    if sentinel is None:
         return spark.createDataFrame(
             [],
             "user_id long, session_start timestamp, session_end timestamp,"
             " n_events long, session_value double",
         )
-    sentinel = _sentinel_events(
-        spark, [(-1, -1, "zz_watermark_sentinel")]
-    ).withColumn(
-        "ts",
-        F.timestamp_micros(
-            F.unix_micros(F.lit(b.mx)) + F.lit(30 * 24 * 3600 * 1_000_000)
-        ),
-    )
-    src = _stage_stream_src(
-        spark, events.repartition(7), "hc_stream_sess_", sentinel
-    )
-    out = run_available_now_append(
-        session_agg_stream(read_events_stream(spark, src)),
+    out = _staged_drain(
+        events.repartition(7),
+        "hc_stream_sess_",
         "sessions_streamed_sink",
+        lambda src: session_agg_stream(read_events_stream(spark, src)),
+        sentinel=sentinel,
     )
-    _drop_staging(src)
     return out.filter(F.col("user_id") >= 0)
 
 
@@ -855,12 +798,13 @@ def user_totals_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import table
 
     events = table(spark, sf_dir, "events")
-    src = _stage_stream_src(spark, events.repartition(7), "hc_stream_totals_")
-    out = run_available_now_update(
-        running_user_totals(read_events_stream(spark, src)),
+    out = _staged_drain(
+        events.repartition(7),
+        "hc_stream_totals_",
         "user_totals_streamed_sink",
+        lambda src: running_user_totals(read_events_stream(spark, src)),
+        mode="update",
     )
-    _drop_staging(src)
     return out.groupBy("user_id").agg(
         F.max("total_events").cast("long").alias("total_events"),
         F.max("total_value").alias("total_value"),
@@ -883,33 +827,21 @@ def events_hourly_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import table
 
     events = table(spark, sf_dir, "events")
-    b = events.agg(F.max("ts").alias("mx")).collect()[0]
-    if b.mx is None:
+    sentinel = _watermark_sentinel(events, [(-1, -1, SENTINEL_TYPE)])
+    if sentinel is None:
         return spark.createDataFrame(
             [],
             "hour timestamp, event_type string, n_events long,"
             " sum_value double",
         )
-    sentinel = _sentinel_events(
-        spark, [(-1, -1, "zz_watermark_sentinel")]
-    ).withColumn(
-        "ts",
-        F.timestamp_micros(
-            F.unix_micros(F.lit(b.mx)) + F.lit(30 * 24 * 3600 * 1_000_000)
-        ),
-    )
-    src = _stage_stream_src(
-        spark,
+    out = _staged_drain(
         events.select(*EVENTS_SCHEMA.fieldNames()).repartition(7),
         "hc_stream_hourly_",
-        sentinel,
-    )
-    out = run_available_now_append(
-        hourly_agg_stream(read_events_stream(spark, src)),
         "events_hourly_streamed_sink",
+        lambda src: hourly_agg_stream(read_events_stream(spark, src)),
+        sentinel=sentinel,
     )
-    _drop_staging(src)
-    return out.filter(F.col("event_type") != "zz_watermark_sentinel")
+    return out.filter(F.col("event_type") != SENTINEL_TYPE)
 
 
 def view_purchase_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -932,31 +864,21 @@ def view_purchase_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import table
 
     events = table(spark, sf_dir, "events")
-    b = events.agg(F.max("ts").alias("mx")).collect()[0]
-    if b.mx is None:
+    sentinels = _watermark_sentinel(events, JOIN_SENTINELS)
+    if sentinels is None:
         return spark.createDataFrame(
             [],
             "user_id long, view_id long, purchase_id long,"
             " view_ts timestamp, purchase_ts timestamp,"
             " purchase_value double",
         )
-    far = F.timestamp_micros(
-        F.unix_micros(F.lit(b.mx)) + F.lit(30 * 24 * 3600 * 1_000_000)
-    )
-    sentinels = _sentinel_events(
-        spark, [(-1, -1, "view"), (-2, -2, "purchase")]
-    ).withColumn("ts", far)
-    src = _stage_stream_src(
-        spark,
+    out = _staged_drain(
         events.select(*EVENTS_SCHEMA.fieldNames()).repartition(7),
         "hc_stream_vp_",
-        sentinels,
-    )
-    out = run_available_now_append(
-        view_purchase_join_stream(read_events_stream(spark, src)),
         "view_purchase_streamed_sink",
+        lambda src: view_purchase_join_stream(read_events_stream(spark, src)),
+        sentinel=sentinels,
     )
-    _drop_staging(src)
     return out.filter(F.col("user_id") >= 0)
 
 
@@ -982,30 +904,20 @@ def views_without_purchase_streamed(spark: SparkSession, sf_dir: str) -> DataFra
     from ..catalog import table
 
     events = table(spark, sf_dir, "events")
-    b = events.agg(F.max("ts").alias("mx")).collect()[0]
-    if b.mx is None:
+    sentinels = _watermark_sentinel(events, JOIN_SENTINELS)
+    if sentinels is None:
         return spark.createDataFrame(
             [], "user_id long, view_id long, view_ts timestamp"
         )
-    far = F.timestamp_micros(
-        F.unix_micros(F.lit(b.mx)) + F.lit(30 * 24 * 3600 * 1_000_000)
-    )
-    sentinels = _sentinel_events(
-        spark, [(-1, -1, "view"), (-2, -2, "purchase")]
-    ).withColumn("ts", far)
-    src = _stage_stream_src(
-        spark,
+    out = _staged_drain(
         events.select(*EVENTS_SCHEMA.fieldNames()).repartition(7),
         "hc_stream_vnp_",
-        sentinels,
-    )
-    out = run_available_now_append(
-        view_purchase_join_stream(
+        "views_without_purchase_streamed_sink",
+        lambda src: view_purchase_join_stream(
             read_events_stream(spark, src), join_type="left_outer"
         ),
-        "views_without_purchase_streamed_sink",
+        sentinel=sentinels,
     )
-    _drop_staging(src)
     return out.filter(
         F.col("purchase_id").isNull() & (F.col("user_id") >= 0)
     ).select("user_id", "view_id", "view_ts")

@@ -9,6 +9,7 @@ import pytest
 
 from healthcare_oltp_to_olap_gcp_spark.catalog import table
 from healthcare_oltp_to_olap_gcp_spark.plans.analytics import events_hourly
+from healthcare_oltp_to_olap_gcp_spark.sources.factstore import VersionedParquetStore
 from healthcare_oltp_to_olap_gcp_spark.streaming import pipeline
 
 from .conftest import SF001
@@ -53,7 +54,7 @@ def test_stream_equals_batch(spark, tmp_path):
         .withColumn("ts", F.expr(TS_EXPR))
     )
     agg = pipeline.hourly_agg_stream(stream)
-    got = pipeline.run_available_now(agg, "t_hourly")
+    got = pipeline.drain_memory_sink(agg, "t_hourly", "complete")
 
     want = events_hourly(table(spark, SF001, "events"))
     assert normalize(got.toPandas()) == normalize(want.toPandas())
@@ -79,7 +80,9 @@ def test_stream_dedups_replayed_file(spark, tmp_path):
         .parquet(str(src))
         .withColumn("ts", F.expr(TS_EXPR))
     )
-    got = pipeline.run_available_now(pipeline.hourly_agg_stream(stream), "t_hourly2")
+    got = pipeline.drain_memory_sink(
+        pipeline.hourly_agg_stream(stream), "t_hourly2", "complete"
+    )
     want = events_hourly(table(spark, SF001, "events"))
     assert normalize(got.toPandas()) == normalize(want.toPandas())
 
@@ -106,8 +109,8 @@ def test_stateful_running_totals(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    out = pipeline.run_available_now_update(
-        pipeline.running_user_totals(stream), "t_state"
+    out = pipeline.drain_memory_sink(
+        pipeline.running_user_totals(stream), "t_state", "update"
     )
     import pandas as pd
 
@@ -155,21 +158,17 @@ def test_foreach_batch_incremental_fact_equals_batch(spark, tmp_path):
     q = pipeline.incremental_fact_sink(stream, store)
     q.awaitTermination()
 
-    got = pipeline.read_fact_store(spark, store)
+    got = VersionedParquetStore(store).read(spark)
     want = fact_events(events)
     assert normalize(got.toPandas()) == normalize(want.toPandas())
 
 
 def test_fact_sink_through_store_interface(spark, tmp_path):
-    """The sink is storage-pluggable (sources/factstore.FactStore): an
-    explicitly passed store receives every micro-batch merge with the
-    star dedup key/order, and an instrumented wrapper proves the calls
-    flow through the interface — the seam a DeltaFactStore plugs into."""
+    """The sink is storage-pluggable through ``store=``: an explicitly
+    passed store receives every micro-batch merge with the star dedup
+    key/order, and an instrumented wrapper proves the calls flow
+    through it — the seam a lakehouse store plugs into."""
     from healthcare_oltp_to_olap_gcp_spark.plans.star import fact_events
-    from healthcare_oltp_to_olap_gcp_spark.sources.factstore import (
-        DeltaFactStore,
-        VersionedParquetStore,
-    )
 
     src = tmp_path / "events_stream_iface"
     src.mkdir()
@@ -196,69 +195,51 @@ def test_fact_sink_through_store_interface(spark, tmp_path):
 
     assert len(calls) >= 2  # several micro-batches flowed through
     assert all(key == "event_id" and n_order >= 2 for key, n_order, _ in calls)
-    got = pipeline.read_fact_store(spark, store_dir)
+    got = VersionedParquetStore(store_dir).read(spark)
     assert normalize(got.toPandas()) == normalize(
         fact_events(events).toPandas()
     )
 
-    # The lakehouse implementation declares its environment requirement
-    # loudly instead of failing deep inside a merge.
-    try:
-        DeltaFactStore(str(tmp_path / "delta"))
-        import delta  # noqa: F401  (only reachable where delta-spark exists)
-    except ImportError as ex:
-        assert "delta-spark" in str(ex)
+
+def test_versioned_store_prunes_to_retained_versions(spark, tmp_path):
+    """Three merges leave exactly RETAIN_VERSIONS ``v=`` snapshots; the
+    read is the newest one, holding the newest row per key across all
+    three deltas."""
+    from pyspark.sql import functions as F
+
+    store = VersionedParquetStore(str(tmp_path / "store"))
+    order = (F.col("ts").desc(),)
+    for batch_id, rows in enumerate(
+        [[(1, 10, "a"), (2, 10, "a")], [(1, 20, "b")], [(2, 30, "c"), (3, 5, "c")]],
+        start=1,
+    ):
+        delta = spark.createDataFrame(rows, "event_id long, ts long, tag string")
+        store.merge(delta, "event_id", order, batch_id)
+
+    kept = sorted(p.name for p in (tmp_path / "store").iterdir())
+    assert len(kept) == VersionedParquetStore.RETAIN_VERSIONS
+    assert kept[-1] == "v=3"
+    got = sorted(tuple(r) for r in store.read(spark).collect())
+    assert got == [(1, 20, "b"), (2, 30, "c"), (3, 5, "c")]
 
 
-def _has_delta() -> bool:
-    try:
-        import delta  # noqa: F401
+def test_staged_drain_removes_staging_when_build_raises(spark):
+    """The staged drain removes its staging tree even when the stream
+    build fails after the source files were written."""
+    import os
 
-        return True
-    except ImportError:
-        return False
+    seen = []
 
+    def build(src):
+        seen.append(src)
+        assert os.listdir(src)  # the frame was staged
+        raise RuntimeError("stream build failed")
 
-@pytest.mark.skipif(
-    not _has_delta(),
-    reason=(
-        "delta-spark not installed in this container and the sandbox "
-        "forbids pip install — DeltaFactStore's transactional MERGE path "
-        "is therefore interface-tested only (SpyStore above proves every "
-        "micro-batch flows through the FactStore seam; this test runs the "
-        "SAME converges-to-batch assertion through DeltaTable.merge "
-        "wherever the delta jars exist)."
-    ),
-)
-def test_fact_sink_through_delta_store(spark, tmp_path):
-    """Converges-to-batch through the Delta Lake MERGE implementation:
-    identical assertion to the VersionedParquetStore path, so newest-wins
-    semantics are proven equivalent across both FactStore backends."""
-    from healthcare_oltp_to_olap_gcp_spark.plans.star import fact_events
-    from healthcare_oltp_to_olap_gcp_spark.sources.factstore import (
-        DeltaFactStore,
-    )
-
-    src = tmp_path / "events_stream_delta"
-    src.mkdir()
-    events = table(spark, SF001, "events")
-    events.repartition(5).write.mode("overwrite").parquet(str(src))
-
-    store = DeltaFactStore(str(tmp_path / "fact_store_delta"))
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(str(src))
-    )
-    q = pipeline.incremental_fact_sink(
-        stream, store.table_path, store=store
-    )
-    q.awaitTermination()
-
-    got = store.read(spark)
-    assert got is not None
-    want = fact_events(events)
-    assert normalize(got.toPandas()) == normalize(want.toPandas())
+    with pytest.raises(RuntimeError, match="stream build failed"):
+        pipeline._staged_drain(
+            spark.range(3), "hc_test_drain_", "t_staged_drain_raises", build
+        )
+    assert seen and not os.path.exists(os.path.dirname(seen[0]))
 
 
 def _raw_stream(spark, src, max_files=4):
@@ -286,7 +267,7 @@ def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
     shutil.copy(f"{SF001}/events.parquet", src / "part-0.parquet")
 
     joined = pipeline.view_purchase_join_stream(_raw_stream(spark, src))
-    got = pipeline.run_available_now_append(joined, "t_ssj")
+    got = pipeline.drain_memory_sink(joined, "t_ssj", "append")
 
     ev = table(spark, SF001, "events")
     views = ev.filter(F.col("event_type") == "view").select(
@@ -331,7 +312,7 @@ def test_streaming_session_agg_converges_to_batch(spark, tmp_path):
     shutil.copy(f"{SF001}/events.parquet", src / "part-0.parquet")
 
     agg = pipeline.session_agg_stream(_raw_stream(spark, src))
-    got = pipeline.run_available_now_append(agg, "t_sess").toPandas()
+    got = pipeline.drain_memory_sink(agg, "t_sess", "append").toPandas()
 
     ev = table(spark, SF001, "events")
     want = session_window_agg(ev).toPandas()
@@ -361,8 +342,8 @@ def test_streaming_doc_curation_equals_batch(spark, tmp_path):
     shutil.copy(f"{SF001}/documents.parquet", src / "part-1.parquet")
 
     stream = pipeline.read_documents_stream(spark, str(src))
-    got = pipeline.run_available_now_append(
-        pipeline.curation_stream(stream), "t_doc_curation"
+    got = pipeline.drain_memory_sink(
+        pipeline.curation_stream(stream), "t_doc_curation", "append"
     )
 
     from pyspark.sql import functions as F
@@ -414,8 +395,8 @@ def test_dedup_passthrough_stream_bounded_state(spark, tmp_path):
         .parquet(str(src))
         .withColumn("ts", F.expr(TS_EXPR))
     )
-    got = pipeline.run_available_now_append(
-        pipeline.dedup_passthrough_stream(stream), "t_passthrough"
+    got = pipeline.drain_memory_sink(
+        pipeline.dedup_passthrough_stream(stream), "t_passthrough", "append"
     )
     events = table(spark, SF001, "events")
     assert got.count() == events.count()
