@@ -11,7 +11,7 @@ truncated mid-object and BENCH_r03.json recorded ``parsed: null``
 ``tools/bench_full.json`` for tools/bench_check.py and humans; the
 printed line carries the total plus the 10 slowest queries only.
 
-Each query is forced through the NOOP SINK (`.write.format("noop")`)
+Each query is forced through the NOOP SINK (`noop_seconds`)
 so the FULL plan executes without driver-side materialization. r7
 replaced the earlier count() force after proving count() lets
 Catalyst prune the VALUE computation of fixed-row-count outputs: a
@@ -36,8 +36,11 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
 from healthcare_oltp_to_olap_gcp_spark.api import QUERIES  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.session import get_spark  # noqa: E402
@@ -48,44 +51,58 @@ from healthcare_oltp_to_olap_gcp_spark.session import get_spark  # noqa: E402
 # tools/bench_check.py compares a bench line against it.
 BENCH_QUERIES = tuple(QUERIES)
 
+# Runs per query; the reported time is their minimum. The probes in
+# tools/ time with the same count.
+RUNS = 2
+
+
+def warm_up(spark: SparkSession, sf_dir: str) -> None:
+    """Warm the JVM/catalyst paths once so per-query numbers measure the
+    plan, not first-run classloading — and spin up the Python worker
+    pool so the first pandas-UDF query isn't charged ~3s of worker
+    startup that every later pandas op amortizes."""
+    QUERIES["q1_pricing_summary"](spark, sf_dir).count()
+    spark.range(32, numPartitions=32).mapInPandas(lambda it: it, "id long").count()
+
+
+def settle(spark: SparkSession) -> None:
+    """Drop dead references so Spark's ContextCleaner can release
+    finished broadcasts/caches, and let the (async) cleanup land
+    OUTSIDE the next timed region — without the settle window its
+    unpersist/GC RPC storm hits mid-query."""
+    spark.catalog.clearCache()
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    spark.range(1).count()
+    time.sleep(0.3)
+
+
+def noop_seconds(build: Callable[[], DataFrame]) -> float:
+    """Wall seconds to build a frame and run its full plan through the
+    noop sink (see the module docstring for why not ``count()``)."""
+    start = time.perf_counter()
+    build().write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - start
+
+
+def best_seconds(spark: SparkSession, build: Callable[[], DataFrame]) -> float:
+    """Min of ``RUNS`` noop-sink runs, settling after each one."""
+    best = float("inf")
+    for _ in range(RUNS):
+        best = min(best, noop_seconds(build))
+        settle(spark)
+    return best
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm the JVM/catalyst paths once so per-query numbers measure the
-    # plan, not first-run classloading — and spin up the Python worker
-    # pool so the first pandas-UDF query isn't charged ~3s of worker
-    # startup that every later pandas op amortizes.
-    QUERIES["q1_pricing_summary"](spark, sf_dir).count()
-    spark.range(32, numPartitions=32).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-
-    def _settle() -> None:
-        # Drop dead references so Spark's ContextCleaner can release
-        # finished broadcasts/caches, and let the (async) cleanup land
-        # OUTSIDE the next timed region — without the settle window its
-        # unpersist/GC RPC storm hits mid-query.
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        spark.range(1).count()
-        time.sleep(0.3)
-
-    timings: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        best = float("inf")
-        for _ in range(2):
-            start = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - start)
-            _settle()
-        timings[name] = round(best, 3)
-
+    warm_up(spark, sf_dir)
+    timings = {
+        name: round(best_seconds(spark, lambda: QUERIES[name](spark, sf_dir)), 3)
+        for name in BENCH_QUERIES
+    }
     print(emit(timings, sf_dir))
     spark.stop()
 

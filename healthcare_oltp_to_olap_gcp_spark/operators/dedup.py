@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.rank import top_k
 from ..functions.text import tokens, word_shingles
 from ..session import query_scope, scoped
 
@@ -672,16 +673,14 @@ def stratified_sample_by_lang(docs: DataFrame, per_stratum: int = 20) -> DataFra
     """Deterministic stratified sample: the hash-first ``per_stratum``
     documents of every language — the data-mixing primitive (equal
     quotas per source/language when assembling a training blend)."""
-    from pyspark.sql import Window
-
     h = F.md5(F.col("doc_id").cast("string"))
-    w = Window.partitionBy("lang").orderBy(F.col("h"), F.col("doc_id"))
-    return (
-        docs.select("doc_id", "lang", h.alias("h"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= per_stratum)
-        .select("doc_id", "lang", "rank")
-    )
+    return top_k(
+        docs.select("doc_id", "lang", h.alias("h")),
+        ["lang"],
+        (F.col("h"), F.col("doc_id")),
+        per_stratum,
+        rank="rank",
+    ).select("doc_id", "lang", "rank")
 
 
 N_CHUNKS = 4

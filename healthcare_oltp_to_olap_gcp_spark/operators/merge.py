@@ -1,8 +1,8 @@
 """CDC merge-upsert and data-validation operators.
 
 ``merge_upsert`` is the engine's MERGE INTO: updates win over existing
-rows on the key, implemented as union + keyed row_number (one shuffle,
-no join fan-out) — the same plan a Delta/Iceberg MERGE lowers to for
+rows on the key, implemented as union + a keyed ``top_k`` cut (one
+shuffle, no join fan-out) — the same plan a Delta/Iceberg MERGE lowers to for
 whole-row upserts. The reference achieves idempotent re-delivery the
 same way (newest created_at wins, sql/bq_fact_vitals.sql).
 
@@ -13,22 +13,10 @@ one pass over the data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def newest_per_key(
-    df: DataFrame, key: str, order: tuple[F.Column, ...]
-) -> DataFrame:
-    """The survivor rule every dedup and MERGE here shares: per ``key``,
-    keep the first row under ``order`` (one hash shuffle on the key and
-    a ``row_number`` window)."""
-    w = Window.partitionBy(key).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+from ..functions.rank import top_k
 
 
 def merge_upsert(
@@ -45,7 +33,7 @@ def merge_upsert(
     tagged = updates.withColumn("_prio", F.lit(0)).unionByName(
         existing.withColumn("_prio", F.lit(1))
     )
-    return newest_per_key(tagged, key, (F.col("_prio"), *tiebreak)).drop("_prio")
+    return top_k(tagged, [key], (F.col("_prio"), *tiebreak), 1).drop("_prio")
 
 
 def simulated_updates(events: DataFrame) -> DataFrame:

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.rank import top_k
 from ..functions.text import tokens
 from ..session import query_scope, scoped
 
@@ -200,18 +201,13 @@ def _okapi_exprs():
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """(query_id, doc_id, _s) → the final (score DESC, doc_id) top-k
     projection every BM25-family query returns."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_s").desc(), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "doc_id",
-            F.col("_s").cast("double").alias("score"),
-            "rank",
-        )
+    return top_k(
+        scored, ["query_id"], (F.col("_s").desc(), F.col("doc_id")), k, rank="rank"
+    ).select(
+        "query_id",
+        "doc_id",
+        F.col("_s").cast("double").alias("score"),
+        "rank",
     )
 
 
@@ -421,19 +417,14 @@ def bm25_chunk_maxp_topk(
             F.col("m.s").alias("_s"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_s").desc(), F.col("doc_id")
-    )
-    return (
-        doc_scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "doc_id",
-            "best_chunk_idx",
-            F.col("_s").cast("double").alias("score"),
-            "rank",
-        )
+    return top_k(
+        doc_scored, ["query_id"], (F.col("_s").desc(), F.col("doc_id")), k, rank="rank"
+    ).select(
+        "query_id",
+        "doc_id",
+        "best_chunk_idx",
+        F.col("_s").cast("double").alias("score"),
+        "rank",
     )
 
 
@@ -600,14 +591,9 @@ def _wand_candidates(docs: DataFrame, k: int):
     contrib = scope.persist(_contributions(tf, df, stats, qt))
     ub = _term_bounds(contrib)
     qub = scope.persist(qt.join(F.broadcast(ub), "term"))
-    w_seed = Window.partitionBy("query_id").orderBy(
-        F.col("ub").desc(), "term"
-    )
-    seed_terms = (
-        qub.withColumn("_rn", F.row_number().over(w_seed))
-        .filter(F.col("_rn") == 1)
-        .select("query_id", "term")
-    )
+    seed_terms = top_k(
+        qub, ["query_id"], (F.col("ub").desc(), "term"), 1
+    ).select("query_id", "term")
     seed = scope.persist(
         contrib.join(F.broadcast(seed_terms), "term")
         .filter(F.col("doc_id") != F.col("query_id"))
@@ -744,14 +730,9 @@ def bm25_rerank_topk(
             F.round(dot(F.col("qv"), F.col("nv")), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "bm25_rank", "sim", "rank")
-    )
+    return top_k(
+        scored, ["query_id"], (F.col("sim").desc(), F.col("doc_id")), k, rank="rank"
+    ).select("query_id", "doc_id", "bm25_rank", "sim", "rank")
 
 
 def _rerank_vectors(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -1102,18 +1083,15 @@ def hybrid_rrf_topk(
         F.coalesce("dense_rank", F.lit(0)).cast("long").alias("dense_rank"),
         (gain(F.col("lex_rank")) + gain(F.col("dense_rank"))).alias("_s"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("_s").desc(), F.col("doc_id"))
-    return (
-        fused.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "doc_id",
-            "lex_rank",
-            "dense_rank",
-            F.col("_s").cast("double").alias("rrf_score"),
-            "rank",
-        )
+    return top_k(
+        fused, ["query_id"], (F.col("_s").desc(), F.col("doc_id")), k, rank="rank"
+    ).select(
+        "query_id",
+        "doc_id",
+        "lex_rank",
+        "dense_rank",
+        F.col("_s").cast("double").alias("rrf_score"),
+        "rank",
     )
 
 
@@ -1248,8 +1226,7 @@ def rm3_expansion_topk(
     # top-e expansion terms, original terms excluded, weights
     # normalized over the kept e terms
     rmx = rm.join(orig.select("query_id", "term"), ["query_id", "term"], "left_anti")
-    w_rm = Window.partitionBy("query_id").orderBy(F.col("rm").desc(), F.col("term"))
-    exp = rmx.withColumn("rn", F.row_number().over(w_rm)).filter(F.col("rn") <= e)
+    exp = top_k(rmx, ["query_id"], (F.col("rm").desc(), F.col("term")), e)
     tot = exp.groupBy("query_id").agg(F.sum("rm").alias("tot"))
     w_exp = exp.join(tot, "query_id").select(
         "query_id",
@@ -1288,17 +1265,7 @@ def rm3_expansion_topk(
         )
     )
     scored = contrib.groupBy("query_id", "doc_id").agg(F.sum("c").alias("_s"))
-    w = Window.partitionBy("query_id").orderBy(F.col("_s").desc(), F.col("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "doc_id",
-            F.col("_s").cast("double").alias("score"),
-            "rank",
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 LM_MU = 1000.0  # Dirichlet pseudo-count μ (Zhai & Lafferty 2001 report

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.localframe import local_frame
+from ..functions.rank import top_k
 from ..functions.vectors import as_double, dot, normalized
 from ..session import query_scope, scoped
 
@@ -63,6 +64,36 @@ def _dot_cols(a: str, b: str, dim: int = DIM) -> F.Column:
     for t in terms[1:]:
         acc = acc + t
     return acc
+
+
+def ann_order() -> tuple[F.Column, ...]:
+    """ANN result order: higher cosine first, ties to the smaller
+    neighbor_id. The DuckDB oracles rank with the same ``ORDER BY sim
+    DESC, neighbor_id``. (A function, not a module constant: building a
+    Column requires an active SparkContext.)"""
+    return (F.col("sim").desc(), F.col("neighbor_id"))
+
+
+def _ann_cut(scored: DataFrame, k: int) -> DataFrame:
+    """Per query, the top ``k`` rows of (query_id, neighbor_id, sim)
+    under ``ann_order``, as the ANN result frame."""
+    return top_k(scored, ["query_id"], ann_order(), k, rank="rank").select(
+        "query_id", "neighbor_id", "sim", "rank"
+    )
+
+
+def _rerank_exact(
+    corpus: DataFrame, qs: DataFrame, cand: DataFrame, k: int
+) -> DataFrame:
+    """Exact-cosine rerank of each query's (query_id, neighbor_id)
+    candidates against the normalized ``corpus``/``qs`` frames: the
+    tail of every k+margin approximate cut (SQ8, PQ, IVF-PQ, BQ)."""
+    return _ann_cut(
+        corpus.join(F.broadcast(cand), "neighbor_id")
+        .join(F.broadcast(qs.withColumnRenamed("qv", "qv2")), "query_id")
+        .withColumn("sim", F.round(dot(F.col("qv2"), F.col("cv")), 6)),
+        k,
+    )
 
 
 def _queries(embeddings: DataFrame) -> DataFrame:
@@ -181,15 +212,10 @@ def ann_brute_topk(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
 def _brute_topk(corpus: DataFrame, qs: DataFrame, k: int) -> DataFrame:
     corpus = _unroll(corpus, "neighbor_id", "cv", "c")
     qcols = _unroll(qs, "query_id", "qv", "q")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
+    return _ann_cut(
         corpus.join(F.broadcast(qcols), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(_dot_cols("q", "c"), 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+        .withColumn("sim", F.round(_dot_cols("q", "c"), 6)),
+        k,
     )
 
 
@@ -316,14 +342,11 @@ def ivf_ann_topk(
         .select("query_id", "qv", F.explode(F.slice(ranked, 1, n_probe)).alias("_pc"))
         .select("query_id", "qv", F.col("_pc.cell").alias("cell"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
+    return _ann_cut(
         assigned.join(F.broadcast(probed), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")), 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+        .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")), 6)),
+        k,
     )
 
 
@@ -454,14 +477,11 @@ def _ivf_flat_body(
         )
         .select("query_id", "qv", F.col("_pc.cent_id").alias("cell"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
+    return _ann_cut(
         assigned.join(F.broadcast(probed), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")), 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+        .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")), 6)),
+        k,
     )
 
 
@@ -713,14 +733,11 @@ def ann_lsh_topk(
         F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(len(planes))]
     )
     qs = base.select("query_id", "qv", F.explode(probes).alias("bucket"))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
+    return _ann_cut(
         corpus.join(F.broadcast(qs), "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")), 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+        .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")), 6)),
+        k,
     )
 
 
@@ -748,12 +765,9 @@ def knn_label_vote(embeddings: DataFrame, k: int = DEFAULT_K, topk_fn=None) -> D
         .groupBy("query_id", "label")
         .agg(F.count("*").alias("votes"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("votes").desc(), F.col("label"))
-    return (
-        votes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("query_id", F.col("label").alias("pred_label"), "votes")
-    )
+    return top_k(
+        votes, ["query_id"], (F.col("votes").desc(), F.col("label")), 1
+    ).select("query_id", F.col("label").alias("pred_label"), "votes")
 
 
 @scoped
@@ -812,14 +826,16 @@ def knn_graph_edges(
     probes = scored.select(
         F.col("vec_id").alias("src_id"), F.col("nv").alias("sv"), "cell"
     )
-    w = Window.partitionBy("src_id").orderBy(F.col("sim").desc(), F.col("dst_id"))
     edges = query_scope().persist(
-        probes.join(assigned.hint("shuffle_hash"), "cell")
-        .filter(F.col("src_id") != F.col("dst_id"))
-        .withColumn("sim", F.round(dot(F.col("sv"), F.col("dv")), 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("src_id", "dst_id", "sim", "rank")
+        top_k(
+            probes.join(assigned.hint("shuffle_hash"), "cell")
+            .filter(F.col("src_id") != F.col("dst_id"))
+            .withColumn("sim", F.round(dot(F.col("sv"), F.col("dv")), 6)),
+            ["src_id"],
+            (F.col("sim").desc(), F.col("dst_id")),
+            k,
+            rank="rank",
+        ).select("src_id", "dst_id", "sim", "rank")
     )
     rev = edges.select(
         F.col("dst_id").alias("src_id"),
@@ -1100,14 +1116,11 @@ def ann_gemm_topk(
     # into the corpus scan; queries broadcast as in the brute twin.
     cand = F.broadcast(partials)
     corpus_cols = _split(embeddings, "neighbor_id", "c")
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
+    return _ann_cut(
         corpus_cols.join(cand, "neighbor_id")
         .join(F.broadcast(_query_cols(embeddings)), "query_id")
-        .withColumn("sim", F.round(_dot_cols("q", "c"), 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+        .withColumn("sim", F.round(_dot_cols("q", "c"), 6)),
+        k,
     )
 
 
@@ -1171,30 +1184,15 @@ def sq8_ann_topk(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    w_cand = Window.partitionBy("query_id").orderBy(
-        F.col("idot").desc(), F.col("neighbor_id")
-    )
-    cand = (
+    cand = top_k(
         ccodes.join(F.broadcast(qcodes))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("idot", idot)
-        .withColumn("_rn", F.row_number().over(w_cand))
-        .filter(F.col("_rn") <= k + margin)
-        .select("query_id", "neighbor_id")
-    )
-    qs = _queries(embeddings)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        corpus.join(F.broadcast(cand), "neighbor_id")
-        .join(
-            F.broadcast(qs.withColumnRenamed("qv", "qv2")),
-            "query_id",
-        )
-        .withColumn("sim", F.round(dot(F.col("qv2"), F.col("cv")), 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+        .withColumn("idot", idot),
+        ["query_id"],
+        (F.col("idot").desc(), F.col("neighbor_id")),
+        k + margin,
+    ).select("query_id", "neighbor_id")
+    return _rerank_exact(corpus, _queries(embeddings), cand, k)
 
 
 PQ_M = 8  # subspaces (64-dim vectors → 8 dims each)
@@ -1370,23 +1368,10 @@ def _pq_adc_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", _pq_adc_sum(m).alias("_adc"))
     )
-    w_cand = Window.partitionBy("query_id").orderBy(
-        F.col("_adc").desc(), F.col("neighbor_id")
-    )
-    cand = (
-        adc.withColumn("_rn", F.row_number().over(w_cand))
-        .filter(F.col("_rn") <= k + margin)
-        .select("query_id", "neighbor_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        corpus.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qs.withColumnRenamed("qv", "qv2")), "query_id")
-        .withColumn("sim", F.round(dot(F.col("qv2"), F.col("cv")), 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    cand = top_k(
+        adc, ["query_id"], (F.col("_adc").desc(), F.col("neighbor_id")), k + margin
+    ).select("query_id", "neighbor_id")
+    return _rerank_exact(corpus, qs, cand, k)
 
 
 IVFPQ_CELLS = 16
@@ -1518,23 +1503,10 @@ def _ivfpq_body(
             (F.col("qdot").cast("decimal(18,8)") + _pq_adc_sum(m)).alias("_adc"),
         )
     )
-    w_cand = Window.partitionBy("query_id").orderBy(
-        F.col("_adc").desc(), F.col("neighbor_id")
-    )
-    cand = (
-        adc.withColumn("_rn", F.row_number().over(w_cand))
-        .filter(F.col("_rn") <= k + margin)
-        .select("query_id", "neighbor_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        corpus.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qs.withColumnRenamed("qv", "qv2")), "query_id")
-        .withColumn("sim", F.round(dot(F.col("qv2"), F.col("cv")), 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    cand = top_k(
+        adc, ["query_id"], (F.col("_adc").desc(), F.col("neighbor_id")), k + margin
+    ).select("query_id", "neighbor_id")
+    return _rerank_exact(corpus, qs, cand, k)
 
 
 @scoped
@@ -1682,26 +1654,15 @@ def bq_ann_topk(
         .agg(F.max("ham").alias("rad"))
     )
     # pass 2: radius prefilter bounds the window input to ~k+margin rows
-    w_cand = Window.partitionBy("query_id").orderBy(
-        F.col("ham").asc(), F.col("neighbor_id")
-    )
-    cand = (
-        scan.join(F.broadcast(radius), "query_id")
-        .filter(F.col("ham") <= F.col("rad"))
-        .withColumn("_rn", F.row_number().over(w_cand))
-        .filter(F.col("_rn") <= k + margin)
-        .select("query_id", "neighbor_id")
-    )
-    qs = _queries(embeddings)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        corpus.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qs.withColumnRenamed("qv", "qv2")), "query_id")
-        .withColumn("sim", F.round(dot(F.col("qv2"), F.col("cv")), 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    cand = top_k(
+        scan.join(F.broadcast(radius), "query_id").filter(
+            F.col("ham") <= F.col("rad")
+        ),
+        ["query_id"],
+        (F.col("ham").asc(), F.col("neighbor_id")),
+        k + margin,
+    ).select("query_id", "neighbor_id")
+    return _rerank_exact(corpus, _queries(embeddings), cand, k)
 
 
 PQ_FIT_SAMPLE = 4096
@@ -1801,17 +1762,12 @@ def hard_negative_mining(
         .join(qlab, "query_id")
         .filter(F.col("neg_label") != F.col("query_label"))
     )
-    w = Window.partitionBy("query_id").orderBy("rank", "neighbor_id")
-    return (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "query_id",
-            "query_label",
-            F.col("neighbor_id").alias("negative_id"),
-            "neg_label",
-            "sim",
-        )
+    return top_k(cand, ["query_id"], ["rank", "neighbor_id"], 1).select(
+        "query_id",
+        "query_label",
+        F.col("neighbor_id").alias("negative_id"),
+        "neg_label",
+        "sim",
     )
 
 
@@ -2928,26 +2884,18 @@ def ann_twostage_truncated_topk(
     corpus = _corpus(embeddings)
     qt = _unroll(qs, "query_id", "qv", "q", trunc_dim)
     ct = _unroll(corpus, "neighbor_id", "cv", "c", trunc_dim)
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("tdot").desc(), F.col("neighbor_id")
-    )
-    cand = (
+    cand = top_k(
         ct.join(F.broadcast(qt), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("tdot", F.round(_dot_cols("q", "c", trunc_dim), 6))
-        .withColumn("crank", F.row_number().over(w1))
-        .filter(F.col("crank") <= m)
-        .select("query_id", "neighbor_id")
-    )
+        .withColumn("tdot", F.round(_dot_cols("q", "c", trunc_dim), 6)),
+        ["query_id"],
+        (F.col("tdot").desc(), F.col("neighbor_id")),
+        m,
+    ).select("query_id", "neighbor_id")
     qf = _unroll(qs, "query_id", "qv", "q")
     cf = _unroll(corpus, "neighbor_id", "cv", "c")
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
+    return _ann_cut(
         cand.join(cf, "neighbor_id")
         .join(F.broadcast(qf), "query_id")
-        .withColumn("sim", F.round(_dot_cols("q", "c"), 6))
-        .withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+        .withColumn("sim", F.round(_dot_cols("q", "c"), 6)),
+        k,
     )

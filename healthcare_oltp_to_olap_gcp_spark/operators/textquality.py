@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.localframe import local_frame
+from ..functions.rank import top_k
 from ..functions.text import (
     DE_STOP,
     EN_STOP,
@@ -274,8 +275,6 @@ def token_entropy(docs: DataFrame) -> DataFrame:
 def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-k TF-IDF terms per document: tf * ln((N+1)/(df+1)),
     deterministic tiebreak on the term."""
-    from pyspark.sql import Window
-
     par = docs.sparkSession.sparkContext.defaultParallelism
     # r9: hash by doc_id — the (doc_id, term) tf, the distinct, and
     # the per-doc window all reuse the layout (guide §2.4)
@@ -285,8 +284,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df = tok.distinct().groupBy("term").agg(F.count("*").alias("df"))
     n_docs = docs.agg(F.count("*").alias("n_docs"))
-    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("term"))
-    return (
+    scored = (
         tf.join(F.broadcast(df), "term")
         .crossJoin(F.broadcast(n_docs))
         .withColumn(
@@ -296,10 +294,10 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
                 6,
             ),
         )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("doc_id", "term", F.col("tf").cast("long").alias("tf"), "score", "rank")
     )
+    return top_k(
+        scored, ["doc_id"], (F.col("score").desc(), F.col("term")), k, rank="rank"
+    ).select("doc_id", "term", F.col("tf").cast("long").alias("tf"), "score", "rank")
 
 
 def token_typo_pairs(docs: DataFrame, max_dist: int = 1) -> DataFrame:

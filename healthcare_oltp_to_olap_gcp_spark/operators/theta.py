@@ -39,9 +39,10 @@ DISTINCT + theta-sketch UDF extensions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.rank import top_k
 from ..plans.analytics import _KMV_SCALE, _kmv_hash
 
 THETA_K = 256
@@ -82,8 +83,7 @@ def build_theta_sketches(
 
 def _sketch_from_hashes(d: DataFrame, k: int) -> DataFrame:
     """(s, u) distinct hash rows → (s, u, theta_int) sketch rows."""
-    w = Window.partitionBy("s").orderBy("u")
-    kept = d.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") <= k)
+    kept = top_k(d, ["s"], ["u"], k)
     theta = kept.groupBy("s").agg(
         F.when(F.count("*") < k, F.lit(_THETA_EXACT))
         .otherwise(F.max("u") + 1)
@@ -106,8 +106,7 @@ def theta_union(sketches: DataFrame, k: int = THETA_K) -> DataFrame:
         .select("u", "_tmin")
         .distinct()
     )
-    w = Window.orderBy("u")
-    capped = surv.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") <= k)
+    capped = top_k(surv, [], ["u"], k)
     theta = capped.agg(
         F.when(F.count("*") < k, F.min("_tmin"))
         .otherwise(F.least(F.min("_tmin"), F.max("u") + 1))

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.keys import money_sum
+from ..functions.rank import top_k
 from ..session import query_scope, scoped
 
 Q1_CUTOFF = "2001-09-02"
@@ -100,13 +101,13 @@ def q5_revenue_by_nation(
 def top_customers_per_nation(customer: DataFrame, orders: DataFrame, nation: DataFrame, k: int = 3) -> DataFrame:
     """Top-k customers by order spend within each nation (window rank)."""
     spend = orders.groupBy("o_custkey").agg(money_sum(F.col("o_totalprice")).alias("spend"))
-    w = Window.partitionBy("n_name").orderBy(F.col("spend").desc(), F.col("c_custkey"))
-    return (
+    joined = (
         customer.join(spend, customer["c_custkey"] == spend["o_custkey"])
         .join(F.broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"])
         .select("n_name", "c_custkey", "c_name", "spend")
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+    )
+    return top_k(
+        joined, ["n_name"], (F.col("spend").desc(), F.col("c_custkey")), k, rank="rank"
     )
 
 
@@ -584,8 +585,7 @@ def kmv_distinct_users(events: DataFrame, k: int = KMV_K) -> DataFrame:
     d = events.select(
         "event_type", _kmv_hash(F.col("user_id")).alias("u")
     ).distinct()
-    w = Window.partitionBy("event_type").orderBy("u")
-    kept = d.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") <= k)
+    kept = top_k(d, ["event_type"], ["u"], k)
     agg = kept.groupBy("event_type").agg(
         F.count("*").alias("sketch_size"), F.max("u").alias("_kth")
     )
@@ -615,13 +615,11 @@ def kmv_daily_merge_distinct_users(events: DataFrame, k: int = KMV_K) -> DataFra
         "event_type",
         _kmv_hash(F.col("user_id")).alias("u"),
     ).distinct()
-    wd = Window.partitionBy("event_date", "event_type").orderBy("u")
-    daily = d.withColumn("_r", F.row_number().over(wd)).filter(F.col("_r") <= k)
+    daily = top_k(d, ["event_date", "event_type"], ["u"], k)
     # merge: global re-rank over the union of daily sketches; a hash can
     # appear on many days, so distinct first
     merged = daily.select("event_type", "u").distinct()
-    w = Window.partitionBy("event_type").orderBy("u")
-    kept = merged.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") <= k)
+    kept = top_k(merged, ["event_type"], ["u"], k)
     agg = kept.groupBy("event_type").agg(
         F.count("*").alias("sketch_size"), F.max("u").alias("_kth")
     )
@@ -1312,14 +1310,12 @@ def kmv_view_purchase_overlap(events: DataFrame, k: int = KMV_K) -> DataFrame:
         .select("event_type", _kmv_hash(F.col("user_id")).alias("u"))
         .distinct()
     )
-    w = Window.partitionBy("event_type").orderBy("u")
-    sketches = d.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") <= k)
+    sketches = top_k(d, ["event_type"], ["u"], k)
     both = (
         sketches.groupBy("u")
         .agg(F.count("*").alias("_sides"))
     )
-    wu = Window.orderBy("u")
-    union_k = both.withColumn("_r", F.row_number().over(wu)).filter(F.col("_r") <= k)
+    union_k = top_k(both, [], ["u"], k)
     agg = union_k.agg(
         F.count("*").alias("sketch_size"),
         F.max("u").alias("_kth"),
@@ -1353,14 +1349,12 @@ def kmv_view_not_purchase(events: DataFrame, k: int = KMV_K) -> DataFrame:
         .select("event_type", _kmv_hash(F.col("user_id")).alias("u"))
         .distinct()
     )
-    w = Window.partitionBy("event_type").orderBy("u")
-    sketches = d.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") <= k)
+    sketches = top_k(d, ["event_type"], ["u"], k)
     per_u = sketches.groupBy("u").agg(
         F.max(F.when(F.col("event_type") == "view", 1).otherwise(0)).alias("_in_a"),
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("_in_b"),
     )
-    wu = Window.orderBy("u")
-    union_k = per_u.withColumn("_r", F.row_number().over(wu)).filter(F.col("_r") <= k)
+    union_k = top_k(per_u, [], ["u"], k)
     agg = union_k.agg(
         F.count("*").alias("sketch_size"),
         F.max("u").alias("_kth"),
@@ -1434,6 +1428,12 @@ def events_hourly_anomalies(events: DataFrame) -> DataFrame:
 SAMPLE_SKETCH_K = 256
 
 
+def _sample_order() -> tuple[F.Column, ...]:
+    """Sample order of the hash samples: smallest md5(event_id) first,
+    ties on event_id."""
+    return (_kmv_hash(F.col("event_id")), F.col("event_id"))
+
+
 def sampled_value_percentiles(events: DataFrame, k: int = SAMPLE_SKETCH_K) -> DataFrame:
     """Approximate percentiles from a DETERMINISTIC uniform sample: per
     event type keep the k rows with smallest md5(event_id) (the KMV
@@ -1442,12 +1442,12 @@ def sampled_value_percentiles(events: DataFrame, k: int = SAMPLE_SKETCH_K) -> Da
     estimate is hash-deterministic, so this approximate operator has a
     full value-hash oracle; sampling error vs the exact twin is
     asserted separately in tests."""
-    w = Window.partitionBy("event_type").orderBy(
-        _kmv_hash(F.col("event_id")), F.col("event_id")
+    sample = top_k(
+        events.select("event_type", "event_id", "value"),
+        ["event_type"],
+        _sample_order(),
+        k,
     )
-    sample = events.select("event_type", "event_id", "value").withColumn(
-        "_r", F.row_number().over(w)
-    ).filter(F.col("_r") <= k)
     return sample.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_sample"),
         F.round(F.expr("percentile(value, 0.5)"), 4).alias("p50"),
@@ -1466,18 +1466,13 @@ def sampled_daily_merge_percentiles(
     global hash-top-k is top-k within its own day, so the merge is
     provably lossless: bit-identical estimates to the direct sample,
     one shared oracle, equality asserted in tests."""
-    wd = Window.partitionBy(F.to_date("ts"), F.col("event_type")).orderBy(
-        _kmv_hash(F.col("event_id")), F.col("event_id")
+    daily = top_k(
+        events.select("event_type", "event_id", "value", "ts"),
+        [F.to_date("ts"), F.col("event_type")],
+        _sample_order(),
+        k,
     )
-    daily = events.select("event_type", "event_id", "value", "ts").withColumn(
-        "_r", F.row_number().over(wd)
-    ).filter(F.col("_r") <= k)
-    wm = Window.partitionBy("event_type").orderBy(
-        _kmv_hash(F.col("event_id")), F.col("event_id")
-    )
-    merged = daily.withColumn("_rm", F.row_number().over(wm)).filter(
-        F.col("_rm") <= k
-    )
+    merged = top_k(daily, ["event_type"], _sample_order(), k)
     return merged.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_sample"),
         F.round(F.expr("percentile(value, 0.5)"), 4).alias("p50"),
@@ -1832,8 +1827,7 @@ def kmv_type_overlap_matrix(events: DataFrame, k: int = KMV_K) -> DataFrame:
     regardless of corpus size. Deterministic md5 hashing ⇒ full
     value-hash oracle despite being an approximate operator."""
     d = events.select("event_type", _kmv_hash(F.col("user_id")).alias("u")).distinct()
-    w = Window.partitionBy("event_type").orderBy("u")
-    sketches = d.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") <= k)
+    sketches = top_k(d, ["event_type"], ["u"], k)
     types = d.select("event_type").distinct()
     pairs = (
         types.select(F.col("event_type").alias("type_a"))
@@ -1853,8 +1847,7 @@ def kmv_type_overlap_matrix(events: DataFrame, k: int = KMV_K) -> DataFrame:
             "_in_b"
         ),
     )
-    wu = Window.partitionBy("type_a", "type_b").orderBy("u")
-    union_k = per_u.withColumn("_r", F.row_number().over(wu)).filter(F.col("_r") <= k)
+    union_k = top_k(per_u, ["type_a", "type_b"], ["u"], k)
     agg = union_k.groupBy("type_a", "type_b").agg(
         F.count("*").alias("sketch_size"),
         F.max("u").alias("_kth"),

@@ -14,8 +14,10 @@ groupBys on low-cardinality keys.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.rank import top_k
 
 
 def executions(events: DataFrame) -> DataFrame:
@@ -39,13 +41,13 @@ def executions(events: DataFrame) -> DataFrame:
 def last_status(events: DataFrame) -> DataFrame:
     """ref monitoring/scheduler_executions_last_status_vw.sql:
     ROW_NUMBER()=1 per job, newest first."""
-    base = executions(events)
-    w = Window.partitionBy("job_name").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
     return (
-        base.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        top_k(
+            executions(events),
+            ["job_name"],
+            (F.col("ts").desc(), F.col("event_id").desc()),
+            1,
+        )
         .select(
             F.col("ts").alias("last_event_ts"),
             "job_name",

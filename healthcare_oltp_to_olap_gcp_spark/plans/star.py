@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 from ..functions.keys import surrogate_key
-from ..operators.merge import newest_per_key
+from ..functions.rank import top_k
 from ..session import query_scope, scoped
 
 
@@ -69,7 +69,7 @@ def prepared_events(events: DataFrame) -> DataFrame:
 def fact_events(events: DataFrame) -> DataFrame:
     """Deduplicated fact: newest row per event_id (idempotent wrt.
     replication overlap), ref sql/bq_fact_vitals.sql:14-17."""
-    return newest_per_key(prepared_events(events), "event_id", dedup_order())
+    return top_k(prepared_events(events), ["event_id"], dedup_order(), 1)
 
 
 def dim_time(fact: DataFrame) -> DataFrame:
@@ -258,7 +258,7 @@ def fact_events_incremental(events: DataFrame, cutoff: str = INCREMENTAL_CUTOFF)
     cut = F.lit(cutoff).cast("timestamp")
     base = fact_events(events.filter(F.col("ts") < cut))
     delta = prepared_events(events.filter(F.col("ts") >= cut))
-    return newest_per_key(base.unionByName(delta), "event_id", dedup_order())
+    return top_k(base.unionByName(delta), ["event_id"], dedup_order(), 1)
 
 
 def write_star_zorder(star: DataFrame, path: str) -> None:

@@ -19,6 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 T = TypeVar("T")
 
+# Auto-broadcast threshold of the engine's sessions (see get_spark).
+BROADCAST_THRESHOLD = "64m"
+
 
 def get_spark(app_name: str = "hc-olap-spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -37,16 +40,11 @@ def get_spark(app_name: str = "hc-olap-spark", shuffle_partitions: int | None = 
         # much larger probe side. Size-ADAPTIVE, not a force: a side
         # whose (runtime, with AQE) size exceeds the threshold still
         # sort-merge-joins, so the same code holds at cluster scale.
-        # Parameterized; size to executor memory in production (a few
-        # hundred MB is routine on 10s-of-GB executors, guide §3.1).
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"),
-        )
-        .config(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"),
-        )
+        # A deployment sizes it to executor memory by setting both
+        # confs on its session at runtime (a few hundred MB is routine
+        # on 10s-of-GB executors, guide §3.1).
+        .config("spark.sql.autoBroadcastJoinThreshold", BROADCAST_THRESHOLD)
+        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", BROADCAST_THRESHOLD)
         # Arrow for the few Pandas-UDF operators (multimodal, winnowing).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic date/timestamp math across engines (DuckDB oracle

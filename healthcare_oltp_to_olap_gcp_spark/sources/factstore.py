@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from ..operators.merge import newest_per_key
+from ..functions.rank import top_k
 
 
 class VersionedParquetStore:
@@ -82,6 +82,6 @@ class VersionedParquetStore:
         spark = delta.sparkSession
         current = self.read(spark)
         merged = delta if current is None else current.unionByName(delta)
-        out = newest_per_key(merged, key, order)
+        out = top_k(merged, [key], order, 1)
         out.write.mode("overwrite").parquet(f"{self.store_dir}/v={batch_id}")
         self._prune_versions(spark)

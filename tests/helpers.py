@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+from contextlib import contextmanager
 from decimal import Decimal
 
 import duckdb
@@ -13,6 +14,25 @@ import numpy as np
 import pandas as pd
 
 from healthcare_oltp_to_olap_gcp_spark.catalog import TABLES
+
+
+@contextmanager
+def session_confs(spark, confs: dict[str, str]):
+    """Set ``confs`` on the session for the block, then put every key
+    back as it was: its previous value, or unset if it had none. (An
+    unset alone would not restore a value the session was built with:
+    it falls back to Spark's built-in default.)"""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:

@@ -12,6 +12,7 @@ from healthcare_oltp_to_olap_gcp_spark.catalog import table
 from healthcare_oltp_to_olap_gcp_spark.sources import bucketed
 
 from .conftest import SF001
+from .helpers import session_confs
 
 
 @pytest.mark.fullsweep
@@ -24,12 +25,9 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
 
     # Disable broadcast so the planner must consider the shuffle join —
     # the situation bucketing exists for (two large sides at scale).
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with session_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = bucketed.bucketed_join(spark, "ev_bucketed", "ut_bucketed", "user_id")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan
         assert "Exchange" not in plan, plan  # both sides pre-bucketed
         assert joined.count() == events.count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

@@ -14,7 +14,7 @@ from healthcare_oltp_to_olap_gcp_spark.operators import (
 )
 
 from .conftest import SF001, SF01
-from .helpers import normalize
+from .helpers import normalize, session_confs
 
 
 @pytest.mark.fullsweep
@@ -278,13 +278,28 @@ def test_token_typo_pairs_no_vocab_broadcast(spark):
     from healthcare_oltp_to_olap_gcp_spark.operators import textquality
 
     docs = table(spark, SF001, "documents")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with session_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         pairs = textquality.token_typo_pairs(docs)
         plan = pairs._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" not in plan, plan
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
+def test_conf_block_restores_the_session_broadcast_threshold(spark):
+    """A test that changes a conf must leave the session as it found
+    it. An unset does not restore the session's 64m threshold (it falls
+    back to Spark's built-in 10 MB), so every later test would plan
+    under a threshold the engine never runs with."""
+    from healthcare_oltp_to_olap_gcp_spark.session import BROADCAST_THRESHOLD
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    assert spark.conf.get(key) == BROADCAST_THRESHOLD
+    test_token_typo_pairs_no_vocab_broadcast(spark)
+    assert spark.conf.get(key) == BROADCAST_THRESHOLD
+    unset = "spark.sql.files.maxRecordsPerFile"
+    assert spark.conf.get(unset, None) is None
+    with session_confs(spark, {unset: "7"}):
+        assert spark.conf.get(unset) == "7"
+    assert spark.conf.get(unset, None) is None
 
 
 def test_token_typo_pairs_blocking_complete(spark):
@@ -1159,3 +1174,106 @@ def test_ivf_flat_workload_is_ivf_restricted_to_the_fixed_query_set(spark):
         if r.query_id in expected_qs
     ]
     assert sorted(tuple(r) for r in out) == sorted(full_cut)
+
+
+# ---------------------------------------------------------------------------
+# functions.rank.top_k — the one top-k cut every dedup, ANN/BM25 list and
+# sketch goes through
+# ---------------------------------------------------------------------------
+def _rank_rows(spark):
+    # (g, id, v): group 1 has a three-way tie on v=7; group 2 has 2 rows
+    rows = [(1, 1, 5), (1, 4, 7), (1, 3, 7), (1, 2, 7), (1, 5, 1), (2, 7, 3), (2, 6, 9)]
+    return spark.createDataFrame(rows, "g long, id long, v long")
+
+
+def test_top_k_ties_resolved_by_order(spark):
+    from pyspark.sql import functions as F
+
+    from healthcare_oltp_to_olap_gcp_spark.functions.rank import top_k
+
+    df = _rank_rows(spark).filter("g = 1")
+    asc = top_k(df, ["g"], (F.col("v").desc(), F.col("id")), 2, rank="rank")
+    desc = top_k(df, ["g"], (F.col("v").desc(), F.col("id").desc()), 2, rank="rank")
+    assert sorted((r.id, r.rank) for r in asc.collect()) == [(2, 1), (3, 2)]
+    assert sorted((r.id, r.rank) for r in desc.collect()) == [(3, 2), (4, 1)]
+
+
+def test_top_k_keeps_whole_groups_smaller_than_k(spark):
+    from pyspark.sql import functions as F
+
+    from healthcare_oltp_to_olap_gcp_spark.functions.rank import top_k
+
+    got = top_k(_rank_rows(spark), ["g"], (F.col("v").desc(), F.col("id")), 4, rank="r")
+    assert sorted((r.g, r.id, r.r) for r in got.collect()) == [
+        (1, 1, 4), (1, 2, 1), (1, 3, 2), (1, 4, 3), (2, 6, 1), (2, 7, 2),
+    ]
+
+
+def test_top_k_empty_input(spark):
+    from healthcare_oltp_to_olap_gcp_spark.functions.rank import top_k
+
+    empty = spark.createDataFrame([], "g long, id long, v long")
+    got = top_k(empty, ["g"], ["v", "id"], 3, rank="rank")
+    assert got.columns == ["g", "id", "v", "rank"]
+    assert got.collect() == []
+    assert top_k(empty, [], ["v"], 1).collect() == []
+
+
+def test_top_k_empty_by_ranks_globally(spark):
+    from pyspark.sql import functions as F
+
+    from healthcare_oltp_to_olap_gcp_spark.functions.rank import top_k
+
+    got = top_k(_rank_rows(spark), [], (F.col("v").desc(), F.col("id")), 3, rank="rank")
+    assert sorted((r.rank, r.id) for r in got.collect()) == [(1, 6), (2, 2), (3, 3)]
+
+
+def test_top_k_rank_column_is_long_and_dropped_by_default(spark):
+    from healthcare_oltp_to_olap_gcp_spark.functions.rank import top_k
+
+    df = _rank_rows(spark)
+    assert dict(top_k(df, ["g"], ["v", "id"], 2, rank="rank").dtypes)["rank"] == "bigint"
+    assert top_k(df, ["g"], ["v", "id"], 2).columns == df.columns
+
+
+def test_top_k_one_equals_the_row_number_survivor_rule(spark):
+    """k=1 keeps the same rows as the hand-written survivor rule it
+    replaced (``row_number() = 1`` per event_id under ``dedup_order``)
+    on a replicated-overlap frame: re-delivered rows that share
+    (event_id, ts) with another payload, and later re-deliveries."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from healthcare_oltp_to_olap_gcp_spark.functions.rank import top_k
+    from healthcare_oltp_to_olap_gcp_spark.plans.star import dedup_order, prepared_events
+
+    events = table(spark, SF001, "events")
+    same_ts = events.filter(F.col("event_id") % 3 == 0).withColumn(
+        "value", F.col("value") - 1
+    )
+    later = events.filter(F.col("event_id") % 5 == 0).withColumn(
+        "ts", F.col("ts") + F.expr("INTERVAL 1 MINUTE")
+    )
+    overlap = prepared_events(events.unionByName(same_ts).unionByName(later))
+    w = Window.partitionBy("event_id").orderBy(*dedup_order())
+    old = (
+        overlap.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    got = top_k(overlap, ["event_id"], dedup_order(), 1)
+    want = normalize(old.toPandas())
+    assert len(want) == events.count()
+    assert normalize(got.toPandas()) == want
+
+
+def test_top_k_plans_a_window_group_limit(spark):
+    """The cut plans as WindowGroupLimit (Partial before the shuffle,
+    Final after it): the map-side cut a partition-local top-k builds on."""
+    from healthcare_oltp_to_olap_gcp_spark.functions.rank import top_k
+
+    for rank in (None, "rank"):
+        got = top_k(_rank_rows(spark).repartition(4), ["g"], ["v", "id"], 2, rank=rank)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        limits = [ln for ln in plan.splitlines() if "WindowGroupLimit" in ln]
+        assert [ln.rsplit(", ", 1)[-1] for ln in limits] == ["Final", "Partial"], plan

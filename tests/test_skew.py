@@ -14,7 +14,7 @@ import pytest
 from healthcare_oltp_to_olap_gcp_spark.catalog import TABLES, table
 
 from .conftest import SF01
-from .helpers import assert_parity
+from .helpers import assert_parity, session_confs
 
 # Operators whose shuffle key is user_id (window sorts / aggregations
 # partition on the skewed key).
@@ -86,21 +86,12 @@ def test_aqe_splits_skewed_join(spark, skew_dir):
         # AQE declines to split rather than add one more exchange
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with session_confs(spark, confs):
         joined = views.join(purchases, "user_id").groupBy().count()
         [row] = joined.collect()
         assert row["count"] > 0
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @pytest.fixture(scope="module")

@@ -22,7 +22,7 @@ from healthcare_oltp_to_olap_gcp_spark.plans.star import (
     write_star_zorder,
 )
 
-from .helpers import normalize
+from .helpers import normalize, session_confs
 
 
 def _synthetic_star(spark, n_users=100, n_types=200, n_days=1):
@@ -67,13 +67,9 @@ def test_zorder_write_tightens_second_key_spans(spark, tmp_path):
     star = _synthetic_star(spark)
     lex_path = str(tmp_path / "lex")
     z_path = str(tmp_path / "zord")
-    prev = spark.conf.get("spark.sql.files.maxRecordsPerFile", "0")
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "2000")
-    try:
+    with session_confs(spark, {"spark.sql.files.maxRecordsPerFile": "2000"}):
         write_star(star, lex_path)
         write_star_zorder(star, z_path)
-    finally:
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", prev)
 
     lex_files = glob.glob(lex_path + "/date_key=*/*.parquet")
     z_files = glob.glob(z_path + "/date_key=*/*.parquet")
@@ -100,13 +96,9 @@ def test_zorder_multi_date_keeps_clustering(spark, tmp_path):
     star = _synthetic_star(spark, n_days=3)
     lex_path = str(tmp_path / "lex")
     z_path = str(tmp_path / "zord")
-    prev = spark.conf.get("spark.sql.files.maxRecordsPerFile", "0")
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1000")
-    try:
+    with session_confs(spark, {"spark.sql.files.maxRecordsPerFile": "1000"}):
         write_star(star, lex_path)
         write_star_zorder(star, z_path)
-    finally:
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", prev)
 
     for day in ("2024-01-01", "2024-01-02", "2024-01-03"):
         z_files = glob.glob(z_path + f"/date_key={day}/*.parquet")

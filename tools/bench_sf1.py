@@ -35,15 +35,13 @@ import os
 import re
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from healthcare_oltp_to_olap_gcp_spark.api import QUERIES  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.session import get_spark  # noqa: E402
 
-import scale_probe  # noqa: E402  (sibling tool: PROBES/GROWN_C/amplify)
+import scale_probe  # noqa: E402  (sibling tool: probes, amplify, timing)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -116,33 +114,11 @@ def main() -> int:
     results: dict[str, dict] = {}
     flags: list[str] = []
     with tempfile.TemporaryDirectory(prefix="bench_sf1_") as tmp:
-        needed: dict[str, list[str]] = {}
+        scale_probe.amplify(spark, tmp, scale_probe.amplified_tables(names), FACTOR)
         for name in names:
-            if name in scale_probe.GROWN_C:
-                needed.update(scale_probe.GROWN_C[name][0])
-            else:
-                # amplify the tables scale_probe knows about; queries
-                # without a probe entry amplify nothing extra (their
-                # non-amplified tables are still copied 1:1)
-                needed.update(scale_probe.PROBES.get(name, {}))
-        scale_probe.amplify(spark, tmp, needed, FACTOR)
-        for name in names:
-            if name in scale_probe.GROWN_C:
-                _, build = scale_probe.GROWN_C[name]
-                run_1x = lambda: build(spark, SF_DIR, 1)  # noqa: E731
-                run_nx = lambda: build(spark, tmp, FACTOR)  # noqa: E731
-            else:
-                run_1x = lambda: QUERIES[name](spark, SF_DIR)  # noqa: E731
-                run_nx = lambda: QUERIES[name](spark, tmp)  # noqa: E731
-            # noop sink (r7): count() lets Catalyst prune the value
-            # computation of fixed-row-count outputs — see bench.py
-            t0 = time.perf_counter()
-            run_1x().write.format("noop").mode("overwrite").save()
-            t1 = round(time.perf_counter() - t0, 3)
-            t0 = time.perf_counter()
-            run_nx().write.format("noop").mode("overwrite").save()
-            t10 = round(time.perf_counter() - t0, 3)
-            spark.catalog.clearCache()
+            t1, t10 = (
+                round(t, 3) for t in scale_probe.time_1x_nx(spark, name, tmp, FACTOR)
+            )
             ratio_live = round(t10 / t1, 2)
             denom = budgets.get(name, t1)
             ratio = round(t10 / denom, 2)

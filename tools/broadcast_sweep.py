@@ -26,10 +26,10 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.api import QUERIES  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.session import get_spark  # noqa: E402
 
@@ -66,25 +66,23 @@ def main() -> None:
     )
     spark = get_spark("broadcast-sweep")
     spark.sparkContext.setLogLevel("ERROR")
-    QUERIES["q1_pricing_summary"](spark, sf_dir).count()  # warm
+    bench.warm_up(spark, sf_dir)
 
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
     results: dict[str, dict[str, float]] = {q: {} for q in SWEEP_QUERIES}
     for thr in THRESHOLDS:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+        spark.conf.set(key, thr)
         for name in SWEEP_QUERIES:
             df = QUERIES[name](spark, sf_dir)
-            start = time.perf_counter()
-            # noop sink, as in bench.py: count() lets Catalyst prune
-            # the value computation
-            df.write.format("noop").mode("overwrite").save()
-            sec = round(time.perf_counter() - start, 3)
+            sec = round(bench.noop_seconds(lambda: df), 3)
             results[name][thr] = sec
             print(json.dumps({
                 "threshold": thr, "query": name, "sec": sec,
                 "joins": join_mix(df),
             }))
             spark.catalog.clearCache()
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set(key, prev)
 
     print(f"\n{'query':32s} " + " ".join(f"{t:>8s}" for t in THRESHOLDS)
           + "   worst/best")

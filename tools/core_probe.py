@@ -12,23 +12,22 @@ Usage:
   SPARK_GRAFT_CPUS=32 python tools/core_probe.py run DIR q1 q2 ...
   SPARK_GRAFT_CPUS=8  python tools/core_probe.py run DIR q1 q2 ...
 
-`run` prints one `name\\tseconds` line per query (min of
-$CORE_PROBE_RUNS runs, default 2, noop-sink forced, cleaner-settle
-between runs — bench.py's methodology). The session honors
+`run` prints one `name\\tseconds` line per query, timed with
+bench.py's measurement loop (warm-up, noop sink, min of ``bench.RUNS``
+runs, cleaner-settle between runs). The session honors
 $SPARK_GRAFT_CPUS through the ordinary get_spark factory, so the probe
 exercises exactly the session the driver's bench builds.
 """
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import bench  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.api import QUERIES  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.session import get_spark  # noqa: E402
 
@@ -55,27 +54,10 @@ def main() -> None:
         spark.stop()
         return
     assert mode == "run"
-    runs = int(os.environ.get("CORE_PROBE_RUNS", "2"))
-    QUERIES["q1_pricing_summary"](spark, SF_DIR).count()
-    spark.range(32, numPartitions=32).mapInPandas(lambda it: it, "id long").count()
-
-    def _settle() -> None:
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        spark.range(1).count()
-        time.sleep(0.3)
-
+    bench.warm_up(spark, SF_DIR)
     for name in names:
         spark.sparkContext.setJobDescription(f"core-probe:{name}")
-        best = float("inf")
-        for _ in range(runs):
-            start = time.perf_counter()
-            QUERIES[name](spark, out_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - start)
-            _settle()
+        best = bench.best_seconds(spark, lambda: QUERIES[name](spark, out_dir))
         print(f"{name}\t{best:.3f}", flush=True)
     spark.stop()
 

@@ -1,6 +1,7 @@
-"""Per-query optimization probe (round 9): time a named query with the
-noop sink (min of N runs, cleaner-settle between runs — the bench.py
-methodology) and/or dump its ``explain('formatted')`` to a file.
+"""Per-query optimization probe (round 9): time a named query with
+bench.py's measurement loop (warm-up, noop sink, min of ``bench.RUNS``
+runs, cleaner-settle between runs) and/or dump its
+``explain('formatted')`` to a file.
 
 Usage:
   python tools/qprobe.py time  q1 q2 ...      # print per-query seconds
@@ -8,19 +9,17 @@ Usage:
                                               # write OUTDIR/<q>_SUFFIX.txt
   python tools/qprobe.py both  OUTDIR SUFFIX q1 q2 ...
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     QPROBE_RUNS (default 2).
+Env: SPARK_GRAFT_SF_DIR (default: the sf0.1 data set, as in bench.py).
 """
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.api import QUERIES  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.session import get_spark  # noqa: E402
 
@@ -35,19 +34,9 @@ def main() -> None:
         outdir, suffix = "", ""
         names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    runs = int(os.environ.get("QPROBE_RUNS", "2"))
     spark = get_spark("qprobe")
     spark.sparkContext.setLogLevel("ERROR")
-    # same warmup as bench.py
-    QUERIES["q1_pricing_summary"](spark, sf_dir).count()
-    spark.range(32, numPartitions=32).mapInPandas(lambda it: it, "id long").count()
-
-    def _settle() -> None:
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        spark.range(1).count()
-        time.sleep(0.3)
+    bench.warm_up(spark, sf_dir)
 
     for name in names:
         if mode in ("plan", "both"):
@@ -57,17 +46,10 @@ def main() -> None:
             )
             with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
                 f.write(plan)
-            _settle()
+            bench.settle(spark)
         if mode in ("time", "both"):
             spark.sparkContext.setJobDescription(f"qprobe:{name}")
-            best = float("inf")
-            for _ in range(runs):
-                start = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - start)
-                _settle()
+            best = bench.best_seconds(spark, lambda: QUERIES[name](spark, sf_dir))
             print(f"{name}\t{best:.3f}", flush=True)
             spark.sparkContext.setJobDescription(None)
     spark.stop()

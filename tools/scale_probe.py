@@ -20,12 +20,12 @@ import json
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.api import QUERIES  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.catalog import TABLES, table  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.session import get_spark  # noqa: E402
@@ -232,6 +232,29 @@ def amplify(spark, out_dir: str, tables: dict[str, list[str]], factor: int) -> N
         out.write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")
 
 
+def amplified_tables(names) -> dict[str, list[str]]:
+    """The tables (and their id columns) the probes ``names`` amplify."""
+    needed: dict[str, list[str]] = {}
+    for name in names:
+        needed.update(GROWN_C[name][0] if name in GROWN_C else PROBES[name])
+    return needed
+
+
+def time_1x_nx(spark, name: str, amp_dir: str, factor: int) -> tuple[float, float]:
+    """One noop-sink run of probe ``name`` on SF_DIR and one on its
+    ``factor``-x amplification in ``amp_dir``, in seconds."""
+    if name in GROWN_C:
+        _, build = GROWN_C[name]
+        run_1x = lambda: build(spark, SF_DIR, 1)  # noqa: E731
+        run_nx = lambda: build(spark, amp_dir, factor)  # noqa: E731
+    else:
+        run_1x = lambda: QUERIES[name](spark, SF_DIR)  # noqa: E731
+        run_nx = lambda: QUERIES[name](spark, amp_dir)  # noqa: E731
+    times = bench.noop_seconds(run_1x), bench.noop_seconds(run_nx)
+    spark.catalog.clearCache()
+    return times
+
+
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     only = sys.argv[2:]
@@ -243,33 +266,15 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     results = {}
     with tempfile.TemporaryDirectory(prefix="scale_probe_") as tmp:
-        needed: dict[str, list[str]] = {}
+        amplify(spark, tmp, amplified_tables(todo), factor)
         for name in todo:
-            needed.update(GROWN_C[name][0] if name in GROWN_C else PROBES[name])
-        amplify(spark, tmp, needed, factor)
-        for name in todo:
-            if name in GROWN_C:
-                _, build = GROWN_C[name]
-                run_1x = lambda: build(spark, SF_DIR, 1)  # noqa: E731
-                run_nx = lambda: build(spark, tmp, factor)  # noqa: E731
-            else:
-                run_1x = lambda: QUERIES[name](spark, SF_DIR)  # noqa: E731
-                run_nx = lambda: QUERIES[name](spark, tmp)  # noqa: E731
-            # noop sink (r7): count() lets Catalyst prune the value
-            # computation of fixed-row-count outputs — see bench.py
-            t0 = time.perf_counter()
-            run_1x().write.format("noop").mode("overwrite").save()
-            base = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            run_nx().write.format("noop").mode("overwrite").save()
-            big = time.perf_counter() - t0
+            base, big = time_1x_nx(spark, name, tmp, factor)
             results[name] = {
                 "t_1x": round(base, 2),
                 f"t_{factor}x": round(big, 2),
                 "ratio": round(big / base, 2),
             }
             print(name, results[name], flush=True)
-            spark.catalog.clearCache()
     print(json.dumps({"factor": factor, "results": results}))
     spark.stop()
 
