@@ -6,10 +6,14 @@ success flag) over a 7-day window. The analog here treats
 the success flag; the window is the 7 days up to the newest event so
 results are deterministic on the frozen test data.
 
-Scale notes: the base window filter is a pushed-down predicate on the
-(at scale, date-partitioned) events table, so the 7-day view scans 7
-partitions out of years of history; the rollups are partial-agg
-groupBys on low-cardinality keys.
+Scale notes: the base window filter is NOT pushed into the scan. Its
+bound is the lazily computed ``max(ts)``, so the executed plan
+evaluates it as the condition of a ``BroadcastNestedLoopJoin`` against
+that one-row bound, and the events scan shows ``PushedFilters: []``:
+the 7-day view reads the whole table, then filters. Pruning to 7
+partitions needs the bound as a literal, which a collect at build time
+would freeze into the lazily registered views. The rollups are
+partial-agg groupBys on low-cardinality keys.
 """
 
 from __future__ import annotations

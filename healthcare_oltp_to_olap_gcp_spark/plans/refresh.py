@@ -6,8 +6,8 @@ The reference schedules BigQuery scripts (`build_fact_vitals_15min`,
 star. Here the whole refresh is one function so the ordering is
 structural, not a scheduling convention; each table materializes as
 parquet. The dims and the star both read the materialized fact: the
-star re-derives its dims from it (``fact_events_star``) rather than
-reading the dim tables just written.
+star derives its surrogate keys from the fact's natural keys
+(``fact_events_star``) rather than reading the dim tables just written.
 """
 
 from __future__ import annotations

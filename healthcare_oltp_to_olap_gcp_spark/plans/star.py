@@ -17,20 +17,26 @@ raw JSON→props. Each builder mirrors one reference SQL file:
 - sanity checks         ← README "Sanity Checks" section
 
 Scale notes (100 TB): the dedup is one hash shuffle on the (high
-cardinality, unskewed) event_id; every dimension is tiny and joined
-with an explicit ``broadcast()`` so the star build never shuffles the
-fact; ``write_star`` reproduces BigQuery's PARTITION BY day + CLUSTER
-BY keys with partitionBy + sortWithinPartitions.
+cardinality, unskewed) event_id; the star derives its surrogate keys
+by hashing the fact's natural keys (each dimension is the DISTINCT set
+of those keys, so a join to it would only recompute the hash): one
+narrow pass that never shuffles the fact and builds no dimension. A
+dimension is built and broadcast only where its attributes are read
+(``weekend_activity``'s ``dim_time``). ``write_star`` reproduces
+BigQuery's PARTITION BY day + CLUSTER BY keys with partitionBy +
+sortWithinPartitions.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 from ..functions.keys import surrogate_key
 from ..functions.rank import top_k
-from ..session import query_scope, scoped
 
 
 def dedup_order() -> tuple[F.Column, ...]:
@@ -53,8 +59,10 @@ PROPS_K_PATTERN = r'"k": (\d+)'
 
 
 def prepared_events(events: DataFrame) -> DataFrame:
-    """Derive the star's natural-key columns from the raw event row."""
-    k = F.regexp_extract("props", PROPS_K_PATTERN, 1).cast("long")
+    """Derive the star's natural-key columns from the raw event row.
+    ``props`` without a ``"k"`` gives a NULL ``k`` and ``src`` (the
+    oracle's TRY_CAST), not an ANSI cast error on the empty match."""
+    k = F.regexp_extract("props", PROPS_K_PATTERN, 1).try_cast("long")
     return events.withColumns(
         {
             "k": k,
@@ -134,36 +142,31 @@ def dim_source(fact: DataFrame) -> DataFrame:
     )
 
 
-def _join_dims(fact: DataFrame, how: str) -> DataFrame:
-    """The fact joined to all four broadcast dims on natural keys.
-
-    The fact is persisted: it feeds four dimension builds plus the
-    final join, and Spark reuses no exchanges across those subtrees
-    (measured: 5 scans / 15 window recomputes without the persist).
-    The production shape is refresh_model, which materializes the fact
-    to parquet and reads it back for the dims. The cache lives until
-    the next top-level query build (``session.scoped``)."""
-    fact = query_scope().persist(fact)
-    return (
-        fact.join(F.broadcast(dim_user(fact)), "user_id", how)
-        .join(F.broadcast(dim_event_type(fact)), "event_type", how)
-        .join(F.broadcast(dim_band(fact)), "band", how)
-        .join(F.broadcast(dim_source(fact)), F.col("src") == F.col("source"), how)
-    )
+# Natural keys the star resolves against its dimensions.
+NATURAL_KEYS = ("user_id", "event_type", "band", "src")
 
 
-@scoped
+def _all_keys_present() -> F.Column:
+    return reduce(operator.and_, (F.col(k).isNotNull() for k in NATURAL_KEYS))
+
+
 def fact_events_star(fact: DataFrame) -> DataFrame:
-    """Star fact: fact ⋈ all dims on natural keys, keep surrogate keys +
-    measure + degenerate event_id, ref sql/bq_fact_vitals_star.sql.
+    """Star fact: surrogate keys + measure + degenerate event_id,
+    ref sql/bq_fact_vitals_star.sql.
 
-    Dims are broadcast — the fact side never shuffles, which is the
-    property that matters at 100 TB."""
-    return _join_dims(fact, "inner").select(
-        "user_key",
-        "event_type_key",
-        "band_key",
-        "source_key",
+    The reference joins the fact to each dimension on its natural key
+    to fetch the surrogate key. Every dimension is the DISTINCT set of
+    the fact's own natural keys and its key is ``surrogate_key`` of
+    that value, so each inner join only recomputes the same hash and
+    drops rows whose natural key is NULL. The star derives the keys in
+    one narrow filter + projection instead: no dimension build, no
+    join, and the fact side never shuffles (pinned equal to the explicit
+    four-dimension join in tests/test_star_keys.py)."""
+    return fact.filter(_all_keys_present()).select(
+        surrogate_key("user_id").alias("user_key"),
+        surrogate_key("event_type").alias("event_type_key"),
+        surrogate_key("band").alias("band_key"),
+        surrogate_key("src").alias("source_key"),
         F.to_date("ts").alias("date_key"),
         "event_id",
         F.col("value").alias("measure_value"),
@@ -192,16 +195,14 @@ def sanity_row_counts(fact: DataFrame, star: DataFrame) -> DataFrame:
     )
 
 
-@scoped
 def sanity_missing_dims(fact: DataFrame) -> DataFrame:
     """ref README 'No Missing Dimensions' — rows whose natural keys
-    fail to resolve in any dimension (should be 0)."""
-    return _join_dims(fact, "left").filter(
-        F.col("user_key").isNull()
-        | F.col("event_type_key").isNull()
-        | F.col("band_key").isNull()
-        | F.col("source_key").isNull()
-    ).agg(F.count("*").alias("rows_missing_any_dimension"))
+    fail to resolve in any dimension (should be 0). A dimension holds
+    every non-NULL natural key of the fact, so exactly the rows with a
+    NULL key miss one."""
+    return fact.agg(
+        F.count_if(~_all_keys_present()).alias("rows_missing_any_dimension")
+    )
 
 
 def _star_writer(star: DataFrame) -> DataFrameWriter:

@@ -45,6 +45,13 @@ def get_spark(app_name: str = "hc-olap-spark", shuffle_partitions: int | None = 
         # on 10s-of-GB executors, guide §3.1).
         .config("spark.sql.autoBroadcastJoinThreshold", BROADCAST_THRESHOLD)
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", BROADCAST_THRESHOLD)
+        # Generated-class cache sized to the engine's working set (static
+        # conf). A refresh cycle needs ~90 classes, a curation pass ~166
+        # and bm25_wand_topk alone 107; with Spark's default of 100
+        # entries the LRU cache evicts every class before its next use,
+        # so each cycle recompiles all of them in Janino (~6 ms each) and
+        # the JVM JITs the new bytecode again. 1000 entries hold both.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Arrow for the few Pandas-UDF operators (multimodal, winnowing).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic date/timestamp math across engines (DuckDB oracle
@@ -69,7 +76,7 @@ class QueryScope:
     """The cached frames and memoized values of one top-level query build.
 
     Query builders persist intermediates that feed several subtrees of
-    ONE returned plan (e.g. the star fact feeding four dimension builds).
+    ONE returned plan (e.g. a report's corpus feeding every method).
     Builders return lazy frames that their callers run later, so the
     cache must outlive the builder call; it is released when the next
     top-level build starts (see ``scoped``). Releasing early is always

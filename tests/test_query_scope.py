@@ -24,11 +24,17 @@ def _facts(spark):
     )
 
 
+@scoped
+def _persisting_builder(fact):
+    """A builder that persists its input for the rest of its scope."""
+    return query_scope().persist(fact).groupBy("user_id").count()
+
+
 def test_next_top_level_build_releases_previous_frames(spark):
     first, second = _facts(spark)
-    star.fact_events_star(first)
+    _persisting_builder(first)
     assert first.is_cached
-    star.sanity_missing_dims(second)
+    _persisting_builder(second)
     assert not first.is_cached
     assert second.is_cached
 
@@ -38,11 +44,11 @@ def test_nested_builders_share_one_scope(spark):
 
     @scoped
     def both():
-        return star.fact_events_star(first), star.sanity_missing_dims(second)
+        return _persisting_builder(first), _persisting_builder(second)
 
     both()
     assert first.is_cached and second.is_cached
-    star.fact_events_star(first)  # a new top-level build
+    _persisting_builder(first)  # a new top-level build
     assert not second.is_cached
 
 

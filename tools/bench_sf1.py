@@ -15,10 +15,10 @@ reconciles each query's measured ratio against its SCALING prediction:
                                            SCALING.md's probe tables,
                                            last occurrence wins)
 
-Writes BENCH_sf1.json next to the other bench artifacts. Single-run
-timings (a composed run, not a min-of-2 steady-state measurement) —
-read flags as "go re-probe this", not as a regression verdict; the
-known cold-first-query JIT effect is called out in SCALING.md.
+Writes BENCH_sf1.json next to the other bench artifacts. One composed
+pass after one session warm-up (``bench.warm_up``), each side timed
+best-of-``bench.RUNS`` — read flags as "go re-probe this", not as a
+regression verdict.
 
 The fixed-C knn_graph_edges/knn_graph_components entries are NOT
 re-run at sf1 — their ~30x fixed-C growth is already measured and
@@ -39,6 +39,7 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import bench  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.session import get_spark  # noqa: E402
 
 import scale_probe  # noqa: E402  (sibling tool: probes, amplify, timing)
@@ -111,6 +112,7 @@ def main() -> int:
     )["queries"]
     spark = get_spark("bench-sf1")
     spark.sparkContext.setLogLevel("ERROR")
+    bench.warm_up(spark, SF_DIR)
     results: dict[str, dict] = {}
     flags: list[str] = []
     with tempfile.TemporaryDirectory(prefix="bench_sf1_") as tmp:
@@ -139,7 +141,7 @@ def main() -> int:
     artifact = {
         "sf": 1.0,
         "amplified_from": f"{SF_DIR} x{FACTOR} id-shifted (scale_probe.amplify)",
-        "run": "single composed pass, one session",
+        "run": "one composed pass, one session, warm-up + best-of-RUNS per side",
         "flag_rule": (
             "t_sf1 / steady-state budget (fallback: composed-session 1x "
             "time for @grownC variants) > 2 x SCALING.md predicted ratio "

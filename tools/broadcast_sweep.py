@@ -33,10 +33,11 @@ import bench  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.api import QUERIES  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.session import get_spark  # noqa: E402
 
-# Join-heavy shapes across the families: star ETL, multi-dim TPC-H,
-# semi/anti, sketch-rate lookup, ANN composition, inverted index.
+# Join-heavy shapes across the families: star ETL (the dim_time join),
+# multi-dim TPC-H, semi/anti, sketch-rate lookup, ANN composition,
+# inverted index.
 SWEEP_QUERIES = (
-    "fact_events_star",
+    "weekend_activity",
     "q5_revenue_by_nation",
     "q9_product_profit",
     "q21_waiting_suppliers",

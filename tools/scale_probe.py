@@ -8,7 +8,8 @@ the unmodified driver parquet).
 With query names, probes only those (they must be PROBES keys) —
 used to add rows for new operators without re-running the full set.
 
-Prints per-query seconds at 1x and Nx and the observed ratio. A
+Prints per-query seconds at 1x and Nx (best of ``bench.RUNS`` after
+one session warm-up) and the observed ratio. A
 near-linear ratio (≈ N for scan-bound ops, ≈ N·log N for sort-bound)
 is the evidence that the plan would keep holding at cluster scale; a
 super-linear ratio flags a quadratic term that 100 TB would amplify.
@@ -241,8 +242,10 @@ def amplified_tables(names) -> dict[str, list[str]]:
 
 
 def time_1x_nx(spark, name: str, amp_dir: str, factor: int) -> tuple[float, float]:
-    """One noop-sink run of probe ``name`` on SF_DIR and one on its
-    ``factor``-x amplification in ``amp_dir``, in seconds."""
+    """Best-of-``bench.RUNS`` noop-sink seconds of probe ``name`` on
+    SF_DIR and on its ``factor``-x amplification in ``amp_dir``. Call
+    ``bench.warm_up`` once before the first probe, or its 1x time
+    carries the session's JVM and codegen warm-up."""
     if name in GROWN_C:
         _, build = GROWN_C[name]
         run_1x = lambda: build(spark, SF_DIR, 1)  # noqa: E731
@@ -250,9 +253,7 @@ def time_1x_nx(spark, name: str, amp_dir: str, factor: int) -> tuple[float, floa
     else:
         run_1x = lambda: QUERIES[name](spark, SF_DIR)  # noqa: E731
         run_nx = lambda: QUERIES[name](spark, amp_dir)  # noqa: E731
-    times = bench.noop_seconds(run_1x), bench.noop_seconds(run_nx)
-    spark.catalog.clearCache()
-    return times
+    return bench.best_seconds(spark, run_1x), bench.best_seconds(spark, run_nx)
 
 
 def main() -> None:
@@ -264,6 +265,7 @@ def main() -> None:
     todo = dict.fromkeys(only) if only else dict.fromkeys(PROBES)
     spark = get_spark("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
+    bench.warm_up(spark, SF_DIR)
     results = {}
     with tempfile.TemporaryDirectory(prefix="scale_probe_") as tmp:
         amplify(spark, tmp, amplified_tables(todo), factor)
