@@ -35,6 +35,7 @@ import gc
 import json
 import os
 import sys
+import threading
 import time
 from collections.abc import Callable
 
@@ -92,6 +93,33 @@ def best_seconds(spark: SparkSession, build: Callable[[], DataFrame]) -> float:
         best = min(best, noop_seconds(build))
         settle(spark)
     return best
+
+
+def build_cost(build: Callable[[], DataFrame]) -> tuple[int, float]:
+    """(py4j round trips, wall seconds) of building a frame without
+    running it: the driver-side cost a query pays before Spark plans.
+    Counts the commands the calling thread sends to the JVM; py4j's
+    finalizer thread sends the deletes of garbage-collected proxies on
+    its own schedule, which would make the count depend on timing."""
+    from py4j.clientserver import ClientServerConnection
+
+    original = ClientServerConnection.send_command
+    caller = threading.get_ident()
+    sent = 0
+
+    def counted(self, command):
+        nonlocal sent
+        sent += threading.get_ident() == caller
+        return original(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        start = time.perf_counter()
+        build()
+        seconds = time.perf_counter() - start
+    finally:
+        ClientServerConnection.send_command = original
+    return sent, seconds
 
 
 def main() -> None:

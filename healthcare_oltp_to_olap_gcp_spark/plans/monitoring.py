@@ -6,17 +6,20 @@ success flag) over a 7-day window. The analog here treats
 the success flag; the window is the 7 days up to the newest event so
 results are deterministic on the frozen test data.
 
-Scale notes: the base window filter is NOT pushed into the scan. Its
-bound is the lazily computed ``max(ts)``, so the executed plan
-evaluates it as the condition of a ``BroadcastNestedLoopJoin`` against
-that one-row bound, and the events scan shows ``PushedFilters: []``:
-the 7-day view reads the whole table, then filters. Pruning to 7
-partitions needs the bound as a literal, which a collect at build time
-would freeze into the lazily registered views. The rollups are
+Scale notes: the window bound is fixed per source frame. The first
+view built over a frame collects its ``max(ts)`` (one small aggregate
+job) and every later view over the same frame object reuses it, so the
+bound is a literal: the scan pushes ``ts >= bound - 7 days`` down
+(``PushedFilters``) and can skip row groups outside the window. A
+file-based frame already fixes its file listing when it is built, so a
+frame's bound and its files describe the same data; a refresh builds a
+new frame over the new data, which gets its own bound. The rollups are
 partial-agg groupBys on low-cardinality keys.
 """
 
 from __future__ import annotations
+
+import weakref
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -24,13 +27,25 @@ from pyspark.sql import functions as F
 from ..functions.rank import top_k
 
 
+# Epoch-micros max(ts) per source frame, ``None`` for an empty one. Weak
+# keys: a bound lives exactly as long as its frame, and a new frame
+# (another corpus, a later refresh) is never served an old bound.
+_MAX_TS: weakref.WeakKeyDictionary[DataFrame, int | None] = weakref.WeakKeyDictionary()
+
+
+def _max_ts_micros(events: DataFrame) -> int | None:
+    if events not in _MAX_TS:
+        _MAX_TS[events] = events.agg(F.max(F.unix_micros("ts"))).first()[0]
+    return _MAX_TS[events]
+
+
 def executions(events: DataFrame) -> DataFrame:
     """Base view, ref monitoring/scheduler_executions_results_vw.sql:
     windowed slice + success flag."""
-    bounds = events.agg(F.max("ts").alias("_max_ts"))
+    # a NULL bound (empty frame) keeps no row, like the NULL max(ts) did
+    bound = F.timestamp_micros(F.lit(_max_ts_micros(events)))
     return (
-        events.crossJoin(F.broadcast(bounds))
-        .filter(F.col("ts") >= F.col("_max_ts") - F.expr("INTERVAL 7 DAYS"))
+        events.filter(F.col("ts") >= bound - F.expr("INTERVAL 7 DAYS"))
         .select(
             "ts",
             F.col("event_type").alias("job_name"),
@@ -115,8 +130,10 @@ VIEW_BUILDERS = {
 def register_monitoring_views(events: DataFrame) -> list[str]:
     """Register every monitoring rollup as a temp view under its
     reference name; returns the registered names. Temp views are
-    lazy — each dashboard query re-plans against current data, exactly
-    like the reference's BigQuery views."""
+    lazy — each dashboard query re-plans over ``events``, like the
+    reference's BigQuery views, with the window bound fixed for that
+    frame (see the module's scale notes): after a refresh, register the
+    views again over the new frame."""
     for name, build in VIEW_BUILDERS.items():
         build(events).createOrReplaceTempView(name)
     return list(VIEW_BUILDERS)

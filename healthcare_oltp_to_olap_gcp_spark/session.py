@@ -52,6 +52,18 @@ def get_spark(app_name: str = "hc-olap-spark", shuffle_partitions: int | None = 
         # so each cycle recompiles all of them in Janino (~6 ms each) and
         # the JVM JITs the new bytecode again. 1000 entries hold both.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # No Python call-site capture on DataFrame/Column calls. PySpark 4
+        # wraps every F.*/Column call to record its file:line for error
+        # messages, at ~10 py4j round trips per call (active session, JVM
+        # class lookup, a conf read, origin set and clear) plus a stack
+        # walk. Building simhash_dup_pairs made 8,983 round trips with it
+        # on and 2,533 off; building all 239 registry queries at sf0.001,
+        # 489k vs 202k (tools/build_cost.py). Errors keep Spark's error
+        # class and SQL query context; only the Python "DataFrame"
+        # file:line fragment goes.
+        # PySpark reads this once per process, at the first wrapped call,
+        # so it must be set when the session is built.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Arrow for the few Pandas-UDF operators (multimodal, winnowing).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic date/timestamp math across engines (DuckDB oracle

@@ -35,6 +35,17 @@ def session_confs(spark, confs: dict[str, str]):
                 spark.conf.set(k, v)
 
 
+def jobs_run(spark, group: str, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs (tagged with job group ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     con = duckdb.connect()
     for t in TABLES:

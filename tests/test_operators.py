@@ -3,18 +3,20 @@ recall/exactness, SimHash determinism, multimodal stubs, winnowing."""
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 import pytest
 
-from healthcare_oltp_to_olap_gcp_spark.catalog import table
+from healthcare_oltp_to_olap_gcp_spark.catalog import TABLES, table
 from healthcare_oltp_to_olap_gcp_spark.operators import (
     dedup,
     multimodal,
     similarity,
     textquality,
 )
+from healthcare_oltp_to_olap_gcp_spark.oracles import ORACLE_SQL
 
 from .conftest import SF001, SF01
-from .helpers import normalize, session_confs
+from .helpers import normalize, run_oracle, session_confs
 
 
 @pytest.mark.fullsweep
@@ -55,6 +57,31 @@ def test_simhash_deterministic_and_blocked(spark):
     assert a == b
     for _, _, hamming in a:
         assert 0 <= int(hamming) <= 3
+
+
+def _oracle_signatures(sf_dir: str) -> list[tuple[str, ...]]:
+    """The ``sig`` CTE of the simhash_dup_pairs oracle: c0..c3 per doc."""
+    sql = ORACLE_SQL["simhash_dup_pairs"]
+    pairs = "SELECT doc_a, doc_b, hamming FROM p WHERE hamming <= 3"
+    assert pairs in sql
+    sig = sql.replace(pairs, "SELECT doc_id, c0, c1, c2, c3 FROM sig")
+    return normalize(run_oracle(sig, sf_dir))
+
+
+def test_simhash_signatures_equal_the_oracle_for_every_doc(spark, tmp_path):
+    """Every document's signature, not only those of the near-dup pairs
+    the pairs oracle can see; and an empty corpus has none."""
+    docs = table(spark, SF001, "documents")
+    want = _oracle_signatures(SF001)
+    assert len(want) == docs.count()
+    assert normalize(dedup.simhash_signatures(docs).toPandas()) == want
+
+    for t in TABLES:
+        schema = pq.read_schema(f"{SF001}/{t}.parquet")
+        pq.write_table(schema.empty_table(), str(tmp_path / f"{t}.parquet"))
+    empty = table(spark, str(tmp_path), "documents")
+    assert dedup.simhash_signatures(empty).count() == 0
+    assert _oracle_signatures(str(tmp_path)) == []
 
 
 def test_simhash_finds_planted_neardups(spark):

@@ -4,11 +4,17 @@ appear in the executed plan, not just in docstrings."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
+from pyspark.sql import functions as F
 
 from healthcare_oltp_to_olap_gcp_spark.api import QUERIES
+from healthcare_oltp_to_olap_gcp_spark.catalog import table
+from healthcare_oltp_to_olap_gcp_spark.plans import monitoring
 
 from .conftest import SF001
+from .helpers import jobs_run
 
 
 def _plan(spark, name: str) -> str:
@@ -237,6 +243,52 @@ def test_monitoring_views_register_under_reference_names(spark):
     assert n_err == monitoring.errors(events).count()
 
 
+def test_monitoring_window_bound_is_collected_once_per_frame(spark):
+    """The five views over one frame share one max(ts) job, run when
+    the first view is built; another frame gets its own."""
+    events = table(spark, SF001, "events")
+    one = jobs_run(spark, "mon_bound_one", lambda: monitoring.executions(events))
+    assert one >= 1
+    again = jobs_run(
+        spark,
+        "mon_bound_five",
+        lambda: [build(events) for build in monitoring.VIEW_BUILDERS.values()],
+    )
+    assert again == 0
+    other = table(spark, SF001, "events")
+    assert jobs_run(spark, "mon_bound_other", lambda: monitoring.summary_7d(other)) == one
+
+
+def test_monitoring_window_moves_with_a_new_frame(spark):
+    """A frame with later rows gets a later window: the bound is never
+    served from an earlier frame."""
+    events = table(spark, SF001, "events")
+    newest = events.agg(F.max("ts")).first()[0]
+    older = events.filter(F.col("ts") < F.lit(newest - dt.timedelta(days=10)))
+    for frame in (older, events):
+        want = frame.filter(
+            F.col("ts") >= F.lit(frame.agg(F.max("ts")).first()[0] - dt.timedelta(days=7))
+        )
+        got = monitoring.executions(frame).select("event_id")
+        assert sorted(got.collect()) == sorted(want.select("event_id").collect())
+    assert (
+        monitoring.executions(events).agg(F.min("ts")).first()[0]
+        > monitoring.executions(older).agg(F.max("ts")).first()[0]
+    )
+
+
+def test_monitoring_views_of_an_empty_frame_are_empty(spark):
+    empty = table(spark, SF001, "events").filter(F.col("event_id") < 0)
+    for build in monitoring.VIEW_BUILDERS.values():
+        assert build(empty).count() == 0
+
+
+def test_monitoring_pushes_the_window_into_the_scan(spark):
+    plan = _plan(spark, "mon_executions")
+    assert "GreaterThanOrEqual(ts," in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 # BroadcastNestedLoopJoin is acceptable ONLY where it is a conscious
 # choice: quadratic baselines (broadcast + inequality condition,
 # docstring-marked BASELINE-ONLY) and one-row-scalar broadcast crosses
@@ -256,11 +308,6 @@ _BNLJ_ALLOWED = {
     "tfidf_top_terms",  # corpus doc count
     "events_seasonality",  # one-row event-total cross (tfidf shape)
     "sanity_row_counts",  # two one-row counts
-    "mon_executions",  # max(ts) window bound
-    "mon_last_status",
-    "mon_daily_summary",
-    "mon_7d_summary",
-    "mon_errors",
     "ivf_flat_ann_topk",  # one-row centroid-struct-array cross (r7 per-row argmax)
     # reviewed: inherits ivf_flat's one-row centroid-array cross per
     # width + the recall report's one-row hit/total crosses

@@ -13,7 +13,7 @@ from healthcare_oltp_to_olap_gcp_spark.plans import star
 from healthcare_oltp_to_olap_gcp_spark.session import QueryScope, query_scope, scoped
 
 from .conftest import SF001
-from .helpers import normalize
+from .helpers import jobs_run, normalize
 
 
 def _facts(spark):
@@ -65,16 +65,6 @@ def test_memo_builds_once_and_caches_none():
     assert len(calls) == 1
 
 
-def _fit_jobs(spark, group, fit):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fit()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_fit_sample_is_per_corpus_and_empty_corpus_collects_once(spark):
     emb = table(spark, SF001, "embeddings")
     even = emb.filter(F.col("vec_id") % 2 == 0)
@@ -98,9 +88,9 @@ def test_fit_sample_is_per_corpus_and_empty_corpus_collects_once(spark):
         assert similarity._fit_sample_matrix(empty, 64) is None
         assert similarity._fit_sample_matrix(empty, 64) is None
 
-    assert _fit_jobs(spark, "empty_fit_once", empty_twice) == 1
+    assert jobs_run(spark, "empty_fit_once", empty_twice) == 1
     # two scopes collect twice: the job count above is not vacuous
-    assert _fit_jobs(spark, "empty_fit_twice", lambda: (empty_twice(), empty_twice())) == 2
+    assert jobs_run(spark, "empty_fit_twice", lambda: (empty_twice(), empty_twice())) == 2
 
 
 def test_bm25_rerank_with_or_without_memoized_vectors(spark):
