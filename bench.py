@@ -66,16 +66,27 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
     spark.range(32, numPartitions=32).mapInPandas(lambda it: it, "id long").count()
 
 
+# Upper bound of the settle wait. py4j's finalizer thread sleeps 1 s
+# whenever its delete queue is empty, so a full queue drains within ~1 s.
+SETTLE_TIMEOUT_S = 5.0
+
+
 def settle(spark: SparkSession) -> None:
     """Drop dead references so Spark's ContextCleaner can release
     finished broadcasts/caches, and let the (async) cleanup land
     OUTSIDE the next timed region — without the settle window its
-    unpersist/GC RPC storm hits mid-query."""
+    unpersist/GC RPC storm hits mid-query. The wait ends once py4j's
+    finalizer thread has sent the deletes of every garbage-collected
+    JVM-object proxy (its queue is empty), or after
+    ``SETTLE_TIMEOUT_S``."""
     spark.catalog.clearCache()
     gc.collect()
     spark.sparkContext._jvm.System.gc()
     spark.range(1).count()
-    time.sleep(0.3)
+    deletes = spark.sparkContext._gateway._gateway_client.finalizer_deque
+    deadline = time.monotonic() + SETTLE_TIMEOUT_S
+    while deletes and time.monotonic() < deadline:
+        time.sleep(0.01)
 
 
 def noop_seconds(build: Callable[[], DataFrame]) -> float:

@@ -17,15 +17,6 @@ def surrogate_key(col: Column | str) -> Column:
     return F.sha2(c.cast("string"), 256)
 
 
-def date_key(ts: Column | str) -> Column:
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.to_date(c)
-
-
-def as_long(c: Column) -> Column:
-    return c.cast("long")
-
-
 def money_sum(expr: Column) -> Column:
     """Deterministic money aggregate: per-row cast to DECIMAL(18,8),
     then exact decimal SUM — order- and partitioning-independent, unlike

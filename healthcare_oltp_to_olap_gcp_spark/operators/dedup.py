@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rank import top_k
+from ..functions.sketch import HASH_DOMAIN, hash32, hash_unit
 from ..functions.text import tokens, word_shingles
 from ..session import query_scope, scoped
 
@@ -642,12 +643,7 @@ def weighted_sample_documents(docs: DataFrame, n: int = WEIGHTED_SAMPLE_N) -> Da
     partial top-n, no global sort), so the pattern holds at any corpus
     size. Length-weighting is the standard token-budget-proportional
     selection for training-data mixing."""
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-            "long"
-        )
-        + 1
-    ) / F.lit(4294967296.0)
+    u = hash_unit("doc_id")
     keyed = (
         docs.filter(F.col("n_chars") > 0)
         .select(
@@ -783,7 +779,6 @@ def simhash_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 VAL_PCT = 5
 TEST_PCT = 5
-_SPLIT_SCALE = 1 << 32
 
 
 def split_assignments(
@@ -804,11 +799,9 @@ def _split_expr(key: F.Column, val_pct: int, test_pct: int) -> F.Column:
     """md5(key) → [0, 2^32) → exact-integer split thresholds — shared
     by the per-doc and the group-aware split so both carve the same
     boundaries (and the DuckDB oracles mirror one formula)."""
-    h = F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
-    t_test = _SPLIT_SCALE * test_pct // 100
-    t_val = _SPLIT_SCALE * (test_pct + val_pct) // 100
+    h = hash32(key)
+    t_test = HASH_DOMAIN * test_pct // 100
+    t_val = HASH_DOMAIN * (test_pct + val_pct) // 100
     return (
         F.when(h < t_test, F.lit("test"))
         .when(h < t_val, F.lit("val"))
@@ -1071,12 +1064,7 @@ def temperature_sample_documents(
     # α=0.5 takes the exact path.
     rate = F.sqrt(ratio) if alpha == 0.5 else F.pow(ratio, F.lit(1.0 - alpha))
     rates = c.crossJoin(F.broadcast(mn)).select("source", rate.alias("rate"))
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-            "long"
-        )
-        + 1
-    ) / F.lit(4294967296.0)
+    u = hash_unit("doc_id")
     return (
         docs.select("doc_id", "source", u.alias("u"))
         .join(F.broadcast(rates), "source")
@@ -1104,12 +1092,7 @@ def mixture_sample_documents(docs: DataFrame) -> DataFrame:
         c.crossJoin(F.broadcast(mn))
         .select("source", (F.col("mn") / F.col("n").cast("double")).alias("rate"))
     )
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-            "long"
-        )
-        + 1
-    ) / F.lit(4294967296.0)
+    u = hash_unit("doc_id")
     return (
         docs.select("doc_id", "source", u.alias("u"))
         .join(F.broadcast(rates), "source")
@@ -1279,12 +1262,7 @@ def unimax_sample_documents(
             .alias("rate"),
         )
     )
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-            "long"
-        )
-        + 1
-    ) / F.lit(4294967296.0)
+    u = hash_unit("doc_id")
     return (
         docs.select("doc_id", "lang", u.alias("u"))
         .join(F.broadcast(rates), "lang")

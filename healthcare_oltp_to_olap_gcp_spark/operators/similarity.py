@@ -33,6 +33,8 @@ N_PLANES = 4
 
 
 DIM = 64
+# The schema of every top-k neighbor list, empty results included.
+TOPK_SCHEMA = "query_id long, neighbor_id long, sim double, rank long"
 
 
 def _par(df: DataFrame) -> int:
@@ -294,9 +296,7 @@ def ivf_ann_topk(
     if featurized.isEmpty():
         # KMeans.fit rejects an empty dataset, and an empty corpus has no
         # neighbors anyway — short-circuit with the operator's schema.
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rank long"
-        )
+        return embeddings.sparkSession.createDataFrame([], TOPK_SCHEMA)
     model = KMeans(
         k=n_centroids, seed=42, maxIter=5, featuresCol="fv", predictionCol="cell"
     ).fit(featurized)
@@ -590,6 +590,33 @@ def _lloyd_fit(embeddings: DataFrame, n_cells: int, fit_sample: int):
     return cent, x, assign
 
 
+def _pq_codebooks(spark, x, m: int, n_codes: int) -> DataFrame:
+    """Per-subspace PQ codebooks fit on the rows of ``x``: for each of
+    the ``m`` subspaces, ``IVF_FIT_ROUNDS`` rounds of numpy Lloyd
+    (squared-L2 argmin assignment, mean update) from the first
+    ``n_codes`` sub-vectors; empty clusters keep their previous center.
+    Returns the (j, cid, csub) codeword frame."""
+    sub = DIM // m
+    rows = []
+    for j in range(m):
+        xs = x[:, j * sub : (j + 1) * sub]
+        centers = xs[: min(n_codes, len(xs))].copy()
+        for _ in range(IVF_FIT_ROUNDS):
+            # assign: argmin squared L2 (vectorized |x|^2 - 2 x.c + |c|^2)
+            d2 = (
+                (xs * xs).sum(1)[:, None]
+                - 2.0 * xs @ centers.T
+                + (centers * centers).sum(1)[None, :]
+            )
+            assign = d2.argmin(1)
+            for c in range(len(centers)):
+                members = xs[assign == c]
+                if len(members):
+                    centers[c] = members.mean(0)
+        rows += [(j, i, [float(v) for v in c]) for i, c in enumerate(centers)]
+    return local_frame(spark, rows, "j int, cid long, csub array<double>")
+
+
 @scoped
 def ivf_flat_trained_ann_topk(
     embeddings: DataFrame,
@@ -614,9 +641,7 @@ def ivf_flat_trained_ann_topk(
     seeded twin remains the value-hash-oracled control."""
     cent, _, _ = _trained_centroids(embeddings, n_centroids, fit_sample)
     if cent is None:
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rank long"
-        )
+        return embeddings.sparkSession.createDataFrame([], TOPK_SCHEMA)
     return _ivf_flat_body(_corpus(embeddings), _queries(embeddings), cent, k, n_probe)
 
 
@@ -1056,9 +1081,7 @@ def ann_gemm_topk(
     )
     n_q = q_df.count()
     if n_q == 0:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rank long"
-        )
+        return spark.createDataFrame([], TOPK_SCHEMA)
     n_blocks = max(1, math.ceil(n_q / query_block))
     corpus = embeddings.repartition(_par(embeddings)).select(
         "vec_id", as_double("embedding").alias("e")
@@ -1534,36 +1557,16 @@ def ivfpq_trained_ann_topk(
     value-hash-oracled control."""
     import numpy as np
 
-    sub = DIM // m
     spark = embeddings.sparkSession
-    cent, x, assign = _trained_centroids(embeddings, n_cells, fit_sample)
+    cent, x, _ = _trained_centroids(embeddings, n_cells, fit_sample)
     if cent is None:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rank long"
-        )
+        return spark.createDataFrame([], TOPK_SCHEMA)
     centers = np.array(
         [r.centroid for r in cent.orderBy("cent_id").collect()], dtype=np.float64
     )
     # final-round assignment against the final centers, then residuals
     assign = (x @ centers.T).argmax(1)
-    res = x - centers[assign]
-    rows = []
-    for j in range(m):
-        xs = res[:, j * sub : (j + 1) * sub]
-        cb = xs[: min(n_codes, len(xs))].copy()
-        for _ in range(IVF_FIT_ROUNDS):
-            d2 = (
-                (xs * xs).sum(1)[:, None]
-                - 2.0 * xs @ cb.T
-                + (cb * cb).sum(1)[None, :]
-            )
-            a = d2.argmin(1)
-            for c in range(len(cb)):
-                members = xs[a == c]
-                if len(members):
-                    cb[c] = members.mean(0)
-        rows += [(j, i, [float(v) for v in c]) for i, c in enumerate(cb)]
-    cw = local_frame(spark, rows, "j int, cid long, csub array<double>")
+    cw = _pq_codebooks(spark, x - centers[assign], m, n_codes)
     return _ivfpq_body(
         _corpus(embeddings), _queries(embeddings), cent, lambda assigned: cw, k, m, n_probe, margin
     )
@@ -1695,41 +1698,20 @@ def pq_trained_ann_topk(
     touches the driver.
 
     Deterministic: init = first ``n_codes`` sample sub-vectors in the
-    md5 draw order, 10 Lloyd rounds of pure float64 numpy; empty
-    clusters keep their previous center.
+    md5 draw order, ``IVF_FIT_ROUNDS`` Lloyd rounds of pure float64
+    numpy (``_pq_codebooks``); empty clusters keep their previous
+    center.
 
     Rows-only correctness: the iterative fit isn't SQL-portable, so
     ``pq_ann_topk`` stays the value-hash-oracled control and tests
     assert recall(trained) >= recall(seeded) against the brute top-k."""
-    sub = DIM // m
     # r10: the sample draw is IDENTICAL to _trained_centroids' (same
     # md5 rule, same fit_sample) — route through the scope-memoized
     # matrix so a multi-method caller collects it once (guide §5 reuse)
     x = _fit_sample_matrix(embeddings, fit_sample)
     if x is None:
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rank long"
-        )
-    rows = []
-    for j in range(m):
-        xs = x[:, j * sub : (j + 1) * sub]
-        centers = xs[: min(n_codes, len(xs))].copy()
-        for _ in range(10):
-            # assign: argmin squared L2 (vectorized |x|^2 - 2 x.c + |c|^2)
-            d2 = (
-                (xs * xs).sum(1)[:, None]
-                - 2.0 * xs @ centers.T
-                + (centers * centers).sum(1)[None, :]
-            )
-            assign = d2.argmin(1)
-            for c in range(len(centers)):
-                members = xs[assign == c]
-                if len(members):
-                    centers[c] = members.mean(0)
-        rows += [(j, i, [float(v) for v in c]) for i, c in enumerate(centers)]
-    cw = local_frame(
-        embeddings.sparkSession, rows, "j int, cid long, csub array<double>"
-    )
+        return embeddings.sparkSession.createDataFrame([], TOPK_SCHEMA)
+    cw = _pq_codebooks(embeddings.sparkSession, x, m, n_codes)
     return _pq_adc_topk(_corpus(embeddings), _queries(embeddings), cw, k, m, margin)
 
 

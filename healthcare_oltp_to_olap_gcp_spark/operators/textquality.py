@@ -15,6 +15,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.localframe import local_frame
 from ..functions.rank import top_k
+from ..functions.sketch import hash32, hash_unit
 from ..functions.text import (
     DE_STOP,
     EN_STOP,
@@ -797,10 +798,7 @@ def _hashed_grams(docs: DataFrame, n_buckets: int) -> DataFrame:
     ).select(
         "doc_id",
         "lang",
-        (
-            F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10).cast("long")
-            % n_buckets
-        ).alias("bucket"),
+        (hash32("gram") % n_buckets).alias("bucket"),
     )
 
 
@@ -891,12 +889,7 @@ def dsir_sample_documents(
     w = dsir_importance_weights(docs, target_lang, n_buckets)
     n = docs.count()
     top_n = math.ceil(frac * n)
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-            "long"
-        )
-        + 1
-    ) / F.lit(4294967296.0)
+    u = hash_unit("doc_id")
     g = F.round(-F.log(-F.log(u)), 6)
     scored = w.withColumn("score", F.round(F.col("log_weight") + g, 6))
     return (
@@ -1147,15 +1140,7 @@ def cms_token_counts(
     par = docs.sparkSession.sparkContext.defaultParallelism
     tok = docs.repartition(par).select(F.explode(tokens("text")).alias("term"))
     j = F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("j")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.col("j"), F.col("term"))), 1, 8),
-            16,
-            10,
-        )
-        .cast("long")
-        % width
-    ).alias("bucket")
+    bucket = (hash32(F.concat_ws(":", F.col("j"), F.col("term"))) % width).alias("bucket")
     counters = (
         tok.select("term", j)
         .select("j", bucket)

@@ -1704,10 +1704,11 @@ FROM agg
 
 
 def _split_oracle() -> str:
-    from .operators.dedup import _SPLIT_SCALE, TEST_PCT, VAL_PCT
+    from .functions.sketch import HASH_DOMAIN
+    from .operators.dedup import TEST_PCT, VAL_PCT
 
-    t_test = _SPLIT_SCALE * TEST_PCT // 100
-    t_val = _SPLIT_SCALE * (TEST_PCT + VAL_PCT) // 100
+    t_test = HASH_DOMAIN * TEST_PCT // 100
+    t_val = HASH_DOMAIN * (TEST_PCT + VAL_PCT) // 100
     return f"""
 WITH h AS (
   SELECT doc_id,
@@ -1730,10 +1731,11 @@ def _split_grouped_oracle() -> str:
     the recursive-CTE near-dup components (threshold 0.8, identical to
     the dedup_components oracle) keyed through the same md5 thresholds
     as the per-doc split — singleton docs hash by their own id."""
-    from .operators.dedup import _SPLIT_SCALE, TEST_PCT, VAL_PCT
+    from .functions.sketch import HASH_DOMAIN
+    from .operators.dedup import TEST_PCT, VAL_PCT
 
-    t_test = _SPLIT_SCALE * TEST_PCT // 100
-    t_val = _SPLIT_SCALE * (TEST_PCT + VAL_PCT) // 100
+    t_test = HASH_DOMAIN * TEST_PCT // 100
+    t_val = HASH_DOMAIN * (TEST_PCT + VAL_PCT) // 100
     return f"""
 WITH RECURSIVE {SHINGLES_CTE},
 pairs AS (

@@ -20,8 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import sketch
 from ..functions.keys import money_sum
 from ..functions.rank import top_k
+from ..functions.sketch import U, hash32
 from ..session import query_scope, scoped
 
 Q1_CUTOFF = "2001-09-02"
@@ -562,15 +564,18 @@ def hll_sketch_distinct_users(events: DataFrame) -> DataFrame:
 
 
 KMV_K = 256
-_KMV_SCALE = 4294967296.0  # 2^32: the hash domain
 
 
-def _kmv_hash(col: F.Column) -> F.Column:
-    """Uniform 32-bit hash shared bit-for-bit with the DuckDB oracle:
-    first 8 hex digits of md5 parsed as an integer. Because both
-    engines agree on md5 and on hex parsing, a SKETCH built from this
-    hash is value-hash oracle-able — unusual for approximate ops."""
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
+def _kmv_counts(sk: DataFrame, k: int) -> DataFrame:
+    """Per event type of a bottom-k sketch: (event_type, sketch_size,
+    approx_users), the KMV estimate rounded to 4 places."""
+    return sketch.bounds(sk, ["event_type"]).select(
+        "event_type",
+        "sketch_size",
+        F.round(sketch.kmv_estimate(F.col("sketch_size"), F.col("theta_int"), k), 4).alias(
+            "approx_users"
+        ),
+    )
 
 
 def kmv_distinct_users(events: DataFrame, k: int = KMV_K) -> DataFrame:
@@ -582,58 +587,23 @@ def kmv_distinct_users(events: DataFrame, k: int = KMV_K) -> DataFrame:
     estimate is hash-deterministic, so unlike HLL this sketch has a
     full value-hash DuckDB oracle; error vs the exact twin is also
     asserted in tests (stderr ≈ 1/√(k−2) ≈ 6% at k=256)."""
-    d = events.select(
-        "event_type", _kmv_hash(F.col("user_id")).alias("u")
-    ).distinct()
-    kept = top_k(d, ["event_type"], ["u"], k)
-    agg = kept.groupBy("event_type").agg(
-        F.count("*").alias("sketch_size"), F.max("u").alias("_kth")
-    )
-    return agg.select(
-        "event_type",
-        F.col("sketch_size").cast("long").alias("sketch_size"),
-        F.when(F.col("sketch_size") < k, F.col("sketch_size").cast("double"))
-        .otherwise(
-            F.round(
-                F.lit(float(k - 1)) / ((F.col("_kth") + 1) / F.lit(_KMV_SCALE)), 4
-            )
-        )
-        .alias("approx_users"),
-    )
+    d = events.select("event_type", hash32("user_id").alias(U)).distinct()
+    return _kmv_counts(sketch.bottom_k(d, ["event_type"], k), k)
 
 
 def kmv_daily_merge_distinct_users(events: DataFrame, k: int = KMV_K) -> DataFrame:
     """Mergeable-rollup form of ``kmv_distinct_users``: per (day, type)
     keep each day's k smallest hashes (the daily sketch table — KBs per
-    partition at 100 TB), then MERGE per type by re-selecting the k
-    smallest over the union. A value in the global top-k is top-k
+    partition at 100 TB), then MERGE per type with the sketch union (the
+    k smallest over the union). A value in the global top-k is top-k
     within its own day, so the merge is provably lossless and this
     returns bit-identical estimates to the direct sketch — the same
     oracle SQL serves both, and tests assert the equality."""
     d = events.select(
-        F.to_date("ts").alias("event_date"),
-        "event_type",
-        _kmv_hash(F.col("user_id")).alias("u"),
+        F.to_date("ts").alias("event_date"), "event_type", hash32("user_id").alias(U)
     ).distinct()
-    daily = top_k(d, ["event_date", "event_type"], ["u"], k)
-    # merge: global re-rank over the union of daily sketches; a hash can
-    # appear on many days, so distinct first
-    merged = daily.select("event_type", "u").distinct()
-    kept = top_k(merged, ["event_type"], ["u"], k)
-    agg = kept.groupBy("event_type").agg(
-        F.count("*").alias("sketch_size"), F.max("u").alias("_kth")
-    )
-    return agg.select(
-        "event_type",
-        F.col("sketch_size").cast("long").alias("sketch_size"),
-        F.when(F.col("sketch_size") < k, F.col("sketch_size").cast("double"))
-        .otherwise(
-            F.round(
-                F.lit(float(k - 1)) / ((F.col("_kth") + 1) / F.lit(_KMV_SCALE)), 4
-            )
-        )
-        .alias("approx_users"),
-    )
+    daily = sketch.bottom_k(d, ["event_date", "event_type"], k)
+    return _kmv_counts(sketch.union(daily, ["event_type"], k), k)
 
 
 def orders_revenue_7d_ma(orders: DataFrame) -> DataFrame:
@@ -1294,86 +1264,73 @@ def lineitem_column_stats(lineitem: DataFrame) -> DataFrame:
     )
 
 
+def _view_purchase_union(events: DataFrame, k: int, *aggs: F.Column) -> DataFrame:
+    """The union sketch of the view and purchase users' KMV sketches."""
+    d = (
+        events.filter(F.col("event_type").isin("view", "purchase"))
+        .select("event_type", hash32("user_id").alias(U))
+        .distinct()
+    )
+    return sketch.union(sketch.bottom_k(d, ["event_type"], k), [], k, *aggs)
+
+
+def _union_fraction(
+    un: DataFrame, by: list[str], k: int, hits: F.Column, n: str, frac: str, est: str
+) -> DataFrame:
+    """Per ``by`` group of a union sketch: its size, the ``hits`` count
+    among its hashes (as ``n``), their fraction, the union's KMV
+    estimate and fraction × union estimate (as ``est``)."""
+    size = F.col("sketch_size")
+    union_est = sketch.kmv_estimate(size, F.col("theta_int"), k)
+    return sketch.bounds(un, by, F.sum(F.when(hits, 1).otherwise(0)).alias("_n")).select(
+        *by,
+        "sketch_size",
+        F.col("_n").cast("long").alias(n),
+        F.round(F.col("_n") / size, 6).alias(frac),
+        F.round(union_est, 4).alias("union_est"),
+        F.round(F.col("_n") / size * union_est, 4).alias(est),
+    )
+
+
 def kmv_view_purchase_overlap(events: DataFrame, k: int = KMV_K) -> DataFrame:
     """Set-intersection estimate between two distinct-user sets (view ∩
     purchase) from KMV sketches — the theta-sketch set operation built
     on the engine's deterministic md5 hash, so even this *approximate*
     op has an exact value-hash oracle.
 
-    Shape: one distinct over (type, hash) for both sides, the k
-    smallest union hashes re-ranked from the two (tiny) sketches, and
-    the Jaccard estimated as the fraction of union-sketch members
-    present in both sides; |A∩B| ≈ jaccard · (k−1)/U_k. Everything
-    after the first distinct runs on ≤2k rows."""
-    d = (
-        events.filter(F.col("event_type").isin("view", "purchase"))
-        .select("event_type", _kmv_hash(F.col("user_id")).alias("u"))
-        .distinct()
-    )
-    sketches = top_k(d, ["event_type"], ["u"], k)
-    both = (
-        sketches.groupBy("u")
-        .agg(F.count("*").alias("_sides"))
-    )
-    union_k = top_k(both, [], ["u"], k)
-    agg = union_k.agg(
-        F.count("*").alias("sketch_size"),
-        F.max("u").alias("_kth"),
-        F.sum(F.when(F.col("_sides") == 2, 1).otherwise(0)).alias("_in_both"),
-    )
-    exact_union = F.col("sketch_size") < k
-    union_est = F.when(exact_union, F.col("sketch_size").cast("double")).otherwise(
-        F.lit(float(k - 1)) / ((F.col("_kth") + 1) / F.lit(_KMV_SCALE))
-    )
-    return agg.select(
-        F.col("sketch_size").cast("long").alias("sketch_size"),
-        F.col("_in_both").cast("long").alias("n_in_both"),
-        F.round(F.col("_in_both") / F.col("sketch_size"), 6).alias("jaccard_est"),
-        F.round(union_est, 4).alias("union_est"),
-        F.round(F.col("_in_both") / F.col("sketch_size") * union_est, 4).alias(
-            "intersection_est"
-        ),
+    Shape: one distinct over (type, hash) for both sides, the sketch
+    union of the two (tiny) sketches, and the Jaccard estimated as the
+    fraction of union-sketch members present in both sides;
+    |A∩B| ≈ jaccard · (k−1)/U_k. Everything after the first distinct
+    runs on ≤2k rows."""
+    return _union_fraction(
+        _view_purchase_union(events, k),
+        [],
+        k,
+        F.col("_sides") == 2,
+        "n_in_both",
+        "jaccard_est",
+        "intersection_est",
     )
 
 
 def kmv_view_not_purchase(events: DataFrame, k: int = KMV_K) -> DataFrame:
     """Theta-style A-NOT-B set difference from KMV sketches: distinct
-    users who VIEWED but never PURCHASED. Same union-sketch shape as
-    ``kmv_view_purchase_overlap`` (a union-top-k hash that belongs to a
-    side is provably inside that side's own top-k sketch, so membership
-    flags are exact); the difference estimate is the A∧¬B fraction of
-    the union sketch × the union estimate. Deterministic md5 hashing ⇒
+    users who VIEWED but never PURCHASED. Same union sketch as
+    ``kmv_view_purchase_overlap`` (a union-sketch hash that belongs to a
+    side is provably inside that side's own sketch, so membership flags
+    are exact); the difference estimate is the A∧¬B fraction of the
+    union sketch × the union estimate. Deterministic md5 hashing ⇒
     full value-hash oracle despite being an approximate operator."""
-    d = (
-        events.filter(F.col("event_type").isin("view", "purchase"))
-        .select("event_type", _kmv_hash(F.col("user_id")).alias("u"))
-        .distinct()
-    )
-    sketches = top_k(d, ["event_type"], ["u"], k)
-    per_u = sketches.groupBy("u").agg(
-        F.max(F.when(F.col("event_type") == "view", 1).otherwise(0)).alias("_in_a"),
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("_in_b"),
-    )
-    union_k = top_k(per_u, [], ["u"], k)
-    agg = union_k.agg(
-        F.count("*").alias("sketch_size"),
-        F.max("u").alias("_kth"),
-        F.sum(
-            F.when((F.col("_in_a") == 1) & (F.col("_in_b") == 0), 1).otherwise(0)
-        ).alias("_a_not_b"),
-    )
-    exact_union = F.col("sketch_size") < k
-    union_est = F.when(exact_union, F.col("sketch_size").cast("double")).otherwise(
-        F.lit(float(k - 1)) / ((F.col("_kth") + 1) / F.lit(_KMV_SCALE))
-    )
-    return agg.select(
-        F.col("sketch_size").cast("long").alias("sketch_size"),
-        F.col("_a_not_b").cast("long").alias("n_a_not_b"),
-        F.round(F.col("_a_not_b") / F.col("sketch_size"), 6).alias("a_not_b_frac"),
-        F.round(union_est, 4).alias("union_est"),
-        F.round(F.col("_a_not_b") / F.col("sketch_size") * union_est, 4).alias(
-            "difference_est"
-        ),
+    purchased = sketch.member(F.col("event_type") == "purchase").alias("_purchased")
+    return _union_fraction(
+        _view_purchase_union(events, k, purchased),
+        [],
+        k,
+        F.col("_purchased") == 0,
+        "n_a_not_b",
+        "a_not_b_frac",
+        "difference_est",
     )
 
 
@@ -1428,10 +1385,13 @@ def events_hourly_anomalies(events: DataFrame) -> DataFrame:
 SAMPLE_SKETCH_K = 256
 
 
-def _sample_order() -> tuple[F.Column, ...]:
-    """Sample order of the hash samples: smallest md5(event_id) first,
-    ties on event_id."""
-    return (_kmv_hash(F.col("event_id")), F.col("event_id"))
+def _sample_percentiles(sample: DataFrame) -> DataFrame:
+    return sample.groupBy("event_type").agg(
+        F.count("*").cast("long").alias("n_sample"),
+        F.round(F.expr("percentile(value, 0.5)"), 4).alias("p50"),
+        F.round(F.expr("percentile(value, 0.9)"), 4).alias("p90"),
+        F.round(F.expr("percentile(value, 0.99)"), 4).alias("p99"),
+    )
 
 
 def sampled_value_percentiles(events: DataFrame, k: int = SAMPLE_SKETCH_K) -> DataFrame:
@@ -1442,18 +1402,8 @@ def sampled_value_percentiles(events: DataFrame, k: int = SAMPLE_SKETCH_K) -> Da
     estimate is hash-deterministic, so this approximate operator has a
     full value-hash oracle; sampling error vs the exact twin is
     asserted separately in tests."""
-    sample = top_k(
-        events.select("event_type", "event_id", "value"),
-        ["event_type"],
-        _sample_order(),
-        k,
-    )
-    return sample.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_sample"),
-        F.round(F.expr("percentile(value, 0.5)"), 4).alias("p50"),
-        F.round(F.expr("percentile(value, 0.9)"), 4).alias("p90"),
-        F.round(F.expr("percentile(value, 0.99)"), 4).alias("p99"),
-    )
+    rows = events.select("event_type", "event_id", "value")
+    return _sample_percentiles(sketch.hash_sample(rows, ["event_type"], "event_id", k))
 
 
 def sampled_daily_merge_percentiles(
@@ -1466,19 +1416,9 @@ def sampled_daily_merge_percentiles(
     global hash-top-k is top-k within its own day, so the merge is
     provably lossless: bit-identical estimates to the direct sample,
     one shared oracle, equality asserted in tests."""
-    daily = top_k(
-        events.select("event_type", "event_id", "value", "ts"),
-        [F.to_date("ts"), F.col("event_type")],
-        _sample_order(),
-        k,
-    )
-    merged = top_k(daily, ["event_type"], _sample_order(), k)
-    return merged.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_sample"),
-        F.round(F.expr("percentile(value, 0.5)"), 4).alias("p50"),
-        F.round(F.expr("percentile(value, 0.9)"), 4).alias("p90"),
-        F.round(F.expr("percentile(value, 0.99)"), 4).alias("p99"),
-    )
+    rows = events.select("event_type", "event_id", "value", "ts")
+    daily = sketch.hash_sample(rows, [F.to_date("ts"), F.col("event_type")], "event_id", k)
+    return _sample_percentiles(sketch.hash_sample(daily, ["event_type"], "event_id", k))
 
 
 # Power-of-two bin width: value / W, bucket * W and the in-bucket
@@ -1826,8 +1766,8 @@ def kmv_type_overlap_matrix(events: DataFrame, k: int = KMV_K) -> DataFrame:
     below runs per-pair on ≤ 2k rows — the matrix costs O(T²·k)
     regardless of corpus size. Deterministic md5 hashing ⇒ full
     value-hash oracle despite being an approximate operator."""
-    d = events.select("event_type", _kmv_hash(F.col("user_id")).alias("u")).distinct()
-    sketches = top_k(d, ["event_type"], ["u"], k)
+    d = events.select("event_type", hash32("user_id").alias(U)).distinct()
+    sk = sketch.bottom_k(d, ["event_type"], k)
     types = d.select("event_type").distinct()
     pairs = (
         types.select(F.col("event_type").alias("type_a"))
@@ -1835,40 +1775,19 @@ def kmv_type_overlap_matrix(events: DataFrame, k: int = KMV_K) -> DataFrame:
         .filter(F.col("type_a") < F.col("type_b"))
     )
     members = pairs.join(
-        F.broadcast(sketches.select("event_type", "u")),
+        F.broadcast(sk),
         (F.col("event_type") == F.col("type_a"))
         | (F.col("event_type") == F.col("type_b")),
     )
-    per_u = members.groupBy("type_a", "type_b", "u").agg(
-        F.max(F.when(F.col("event_type") == F.col("type_a"), 1).otherwise(0)).alias(
-            "_in_a"
-        ),
-        F.max(F.when(F.col("event_type") == F.col("type_b"), 1).otherwise(0)).alias(
-            "_in_b"
-        ),
-    )
-    union_k = top_k(per_u, ["type_a", "type_b"], ["u"], k)
-    agg = union_k.groupBy("type_a", "type_b").agg(
-        F.count("*").alias("sketch_size"),
-        F.max("u").alias("_kth"),
-        F.sum(
-            F.when((F.col("_in_a") == 1) & (F.col("_in_b") == 1), 1).otherwise(0)
-        ).alias("_in_both"),
-    )
-    exact_union = F.col("sketch_size") < k
-    union_est = F.when(exact_union, F.col("sketch_size").cast("double")).otherwise(
-        F.lit(float(k - 1)) / ((F.col("_kth") + 1) / F.lit(_KMV_SCALE))
-    )
-    return agg.select(
-        "type_a",
-        "type_b",
-        F.col("sketch_size").cast("long").alias("sketch_size"),
-        F.col("_in_both").cast("long").alias("n_in_both"),
-        F.round(F.col("_in_both") / F.col("sketch_size"), 6).alias("jaccard_est"),
-        F.round(union_est, 4).alias("union_est"),
-        F.round(F.col("_in_both") / F.col("sketch_size") * union_est, 4).alias(
-            "intersection_est"
-        ),
+    by = ["type_a", "type_b"]
+    return _union_fraction(
+        sketch.union(members, by, k),
+        by,
+        k,
+        F.col("_sides") == 2,
+        "n_in_both",
+        "jaccard_est",
+        "intersection_est",
     )
 
 
@@ -1888,15 +1807,15 @@ def join_size_estimate(
     exact for join estimation where independent row-level sampling is
     famously biased — per-key fan-out products survive intact).
     Estimate = sampled pairs × p_mod. The md5 key hash is the engine-
-    shared deterministic one (``_kmv_hash``), so even this sampling
+    shared deterministic one (``sketch.hash32``), so even this sampling
     operator is value-hash oracle-able.
 
     Scale shape: both scans prune to ~1/p_mod of rows BEFORE the
     shuffle (the hash filter pushes into the scan stage); the sampled
     join then shuffles only the surviving slice — cost is 1/p_mod of
     the real join's."""
-    ok = _kmv_hash(F.col("o_orderkey")) % p_mod == 0
-    lk = _kmv_hash(F.col("l_orderkey")) % p_mod == 0
+    ok = hash32("o_orderkey") % p_mod == 0
+    lk = hash32("l_orderkey") % p_mod == 0
     o = orders.filter(ok).select("o_orderkey")
     l = lineitem.filter(lk).select("l_orderkey")
     joined = o.join(l, F.col("o_orderkey") == F.col("l_orderkey"))

@@ -3,30 +3,17 @@
 At 100 TB an incremental load, a partition-pruned scan, or a fresh
 deployment routinely hands an operator zero rows; a plan that crashes on
 an empty frame (e.g. an ML fit, a driver-side collect indexing [0])
-is a production outage, not an edge case. This sweep materializes a
-schema-identical empty mirror of the sf0.001 tables and runs the entire
-registry against it, asserting "no exception" (row counts are free to
-be zero).
+is a production outage, not an edge case. This sweep runs the entire
+registry against a schema-identical empty mirror of the sf0.001 tables
+(the ``empty_dir`` fixture), asserting "no exception" (row counts are
+free to be zero).
 """
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entry
-from healthcare_oltp_to_olap_gcp_spark.catalog import TABLES
-
-SF001 = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def empty_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("empty_sf")
-    for t in TABLES:
-        schema = pq.read_schema(f"{SF001}/{t}.parquet")
-        pq.write_table(schema.empty_table(), str(d / f"{t}.parquet"))
-    return str(d)
 
 
 def test_trained_recall_report_survives_empty_tables(spark, empty_dir):

@@ -12,6 +12,24 @@ from .helpers import assert_parity
 
 ALL = sorted(ORACLE_SQL)
 
+# Every query built on the shared KMV sketch (functions/sketch.py): the
+# KMV family, the hash samples and the theta set algebra.
+SKETCH_KEYS = [
+    "kmv_distinct_users",
+    "kmv_daily_merge_distinct_users",
+    "kmv_view_purchase_overlap",
+    "kmv_view_not_purchase",
+    "kmv_type_overlap_matrix",
+    "sampled_value_percentiles",
+    "sampled_daily_merge_percentiles",
+    "join_size_estimate",
+    "theta_segment_users",
+    "theta_union_segment_users",
+    "theta_intersect_segment_users",
+    "theta_anotb_segment_users",
+    "theta_daily_merge_events",
+]
+
 # r10 (VERDICT r9 item 3): the driver's verify window is shorter than
 # the full 226-query sweep, so the DEFAULT tier runs a representative
 # SMOKE subset (one or more per operator family, plus every query an
@@ -24,11 +42,12 @@ SMOKE_KEYS = [
     "q1_pricing_summary",
     "q21_waiting_suppliers",
     "fact_events_star",
-    # windows / sessions / asof / CDC / sketches
+    # windows / sessions / asof / CDC
     "sessionize",
     "asof_last_view_before_purchase",
     "scd2_user_band",
-    "theta_segment_users",
+    # sketches
+    *SKETCH_KEYS,
     # graph
     "part_triangles",
     "part_pagerank",
@@ -86,6 +105,13 @@ SMOKE_KEYS = [
 @pytest.mark.parametrize("name", SMOKE_KEYS)
 def test_parity_smoke(spark, name):
     assert_parity(spark, name, SF001)
+
+
+@pytest.mark.parametrize("name", SKETCH_KEYS)
+def test_sketch_parity_on_empty_tables(spark, empty_dir, name):
+    """On empty tables the set-operation forms give one row of NULL
+    estimates and the grouped forms no rows, as their oracles do."""
+    assert_parity(spark, name, empty_dir)
 
 
 @pytest.mark.fullsweep

@@ -362,10 +362,7 @@ _BNLJ_ALLOWED = {
     # reviewed: per-method one-row count × one-row total crosses — the
     # ann_recall_report dashboard shape on the dedup family
     "neardup_recall_report",
-    # theta set algebra: one-row theta-bound / fallback / n_days crosses
-    "theta_union_segment_users",
-    "theta_intersect_segment_users",
-    "theta_anotb_segment_users",
+    # theta daily merge: one-row n_days cross onto the one-row estimate
     "theta_daily_merge_events",
     # r6 reviewed: one-row token-total and weight-normalizer crosses
     # over the |sources|-row frame (mixture_sample_documents shape)
