@@ -1,12 +1,33 @@
-"""Embedding similarity search: brute-force cosine top-k (baseline),
-random-hyperplane LSH buckets (scale path), cosine near-dup pairs.
+"""Embedding similarity: exact and approximate top-k cosine search,
+their recall reports, IVF index maintenance, near-dup pairs, and
+embedding-space curation reports.
+
+Every top-k ANN key is one pipeline, ``_ann_topk``:
+
+1. a candidate *generator* per method yields (query_id, neighbor_id)
+   rows — brute force, LSH buckets, IVF cells (hash-seeded, trained,
+   KMeans, filtered), SQ8/PQ/IVF-PQ/binary codes, the truncated-prefix
+   scan of the two-stage funnel, or GEMM's partition-local top-k;
+2. one *depth cut* keeps, per (method, query), the top ``k + margin``
+   of the generators that rank by an approximate score;
+3. one *exact rerank* scores those candidates as round(dot(qv, cv), 6)
+   against the normalized corpus and queries (the generators that
+   score exactly inline skip it);
+4. one *result cut* keeps the top ``k`` per (method, query) under
+   (sim desc, neighbor_id).
+
+A public ``*_ann_topk`` is a one-method call; the recall reports call
+it once with every method tagged and share one recall tail
+(``_recall_tail``), so N methods cost one depth cut, one rerank and
+one result cut instead of N of each (the candidate reuse of
+"Incremental Based Framework for Efficient Top-K Similarity Search",
+EDBT 2020).
 
 Scale design (SURVEY §4): the brute-force path broadcasts the *query*
 set so the corpus side streams through without a shuffle — correct
-baseline at any corpus size, O(|Q|·n) compute. The LSH path buckets
-both sides on deterministic hyperplane sign bits so candidate
-generation is an equi-join on the bucket id; compute drops to
-O(n·k/2^bits) per query at some recall cost (measured in tests).
+baseline at any corpus size, O(|Q|·n) compute. The bucketed paths (LSH,
+IVF) join on a bucket or cell id; the quantized paths scan compact codes
+and read full vectors only for the cut candidates.
 
 Hyperplane weights are derived from md5 of (plane, dim) at plan-build
 time — deterministic across runs and engines, no RNG state.
@@ -15,6 +36,7 @@ time — deterministic across runs and engines, no RNG state.
 from __future__ import annotations
 
 import hashlib
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -33,8 +55,8 @@ N_PLANES = 4
 
 
 DIM = 64
-# The schema of every top-k neighbor list, empty results included.
-TOPK_SCHEMA = "query_id long, neighbor_id long, sim double, rank long"
+IVF_CELLS = 16  # hash-seeded IVF cells of the registered IVF queries
+IVF_PROBE = 4  # cells each query probes
 
 
 def _par(df: DataFrame) -> int:
@@ -76,26 +98,111 @@ def ann_order() -> tuple[F.Column, ...]:
     return (F.col("sim").desc(), F.col("neighbor_id"))
 
 
-def _ann_cut(scored: DataFrame, k: int) -> DataFrame:
-    """Per query, the top ``k`` rows of (query_id, neighbor_id, sim)
-    under ``ann_order``, as the ANN result frame."""
-    return top_k(scored, ["query_id"], ann_order(), k, rank="rank").select(
-        "query_id", "neighbor_id", "sim", "rank"
+def _exact_sim() -> F.Column:
+    """The exact score of a (query, candidate) row: the rounded fold
+    dot of the normalized ``qv`` and ``cv``, as the oracles compute it."""
+    return F.round(dot(F.col("qv"), F.col("cv")), 6).alias("sim")
+
+
+class Candidates(NamedTuple):
+    """One candidate generator's output, keyed by (query_id,
+    neighbor_id). ``kind`` says what ``_ann_topk`` does with it:
+
+    - ``RANKED``: ``frame`` carries an approximate score ``_key``
+      (higher is better); the top ``depth`` per query under (_key desc,
+      neighbor_id) go to the exact rerank;
+    - ``CUT``: ``frame`` holds already-cut candidates for the rerank;
+    - ``SCORED``: ``frame`` carries the exact ``sim`` already and goes
+      straight to the result cut.
+    """
+
+    kind: str
+    frame: DataFrame
+    depth: int = 0
+
+
+RANKED, CUT, SCORED = "ranked", "cut", "scored"
+
+
+def _no_candidates(embeddings: DataFrame) -> Candidates:
+    """The generator of an index that cannot be built (empty corpus)."""
+    return Candidates(
+        SCORED,
+        embeddings.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, sim double"
+        ),
     )
 
 
-def _rerank_exact(
-    corpus: DataFrame, qs: DataFrame, cand: DataFrame, k: int
-) -> DataFrame:
-    """Exact-cosine rerank of each query's (query_id, neighbor_id)
-    candidates against the normalized ``corpus``/``qs`` frames: the
-    tail of every k+margin approximate cut (SQ8, PQ, IVF-PQ, BQ)."""
-    return _ann_cut(
-        corpus.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qs.withColumnRenamed("qv", "qv2")), "query_id")
-        .withColumn("sim", F.round(dot(F.col("qv2"), F.col("cv")), 6)),
-        k,
-    )
+def _union(frames: list[DataFrame]) -> DataFrame:
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
+
+
+def _ann_topk(embeddings: DataFrame, k: int, gens: dict) -> DataFrame:
+    """The ANN pipeline: candidate generators keyed by their method tag
+    → one depth cut → one exact rerank → one result cut. Returns
+    (method, query_id, neighbor_id, sim, rank), the top ``k`` per
+    (method, query_id) under ``ann_order``.
+
+    The ``RANKED`` generators share ONE ``top_k`` over (method, query_id)
+    on their approximate score, each kept to its own depth. The common
+    key is a double, which keeps each method's own order: SQ8's integer
+    dot and −Hamming are small longs (exact); the truncated prefix dot
+    is a double already, so its NaN still sorts first under DESC; the
+    ADC sums are 8-dp decimals of magnitude < 2^20, whose double
+    conversion is monotone with a spacing (≤ 2^-32) far below the 1e-8
+    grid, so distinct sums stay distinct, and a NULL sum stays NULL
+    (last). The cut and the ``CUT`` candidates then take ONE exact
+    rerank against the normalized corpus and queries, and the reranked
+    rows and the ``SCORED`` generators ONE ``top_k`` cut.
+
+    The rerank broadcasts the queries; its corpus join is left to the
+    size-adaptive planner. Under the broadcast threshold the corpus is
+    the build side, so the cut keeps its (method, query_id)
+    partitioning into the result cut and no exchange runs between
+    them; a larger corpus shuffle-joins the candidates on
+    neighbor_id."""
+
+    def tagged(tag, df: DataFrame, *cols) -> DataFrame:
+        return df.select(F.lit(tag).alias("method"), "query_id", "neighbor_id", *cols)
+
+    key = F.col("_key").cast("double").alias("_key")
+    ranked = [
+        tagged(t, c.frame, key, F.lit(c.depth).alias("_depth"))
+        for t, c in gens.items()
+        if c.kind == RANKED
+    ]
+    to_rerank = [tagged(t, c.frame) for t, c in gens.items() if c.kind == CUT]
+    scored = [tagged(t, c.frame, "sim") for t, c in gens.items() if c.kind == SCORED]
+    if ranked:
+        depth = max(c.depth for c in gens.values() if c.kind == RANKED)
+        cut = top_k(
+            _union(ranked),
+            ["method", "query_id"],
+            (F.col("_key").desc(), F.col("neighbor_id")),
+            depth,
+            rank="_r",
+        ).filter(F.col("_r") <= F.col("_depth"))
+        to_rerank.append(cut.select("method", "query_id", "neighbor_id"))
+    if to_rerank:
+        scored.append(
+            _corpus(embeddings)
+            .join(_union(to_rerank), "neighbor_id")
+            .join(F.broadcast(_queries(embeddings)), "query_id")
+            .select("method", "query_id", "neighbor_id", _exact_sim())
+        )
+    return top_k(
+        _union(scored), ["method", "query_id"], ann_order(), k, rank="rank"
+    ).select("method", "query_id", "neighbor_id", "sim", "rank")
+
+
+def _ann_key(embeddings: DataFrame, k: int, gen: Candidates) -> DataFrame:
+    """A public ANN key: the one-generator ``_ann_topk`` result list
+    (query_id, neighbor_id, sim, rank)."""
+    return _ann_topk(embeddings, k, {"ann": gen}).drop("method")
 
 
 def _queries(embeddings: DataFrame) -> DataFrame:
@@ -123,20 +230,18 @@ def _base(embeddings: DataFrame) -> DataFrame:
     return embeddings.repartition(_par(embeddings)).select("vec_id", "embedding")
 
 
+def _seeded_draw(src: DataFrame, n: int) -> DataFrame:
+    """The ``n`` rows of a frame keyed by ``neighbor_id`` ranked first
+    by md5(neighbor_id): the deterministic draw every hash-seeded index,
+    codebook and fit sample uses."""
+    return src.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id").limit(n)
+
+
 def _seeded_cents(src: DataFrame, n: int) -> DataFrame:
-    """(cent_id, centroid): the ``n`` vectors of a normalized
-    (neighbor_id, cv) frame ranked first by md5(neighbor_id) — the
-    deterministic draw every hash-seeded index uses."""
-    return (
-        src.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(n)
-        .select(F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid"))
-    )
-
-
-def _query_cols(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
-    return _split(
-        embeddings.filter(F.col("vec_id") % QUERY_MOD == 0), "query_id", "q", dim
+    """(cent_id, centroid): the ``_seeded_draw`` of a normalized
+    (neighbor_id, cv) frame."""
+    return _seeded_draw(src, n).select(
+        F.col("neighbor_id").alias("cent_id"), F.col("cv").alias("centroid")
     )
 
 
@@ -208,16 +313,18 @@ def ann_brute_topk(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     """Exact top-k cosine neighbors for the deterministic query subset.
     Query side broadcast; corpus never shuffles until the (tiny) top-k
     window."""
-    return _brute_topk(_corpus(embeddings), _queries(embeddings), k)
+    return _ann_key(embeddings, k, _brute(_corpus(embeddings), _queries(embeddings)))
 
 
-def _brute_topk(corpus: DataFrame, qs: DataFrame, k: int) -> DataFrame:
+def _brute(corpus: DataFrame, qs: DataFrame) -> Candidates:
+    """Every (query, corpus vector) pair, scored exactly on the unrolled
+    columns."""
     corpus = _unroll(corpus, "neighbor_id", "cv", "c")
     qcols = _unroll(qs, "query_id", "qv", "q")
-    return _ann_cut(
+    return Candidates(
+        SCORED,
         corpus.join(F.broadcast(qcols), F.col("query_id") != F.col("neighbor_id"))
         .withColumn("sim", F.round(_dot_cols("q", "c"), 6)),
-        k,
     )
 
 
@@ -288,15 +395,11 @@ def ivf_ann_topk(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
-    corpus = embeddings.repartition(_par(embeddings)).select(
-        F.col("vec_id").alias("neighbor_id"),
-        normalized(as_double("embedding")).alias("cv"),
-    )
-    featurized = corpus.withColumn("fv", array_to_vector("cv"))
+    featurized = _corpus(embeddings).withColumn("fv", array_to_vector("cv"))
     if featurized.isEmpty():
         # KMeans.fit rejects an empty dataset, and an empty corpus has no
-        # neighbors anyway — short-circuit with the operator's schema.
-        return embeddings.sparkSession.createDataFrame([], TOPK_SCHEMA)
+        # neighbors anyway.
+        return _ann_key(embeddings, k, _no_candidates(embeddings))
     model = KMeans(
         k=n_centroids, seed=42, maxIter=5, featuresCol="fv", predictionCol="cell"
     ).fit(featurized)
@@ -342,11 +445,15 @@ def ivf_ann_topk(
         .select("query_id", "qv", F.explode(F.slice(ranked, 1, n_probe)).alias("_pc"))
         .select("query_id", "qv", F.col("_pc.cell").alias("cell"))
     )
-    return _ann_cut(
-        assigned.join(F.broadcast(probed), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")), 6)),
+    return _ann_key(
+        embeddings,
         k,
+        Candidates(
+            SCORED,
+            assigned.join(F.broadcast(probed), "cell")
+            .filter(F.col("query_id") != F.col("neighbor_id"))
+            .select("query_id", "neighbor_id", _exact_sim()),
+        ),
     )
 
 
@@ -430,34 +537,71 @@ def ivf_flat_ann_topk(
     recall, fully deterministic. A multi-pass caller (ivf_probe_sweep's
     four widths, the recall reports) persists the corpus assignment
     once (``_persist_recall_inputs``) and every width reuses it (r7)."""
+    return _ann_key(embeddings, k, _seeded_ivf_flat(embeddings, n_centroids, n_probe))
+
+
+def _seeded_ivf_flat(
+    embeddings: DataFrame, n_centroids: int, n_probe: int, qs: DataFrame | None = None
+) -> Candidates:
+    """IVF-Flat candidates over the hash-seeded centroids, for the
+    query slice or the given ``qs``."""
     corpus = _corpus(embeddings)
     cent = _seeded_cents(corpus, n_centroids)
-    return _ivf_flat_body(corpus, _queries(embeddings), cent, k, n_probe)
+    return _ivf_flat(corpus, _queries(embeddings) if qs is None else qs, cent, n_probe)
 
 
-def _ivf_assign(corpus: DataFrame, cent: DataFrame) -> DataFrame:
+def _assign_cells(corpus: DataFrame, cent: DataFrame) -> DataFrame:
     """Per-row argmax cell assignment over the one-row broadcast
-    centroid struct array — (neighbor_id, cv, cell), no n·C frame."""
+    centroid struct array — (neighbor_id, cv, cell, cent_sim), no n·C
+    frame. ``cent_sim`` is the winning rounded cosine."""
     return (
         corpus.join(F.broadcast(_cents_row(cent)))
         .withColumn("_best", F.element_at(_rank_cells("cv"), 1))
-        .select("neighbor_id", "cv", F.col("_best.cent_id").alias("cell"))
+        .select(
+            "neighbor_id",
+            "cv",
+            F.col("_best.cent_id").alias("cell"),
+            F.col("_best.cdot").alias("cent_sim"),
+        )
     )
 
 
-def _ivf_flat_body(
+def _ivf_assign(corpus: DataFrame, cent: DataFrame) -> DataFrame:
+    """(neighbor_id, cv, cell): ``_assign_cells`` without the score."""
+    return _assign_cells(corpus, cent).drop("cent_sim")
+
+
+def _probe_cells(qs: DataFrame, cent: DataFrame, n_probe: int) -> DataFrame:
+    """(query_id, qv, cell, qdot): each query's ``n_probe`` best cells
+    of the one-row broadcast centroid array and their rounded cosines."""
+    return (
+        qs.join(F.broadcast(_cents_row(cent)))
+        .select(
+            "query_id",
+            "qv",
+            F.explode(F.slice(_rank_cells("qv"), 1, n_probe)).alias("_pc"),
+        )
+        .select(
+            "query_id",
+            "qv",
+            F.col("_pc.cent_id").alias("cell"),
+            F.col("_pc.cdot").alias("qdot"),
+        )
+    )
+
+
+def _ivf_flat(
     corpus: DataFrame,
     qs: DataFrame,
     cent: DataFrame,
-    k: int,
     n_probe: int,
     assigned: DataFrame | None = None,
-) -> DataFrame:
+) -> Candidates:
     """Shared IVF-Flat machinery given a (cent_id, centroid) table:
     argmax-rounded-cosine cell assignment, n_probe best-cell probing,
-    exact rerank. Centroid-source-agnostic — serves the hash-seeded
-    (oracle-checked) and the sampled-KMeans-trained variants with the
-    identical plan shape.
+    exact scores of the probed cells' vectors. Centroid-source-agnostic
+    — serves the hash-seeded (oracle-checked) and the sampled-KMeans-
+    trained variants with the identical plan shape.
 
     Assignment is PER-ROW: the C centroids collapse to a one-row
     broadcast struct array and each vector picks its cell (and each
@@ -465,23 +609,13 @@ def _ivf_flat_body(
     (``_rank_cells``) — no n·C frame is ever materialized or shuffled
     (r6 verdict item 1). Ordering/rounding/tie-breaks are identical to
     the old window form, so the value-hash oracles carry unchanged."""
-    cents = _cents_row(cent)
     if assigned is None:
         assigned = _ivf_assign(corpus, cent)
-    probed = (
-        qs.join(F.broadcast(cents))
-        .select(
-            "query_id",
-            "qv",
-            F.explode(F.slice(_rank_cells("qv"), 1, n_probe)).alias("_pc"),
-        )
-        .select("query_id", "qv", F.col("_pc.cent_id").alias("cell"))
-    )
-    return _ann_cut(
-        assigned.join(F.broadcast(probed), "cell")
+    return Candidates(
+        SCORED,
+        assigned.join(F.broadcast(_probe_cells(qs, cent, n_probe)), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")), 6)),
-        k,
+        .select("query_id", "neighbor_id", _exact_sim()),
     )
 
 
@@ -503,14 +637,12 @@ def ivf_flat_workload_topk(
     deployment claim (per-query work ≈ n_probe/C of the corpus, C ∝
     √n) directly instead of through the |Q|-grows-with-corpus
     amplification artifact every slice-workload ANN probe carries.
-    Same ``_ivf_flat_body`` plan as the oracle-checked seeded twin;
+    Same ``_ivf_flat`` plan as the oracle-checked seeded twin;
     workload selection is one TakeOrdered over the (tiny) query-slice
     frame. Separately value-hash-oracled (the cut changes the result
     set, not the arithmetic)."""
-    corpus = _corpus(embeddings)
-    cent = _seeded_cents(corpus, n_centroids)
     qs = _queries(embeddings).orderBy("query_id").limit(n_queries)
-    return _ivf_flat_body(corpus, qs, cent, k, n_probe)
+    return _ann_key(embeddings, k, _seeded_ivf_flat(embeddings, n_centroids, n_probe, qs))
 
 
 IVF_FIT_SAMPLE = 4096
@@ -632,17 +764,24 @@ def ivf_flat_trained_ann_topk(
     a probe of the same width covers more of each query's true
     neighborhood — recall(trained) >= recall(seeded) is asserted by
     test, not assumed. Plan shape is IDENTICAL to the seeded twin
-    (same ``_ivf_flat_body``): one broadcast one-row centroid struct
+    (same ``_ivf_flat``): one broadcast one-row centroid struct
     array, per-row argmax assignment (no n·C frame), probe join, exact
     rerank — the C ∝ √n deploy rule applies unchanged, and the fit
     stays driver-bounded (≤ fit_sample rows) however large the corpus.
 
     Rows-only correctness: the Lloyd fit isn't SQL-portable; the
     seeded twin remains the value-hash-oracled control."""
+    gen = _trained_ivf_flat(embeddings, n_centroids, n_probe, fit_sample)
+    return _ann_key(embeddings, k, gen)
+
+
+def _trained_ivf_flat(
+    embeddings: DataFrame, n_centroids: int, n_probe: int, fit_sample: int
+) -> Candidates:
     cent, _, _ = _trained_centroids(embeddings, n_centroids, fit_sample)
     if cent is None:
-        return embeddings.sparkSession.createDataFrame([], TOPK_SCHEMA)
-    return _ivf_flat_body(_corpus(embeddings), _queries(embeddings), cent, k, n_probe)
+        return _no_candidates(embeddings)
+    return _ivf_flat(_corpus(embeddings), _queries(embeddings), cent, n_probe)
 
 
 ANN_INCR_MOD = 3  # vec_id % ANN_INCR_MOD == 0 → incoming batch
@@ -655,17 +794,7 @@ def _ivf_index(est: DataFrame, n_centroids: int):
     seed rule) and the established vectors' cell assignments. Returns
     (cent, assigned) where assigned = (vec_id, cv, cell, cent_sim)."""
     cent = _seeded_cents(est, n_centroids)
-    assigned = (
-        est.join(F.broadcast(_cents_row(cent)))
-        .withColumn("_best", F.element_at(_rank_cells("cv"), 1))
-        .select(
-            F.col("neighbor_id").alias("vec_id"),
-            "cv",
-            F.col("_best.cent_id").alias("cell"),
-            F.col("_best.cdot").alias("cent_sim"),
-        )
-    )
-    return cent, assigned
+    return cent, _assign_cells(est, cent).withColumnRenamed("neighbor_id", "vec_id")
 
 
 def ann_index_incremental(
@@ -702,16 +831,8 @@ def ann_index_incremental(
     corpus = _corpus(embeddings)
     is_new = F.col("neighbor_id") % ANN_INCR_MOD == 0
     cent, stored = _ivf_index(corpus.filter(~is_new), n_centroids)
-    inserted = (
-        corpus.filter(is_new)
-        .join(F.broadcast(_cents_row(cent)))
-        .withColumn("_best", F.element_at(_rank_cells("cv"), 1))
-        .select(
-            F.col("neighbor_id").alias("vec_id"),
-            "cv",
-            F.col("_best.cent_id").alias("cell"),
-            F.col("_best.cdot").alias("cent_sim"),
-        )
+    inserted = _assign_cells(corpus.filter(is_new), cent).withColumnRenamed(
+        "neighbor_id", "vec_id"
     )
     nn = (
         inserted.join(
@@ -751,6 +872,10 @@ def ann_lsh_topk(
     rerank within the candidate set. Probing multiplies query-side rows
     by (1 + n_planes) — cheap, since queries are the broadcast side —
     while recall jumps vs single-bucket LSH."""
+    return _ann_key(embeddings, k, _lsh(embeddings, dim))
+
+
+def _lsh(embeddings: DataFrame, dim: int = DIM) -> Candidates:
     planes = _hyperplanes(dim)
     corpus = _corpus(embeddings).withColumn("bucket", _bucket(F.col("cv"), planes))
     base = _queries(embeddings).withColumn("bucket", _bucket(F.col("qv"), planes))
@@ -758,11 +883,11 @@ def ann_lsh_topk(
         F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(len(planes))]
     )
     qs = base.select("query_id", "qv", F.explode(probes).alias("bucket"))
-    return _ann_cut(
+    return Candidates(
+        SCORED,
         corpus.join(F.broadcast(qs), "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")), 6)),
-        k,
+        .select("query_id", "neighbor_id", _exact_sim()),
     )
 
 
@@ -924,14 +1049,7 @@ def semdedup_embeddings(
     # Per-row argmax over the one-row broadcast centroid array — no
     # n·C frame, no assignment window (r6 verdict item 1).
     assigned = query_scope().persist(
-        corpus.join(F.broadcast(_cents_row(cent)))
-        .withColumn("_best", F.element_at(_rank_cells("cv"), 1))
-        .select(
-            F.col("neighbor_id").alias("vec_id"),
-            "cv",
-            F.col("_best.cent_id").alias("cell"),
-            F.col("_best.cdot").alias("cent_sim"),
-        )
+        _assign_cells(corpus, cent).withColumnRenamed("neighbor_id", "vec_id")
     )
     a = _unroll(assigned, "vec_id", "cv", "a").join(
         assigned.select("vec_id", "cell", "cent_sim"), "vec_id"
@@ -991,6 +1109,22 @@ def label_centroids(embeddings: DataFrame) -> DataFrame:
     )
 
 
+def _label_prototypes(embeddings: DataFrame) -> DataFrame:
+    """(label, cnv): each label's ``label_centroids`` prototype as one
+    normalized vector."""
+    return (
+        label_centroids(embeddings)
+        .groupBy("label")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "centroid"))),
+                lambda s: s["centroid"],
+            ).alias("cv")
+        )
+        .select("label", normalized(F.col("cv")).alias("cnv"))
+    )
+
+
 def nearest_centroid_assign(embeddings: DataFrame) -> DataFrame:
     """Nearest-centroid classification: every vector gets the label of
     the closest class prototype from ``label_centroids`` (cosine of the
@@ -1003,17 +1137,8 @@ def nearest_centroid_assign(embeddings: DataFrame) -> DataFrame:
     linear classifier a 100 TB pipeline uses when L labels ≪ corpus).
     Everything is rounded-deterministic, so the composed operator keeps
     a full value-hash oracle."""
-    cent_long = label_centroids(embeddings)
-    cents_row = (
-        cent_long.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "centroid"))),
-                lambda s: s["centroid"],
-            ).alias("cv")
-        )
-        .select("label", normalized(F.col("cv")).alias("cnv"))
-        .agg(F.collect_list(F.struct("label", "cnv")).alias("_cents"))
+    cents_row = _label_prototypes(embeddings).agg(
+        F.collect_list(F.struct("label", "cnv")).alias("_cents")
     )
     corpus = embeddings.select(
         "vec_id", normalized(as_double("embedding")).alias("nv")
@@ -1067,25 +1192,24 @@ def ann_gemm_topk(
     the union of per-partition exact top-k, and the margin absorbs any
     ulp-level rank perturbation), and the returned sims are recomputed
     JVM-side with the identical fold-order expression the brute twin
-    uses. Candidate set is tiny (|Q|·(k+margin)·partitions ids), so the
-    rerank joins broadcast it against the corpus — the big table still
-    streams exactly once through the GEMM."""
+    uses. The candidate set is tiny (|Q|·(k+margin)·partitions ids) and
+    goes to the ANN pipeline's exact rerank as already-cut candidates;
+    the corpus streams once through the GEMM."""
     import math
 
     import numpy as np
     import pandas as pd
 
     spark = embeddings.sparkSession
-    q_df = embeddings.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        "vec_id", as_double("embedding").alias("e")
-    )
+    q_df = _queries(embeddings)
     n_q = q_df.count()
     if n_q == 0:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return _ann_key(embeddings, k, _no_candidates(embeddings))
     n_blocks = max(1, math.ceil(n_q / query_block))
-    corpus = embeddings.repartition(_par(embeddings)).select(
-        "vec_id", as_double("embedding").alias("e")
-    )
+    # The normalized corpus the rerank reads too. Its join drops NULL
+    # ids, so dropping them here as well lets both reads share one
+    # repartition.
+    corpus = _corpus(embeddings).filter(F.col("neighbor_id").isNotNull())
 
     # Local candidate margin: the union of per-partition exact top-k
     # already contains the global top-k; +8 covers any last-ulp rank
@@ -1093,9 +1217,8 @@ def ann_gemm_topk(
     local_k = k + 8
 
     def _block_partials(q_pdf: "pd.DataFrame") -> DataFrame:
-        qids = q_pdf["vec_id"].to_numpy()
-        Q = np.stack(q_pdf["e"].to_numpy())
-        Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+        qids = q_pdf["query_id"].to_numpy()
+        Q = np.stack(q_pdf["qv"].to_numpy())
         bc = spark.sparkContext.broadcast((qids, Q))
 
         def _part(pdf_iter):
@@ -1103,9 +1226,8 @@ def ann_gemm_topk(
             for pdf in pdf_iter:
                 if not len(pdf):
                     continue
-                C = np.stack(pdf["e"].to_numpy())
-                C = C / np.linalg.norm(C, axis=1, keepdims=True)
-                cids = pdf["vec_id"].to_numpy()
+                C = np.stack(pdf["cv"].to_numpy())
+                cids = pdf["neighbor_id"].to_numpy()
                 S = np.round(C @ Q.T, 6)  # (n_corpus, n_queries)
                 for j in range(len(qids)):
                     sims = S[:, j]
@@ -1120,31 +1242,18 @@ def ann_gemm_topk(
 
         return corpus.mapInPandas(_part, "query_id long, neighbor_id long")
 
-    # vec_id/QUERY_MOD is exact for the query subset, so this blocks the
-    # queries evenly regardless of shared factors between QUERY_MOD and
-    # n_blocks.
+    # query_id/QUERY_MOD is exact for the query subset, so this blocks
+    # the queries evenly regardless of shared factors between QUERY_MOD
+    # and n_blocks.
     blk_col = F.pmod(
-        (F.col("vec_id") / F.lit(QUERY_MOD)).cast("long"), F.lit(n_blocks)
+        (F.col("query_id") / F.lit(QUERY_MOD)).cast("long"), F.lit(n_blocks)
     )
-    partials = None
-    for blk in range(n_blocks):
-        q_pdf = q_df.filter(blk_col == blk).toPandas()
-        if not len(q_pdf):
-            continue
-        frame = _block_partials(q_pdf)
-        partials = frame if partials is None else partials.unionByName(frame)
+    blocks = (q_df.filter(blk_col == blk).toPandas() for blk in range(n_blocks))
+    partials = _union([_block_partials(b) for b in blocks if len(b)])
 
-    # Exact fold-order rerank of the candidate ids — bit-identical to
-    # ann_brute_topk, so both share one oracle. Candidates broadcast
-    # into the corpus scan; queries broadcast as in the brute twin.
-    cand = F.broadcast(partials)
-    corpus_cols = _split(embeddings, "neighbor_id", "c")
-    return _ann_cut(
-        corpus_cols.join(cand, "neighbor_id")
-        .join(F.broadcast(_query_cols(embeddings)), "query_id")
-        .withColumn("sim", F.round(_dot_cols("q", "c"), 6)),
-        k,
-    )
+    # The pipeline's exact fold-order rerank of the candidate ids is
+    # bit-identical to ann_brute_topk, so both share one oracle.
+    return _ann_key(embeddings, k, Candidates(CUT, partials))
 
 
 SQ_LEVELS = 127
@@ -1181,6 +1290,10 @@ def sq8_ann_topk(
     against broadcast query codes, per-query TakeOrdered-style window
     cut, then an equi-join back to the corpus vectors for the exact
     rerank."""
+    return _ann_key(embeddings, k, _sq8(embeddings, k + margin))
+
+
+def _sq8(embeddings: DataFrame, depth: int) -> Candidates:
     corpus = _corpus(embeddings)
     brow = corpus.agg(
         F.max(F.array_max(F.transform(F.col("cv"), lambda x: F.abs(x)))).alias("_s")
@@ -1207,15 +1320,13 @@ def sq8_ann_topk(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    cand = top_k(
+    return Candidates(
+        RANKED,
         ccodes.join(F.broadcast(qcodes))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("idot", idot),
-        ["query_id"],
-        (F.col("idot").desc(), F.col("neighbor_id")),
-        k + margin,
-    ).select("query_id", "neighbor_id")
-    return _rerank_exact(corpus, _queries(embeddings), cand, k)
+        .select("query_id", "neighbor_id", idot.alias("_key")),
+        depth,
+    )
 
 
 PQ_M = 8  # subspaces (64-dim vectors → 8 dims each)
@@ -1253,20 +1364,26 @@ def pq_ann_topk(
     vectors are touched just for the (k+margin)·|Q| candidates. The
     per-term LUT dots are rounded then summed as exact DECIMAL, so the
     ADC ranking is order-independent and engine-portable."""
+    return _ann_key(embeddings, k, _seeded_pq(embeddings, m, n_codes, k + margin))
+
+
+def _seeded_codebook(src: DataFrame, vec_col: str, m: int, n_codes: int) -> DataFrame:
+    """(j, cid, csub): the per-subspace slices of ``vec_col`` in the
+    ``n_codes`` rows of ``src`` that ``_seeded_draw`` picks."""
     sub = DIM // m
-    corpus = _corpus(embeddings)
-    seeds = (
-        corpus.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(n_codes)
-        .select(F.col("neighbor_id").alias("cid"), F.col("cv").alias("centroid"))
-    )
     js = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j")
-    cw = seeds.select("cid", "centroid", js).select(
-        "j",
-        F.col("cid").cast("long").alias("cid"),
-        F.slice("centroid", F.col("j") * sub + 1, sub).alias("csub"),
+    seeds = _seeded_draw(src, n_codes).select(
+        F.col("neighbor_id").cast("long").alias("cid"), F.col(vec_col).alias("_v")
     )
-    return _pq_adc_topk(corpus, _queries(embeddings), cw, k, m, margin)
+    return seeds.select("cid", "_v", js).select(
+        "j", "cid", F.slice("_v", F.col("j") * sub + 1, sub).alias("csub")
+    )
+
+
+def _seeded_pq(embeddings: DataFrame, m: int, n_codes: int, depth: int) -> Candidates:
+    corpus = _corpus(embeddings)
+    cw = _seeded_codebook(corpus, "cv", m, n_codes)
+    return _pq_adc(corpus, _queries(embeddings), cw, m, depth)
 
 
 def _cw_row(cw: DataFrame) -> DataFrame:
@@ -1353,18 +1470,17 @@ def _pq_adc_sum(m: int) -> F.Column:
     )
 
 
-def _pq_adc_topk(
+def _pq_adc(
     corpus: DataFrame,
     qs: DataFrame,
     cw: DataFrame,
-    k: int,
     m: int,
-    margin: int,
-) -> DataFrame:
+    depth: int,
+) -> Candidates:
     """Shared PQ machinery: given a codebook frame ``cw`` = (j, cid,
-    csub), encode the corpus (per-subspace argmin-L2 assignment), score
-    by ADC from a broadcast LUT, and exact-rerank the k+margin
-    candidates. Codebook-agnostic — serves both the hash-seeded
+    csub), encode the corpus (per-subspace argmin-L2 assignment) and
+    rank every (query, vector) pair by ADC from a broadcast LUT, to
+    ``depth`` per query. Codebook-agnostic — serves both the hash-seeded
     (oracle-checked) and KMeans-trained variants.
 
     r10 (the r6 ``_rank_cells`` pattern applied to PQ, guide §2.4):
@@ -1386,15 +1502,13 @@ def _pq_adc_topk(
     qlut = qs.crossJoin(F.broadcast(cwrow)).select(
         "query_id", _pq_lut("qv", m, sub).alias("_lut")
     )
-    adc = (
+    return Candidates(
+        RANKED,
         codes.join(F.broadcast(qlut))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _pq_adc_sum(m).alias("_adc"))
+        .select("query_id", "neighbor_id", _pq_adc_sum(m).alias("_key")),
+        depth,
     )
-    cand = top_k(
-        adc, ["query_id"], (F.col("_adc").desc(), F.col("neighbor_id")), k + margin
-    ).select("query_id", "neighbor_id")
-    return _rerank_exact(corpus, qs, cand, k)
 
 
 IVFPQ_CELLS = 16
@@ -1435,45 +1549,38 @@ def ivfpq_ann_topk(
     cells/codebooks, which slot in exactly like pq_trained's. The
     coarse table is ``ivf_flat_ann_topk``'s md5-ranked draw, so a
     multi-method caller's persisted corpus assignment serves both (r7)."""
+    return _ann_key(
+        embeddings, k, _seeded_ivfpq(embeddings, n_cells, n_probe, m, n_codes, k + margin)
+    )
+
+
+def _seeded_ivfpq(
+    embeddings: DataFrame, n_cells: int, n_probe: int, m: int, n_codes: int, depth: int
+) -> Candidates:
     corpus = _corpus(embeddings)
     cent = _seeded_cents(corpus, n_cells)
 
+    # global residual codewords: per-subspace slices of the n_codes
+    # md5-ranked assigned rows (the Spark-side deterministic draw)
     def cw_fn(assigned):
-        # global residual codewords: per-subspace slices of the n_codes
-        # md5-ranked assigned rows (the Spark-side deterministic draw)
-        sub = DIM // m
-        js = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j")
-        seeds = (
-            assigned.orderBy(
-                F.md5(F.col("neighbor_id").cast("string")), "neighbor_id"
-            )
-            .limit(n_codes)
-            .select(
-                F.col("neighbor_id").cast("long").alias("cid"),
-                F.col("rv").alias("crv"),
-            )
-        )
-        return seeds.select("cid", "crv", js).select(
-            "j", "cid", F.slice("crv", F.col("j") * sub + 1, sub).alias("csub")
-        )
+        return _seeded_codebook(assigned, "rv", m, n_codes)
 
-    return _ivfpq_body(corpus, _queries(embeddings), cent, cw_fn, k, m, n_probe, margin)
+    return _ivfpq(corpus, _queries(embeddings), cent, cw_fn, m, n_probe, depth)
 
 
-def _ivfpq_body(
+def _ivfpq(
     corpus: DataFrame,
     qs: DataFrame,
     cent: DataFrame,
     cw_fn,
-    k: int,
     m: int,
     n_probe: int,
-    margin: int,
-) -> DataFrame:
+    depth: int,
+) -> Candidates:
     """Shared IVF-PQ machinery given a (cent_id, centroid) coarse table
     and a ``cw_fn(assigned) -> (j, cid, csub)`` residual-codebook
     source: cell assignment + residuals, residual encoding, probed-cell
-    ADC with the q·c(cell) term added back, exact rerank. Source-
+    ADC with the q·c(cell) term added back, ranked to ``depth``. Source-
     agnostic — serves the hash-seeded (oracle-checked) and the
     sampled-KMeans-trained variants with the identical plan shape."""
     sub = DIM // m
@@ -1491,7 +1598,7 @@ def _ivfpq_body(
         F.zip_with("cv", "centroid", lambda a, b: a - b).alias("rv"),
     )
     # r10 (the r6 ``_rank_cells`` pattern applied to PQ, guide §2.4 —
-    # see _pq_adc_topk): residual encoding and ADC run per row against
+    # see _pq_adc): residual encoding and ADC run per row against
     # the one-row broadcast codebook; the m-way posexplode + argmin
     # groupBy and the LUT join + sum groupBy collapse into in-row
     # expressions with identical rounded arithmetic and tie-breaks.
@@ -1500,36 +1607,20 @@ def _ivfpq_body(
     codes = assigned.crossJoin(F.broadcast(cwrow)).select(
         "neighbor_id", "cell", _pq_code("rv", m, sub).alias("_code")
     )
-    probed = (
-        qs.join(F.broadcast(_cents_row(cent)))
-        .select(
-            "query_id",
-            "qv",
-            F.explode(F.slice(_rank_cells("qv"), 1, n_probe)).alias("_pc"),
-        )
-        .select(
-            "query_id",
-            "qv",
-            F.col("_pc.cent_id").alias("cell"),
-            F.col("_pc.cdot").alias("qdot"),
-        )
-    )
-    qlut = probed.crossJoin(F.broadcast(cwrow)).select(
+    qlut = _probe_cells(qs, cent, n_probe).crossJoin(F.broadcast(cwrow)).select(
         "query_id", "cell", "qdot", _pq_lut("qv", m, sub).alias("_lut")
     )
-    adc = (
+    return Candidates(
+        RANKED,
         codes.join(F.broadcast(qlut), "cell")  # IVF bound: probed cells only
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            (F.col("qdot").cast("decimal(18,8)") + _pq_adc_sum(m)).alias("_adc"),
-        )
+            (F.col("qdot").cast("decimal(18,8)") + _pq_adc_sum(m)).alias("_key"),
+        ),
+        depth,
     )
-    cand = top_k(
-        adc, ["query_id"], (F.col("_adc").desc(), F.col("neighbor_id")), k + margin
-    ).select("query_id", "neighbor_id")
-    return _rerank_exact(corpus, qs, cand, k)
 
 
 @scoped
@@ -1553,22 +1644,38 @@ def ivfpq_trained_ann_topk(
     trained cells than around hash-seeded ones, so the same codebook
     budget quantizes them better — recall(trained) >= recall(seeded)
     is asserted by test. Plan shape identical to the seeded twin
-    (``_ivfpq_body``); rows-only correctness, seeded twin remains the
+    (``_ivfpq``); rows-only correctness, seeded twin remains the
     value-hash-oracled control."""
+    return _ann_key(
+        embeddings,
+        k,
+        _trained_ivfpq(embeddings, n_cells, n_probe, m, n_codes, k + margin, fit_sample),
+    )
+
+
+def _trained_ivfpq(
+    embeddings: DataFrame,
+    n_cells: int,
+    n_probe: int,
+    m: int,
+    n_codes: int,
+    depth: int,
+    fit_sample: int,
+) -> Candidates:
     import numpy as np
 
     spark = embeddings.sparkSession
     cent, x, _ = _trained_centroids(embeddings, n_cells, fit_sample)
     if cent is None:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return _no_candidates(embeddings)
     centers = np.array(
         [r.centroid for r in cent.orderBy("cent_id").collect()], dtype=np.float64
     )
     # final-round assignment against the final centers, then residuals
     assign = (x @ centers.T).argmax(1)
     cw = _pq_codebooks(spark, x - centers[assign], m, n_codes)
-    return _ivfpq_body(
-        _corpus(embeddings), _queries(embeddings), cent, lambda assigned: cw, k, m, n_probe, margin
+    return _ivfpq(
+        _corpus(embeddings), _queries(embeddings), cent, lambda assigned: cw, m, n_probe, depth
     )
 
 
@@ -1609,8 +1716,10 @@ def bq_ann_topk(
     (ham, neighbor_id) order), so the value-hash oracle is unchanged.
     Re-scanning codes beats persisting the |Q|·|corpus| joined frame:
     XOR+popcount on two longs is ALU-bound, the sort was the cost."""
-    corpus = _corpus(embeddings)
+    return _ann_key(embeddings, k, _bq(embeddings, k + margin))
 
+
+def _bq(embeddings: DataFrame, depth: int) -> Candidates:
     def _pack(raw: F.Column, lo: int, hi: int) -> F.Column:
         acc = None
         for i in range(lo, hi):
@@ -1642,7 +1751,7 @@ def bq_ann_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("ham", ham)
     )
-    # pass 1: 65-bucket histogram → smallest radius covering k+margin rows
+    # pass 1: 65-bucket histogram → smallest radius covering depth rows
     w_cum = (
         Window.partitionBy("query_id")
         .orderBy("ham")
@@ -1652,20 +1761,19 @@ def bq_ann_topk(
         scan.groupBy("query_id", "ham")
         .agg(F.count("*").alias("n"))
         .withColumn("cum", F.sum("n").over(w_cum))
-        .filter(F.col("cum") - F.col("n") < k + margin)
+        .filter(F.col("cum") - F.col("n") < depth)
         .groupBy("query_id")
         .agg(F.max("ham").alias("rad"))
     )
-    # pass 2: radius prefilter bounds the window input to ~k+margin rows
-    cand = top_k(
-        scan.join(F.broadcast(radius), "query_id").filter(
-            F.col("ham") <= F.col("rad")
-        ),
-        ["query_id"],
-        (F.col("ham").asc(), F.col("neighbor_id")),
-        k + margin,
-    ).select("query_id", "neighbor_id")
-    return _rerank_exact(corpus, _queries(embeddings), cand, k)
+    # pass 2: radius prefilter bounds the depth cut's input to ~depth
+    # rows; (ham asc, neighbor_id) is (−ham desc, neighbor_id)
+    return Candidates(
+        RANKED,
+        scan.join(F.broadcast(radius), "query_id")
+        .filter(F.col("ham") <= F.col("rad"))
+        .select("query_id", "neighbor_id", (-F.col("ham")).alias("_key")),
+        depth,
+    )
 
 
 PQ_FIT_SAMPLE = 4096
@@ -1694,7 +1802,7 @@ def pq_trained_ann_topk(
     16 tiny clusterings as vectorized argmin/means, no per-fit Spark
     jobs (the pyspark.ml route spent ~7s/query on job scheduling for
     4096-row fits). Encoding/ADC/rerank are byte-identical to the
-    seeded twin via ``_pq_adc_topk``; the corpus-sized work never
+    seeded twin via ``_pq_adc``; the corpus-sized work never
     touches the driver.
 
     Deterministic: init = first ``n_codes`` sample sub-vectors in the
@@ -1708,11 +1816,18 @@ def pq_trained_ann_topk(
     # r10: the sample draw is IDENTICAL to _trained_centroids' (same
     # md5 rule, same fit_sample) — route through the scope-memoized
     # matrix so a multi-method caller collects it once (guide §5 reuse)
+    gen = _trained_pq(embeddings, m, n_codes, k + margin, fit_sample)
+    return _ann_key(embeddings, k, gen)
+
+
+def _trained_pq(
+    embeddings: DataFrame, m: int, n_codes: int, depth: int, fit_sample: int
+) -> Candidates:
     x = _fit_sample_matrix(embeddings, fit_sample)
     if x is None:
-        return embeddings.sparkSession.createDataFrame([], TOPK_SCHEMA)
+        return _no_candidates(embeddings)
     cw = _pq_codebooks(embeddings.sparkSession, x, m, n_codes)
-    return _pq_adc_topk(_corpus(embeddings), _queries(embeddings), cw, k, m, margin)
+    return _pq_adc(_corpus(embeddings), _queries(embeddings), cw, m, depth)
 
 
 def hard_negative_mining(
@@ -1772,16 +1887,17 @@ def ann_recall_report(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     counts + one rounded division keep it value-hash oracle-checked
     end to end."""
     brute = _persist_recall_inputs(embeddings, k)
-    total = brute.agg(F.count("*").alias("n_total"))
-    methods = (
-        ("ivf_flat", ivf_flat_ann_topk),
-        ("lsh", ann_lsh_topk),
-        ("sq8", sq8_ann_topk),
-        ("pq", pq_ann_topk),
-        ("ivfpq", ivfpq_ann_topk),
-        ("bq", bq_ann_topk),
-    )
-    return _recall_rows(brute, total, embeddings, k, methods)
+    gens = {
+        "ivf_flat": _seeded_ivf_flat(embeddings, IVF_CELLS, IVF_PROBE),
+        "lsh": _lsh(embeddings),
+        "sq8": _sq8(embeddings, k + SQ_MARGIN),
+        "pq": _seeded_pq(embeddings, PQ_M, PQ_CODES, k + PQ_MARGIN),
+        "ivfpq": _seeded_ivfpq(
+            embeddings, IVFPQ_CELLS, IVFPQ_PROBE, PQ_M, PQ_CODES, k + PQ_MARGIN
+        ),
+        "bq": _bq(embeddings, k + BQ_MARGIN),
+    }
+    return _recall_tail(embeddings, k, gens, brute, "method")
 
 
 def _persist_recall_inputs(embeddings: DataFrame, k: int) -> DataFrame:
@@ -1800,55 +1916,45 @@ def _persist_recall_inputs(embeddings: DataFrame, k: int) -> DataFrame:
     brute = scope.persist(
         ann_brute_topk(embeddings, k).select("query_id", "neighbor_id")
     )
-    scope.persist(_ivf_assign(corpus, _seeded_cents(corpus, 16)))
+    scope.persist(_ivf_assign(corpus, _seeded_cents(corpus, IVF_CELLS)))
     return brute
 
 
-def _recall_rows(brute, total, embeddings, k, methods) -> DataFrame:
-    """r10 (VERDICT r9 item 1, guide §2.3/§5): the N method top-k
-    frames union under a ``method`` tag into ONE hit-join against the
-    persisted brute truth and ONE per-method aggregation, instead of N
-    sequential join+agg+crossJoin pipelines — the plan drops ~5 joins
-    and ~10 aggregation exchanges, and every branch feeds a single
-    shared aggregation tree. A method-literal frame left-joins the
-    counts back so a zero-hit method keeps its row (a bare groupBy
-    would drop it); per-row arithmetic is unchanged, so the value-hash
-    oracle carries (row ORDER changes — the gate sorts rows)."""
-    tagged = None
-    for name, fn in methods:
-        t = fn(embeddings, k).select(
-            F.lit(name).alias("method"), "query_id", "neighbor_id"
-        )
-        tagged = t if tagged is None else tagged.unionByName(t)
+def _recall_tail(
+    embeddings: DataFrame, k: int, gens: dict, brute: DataFrame, name: str
+) -> DataFrame:
+    """The recall rows of the multi-method ``_ann_topk`` call over
+    ``gens``: per method tag (output column ``name``), the hits against
+    the persisted brute truth, the truth size and recall = n_hit /
+    n_total (6 dp). One hit-join and one per-method aggregation serve
+    every method; a tag-literal frame left-joins the counts back, so a
+    zero-hit method keeps its row with n_hit 0 and recall 0.0, as the
+    oracles' COUNT gives."""
     hits = (
-        tagged.join(brute, ["query_id", "neighbor_id"])
+        _ann_topk(embeddings, k, gens)
+        .join(brute, ["query_id", "neighbor_id"])
         .groupBy("method")
         .agg(F.count("*").alias("n_hit"))
     )
-    mframe = brute.sparkSession.range(1).select(
-        F.explode(F.array(*[F.lit(n) for n, _ in methods])).alias("method")
+    total = brute.agg(F.count("*").alias("n_total"))
+    tframe = brute.sparkSession.range(1).select(
+        F.explode(F.array(*[F.lit(t) for t in gens])).alias("method")
     )
-    return _with_recall(
-        mframe.join(hits, "method", "left")
+    return (
+        tframe.join(hits, "method", "left")
         .crossJoin(F.broadcast(total))
         .select(
-            "method",
+            F.col("method").alias(name),
             F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
             F.col("n_total").cast("long").alias("n_total"),
         )
-    )
-
-
-def _with_recall(counts: DataFrame) -> DataFrame:
-    """Append recall = n_hit / n_total (6 dp) over the COALESCED hit
-    count, so a zero-hit row gets 0.0 like the oracle's COUNT, not
-    NULL."""
-    return counts.withColumn(
-        "recall",
-        F.when(
-            F.col("n_total") > 0,
-            F.round(F.col("n_hit") / F.col("n_total").cast("double"), 6),
-        ),
+        .withColumn(
+            "recall",
+            F.when(
+                F.col("n_total") > 0,
+                F.round(F.col("n_hit") / F.col("n_total").cast("double"), 6),
+            ),
+        )
     )
 
 
@@ -1863,16 +1969,20 @@ def ann_recall_report_trained(embeddings: DataFrame, k: int = DEFAULT_K) -> Data
     pair so the 'training raises recall' claim is measured, not
     assumed."""
     brute = _persist_recall_inputs(embeddings, k)
-    total = brute.agg(F.count("*").alias("n_total"))
-    methods = (
-        ("pq", pq_ann_topk),
-        ("pq_trained", pq_trained_ann_topk),
-        ("ivf_flat", ivf_flat_ann_topk),
-        ("ivf_flat_trained", ivf_flat_trained_ann_topk),
-        ("ivfpq", ivfpq_ann_topk),
-        ("ivfpq_trained", ivfpq_trained_ann_topk),
-    )
-    return _recall_rows(brute, total, embeddings, k, methods)
+    depth = k + PQ_MARGIN
+    gens = {
+        "pq": _seeded_pq(embeddings, PQ_M, PQ_CODES, depth),
+        "pq_trained": _trained_pq(embeddings, PQ_M, PQ_CODES, depth, PQ_FIT_SAMPLE),
+        "ivf_flat": _seeded_ivf_flat(embeddings, IVF_CELLS, IVF_PROBE),
+        "ivf_flat_trained": _trained_ivf_flat(
+            embeddings, IVF_CELLS, IVF_PROBE, IVF_FIT_SAMPLE
+        ),
+        "ivfpq": _seeded_ivfpq(embeddings, IVFPQ_CELLS, IVFPQ_PROBE, PQ_M, PQ_CODES, depth),
+        "ivfpq_trained": _trained_ivfpq(
+            embeddings, IVFPQ_CELLS, IVFPQ_PROBE, PQ_M, PQ_CODES, depth, IVF_FIT_SAMPLE
+        ),
+    }
+    return _recall_tail(embeddings, k, gens, brute, "method")
 
 
 def centroid_auc_report(embeddings: DataFrame) -> DataFrame:
@@ -1893,20 +2003,7 @@ def centroid_auc_report(embeddings: DataFrame) -> DataFrame:
     sim) map-side combines the n·L scored rows to a bounded bin table,
     the window runs over bins only, and all arithmetic before the one
     final rounded divide is integer-exact. Fully value-hash-oracled."""
-    cent_long = label_centroids(embeddings)
-    cents = (
-        cent_long.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "centroid"))),
-                lambda s: s["centroid"],
-            ).alias("cv")
-        )
-        .select(
-            F.col("label").alias("cent_label"),
-            normalized(F.col("cv")).alias("cnv"),
-        )
-    )
+    cents = _label_prototypes(embeddings).withColumnRenamed("label", "cent_label")
     corpus = embeddings.select(
         F.col("label").cast("long").alias("vec_label"),
         normalized(as_double("embedding")).alias("nv"),
@@ -1971,36 +2068,9 @@ def ivf_probe_sweep(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     output is |Q|·k rows collapsed to one count — the report row set
     is 4 rows whatever the corpus."""
     brute = _persist_recall_inputs(embeddings, k)
-    total = brute.agg(F.count("*").alias("n_total"))
-    # r10 (VERDICT r9 item 1's pattern, guide §2.3/§5): one hit-join +
-    # one per-width aggregation over the tagged union of the four
-    # probe frames, instead of four sequential join+agg+crossJoin
-    # pipelines; a width-literal frame keeps zero-hit rows. Identical
-    # arithmetic, row order left to the gate's sort.
-    tagged = None
-    for p in IVF_SWEEP_PROBES:
-        t = ivf_flat_ann_topk(embeddings, k, n_probe=p).select(
-            F.lit(p).cast("long").alias("n_probe"), "query_id", "neighbor_id"
-        )
-        tagged = t if tagged is None else tagged.unionByName(t)
-    hits = (
-        tagged.join(brute, ["query_id", "neighbor_id"])
-        .groupBy("n_probe")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    pframe = brute.sparkSession.range(1).select(
-        F.explode(
-            F.array(*[F.lit(p).cast("long") for p in IVF_SWEEP_PROBES])
-        ).alias("n_probe")
-    )
-    return _with_recall(
-        pframe.join(hits, "n_probe", "left")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "n_probe",
-            F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
-            F.col("n_total").cast("long").alias("n_total"),
-        )
+    gens = {p: _seeded_ivf_flat(embeddings, IVF_CELLS, p) for p in IVF_SWEEP_PROBES}
+    return _recall_tail(embeddings, k, gens, brute, "n_probe").withColumn(
+        "n_probe", F.col("n_probe").cast("long")
     )
 
 
@@ -2130,17 +2200,7 @@ def prototypicality_prune(embeddings: DataFrame) -> DataFrame:
     ``label_centroids``; cosine is the normalize-once sequential fold
     rounded 6 dp; ranks tie-break on vec_id; keep is an integer
     cross-multiply — full value-hash oracle."""
-    cent = (
-        label_centroids(embeddings)
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "centroid"))),
-                lambda s: s["centroid"],
-            ).alias("cv")
-        )
-        .select("label", normalized(F.col("cv")).alias("cnv"))
-    )
+    cent = _label_prototypes(embeddings)
     corpus = embeddings.select(
         "vec_id",
         F.col("label").cast("long").alias("label"),
@@ -2212,12 +2272,7 @@ def kcenter_diversity_sample(
     import numpy as np
 
     corpus = _corpus(embeddings)
-    sample_rows = (
-        corpus.orderBy(F.md5(F.col("neighbor_id").cast("string")), "neighbor_id")
-        .limit(fit_sample)
-        .select("neighbor_id", "cv")
-        .collect()
-    )
+    sample_rows = _seeded_draw(corpus, fit_sample).select("neighbor_id", "cv").collect()
     if not sample_rows:
         return embeddings.sparkSession.createDataFrame(
             [],
@@ -2314,17 +2369,7 @@ def prototypicality_prune_bucketed(embeddings: DataFrame) -> DataFrame:
     row_number(label ORDER BY sim DESC, vec_id) ≡ (# rows with higher
     sim) + (position among equal-sim rows by vec_id) — exact identity,
     asserted row-for-row against the window form in tests."""
-    cent = (
-        label_centroids(embeddings)
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "centroid"))),
-                lambda s: s["centroid"],
-            ).alias("cv")
-        )
-        .select("label", normalized(F.col("cv")).alias("cnv"))
-    )
+    cent = _label_prototypes(embeddings)
     corpus = embeddings.select(
         "vec_id",
         F.col("label").cast("long").alias("label"),
@@ -2630,34 +2675,39 @@ def ann_index_balance_report(
     current corpus and verify balance + recall recover."""
     corpus = _corpus(embeddings)
     cent = _seeded_cents(corpus, n_centroids)
-    return _balance_row(_ivf_assign(corpus, cent), cent)
+    # an empty corpus has no cells to report on: no row, as the
+    # oracle's GROUP BY gives
+    return _balance_row(_ivf_assign(corpus, cent), cent).filter(
+        F.col("n_nonempty_cells") > 0
+    )
 
 
 def _balance_row(assigned: DataFrame, cent: DataFrame) -> DataFrame:
     """One balance row from a cell assignment: integer cell-size
     extremes, top-cell share, and the FAISS imbalance factor
-    C·Σs²/n² over the ACTUAL centroid count C of ``cent``."""
+    C·Σs²/n² over the ACTUAL centroid count C of ``cent``. The sizes
+    aggregate to one row before the count C joins them, so an empty
+    assignment still reports its C (0 on an empty corpus)."""
     sizes = assigned.groupBy("cell").agg(F.count("*").cast("long").alias("sz"))
-    ccnt = cent.agg(F.count("*").cast("long").alias("_c"))
-    n = F.sum("sz").cast("long")
-    sum_sq = F.sum(F.col("sz") * F.col("sz")).cast("long")
-    # double arithmetic for the ratios: n² overflows BIGINT at real
-    # corpus sizes (the counts themselves stay exact integers)
-    imb = F.round(
-        F.first("_c").cast("double")
-        * sum_sq.cast("double")
-        / (n.cast("double") * n.cast("double")),
-        6,
-    )
-    return sizes.crossJoin(F.broadcast(ccnt)).agg(
-        n.alias("n_vectors"),
-        F.first("_c").alias("n_cells"),
+    ccnt = cent.agg(F.count("*").cast("long").alias("n_cells"))
+    agg = sizes.agg(
+        F.sum("sz").cast("long").alias("n_vectors"),
+        F.sum(F.col("sz") * F.col("sz")).cast("long").alias("_sum_sq"),
         F.count("*").cast("long").alias("n_nonempty_cells"),
         F.min("sz").alias("min_cell"),
         F.max("sz").alias("max_cell"),
-        F.round(F.max("sz").cast("double") / n.cast("double"), 6).alias(
-            "top_cell_share"
-        ),
+    )
+    n = F.col("n_vectors").cast("double")
+    # double arithmetic for the ratios: n² overflows BIGINT at real
+    # corpus sizes (the counts themselves stay exact integers)
+    imb = F.round(F.col("n_cells").cast("double") * F.col("_sum_sq").cast("double") / (n * n), 6)
+    return agg.crossJoin(F.broadcast(ccnt)).select(
+        "n_vectors",
+        "n_cells",
+        "n_nonempty_cells",
+        "min_cell",
+        "max_cell",
+        F.round(F.col("max_cell").cast("double") / n, 6).alias("top_cell_share"),
         imb.alias("imbalance_factor"),
         (imb > F.lit(IVF_IMBALANCE_RETRAIN)).alias("needs_retrain"),
     )
@@ -2705,57 +2755,28 @@ def ann_index_retrain(
     frame; all comparisons run on |Q|·k rows. Corpus and query frames
     are persisted once and shared across the brute pass and both
     probes (the recall-report convention)."""
-    scope = query_scope()
-    corpus = scope.persist(_corpus(embeddings))
-    qs = scope.persist(_queries(embeddings))
-    brute = scope.persist(
-        ann_brute_topk(embeddings, k).select("query_id", "neighbor_id")
-    )
-    total = brute.agg(F.count("*").cast("long").alias("n_total"))
+    brute = _persist_recall_inputs(embeddings, k)
+    corpus, qs = _corpus(embeddings), _queries(embeddings)
     est = corpus.filter(F.col("neighbor_id") % ANN_INCR_MOD != 0)
-    # r10 (the wave-1 report-fusion pattern, guide §2.3/§5): the two
-    # states' probed top-k lists union under the state tag into ONE
-    # hit-join + ONE per-state aggregation (a state-literal frame
-    # keeps zero-hit rows), instead of two sequential join+agg+cross
-    # pipelines; the per-state balance rows stay separate (different
-    # assignment frames by construction). Identical arithmetic.
-    states = (("stale", est), ("retrained", corpus))
-    tagged = None
-    balance = {}
-    for state, src in states:
+    gens, balance = {}, []
+    for state, src in (("stale", est), ("retrained", corpus)):
         cent = _seeded_cents(src, n_centroids)
-        assigned = scope.persist(_ivf_assign(corpus, cent))
-        balance[state] = _balance_row(assigned, cent).withColumn(
-            "index_state", F.lit(state)
-        )
-        t = _ivf_flat_body(corpus, qs, cent, k, n_probe, assigned=assigned).select(
-            F.lit(state).alias("index_state"), "query_id", "neighbor_id"
-        )
-        tagged = t if tagged is None else tagged.unionByName(t)
-    hits = (
-        tagged.join(brute, ["query_id", "neighbor_id"])
-        .groupBy("index_state")
-        .agg(F.count("*").cast("long").alias("n_hit"))
-    )
-    sframe = corpus.sparkSession.range(1).select(
-        F.explode(F.array(*[F.lit(s) for s, _ in states])).alias("index_state")
-    )
-    rows = balance["stale"].unionByName(balance["retrained"])
-    return _with_recall(
-        rows.join(sframe.join(hits, "index_state", "left"), "index_state")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "index_state",
-            "n_vectors",
-            "n_cells",
-            "n_nonempty_cells",
-            "min_cell",
-            "max_cell",
-            "top_cell_share",
-            "imbalance_factor",
-            F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
-            "n_total",
-        )
+        assigned = query_scope().persist(_ivf_assign(corpus, cent))
+        balance.append(_balance_row(assigned, cent).withColumn("index_state", F.lit(state)))
+        gens[state] = _ivf_flat(corpus, qs, cent, n_probe, assigned)
+    recall = _recall_tail(embeddings, k, gens, brute, "index_state")
+    return _union(balance).join(recall, "index_state").select(
+        "index_state",
+        "n_vectors",
+        "n_cells",
+        "n_nonempty_cells",
+        "min_cell",
+        "max_cell",
+        "top_cell_share",
+        "imbalance_factor",
+        "n_hit",
+        "n_total",
+        "recall",
     )
 
 
@@ -2787,8 +2808,10 @@ def ann_filtered_topk(embeddings: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     filter (half the corpus never leaves the source); query side
     broadcast, corpus never shuffles until the tiny top-k window.
     Same O(|Q|·n_kept) bound as ann_topk on the kept fraction."""
-    return _brute_topk(
-        _corpus(embeddings.filter(F.expr(ANN_FILTER_PRED))), _queries(embeddings), k
+    return _ann_key(
+        embeddings,
+        k,
+        _brute(_corpus(embeddings.filter(F.expr(ANN_FILTER_PRED))), _queries(embeddings)),
     )
 
 
@@ -2823,8 +2846,8 @@ def ann_filtered_ivf_topk(
     assigned = _ivf_assign(corpus, cent).join(
         _filter_ids(embeddings), "neighbor_id", "left_semi"
     )
-    return _ivf_flat_body(
-        corpus, _queries(embeddings), cent, k, n_probe, assigned=assigned
+    return _ann_key(
+        embeddings, k, _ivf_flat(corpus, _queries(embeddings), cent, n_probe, assigned)
     )
 
 
@@ -2862,22 +2885,17 @@ def ann_twostage_truncated_topk(
     ties on neighbor_id — full value-hash oracle, no recall claim
     needed (the operator IS its two-stage definition; recall vs brute
     is measured in tests)."""
-    qs = _queries(embeddings)
-    corpus = _corpus(embeddings)
-    qt = _unroll(qs, "query_id", "qv", "q", trunc_dim)
-    ct = _unroll(corpus, "neighbor_id", "cv", "c", trunc_dim)
-    cand = top_k(
-        ct.join(F.broadcast(qt), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("tdot", F.round(_dot_cols("q", "c", trunc_dim), 6)),
-        ["query_id"],
-        (F.col("tdot").desc(), F.col("neighbor_id")),
-        m,
-    ).select("query_id", "neighbor_id")
-    qf = _unroll(qs, "query_id", "qv", "q")
-    cf = _unroll(corpus, "neighbor_id", "cv", "c")
-    return _ann_cut(
-        cand.join(cf, "neighbor_id")
-        .join(F.broadcast(qf), "query_id")
-        .withColumn("sim", F.round(_dot_cols("q", "c"), 6)),
+    qt = _unroll(_queries(embeddings), "query_id", "qv", "q", trunc_dim)
+    ct = _unroll(_corpus(embeddings), "neighbor_id", "cv", "c", trunc_dim)
+    tdot = F.round(_dot_cols("q", "c", trunc_dim), 6)
+    return _ann_key(
+        embeddings,
         k,
+        Candidates(
+            RANKED,
+            ct.join(F.broadcast(qt), F.col("query_id") != F.col("neighbor_id")).select(
+                "query_id", "neighbor_id", tdot.alias("_key")
+            ),
+            m,
+        ),
     )

@@ -398,6 +398,43 @@ def test_recall_report_has_all_methods_with_bounded_recall(spark):
     # k+margin rerank must still keep them useful (mirrors
     # test_operators.test_bq_recall_and_exact_rerank's >= 0.3 at SF01)
     assert rows["bq"].recall >= 0.3
+    # the fused report counts exactly the hits of each method's own
+    # public key against the brute top-k
+    keys = {
+        "ivf_flat": similarity.ivf_flat_ann_topk,
+        "lsh": similarity.ann_lsh_topk,
+        "sq8": similarity.sq8_ann_topk,
+        "pq": similarity.pq_ann_topk,
+        "ivfpq": similarity.ivfpq_ann_topk,
+        "bq": similarity.bq_ann_topk,
+    }
+    brute = {(r.query_id, r.neighbor_id) for r in similarity.ann_brute_topk(emb).collect()}
+    assert rows["bq"].n_total == len(brute)
+    for method, key in keys.items():
+        own = {(r.query_id, r.neighbor_id) for r in key(emb).collect()}
+        assert rows[method].n_hit == len(own & brute), method
+
+
+def test_recall_report_plans_one_result_window(spark):
+    """The six methods share one result cut and the four code-ranked
+    ones one depth cut: the report plans one ANN-order window
+    partitioned by (method, query_id), not one per method, and the only
+    other ANN-order window is the brute truth's."""
+    import re
+
+    df = similarity.ann_recall_report(table(spark, SF001, "embeddings"))
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    windows = [
+        re.sub(r"#\d+L?", "#", line)
+        for line in plan.splitlines()
+        if line.startswith("Arguments: [row_number() windowspecdefinition(")
+    ]
+    by = [w.split("], [")[1] for w in windows]
+    ann_order = "[sim# DESC NULLS LAST, neighbor_id# ASC NULLS FIRST]"
+    ann = [b for w, b in zip(windows, by) if w.endswith(ann_order)]
+    assert sorted(ann) == ["method#, query_id#", "query_id#"], windows
+    depth = [b for w, b in zip(windows, by) if "[_key# DESC NULLS LAST" in w]
+    assert depth == ["method#, query_id#"], windows
 
 
 def test_length_histogram_partitions_the_corpus(spark):

@@ -30,6 +30,31 @@ SKETCH_KEYS = [
     "theta_daily_merge_events",
 ]
 
+# Every oracled query built on the ANN pipeline (operators/similarity
+# ``_ann_topk``), the classifiers and miners composed over it, and the
+# IVF balance rows the retrain report shares.
+ANN_KEYS = [
+    "ann_topk",
+    "ann_lsh_topk",
+    "ann_gemm_topk",
+    "ivf_flat_ann_topk",
+    "ivf_flat_workload_topk",
+    "sq8_ann_topk",
+    "pq_ann_topk",
+    "ivfpq_ann_topk",
+    "bq_ann_topk",
+    "ann_filtered_topk",
+    "ann_filtered_ivf_topk",
+    "ann_twostage_truncated_topk",
+    "ann_recall_report",
+    "ivf_probe_sweep",
+    "ann_index_retrain",
+    "ann_index_balance_report",
+    "knn_label_vote",
+    "hard_negative_mining",
+    "knn_graph_edges",
+]
+
 # r10 (VERDICT r9 item 3): the driver's verify window is shorter than
 # the full 226-query sweep, so the DEFAULT tier runs a representative
 # SMOKE subset (one or more per operator family, plus every query an
@@ -111,6 +136,14 @@ def test_parity_smoke(spark, name):
 def test_sketch_parity_on_empty_tables(spark, empty_dir, name):
     """On empty tables the set-operation forms give one row of NULL
     estimates and the grouped forms no rows, as their oracles do."""
+    assert_parity(spark, name, empty_dir)
+
+
+@pytest.mark.parametrize("name", ANN_KEYS)
+def test_ann_parity_on_empty_tables(spark, empty_dir, name):
+    """On empty tables the top-k lists and the balance report have no
+    rows, and the recall and retrain reports one row per method or
+    index state with zero counts, as their oracles do."""
     assert_parity(spark, name, empty_dir)
 
 

@@ -321,6 +321,11 @@ _BNLJ_ALLOWED = {
     "events_hourly_gapfill",  # one-row hour-bounds cross onto the type list
     "kmv_type_overlap_matrix",  # T×T pair expansion over ≤T·k sketch rows
     "sq8_ann_topk",  # one-row quant-bounds cross + code scan vs broadcast queries
+    # reviewed: two one-row codebook-struct-array crosses (corpus
+    # encoding, query LUTs) + the ADC code scan of every corpus code
+    # against the broadcast query LUTs on NOT (query_id = neighbor_id)
+    # — sq8_ann_topk's code-scan shape with PQ codes
+    "pq_ann_topk",
     "docs_source_kl",  # one-row grand-total cross
     "docs_perplexity",  # one-row grand-total cross
     "mixture_sample_documents",  # one-row min-count cross onto the rate table

@@ -122,15 +122,15 @@ def test_bm25_rerank_with_or_without_memoized_vectors(spark):
 def test_zero_hit_method_has_recall_zero(spark):
     emb = table(spark, SF001, "embeddings")
 
-    def no_hits(embeddings, k):
-        return embeddings.sparkSession.createDataFrame([], "query_id long, neighbor_id long")
-
     @scoped
     def report():
-        brute = similarity._persist_recall_inputs(emb, similarity.DEFAULT_K)
-        total = brute.agg(F.count("*").alias("n_total"))
-        methods = (("ivf_flat", similarity.ivf_flat_ann_topk), ("none", no_hits))
-        return similarity._recall_rows(brute, total, emb, similarity.DEFAULT_K, methods)
+        k = similarity.DEFAULT_K
+        brute = similarity._persist_recall_inputs(emb, k)
+        gens = {
+            "ivf_flat": similarity._seeded_ivf_flat(emb, 16, 4),
+            "none": similarity._no_candidates(emb),
+        }
+        return similarity._recall_tail(emb, k, gens, brute, "method")
 
     rows = {r.method: r for r in report().collect()}
     assert rows["none"].n_total > 0

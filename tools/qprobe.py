@@ -1,13 +1,21 @@
 """Per-query optimization probe (round 9): time a named query with
 bench.py's measurement loop (warm-up, noop sink, min of ``bench.RUNS``
-runs, cleaner-settle between runs) and/or dump its
-``explain('formatted')`` to a file.
+runs, cleaner-settle between runs), dump its ``explain('formatted')``
+to a file, or count the Spark stages it runs.
 
 Usage:
   python tools/qprobe.py time  q1 q2 ...      # print per-query seconds
   python tools/qprobe.py plan  OUTDIR SUFFIX q1 q2 ...
                                               # write OUTDIR/<q>_SUFFIX.txt
   python tools/qprobe.py both  OUTDIR SUFFIX q1 q2 ...
+  python tools/qprobe.py stages q1 q2 ...     # stages, task CPU, shuffle
+
+``stages`` writes Spark's event log (uncompressed, non-rolling) to a
+temporary directory, runs each query twice through the noop sink with
+its jobs tagged by ``setJobGroup``, and prints, for the second run,
+the completed stages, task CPU seconds, shuffle bytes written and wall
+seconds (plan build included). The log is parsed with perfbench's
+``spans.parse_event_log``.
 
 Env: SPARK_GRAFT_SF_DIR (default: the sf0.1 data set, as in bench.py).
 """
@@ -15,13 +23,49 @@ Env: SPARK_GRAFT_SF_DIR (default: the sf0.1 data set, as in bench.py).
 from __future__ import annotations
 
 import os
+import shlex
+import shutil
 import sys
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(1, os.path.join(ROOT, "perfbench"))
 
 import bench  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.api import QUERIES  # noqa: E402
 from healthcare_oltp_to_olap_gcp_spark.session import get_spark  # noqa: E402
+
+STAGE_RUNS = 2
+
+
+def _event_log_dir() -> str:
+    """Switch Spark's event log on before the JVM starts; returns its
+    directory."""
+    logs = tempfile.mkdtemp(prefix="qprobe_eventlog_")
+    confs = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": f"file://{logs}",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+    }
+    args = [a for k, v in confs.items() for a in ("--conf", f"{k}={v}")]
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join([*args, "pyspark-shell"])
+    return logs
+
+
+def _print_stages(logs: str, walls: dict[str, float]) -> None:
+    import spans
+
+    stages = spans.parse_event_log(spans.find_event_log(logs))
+    print("query\tstages\ttask_cpu_s\tshuffle_write_bytes\twall_s")
+    for group, wall in walls.items():
+        mine = [s for s in stages if s.group == group]
+        name = group.rsplit("#", 1)[0]
+        cpu = sum(s.cpu_ns for s in mine) / 1e9
+        shuffled = sum(s.shuffle_write for s in mine)
+        print(f"{name}\t{len(mine)}\t{cpu:.2f}\t{shuffled}\t{wall:.2f}", flush=True)
 
 
 def main() -> None:
@@ -34,10 +78,12 @@ def main() -> None:
         outdir, suffix = "", ""
         names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    logs = _event_log_dir() if mode == "stages" else None
     spark = get_spark("qprobe")
     spark.sparkContext.setLogLevel("ERROR")
     bench.warm_up(spark, sf_dir)
 
+    walls: dict[str, float] = {}
     for name in names:
         if mode in ("plan", "both"):
             df = QUERIES[name](spark, sf_dir)
@@ -52,7 +98,20 @@ def main() -> None:
             best = bench.best_seconds(spark, lambda: QUERIES[name](spark, sf_dir))
             print(f"{name}\t{best:.3f}", flush=True)
             spark.sparkContext.setJobDescription(None)
+        if mode == "stages":
+            for run in range(1, STAGE_RUNS + 1):
+                group = f"{name}#{run}"
+                spark.sparkContext.setJobGroup(group, group)
+                wall = bench.noop_seconds(lambda: QUERIES[name](spark, sf_dir))
+                spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+                bench.settle(spark)
+            walls[group] = wall
     spark.stop()
+    if logs is not None:
+        try:
+            _print_stages(logs, walls)
+        finally:
+            shutil.rmtree(logs, ignore_errors=True)
 
 
 if __name__ == "__main__":
