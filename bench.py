@@ -133,6 +133,13 @@ def build_cost(build: Callable[[], DataFrame]) -> tuple[int, float]:
     return sent, seconds
 
 
+def janino_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far; a difference of
+    two readings counts a run's generated-code compiles."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")

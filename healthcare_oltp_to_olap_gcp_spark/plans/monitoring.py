@@ -9,11 +9,15 @@ results are deterministic on the frozen test data.
 Scale notes: the window bound is fixed per source frame. The first
 view built over a frame collects its ``max(ts)`` (one small aggregate
 job) and every later view over the same frame object reuses it, so the
-bound is a literal: the scan pushes ``ts >= bound - 7 days`` down
-(``PushedFilters``) and can skip row groups outside the window. A
-file-based frame already fixes its file listing when it is built, so a
-frame's bound and its files describe the same data; a refresh builds a
-new frame over the new data, which gets its own bound. The rollups are
+bound is a literal. It is applied in two parts (functions/timewindow):
+the scan pushes ``ts >=`` the midnight before ``max(ts) - 7 days`` down
+(``PushedFilters``) and can skip row groups outside the window, and
+the exact ``ts >= max(ts) - 7 days`` is a comparison whose bound is not
+written into generated code, so a refresh whose newest event falls on
+the same day as the last one compiles no new classes. A file-based
+frame already fixes its file listing when it is built, so a frame's
+bound and its files describe the same data; a refresh builds a new
+frame over the new data, which gets its own bound. The rollups are
 partial-agg groupBys on low-cardinality keys.
 """
 
@@ -25,6 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rank import top_k
+from ..functions.timewindow import DAY_MICROS, ts_window
+
+WINDOW_MICROS = 7 * DAY_MICROS
 
 
 # Epoch-micros max(ts) per source frame, ``None`` for an empty one. Weak
@@ -42,10 +49,11 @@ def _max_ts_micros(events: DataFrame) -> int | None:
 def executions(events: DataFrame) -> DataFrame:
     """Base view, ref monitoring/scheduler_executions_results_vw.sql:
     windowed slice + success flag."""
-    # a NULL bound (empty frame) keeps no row, like the NULL max(ts) did
-    bound = F.timestamp_micros(F.lit(_max_ts_micros(events)))
+    newest = _max_ts_micros(events)
+    # an empty frame has no max(ts) and keeps no row
+    keep = F.lit(False) if newest is None else ts_window(F.col("ts"), newest - WINDOW_MICROS)
     return (
-        events.filter(F.col("ts") >= bound - F.expr("INTERVAL 7 DAYS"))
+        events.filter(keep)
         .select(
             "ts",
             F.col("event_type").alias("job_name"),

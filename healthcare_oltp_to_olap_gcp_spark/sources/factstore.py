@@ -6,9 +6,13 @@ This environment ships no lakehouse jars, so transactional MERGE is
 emulated over plain parquet: each merge writes a complete new ``v=N``
 snapshot directory and readers take the max version (poor-man's
 snapshot isolation; old versions pruned past ``RETAIN_VERSIONS``).
-Correct on any Hadoop filesystem, but every merge rewrites the full
-store — fine for the test corpus, O(store) per batch at warehouse
-scale.
+Each snapshot carries the schema it was written with as
+``v=N/_schema.json`` (sources/known_schema), so reading the live
+snapshot, in ``read`` and at the start of every merge, runs no
+schema-inference job; a snapshot without the file (one copied in as
+``v=0``) is read with inference. Correct on any Hadoop filesystem, but
+every merge rewrites the full store — fine for the test corpus,
+O(store) per batch at warehouse scale.
 
 A lakehouse store (a Delta Lake or Iceberg table) plugs in through
 ``incremental_fact_sink(..., store=...)``: any object with the same
@@ -32,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..functions.rank import top_k
+from .known_schema import read_parquet, save_schema
 
 
 class VersionedParquetStore:
@@ -73,7 +78,7 @@ class VersionedParquetStore:
         _, versions = self._fs_and_versions(spark)
         if not versions:
             return None
-        return spark.read.parquet(f"{self.store_dir}/v={max(versions)}")
+        return read_parquet(spark, f"{self.store_dir}/v={max(versions)}")
 
     def merge(self, delta: DataFrame, key: str, order: tuple[Column, ...],
               batch_id: int) -> None:
@@ -83,5 +88,7 @@ class VersionedParquetStore:
         current = self.read(spark)
         merged = delta if current is None else current.unionByName(delta)
         out = top_k(merged, [key], order, 1)
-        out.write.mode("overwrite").parquet(f"{self.store_dir}/v={batch_id}")
+        snapshot = f"{self.store_dir}/v={batch_id}"
+        out.write.mode("overwrite").parquet(snapshot)
+        save_schema(out, snapshot)
         self._prune_versions(spark)

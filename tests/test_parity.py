@@ -55,6 +55,18 @@ ANN_KEYS = [
     "knn_graph_edges",
 ]
 
+# The refresh cycle's monitoring views and sanity checks
+# (plans/monitoring, plans/star).
+REFRESH_KEYS = [
+    "mon_executions",
+    "mon_last_status",
+    "mon_daily_summary",
+    "mon_7d_summary",
+    "mon_errors",
+    "sanity_row_counts",
+    "sanity_missing_dims",
+]
+
 # r10 (VERDICT r9 item 3): the driver's verify window is shorter than
 # the full 226-query sweep, so the DEFAULT tier runs a representative
 # SMOKE subset (one or more per operator family, plus every query an
@@ -67,6 +79,7 @@ SMOKE_KEYS = [
     "q1_pricing_summary",
     "q21_waiting_suppliers",
     "fact_events_star",
+    *REFRESH_KEYS,
     # windows / sessions / asof / CDC
     "sessionize",
     "asof_last_view_before_purchase",
@@ -136,6 +149,13 @@ def test_parity_smoke(spark, name):
 def test_sketch_parity_on_empty_tables(spark, empty_dir, name):
     """On empty tables the set-operation forms give one row of NULL
     estimates and the grouped forms no rows, as their oracles do."""
+    assert_parity(spark, name, empty_dir)
+
+
+@pytest.mark.parametrize("name", REFRESH_KEYS)
+def test_refresh_parity_on_empty_tables(spark, empty_dir, name):
+    """On empty tables the monitoring views have no rows and the sanity
+    checks one row of zero counts, as their oracles do."""
     assert_parity(spark, name, empty_dir)
 
 

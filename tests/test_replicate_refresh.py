@@ -6,14 +6,17 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
 from healthcare_oltp_to_olap_gcp_spark.catalog import table
+from healthcare_oltp_to_olap_gcp_spark.functions.timewindow import epoch_micros
 from healthcare_oltp_to_olap_gcp_spark.plans import star
 from healthcare_oltp_to_olap_gcp_spark.plans.refresh import refresh_model
 from healthcare_oltp_to_olap_gcp_spark.sources import replicate
 
 from .conftest import SF001
+from .helpers import jobs_run
 
 
 def test_overlapping_windows_dedup_to_exact_source(spark, tmp_path):
@@ -48,6 +51,53 @@ def test_replication_idempotent(spark, tmp_path):
     twice = star.fact_events(replicate.read_raw(spark, sink)).count()
     assert once > 0
     assert once == twice
+
+
+@pytest.mark.parametrize(
+    "end",
+    [datetime(2024, 1, 3), datetime(2024, 1, 3, 13, 37, 0, 5)],
+    ids=["window_across_midnight", "window_inside_a_day"],
+)
+def test_extract_window_is_half_open_at_both_edges(spark, end):
+    """[end - lookback, end): the first microsecond of the window is
+    copied, the one before it is not; the last one before ``end`` is
+    copied, ``end`` itself is not."""
+    stop = epoch_micros(end)
+    start = stop - 20 * 60_000_000
+    edges = [start - 1, start, stop - 1, stop]
+    rows = spark.createDataFrame(list(enumerate(edges)), "event_id long, us long").select(
+        "event_id", F.timestamp_micros("us").alias("ts")
+    )
+    got = replicate.extract_window(rows, end, lookback_minutes=20).collect()
+    assert sorted(r.event_id for r in got) == [1, 2]
+
+
+def test_extract_window_reads_a_naive_end_in_the_session_zone(spark):
+    """A naive ``window_end`` is the instant Spark's cast of that
+    wall-clock time names in the session time zone, as ``ts`` is."""
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        walls = ["13:16:59.999999", "13:17:00", "13:36:59.999999", "13:37:00"]
+        rows = spark.createDataFrame(
+            [(i, f"2024-01-03 {w}") for i, w in enumerate(walls)], "event_id long, t string"
+        ).select("event_id", F.col("t").cast("timestamp").alias("ts"))
+        end = datetime(2024, 1, 3, 13, 37)
+        got = replicate.extract_window(rows, end, lookback_minutes=20).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert sorted(r.event_id for r in got) == [1, 2]
+
+
+def test_read_raw_uses_the_saved_schema(spark, tmp_path):
+    """The landing zone is read with the schema its writer saved: no
+    schema-inference job, and the schema inference would give."""
+    sink = str(tmp_path / "raw_schema")
+    events = table(spark, SF001, "events")
+    replicate.replicate_window(events, sink, datetime(2024, 1, 3), lookback_minutes=2880)
+    assert jobs_run(spark, "read_raw_known_schema", lambda: replicate.read_raw(spark, sink)) == 0
+    inferred = spark.read.parquet(sink).drop("load_date")
+    assert replicate.read_raw(spark, sink).schema == inferred.schema
 
 
 def test_refresh_model_builds_consistent_star(spark, tmp_path):

@@ -223,6 +223,33 @@ def test_versioned_store_prunes_to_retained_versions(spark, tmp_path):
     assert got == [(1, 20, "b"), (2, 30, "c"), (3, 5, "c")]
 
 
+def test_store_read_uses_the_saved_schema(spark, tmp_path):
+    """A snapshot the store wrote is read with the schema saved in it:
+    no schema-inference job, and the schema inference would give,
+    nullability included. A snapshot copied in without that file is
+    read with inference."""
+    from pyspark.sql import functions as F
+
+    from .helpers import jobs_run
+
+    delta = table(spark, SF001, "events").withColumn("one", F.lit(1))
+    assert not delta.schema["one"].nullable
+    store = VersionedParquetStore(str(tmp_path / "store"))
+    store.merge(delta, "event_id", (F.col("ts").desc(),), 1)
+    assert jobs_run(spark, "store_read_known_schema", lambda: store.read(spark)) == 0
+    inferred = spark.read.parquet(str(tmp_path / "store" / "v=1"))
+    assert store.read(spark).schema == inferred.schema
+
+    copied = VersionedParquetStore(str(tmp_path / "copied"))
+    shutil.copytree(
+        tmp_path / "store" / "v=1",
+        tmp_path / "copied" / "v=0",
+        ignore=shutil.ignore_patterns("*_schema.json*"),
+    )
+    assert jobs_run(spark, "store_read_inferred", lambda: copied.read(spark)) >= 1
+    assert copied.read(spark).schema == inferred.schema
+
+
 def test_staged_drain_removes_staging_when_build_raises(spark):
     """The staged drain removes its staging tree even when the stream
     build fails after the source files were written."""

@@ -8,14 +8,16 @@ Usage:
   python tools/qprobe.py plan  OUTDIR SUFFIX q1 q2 ...
                                               # write OUTDIR/<q>_SUFFIX.txt
   python tools/qprobe.py both  OUTDIR SUFFIX q1 q2 ...
-  python tools/qprobe.py stages q1 q2 ...     # stages, task CPU, shuffle
+  python tools/qprobe.py stages q1 q2 ...     # stages, jobs, compiles, ...
 
 ``stages`` writes Spark's event log (uncompressed, non-rolling) to a
 temporary directory, runs each query twice through the noop sink with
 its jobs tagged by ``setJobGroup``, and prints, for the second run,
-the completed stages, task CPU seconds, shuffle bytes written and wall
+the completed stages, the Spark jobs, the classes Janino compiled
+(``CodegenMetrics``), task CPU seconds, shuffle bytes written and wall
 seconds (plan build included). The log is parsed with perfbench's
-``spans.parse_event_log``.
+``spans.parse_event_log``. Stages, jobs and compiles are counts a busy
+host does not move.
 
 Env: SPARK_GRAFT_SF_DIR (default: the sf0.1 data set, as in bench.py).
 """
@@ -55,17 +57,17 @@ def _event_log_dir() -> str:
     return logs
 
 
-def _print_stages(logs: str, walls: dict[str, float]) -> None:
+def _print_stages(logs: str, runs: dict[str, tuple[float, int, int]]) -> None:
     import spans
 
     stages = spans.parse_event_log(spans.find_event_log(logs))
-    print("query\tstages\ttask_cpu_s\tshuffle_write_bytes\twall_s")
-    for group, wall in walls.items():
+    print("query\tstages\tjobs\tcompiles\ttask_cpu_s\tshuffle_write_bytes\twall_s")
+    for group, (wall, jobs, compiles) in runs.items():
         mine = [s for s in stages if s.group == group]
         name = group.rsplit("#", 1)[0]
         cpu = sum(s.cpu_ns for s in mine) / 1e9
         shuffled = sum(s.shuffle_write for s in mine)
-        print(f"{name}\t{len(mine)}\t{cpu:.2f}\t{shuffled}\t{wall:.2f}", flush=True)
+        print(f"{name}\t{len(mine)}\t{jobs}\t{compiles}\t{cpu:.2f}\t{shuffled}\t{wall:.2f}", flush=True)
 
 
 def main() -> None:
@@ -83,7 +85,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     bench.warm_up(spark, sf_dir)
 
-    walls: dict[str, float] = {}
+    runs: dict[str, tuple[float, int, int]] = {}
     for name in names:
         if mode in ("plan", "both"):
             df = QUERIES[name](spark, sf_dir)
@@ -99,17 +101,21 @@ def main() -> None:
             print(f"{name}\t{best:.3f}", flush=True)
             spark.sparkContext.setJobDescription(None)
         if mode == "stages":
+            sc = spark.sparkContext
             for run in range(1, STAGE_RUNS + 1):
                 group = f"{name}#{run}"
-                spark.sparkContext.setJobGroup(group, group)
+                before = bench.janino_compiles(spark)
+                sc.setJobGroup(group, group)
                 wall = bench.noop_seconds(lambda: QUERIES[name](spark, sf_dir))
-                spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                compiles = bench.janino_compiles(spark) - before
                 bench.settle(spark)
-            walls[group] = wall
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            runs[group] = (wall, jobs, compiles)
     spark.stop()
     if logs is not None:
         try:
-            _print_stages(logs, walls)
+            _print_stages(logs, runs)
         finally:
             shutil.rmtree(logs, ignore_errors=True)
 
