@@ -36,8 +36,7 @@ def _star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sanity_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fact = _fact(spark, sf_dir)
-    return star.sanity_row_counts(fact, star.fact_events_star(fact))
+    return star.fact_star_row_counts(_fact(spark, sf_dir))
 
 
 def _asof_generic(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -201,6 +201,20 @@ def sanity_row_counts(fact: DataFrame, star: DataFrame) -> DataFrame:
     )
 
 
+def fact_star_row_counts(fact: DataFrame) -> DataFrame:
+    """``sanity_row_counts`` of ``fact`` against its own
+    ``fact_events_star``, in one aggregate over one read of the fact:
+    the star keeps exactly the fact rows whose natural keys are all
+    present (a filter and a 1:1 projection), so its row count is a
+    conditional count of the fact. A union of the two sides would read
+    and deduplicate the events once per side, because each side prunes
+    the scan to different columns."""
+    return fact.agg(
+        F.count("*").alias("fact_rows"),
+        F.count_if(_all_keys_present()).alias("star_rows"),
+    )
+
+
 def sanity_missing_dims(fact: DataFrame) -> DataFrame:
     """ref README 'No Missing Dimensions' — rows whose natural keys
     fail to resolve in any dimension (should be 0). A dimension holds

@@ -55,6 +55,27 @@ ANN_KEYS = [
     "knn_graph_edges",
 ]
 
+# Every lexical ranker and index report (operators/retrieval: one
+# postings index, one probe, one result cut).
+RETRIEVAL_KEYS = [
+    "bm25_topk",
+    "bm25_dfcap_topk",
+    "bm25_workload_topk",
+    "bm25_wand_topk",
+    "bm25_chunk_maxp_topk",
+    "bm25_rerank_topk",
+    "bm25_rerank_dfcap_topk",
+    "hybrid_rrf_topk",
+    "hybrid_rrf_ivf_topk",
+    "rm3_expansion_topk",
+    "rm3_dfcap_expansion_topk",
+    "lm_dirichlet_topk",
+    "tfidf_doc_similarity_topk",
+    "bm25_index_incremental",
+    "bm25_index_stats_report",
+    "retrieval_quality_report",
+]
+
 # The refresh cycle's monitoring views and sanity checks
 # (plans/monitoring, plans/star).
 REFRESH_KEYS = [
@@ -90,17 +111,7 @@ SMOKE_KEYS = [
     "part_triangles",
     "part_pagerank",
     # retrieval family
-    "bm25_topk",
-    "bm25_dfcap_topk",
-    "bm25_wand_topk",
-    "bm25_chunk_maxp_topk",
-    "bm25_rerank_topk",
-    "bm25_rerank_dfcap_topk",
-    "hybrid_rrf_topk",
-    "rm3_expansion_topk",
-    "rm3_dfcap_expansion_topk",
-    "lm_dirichlet_topk",
-    "retrieval_quality_report",
+    *RETRIEVAL_KEYS,
     # ANN / similarity family
     "ann_topk",
     "ann_lsh_topk",
@@ -164,6 +175,15 @@ def test_ann_parity_on_empty_tables(spark, empty_dir, name):
     """On empty tables the top-k lists and the balance report have no
     rows, and the recall and retrain reports one row per method or
     index state with zero counts, as their oracles do."""
+    assert_parity(spark, name, empty_dir)
+
+
+@pytest.mark.parametrize("name", RETRIEVAL_KEYS)
+def test_retrieval_parity_on_empty_tables(spark, empty_dir, name):
+    """On empty tables the ranked lists and the incremental vocabulary
+    have no rows, the index stats report one row of zero counts and
+    NULL ratios, and the quality report one row per method with zero
+    queries and NULL metrics, as their oracles do."""
     assert_parity(spark, name, empty_dir)
 
 

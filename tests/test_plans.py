@@ -43,6 +43,17 @@ def test_star_never_shuffles_the_fact(spark):
     assert "Join" not in plan
 
 
+def test_sanity_row_counts_dedups_the_events_once(spark):
+    # both counts are one aggregate over one deduplicated fact: one
+    # events scan, one dedup window, and past the dedup shuffle only
+    # the final count's exchange
+    fact = _plan(spark, "fact_events")
+    plan = _plan(spark, "sanity_row_counts")
+    assert _nodes(plan, "Scan parquet") == 1
+    assert _nodes(plan, "Window") == 1
+    assert _nodes(plan, "Exchange") == _nodes(fact, "Exchange") + 1
+
+
 def test_q5_broadcasts_dims(spark):
     plan = _plan(spark, "q5_revenue_by_nation")
     assert "BroadcastHashJoin" in plan
@@ -376,14 +387,14 @@ _BNLJ_ALLOWED = {
     "docs_ccnet_buckets",  # one-row percentile-boundary cross (the
     # orders_revenue_concentration shape)
     # reviewed: one-row (n_docs, total_tokens) corpus-stats cross onto
-    # the scored postings — same shape as tfidf_top_terms' count cross
+    # the probe's broadcast query side — tfidf_top_terms' count-cross
+    # shape on |query terms| rows
     "bm25_topk",
-    "bm25_dfcap_topk",  # adds one-row vocab-count + theta crosses
+    "bm25_dfcap_topk",  # + the one-row θ (median df) cross onto the vocabulary
 
     # reviewed: one-row centroid-struct-array cross for the per-row
     # cell/probe sorted-slice — the same shape as ivf_flat_ann_topk (r7)
     "knn_graph_edges",
-    "knn_graph_components",  # inherits knn_graph_edges' centroid cross
     # reviewed: |langs|-row × one-row water-filling crosses (totals,
     # saturation scalars) — same shape as mixture_sample_documents
     "unimax_sample_documents",
@@ -398,9 +409,9 @@ _BNLJ_ALLOWED = {
     # r6 reviewed: inherits bm25_topk's one-row corpus-stats cross;
     # the candidate and query-vector joins are proper broadcast-hash
     "bm25_rerank_topk",
-    "bm25_rerank_dfcap_topk",  # + the dfcap twin's theta/vocab crosses
-    # r7 reviewed: inherits its four constituents' one-row stats/theta
-    # crosses (bm25 family); every metric join runs on |Q|·k rows
+    "bm25_rerank_dfcap_topk",  # + the dfcap twin's θ cross
+    # r7 reviewed: inherits its constituents' one-row stats/θ crosses
+    # (bm25 family); every metric join runs on |Q|·k rows
     "retrieval_quality_report",
     # r7 reviewed: one-row centroid-struct-array cross for the per-row
     # argmax assignment — nearest_centroid_assign's shape
@@ -421,9 +432,9 @@ _BNLJ_ALLOWED = {
     # |Q|-row / (query, term) frames
     "bm25_wand_topk",
     # r8 reviewed: inherits rm3's one-row stats cross + the dfcap twin's
-    # theta/vocab-count crosses (bm25_dfcap_topk's shape)
+    # θ cross (bm25_dfcap_topk's shape)
     "rm3_dfcap_expansion_topk",
-    # r8 reviewed: inherits bm25_dfcap's stats/theta crosses + the
+    # r8 reviewed: inherits bm25_dfcap's stats/θ crosses + the
     # IVF-Flat one-row centroid-struct-array cross
     "hybrid_rrf_ivf_topk",
     # r8 reviewed: two one-row split-stats crosses onto the one-row
@@ -438,8 +449,8 @@ _BNLJ_ALLOWED = {
     # r9 reviewed: inherits bm25_topk's one-row corpus-stats cross; the
     # workload restriction is a broadcast semi-join on a 20-row frame
     "bm25_workload_topk",
-    # r9 reviewed: one-row chunk-corpus-stats cross onto the scored
-    # chunk postings — bm25_topk's stats-cross shape at chunk grain
+    # r9 reviewed: one-row chunk-corpus-stats cross onto the probe's
+    # query side — bm25_topk's stats-cross shape at chunk grain
     "bm25_chunk_maxp_topk",
     # r9 reviewed: per-state one-row centroid-struct-array crosses
     # (ivf_flat's shape), one-row drawn-centroid-count cross in the
@@ -449,17 +460,18 @@ _BNLJ_ALLOWED = {
     # r9 reviewed: inherits ivf_flat_ann_topk's one-row centroid-array
     # cross; the workload cut is a 20-row TakeOrdered query frame
     "ivf_flat_workload_topk",
-    # r9 reviewed: one-row vocab-count/theta/df-max/postings-rollup
-    # crosses onto the one-row corpus-stats frame — the dashboard
-    # shape (everything after the postings build is vocab-sized)
+    # r9 reviewed: the one-row θ cross onto the vocabulary (the capped
+    # postings sum) and the one-row vocabulary-shape and capped-sum
+    # crosses onto the one-row corpus-stats frame — the dashboard shape
+    # (everything after the postings build is vocab-sized)
     "bm25_index_stats_report",
     # r9 batch-2 reviewed: inherits bm25_topk's one-row corpus-stats
-    # cross (the cf-smoothing denominator needs total_tokens); the
-    # probe and length-normalizer joins are broadcast/shuffle hash
+    # cross onto the query side (the cf-smoothing denominator needs
+    # total_tokens); the probe is a broadcast hash join
     "lm_dirichlet_topk",
     # r9 batch-2 reviewed: one-row n_docs corpus-stats cross onto the
     # weighted postings — tfidf_top_terms' count-cross shape; the
-    # sparse dot and norm joins are hash joins on term/doc keys
+    # sparse dot is a broadcast hash join on term
     "tfidf_doc_similarity_topk",
     # r9 batch-2 reviewed: the EXACT filtered truth — ann_topk's
     # labeled brute broadcast-inequality scan over the predicate-kept
