@@ -1,19 +1,39 @@
 """Document deduplication family: exact, n-gram Jaccard (quadratic
 baseline), MinHash+LSH (the scale path), SimHash.
 
-Design (SURVEY §4):
+Every near-dup detector is one pipeline: shingle table → candidate
+pairs → one exact verify → one components loop.
+
+- Shingle tables: ``doc_shingles`` (the distinct word 3-grams) and
+  ``doc_shingle_hashes`` (their 64-bit hashes) are each built once per
+  query scope and corpus, and persisted there. Every shingle reader
+  (jaccard, containment, both contamination forms, novelty, MinHash,
+  incremental and components) reads these two tables.
+- Candidates: the posting self-join ``_overlap`` counts |A∩B| for
+  every pair sharing a shingle (the exact jaccard and containment
+  detectors score it); MinHash band buckets (``_lsh_candidates``, and
+  ``dedup_incremental``'s new × old bucket join) bound the candidate
+  volume by the band structure instead of df².
+- Verify: ``_verify`` is the one exact Jaccard over the shingle
+  hashes of a broadcast candidate set.
+- Components: ``connected_components`` labels the nodes of any
+  (doc_a, doc_b) edge frame; the near-dup clusters and the k-NN graph
+  clusters both use it.
+
+The reports (``neardup_recall_report``, ``docs_dedup_report``) call
+the public detectors inside their own scope, so every shared piece is
+built once for the whole report.
 
 - exact: one hash-groupBy on md5(text) — one shuffle, no skew (hashes).
-- ngram_jaccard_pairs: exact quadratic baseline used to validate LSH on
-  small data and as the verified-correctness oracle. O(n²) — never run
-  this at 100 TB; it exists so the LSH path has ground truth.
-- minhash_lsh_dup_pairs: explode shingles → one shuffle for the 32-perm
-  signature, one for band buckets; only bucket-colliding candidates pay
-  the exact-Jaccard verification. With r=2 rows/band, b=16 bands a true
-  pair at j≥0.8 is caught with p = 1-(1-j²)^16 ≈ 1-8e-8, so verified
-  output equals the exact baseline on any realistic data while scaling
-  ~linearly (asserted deterministically by tests at both test SFs). At 100 TB: run `exact` first so byte-identical copies don't
-  blow up LSH buckets.
+- ngram_jaccard_pairs: exact baseline used to validate LSH and as the
+  verified-correctness oracle; work ∝ Σ df² per shingle.
+- minhash_lsh_dup_pairs: one map-side signature, one shuffle for band
+  buckets; only bucket-colliding candidates pay the exact-Jaccard
+  verification. With r=2 rows/band, b=16 bands a true pair at j≥0.8 is
+  caught with p = 1-(1-j²)^16 ≈ 1-8e-8, so verified output equals the
+  exact baseline on any realistic data while scaling ~linearly
+  (asserted deterministically by tests at both test SFs). At 100 TB:
+  run `exact` first so byte-identical copies don't blow up LSH buckets.
 - simhash_dup_pairs: 64-bit SimHash from token hashes (all JVM-side bit
   arithmetic), pigeonhole-blocked on 16-bit chunks: pairs within
   hamming distance d≤3 must agree on ≥1 of 4 chunks.
@@ -25,7 +45,11 @@ JVM-side, no Python RNG.
 
 from __future__ import annotations
 
+import warnings
+from typing import Callable
+
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.rank import top_k
@@ -37,6 +61,9 @@ NUM_HASHES = 32
 ROWS_PER_BAND = 2
 N_BANDS = NUM_HASHES // ROWS_PER_BAND
 SHINGLE_WORDS = 3
+# Rounds of label propagation before ``connected_components`` warns;
+# pointer jumping converges in O(log diameter) rounds.
+COMPONENT_MAX_ROUNDS = 20
 
 
 def exact_dedup_stats(docs: DataFrame) -> DataFrame:
@@ -48,9 +75,9 @@ def exact_dedup_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def doc_shingles(docs: DataFrame, n: int = SHINGLE_WORDS) -> DataFrame:
-    """(doc_id, shingles): distinct n-word shingles; docs shorter than n
-    tokens drop out (no shingles → not near-dup candidates)."""
+def _shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles), unpersisted: the plan both shingle tables
+    are built from."""
     # repartition: the test tables arrive as one parquet file -> one
     # input partition; spread the (expensive) shingle work across all
     # cores. At cluster scale the source is already multi-split.
@@ -64,93 +91,128 @@ def doc_shingles(docs: DataFrame, n: int = SHINGLE_WORDS) -> DataFrame:
     # r9: hash by doc_id instead of round-robin — same spreading
     # (doc_id unique), no sort-before-repartition (guide §2.5 note)
     return (
-        docs.filter(F.size(toks) >= n)
+        docs.filter(F.size(toks) >= SHINGLE_WORDS)
         .repartition(par, "doc_id")
-        .select("doc_id", word_shingles(toks, n).alias("shingles"))
+        .select("doc_id", word_shingles(toks, SHINGLE_WORDS).alias("shingles"))
     )
 
 
-def _jaccard(a: F.Column, b: F.Column) -> F.Column:
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(F.array_union(a, b)).cast("double")
-    return F.round(inter / union, 6)
+def doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles): the distinct ``SHINGLE_WORDS``-word shingles
+    of every doc, built once per query scope and persisted there; docs
+    shorter than that drop out (no shingles → not near-dup
+    candidates)."""
+    scope = query_scope()
+    return scope.memo(("shingles", docs), lambda: scope.persist(_shingles(docs)))
 
 
-def doc_shingle_hashes(docs: DataFrame, n: int = SHINGLE_WORDS) -> DataFrame:
-    """(doc_id, hs): the 64-bit xxhash64 of each distinct shingle.
+def doc_shingle_hashes(docs: DataFrame) -> DataFrame:
+    """(doc_id, hs): the 64-bit xxhash64 of each distinct shingle, built
+    once per query scope and persisted there.
 
     The LSH pipeline's cacheable representation: a long array persists
     ~10× cheaper than the shingle strings (fixed 8 bytes vs ~25-char
     strings through the columnar cache's compression — caching the
-    string form measured 8.8s of a 12s cold run at sf0.1). Signature
-    permutations derive from these via pmod, and verification Jaccard
-    over the hash sets equals string Jaccard unless two distinct
-    shingles collide in 64 bits (p ≈ pairs·|union|²/2^65 — negligible,
-    and the quadratic string-space baseline stays available as
-    ``ngram_jaccard_pairs``)."""
-    return doc_shingles(docs, n).select(
-        "doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("hs")
-    )
+    string form measured 8.8s of a 12s cold run at sf0.1), so it is
+    built from the unpersisted shingle plan. Signature permutations
+    derive from these via pmod, and verification Jaccard over the hash
+    sets equals string Jaccard unless two distinct shingles collide in
+    64 bits (p ≈ pairs·|union|²/2^65 — negligible, and the string-space
+    baseline stays available as ``ngram_jaccard_pairs``)."""
+    scope = query_scope()
+
+    def build() -> DataFrame:
+        hs = F.transform("shingles", lambda s: F.xxhash64(s)).alias("hs")
+        return scope.persist(_shingles(docs).select("doc_id", hs))
+
+    return scope.memo(("hashes", docs), build)
 
 
-@scoped
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """EXACT word-shingle Jaccard pairs via an inverted-index self-join.
-
-    Identical output to the all-pairs form (the DuckDB oracle is the
-    quadratic formulation): shingles are distinct per document
+def _overlap(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_shared, n_a, n_b) for every pair sharing a
+    shingle: the inverted-index self-join of ``doc_shingles``, built
+    once per query scope. Shingles are distinct per document
     (``word_shingles`` applies array_distinct), so the per-pair posting
-    count IS |A∩B|, and |A∪B| = |A| + |B| − |A∩B| — the same integers
-    the array_intersect/array_union baseline divides, hence the same
-    rounded double. Any pair sharing zero shingles has Jaccard 0 and
-    can never reach a positive ``threshold``, so skipping non-colliding
-    pairs loses nothing (requires ``threshold`` > 0).
+    count IS |A∩B|; n_a and n_b are the two shingle-set sizes.
+
+    Plan note: the explode projection carries ONLY the generator —
+    any sibling expression over ``shingles`` (e.g. ``size``) gets
+    collapsed into the generated-row projection and re-derives the
+    whole shingle array once per POSTING instead of once per doc
+    (measured 7× on the bench corpus). Per-doc sizes are joined onto
+    the aggregated pair result instead, which is smaller than the
+    posting list by the dedup factor.
 
     Scale shape: work ∝ Σ df² per shingle (df = posting-list length),
     not docs² — near-linear on natural text where most 3-grams are
-    rare. The skew caveat of ``ngram_containment_pairs`` applies: at
-    web scale, cap document frequency per shingle first (boilerplate
-    posting lists explode the join); with heavy boilerplate prefer the
-    MinHash+LSH twin (``minhash_lsh_dup_pairs``), whose candidate
-    volume is bounded by the band structure instead of df².
+    rare. At web scale the posting lists of boilerplate shingles
+    explode the join: production runs drop shingles above a
+    document-frequency cap first (the CCNet/Gopher trick); kept exact
+    here so the DuckDB oracles are the same computation."""
+    scope = query_scope()
 
-    ``shingles`` injects a caller-persisted ``doc_shingles`` frame so a
-    multi-method sweep like ``neardup_recall_report`` builds the
-    shingle table once."""
-    sh = shingles if shingles is not None else query_scope().persist(doc_shingles(docs))
-    sizes = sh.select("doc_id", F.size("shingles").alias("n"))
-    ex = sh.select("doc_id", F.explode("shingles").alias("s"))
-    a = ex.select(F.col("doc_id").alias("doc_a"), "s")
-    b = ex.select(F.col("doc_id").alias("doc_b"), "s")
-    shared = (
-        a.join(b, "s")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
+    def build() -> DataFrame:
+        sh = doc_shingles(docs)
+        sizes = sh.select("doc_id", F.size("shingles").alias("n"))
+        ex = sh.select("doc_id", F.explode("shingles").alias("s"))
+        a = ex.select(F.col("doc_id").alias("doc_a"), "s")
+        b = ex.select(F.col("doc_id").alias("doc_b"), "s")
+        shared = (
+            a.join(b, "s")
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count("*").alias("n_shared"))
+        )
+        return shared.join(
+            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")), "doc_a"
+        ).join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")), "doc_b")
+
+    return scope.memo(("overlap", docs), build)
+
+
+@scoped
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """EXACT word-shingle Jaccard pairs off the ``_overlap`` count.
+
+    Identical output to the all-pairs form (the DuckDB oracle is the
+    quadratic formulation): |A∪B| = |A| + |B| − |A∩B| — the same
+    integers the array_intersect/array_union baseline divides, hence
+    the same rounded double. Any pair sharing zero shingles has
+    Jaccard 0 and can never reach a positive ``threshold``, so skipping
+    non-colliding pairs loses nothing (requires ``threshold`` > 0).
+    With heavy boilerplate prefer the MinHash+LSH twin
+    (``minhash_lsh_dup_pairs``), whose candidate volume is bounded by
+    the band structure instead of df²."""
+    union = F.col("n_a") + F.col("n_b") - F.col("n_shared")
     return (
-        shared.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
-            "doc_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_shared")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")).cast("double"),
-                6,
-            ),
-        )
+        _overlap(docs)
+        .withColumn("jaccard", F.round(F.col("n_shared") / union.cast("double"), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
+    )
+
+
+CONTAINMENT_THRESHOLD = 0.5
+
+
+@scoped
+def ngram_containment_pairs(
+    docs: DataFrame, threshold: float = CONTAINMENT_THRESHOLD
+) -> DataFrame:
+    """Near-dup pairs by n-gram CONTAINMENT (|A∩B| / min(|A|,|B|)) off
+    the ``_overlap`` count — exact, and the work is proportional to
+    shingles-per-posting-list, not docs².
+
+    Containment catches subset duplication (a doc embedded in a longer
+    one) that symmetric Jaccard dilutes."""
+    return (
+        _overlap(docs)
+        .withColumn(
+            "containment",
+            F.round(F.col("n_shared") / F.least("n_a", "n_b"), 6),
+        )
+        .filter(F.col("containment") >= threshold)
+        .select("doc_a", "doc_b", F.col("n_shared").cast("long").alias("n_shared"), "containment")
     )
 
 
@@ -172,14 +234,12 @@ def _affine_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     return coeffs
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = NUM_HASHES, shingles: DataFrame | None = None
-) -> DataFrame:
-    """(doc_id, h0..h{H-1}): min over shingles of the i-th universal
-    hash applied to ONE base xxhash64 per shingle — hashing the string
-    once and permuting with cheap affine transforms mod 2^31-1
-    (products stay < 2^62, so the arithmetic is overflow-safe under
-    ANSI mode).
+def minhash_signatures(hashes: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
+    """(doc_id, h0..h{H-1}) of a ``doc_shingle_hashes`` frame: min over
+    shingles of the i-th universal hash applied to the ONE base
+    xxhash64 per shingle — permuting with cheap affine transforms mod
+    2^31-1 (products stay < 2^62, so the arithmetic is overflow-safe
+    under ANSI mode).
 
     Computed per-row with higher-order functions (transform once for
     the base hashes, then one array_min per permutation): the signature
@@ -187,15 +247,7 @@ def minhash_signatures(
     earlier explode + 32-way groupBy formulation shuffled every shingle
     hash and measured ~50× slower at sf0.1. At 100 TB the signature
     build is then a pure map stage pipelined with the scan."""
-    sh = shingles if shingles is not None else doc_shingles(docs)
-    if "hs" in sh.columns:
-        # Pre-hashed shingles (doc_shingle_hashes): same base values,
-        # the xxhash64 is already done.
-        base = F.transform(F.col("hs"), lambda h: F.pmod(h, F.lit(MERSENNE_31)))
-    else:
-        base = F.transform(
-            F.col("shingles"), lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_31))
-        )
+    base = F.transform(F.col("hs"), lambda h: F.pmod(h, F.lit(MERSENNE_31)))
     sig_cols = [
         F.array_min(
             F.transform(
@@ -205,11 +257,12 @@ def minhash_signatures(
         ).alias(f"h{i}")
         for i, (a, b) in enumerate(_affine_coeffs(num_hashes))
     ]
-    return sh.withColumn("_hs", base).select("doc_id", *sig_cols)
+    return hashes.withColumn("_hs", base).select("doc_id", *sig_cols)
 
 
-def _band_buckets(sig: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_hash) — one row per band."""
+def _band_buckets(hashes: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, band_hash) — one row per MinHash band."""
+    sig = minhash_signatures(hashes)
     bands = F.array(
         *[
             F.struct(
@@ -226,37 +279,9 @@ def _band_buckets(sig: DataFrame) -> DataFrame:
     )
 
 
-@scoped
-def minhash_lsh_dup_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    shingle_hashes: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash+LSH near-dup pairs, verified with exact Jaccard so the
-    output is (with the collision probability above) identical to
-    ``ngram_jaccard_pairs`` — but without the O(n²) pair join.
-
-    The shingle-hash table feeds three consumers (signatures + both
-    sides of the verification join) — persist it so the scan/shingle
-    work runs once; the hash form (``doc_shingle_hashes``) keeps the
-    cache small and cheap to build. The cache lives in the query scope
-    (released when the next top-level build starts), so registry
-    sweeps don't accumulate cached blocks. ``shingle_hashes`` injects
-    a caller-persisted frame (see ``neardup_recall_report``)."""
-    sh = (
-        shingle_hashes
-        if shingle_hashes is not None
-        else query_scope().persist(doc_shingle_hashes(docs))
-    )
-    return _verified_lsh_pairs(sh, threshold)
-
-
-def _verified_lsh_pairs(sh: DataFrame, threshold: float) -> DataFrame:
-    """LSH candidate generation + exact-Jaccard verification over a
-    prepared (doc_id, hs) shingle-hash frame. Callers own ``sh``'s
-    cache lifecycle (see ``dedup_components``, which unpersists it once
-    the edge list is materialized)."""
-    buckets = _band_buckets(minhash_signatures(sh, shingles=sh))
+def _lsh_candidates(hashes: DataFrame) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b: the distinct pairs sharing a band
+    bucket."""
     # Candidate pairs via groupBy + in-bucket combinations rather than a
     # bucket self-join: the join formulation instantiates the signature
     # subtree TWICE (once per side — measured ~2.8s of a 5.2s LSH phase
@@ -273,22 +298,35 @@ def _verified_lsh_pairs(sh: DataFrame, threshold: float) -> DataFrame:
             ),
         )
     )
-    candidates = (
-        buckets.groupBy("band_idx", "band_hash")
+    return (
+        _band_buckets(hashes)
+        .groupBy("band_idx", "band_hash")
         .agg(F.collect_list("doc_id").alias("ids"))
         .filter(F.size("ids") >= 2)
         .select(F.explode(combos).alias("p"))
         .select(F.col("p.doc_a"), F.col("p.doc_b"))
         .distinct()
     )
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("sh_b"))
+
+
+def _jaccard(a: F.Column, b: F.Column) -> F.Column:
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(F.array_union(a, b)).cast("double")
+    return F.round(inter / union, 6)
+
+
+def _verify(hashes: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard): the candidate pairs of ``cand`` whose
+    exact Jaccard over their ``doc_shingle_hashes`` sets reaches
+    ``threshold``."""
+    a = hashes.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("sh_a"))
+    b = hashes.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("sh_b"))
     # Broadcast the (id, id) candidate set: the wide shingle-array table
     # then joins map-side, so the arrays cross the wire once (the doc_b
     # join) instead of twice. Candidate pairs are bounded by dup density
     # × band count — KBs per million docs, always broadcastable.
     return (
-        a.join(F.broadcast(candidates), "doc_a")
+        a.join(F.broadcast(cand), "doc_a")
         .join(b, "doc_b")
         .withColumn("jaccard", _jaccard(F.col("sh_a"), F.col("sh_b")))
         .filter(F.col("jaccard") >= threshold)
@@ -296,15 +334,23 @@ def _verified_lsh_pairs(sh: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def dedup_components(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    max_iters: int = 20,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Connected components of the near-duplicate graph: every document
-    labeled with the smallest doc_id reachable through verified
-    near-dup pairs (the canonical survivor of its duplicate cluster).
+@scoped
+def minhash_lsh_dup_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """MinHash+LSH near-dup pairs, verified with exact Jaccard so the
+    output is (with the collision probability above) identical to
+    ``ngram_jaccard_pairs`` — but without the O(n²) pair join.
+
+    The shingle-hash table feeds three consumers (signatures + both
+    sides of the verification join); it is the scope's persisted
+    ``doc_shingle_hashes``, so the scan/shingle work runs once."""
+    hs = doc_shingle_hashes(docs)
+    return _verify(hs, _lsh_candidates(hs), threshold)
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(doc_id, component) for every node of the undirected
+    (doc_a, doc_b) edge frame ``edges``: the smallest doc_id reachable
+    from it.
 
     Iterative min-label propagation with pointer jumping: each round
     every node takes the minimum label among itself and its neighbors,
@@ -312,44 +358,28 @@ def dedup_components(
     propagation distance, so convergence is O(log diameter) rounds
     instead of O(diameter). Each round is two joins + one groupBy (all
     shuffling on doc_id); the driver only checks a scalar convergence
-    sum — no data ever collects to the driver.
+    sum — no data ever collects to the driver. After
+    ``COMPONENT_MAX_ROUNDS`` rounds without convergence it warns.
 
-    The edge list is eagerly ``localCheckpoint``-ed so the (deep)
-    MinHash lineage is planned exactly once — each round replans only
-    the shallow join/agg subtree; the shingle cache is released as soon
-    as the edges are materialized. Pass ``pairs`` (e.g. the output of
-    ``minhash_lsh_dup_pairs``) to skip the MinHash derivation entirely
-    when the pair table already exists.
-    """
-    import warnings
-
-    sh = None
-    if pairs is None:
-        sh = doc_shingle_hashes(docs).persist()
-        pairs = _verified_lsh_pairs(sh, threshold)
-    pairs = pairs.select("doc_a", "doc_b")
-    # localCheckpoint is eager: the whole LSH pipeline runs here, once.
+    The symmetric edge list is eagerly ``localCheckpoint``-ed, so the
+    (deep) edge lineage is planned and run exactly once — each round
+    replans only the shallow join/agg subtree."""
+    pairs = edges.select("doc_a", "doc_b")
     edges = (
         pairs.unionByName(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
+            pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
         )
         .distinct()
         .localCheckpoint()
     )
-    if sh is not None:
-        sh.unpersist()
-    nodes = (
-        edges.select(F.col("doc_a").alias("doc_id")).distinct()
+    labels = edges.select(F.col("doc_a").alias("doc_id")).distinct().withColumn(
+        "label", F.col("doc_id")
     )
-    labels = nodes.withColumn("label", F.col("doc_id"))
     # Min-propagation only ever lowers labels, so the label sum strictly
     # decreases until the fixpoint — one scalar aggregate per round
     # detects convergence (no per-row diff join needed).
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    converged = False
-    for _ in range(max_iters):
+    for _ in range(COMPONENT_MAX_ROUNDS):
         # r9 note: unlike part_pagerank's lazy loop, each round here is
         # EXECUTED eagerly (localCheckpoint + the convergence collect),
         # so the planner's broadcast choice for the label side is a
@@ -357,9 +387,7 @@ def dedup_components(
         # broadcast 5.4s vs pinned-SMJ 8.2s at sf0.1. Left adaptive.
         neighbor_min = (
             edges.join(
-                labels.select(
-                    F.col("doc_id").alias("doc_b"), F.col("label").alias("nl")
-                ),
+                labels.select(F.col("doc_id").alias("doc_b"), F.col("label").alias("nl")),
                 "doc_b",
             )
             .groupBy(F.col("doc_a").alias("doc_id"))
@@ -378,37 +406,115 @@ def dedup_components(
             )
             .localCheckpoint()
         )
-        jump = propagated.select(
-            F.col("doc_id").alias("label"), F.col("label").alias("_ll")
-        )
+        jump = propagated.select(F.col("doc_id").alias("label"), F.col("label").alias("_ll"))
         # labels only ever decrease, so label-of-label ≤ label: the jump
         # preserves the monotone-sum convergence invariant.
-        labels = (
-            propagated.join(jump, "label", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("_ll"), F.col("label"))
-                ).alias("label"),
-            )
+        labels = propagated.join(jump, "label", "left").select(
+            "doc_id",
+            F.least(F.col("label"), F.coalesce(F.col("_ll"), F.col("label"))).alias("label"),
         )
         new_sum = labels.agg(F.sum("label")).collect()[0][0]
         if new_sum == prev_sum:
-            converged = True
             break
         prev_sum = new_sum
-    if not converged:
+    else:
         warnings.warn(
-            f"dedup_components: label propagation did not converge within "
-            f"{max_iters} rounds; labels may split one true component",
+            f"connected_components: label propagation did not converge within "
+            f"{COMPONENT_MAX_ROUNDS} rounds; labels may split one true component",
             RuntimeWarning,
             stacklevel=2,
         )
     return labels.select("doc_id", F.col("label").alias("component"))
 
 
+@scoped
+def dedup_components(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """Connected components of the near-duplicate graph: every document
+    with a verified near-dup pair (``minhash_lsh_dup_pairs``) labeled
+    with the smallest doc_id reachable through such pairs (the
+    canonical survivor of its duplicate cluster). The edge list is
+    checkpointed by ``connected_components``, so the MinHash pipeline
+    runs once."""
+    return connected_components(minhash_lsh_dup_pairs(docs, threshold))
+
+
+def _drop_losers(docs: DataFrame, losers: DataFrame) -> DataFrame:
+    """The corpus without the ``losers`` doc_ids, projected to
+    (doc_id, lang, source, n_chars)."""
+    return docs.join(losers, "doc_id", "left_anti").select(
+        "doc_id", "lang", "source", F.char_length("text").cast("long").alias("n_chars")
+    )
+
+
+@scoped
+def clean_documents(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """The dedup pipeline's end product: the corpus with near-duplicate
+    clusters collapsed to one survivor each (the smallest doc_id of the
+    connected component). Non-clustered documents pass through
+    untouched; cluster members that aren't the canonical survivor are
+    anti-joined away."""
+    comps = dedup_components(docs, threshold)
+    return _drop_losers(
+        docs, comps.filter(F.col("doc_id") != F.col("component")).select("doc_id")
+    )
+
+
+@scoped
+def clean_documents_keep_best(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """Near-dup collapse keeping the BEST cluster member instead of the
+    smallest doc_id: within each connected component the survivor is
+    the doc with the highest model quality logit (ties → smaller
+    doc_id) — what a production curation pipeline actually wants from
+    dedup (drop the mirror with the broken markup, keep the clean
+    original). Composes two independently oracle-checked stages
+    (``dedup_components`` × ``textquality.quality_model_scores``);
+    ranking uses the ROUNDED logit both engines emit, so survivor
+    choice is engine-portable. The per-component window runs on
+    cluster members only (near-dup clusters are small by
+    construction); the corpus itself is touched by two anti-join
+    scans."""
+    from .textquality import quality_model_scores
+
+    comps = dedup_components(docs, threshold)
+    q = quality_model_scores(docs).select("doc_id", "quality_logit")
+    w = Window.partitionBy("component").orderBy(
+        F.col("quality_logit").desc_nulls_last(), "doc_id"
+    )
+    losers = (
+        comps.join(q, "doc_id")
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") != 1)
+        .select("doc_id")
+    )
+    return _drop_losers(docs, losers)
+
+
 CONTAM_BENCH_MOD = 25  # doc_id % 25 == 0 → deterministic "benchmark" set
-CONTAINMENT_THRESHOLD = 0.5
+CONTAM_BLOOM_BITS = 1 << 20
+
+
+def _contamination(
+    docs: DataFrame, hits: Callable[[DataFrame, DataFrame], DataFrame]
+) -> DataFrame:
+    """(doc_id, n_shingles, n_contaminated, contamination_ratio) for
+    every training doc. ``hits(postings, bench)`` keeps the
+    (doc_id, s) corpus postings whose shingle is in the distinct
+    benchmark shingle set ``bench`` (s)."""
+    sh = doc_shingles(docs)
+    is_bench = F.col("doc_id") % CONTAM_BENCH_MOD == 0
+    bench = sh.filter(is_bench).select(F.explode("shingles").alias("s")).distinct()
+    base = sh.filter(~is_bench).select("doc_id", F.size("shingles").alias("n_shingles"))
+    postings = sh.filter(~is_bench).select("doc_id", F.explode("shingles").alias("s"))
+    n_hit = (
+        hits(postings, bench).groupBy("doc_id").agg(F.count("*").alias("n_contaminated"))
+    )
+    n = F.coalesce("n_contaminated", F.lit(0))
+    return base.join(n_hit, "doc_id", "left").select(
+        "doc_id",
+        "n_shingles",
+        n.cast("long").alias("n_contaminated"),
+        F.round(n / F.col("n_shingles"), 6).alias("contamination_ratio"),
+    )
 
 
 @scoped
@@ -425,40 +531,13 @@ def docs_contamination(docs: DataFrame) -> DataFrame:
     downstream filter needs an explicit per-doc verdict.
 
     The shingle table feeds three subtrees (benchmark set, per-doc
-    sizes, hit counting) — scope-persisted so the shingle build runs
-    once per action, also when this whole query is a subtree of
-    ``curated_documents`` (measured 4× there without it)."""
-    sh = query_scope().persist(doc_shingles(docs))
-    is_bench = F.col("doc_id") % CONTAM_BENCH_MOD == 0
-    bench = (
-        sh.filter(is_bench)
-        .select(F.explode("shingles").alias("s"))
-        .distinct()
+    sizes, hit counting) — it is the scope's persisted ``doc_shingles``,
+    so the shingle build runs once per action, also when this whole
+    query is a subtree of ``curated_documents`` (measured 4× there
+    without it)."""
+    return _contamination(
+        docs, lambda postings, bench: postings.join(F.broadcast(bench), "s", "left_semi")
     )
-    base = sh.filter(~is_bench).select(
-        "doc_id", F.size("shingles").alias("n_shingles")
-    )
-    hits = (
-        sh.filter(~is_bench)
-        .select("doc_id", F.explode("shingles").alias("s"))
-        .join(F.broadcast(bench), "s", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_contaminated"))
-    )
-    return (
-        base.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_shingles",
-            F.coalesce("n_contaminated", F.lit(0)).cast("long").alias("n_contaminated"),
-            F.round(
-                F.coalesce("n_contaminated", F.lit(0)) / F.col("n_shingles"), 6
-            ).alias("contamination_ratio"),
-        )
-    )
-
-
-CONTAM_BLOOM_BITS = 1 << 20
 
 
 @scoped
@@ -488,101 +567,17 @@ def docs_contamination_bloom(docs: DataFrame) -> DataFrame:
     the same idea for equi-joins; this is the explicit form with a
     hand-set bucket count, kept exact so the oracle is the plain
     computation."""
-    sh = query_scope().persist(doc_shingles(docs))
-    is_bench = F.col("doc_id") % CONTAM_BENCH_MOD == 0
-    bench = (
-        sh.filter(is_bench)
-        .select(F.explode("shingles").alias("s"))
-        .distinct()
-    )
-    bloom = bench.select(
-        F.pmod(F.xxhash64("s"), F.lit(CONTAM_BLOOM_BITS)).alias("_bucket")
-    ).distinct()
-    base = sh.filter(~is_bench).select(
-        "doc_id", F.size("shingles").alias("n_shingles")
-    )
-    hits = (
-        sh.filter(~is_bench)
-        .select("doc_id", F.explode("shingles").alias("s"))
-        .withColumn("_bucket", F.pmod(F.xxhash64("s"), F.lit(CONTAM_BLOOM_BITS)))
-        .join(F.broadcast(bloom), "_bucket", "left_semi")
-        .join(bench.hint("shuffle_hash"), "s", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_contaminated"))
-    )
-    return (
-        base.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_shingles",
-            F.coalesce("n_contaminated", F.lit(0)).cast("long").alias("n_contaminated"),
-            F.round(
-                F.coalesce("n_contaminated", F.lit(0)) / F.col("n_shingles"), 6
-            ).alias("contamination_ratio"),
+
+    def hits(postings: DataFrame, bench: DataFrame) -> DataFrame:
+        bucket = F.pmod(F.xxhash64("s"), F.lit(CONTAM_BLOOM_BITS)).alias("_bucket")
+        bloom = bench.select(bucket).distinct()
+        return (
+            postings.withColumn("_bucket", bucket)
+            .join(F.broadcast(bloom), "_bucket", "left_semi")
+            .join(bench.hint("shuffle_hash"), "s", "left_semi")
         )
-    )
 
-
-@scoped
-def ngram_containment_pairs(
-    docs: DataFrame,
-    threshold: float = CONTAINMENT_THRESHOLD,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup pairs by n-gram CONTAINMENT (|A∩B| / min(|A|,|B|)) via
-    an inverted-index self-join — the exact-but-scalable counterpoint
-    to the quadratic ``ngram_jaccard_pairs`` baseline: work is
-    proportional to shingles-per-posting-list, not docs².
-
-    Containment catches subset duplication (a doc embedded in a longer
-    one) that symmetric Jaccard dilutes. Skew note: at web scale the
-    posting lists of boilerplate shingles explode the join — production
-    runs drop shingles above a document-frequency cap first (the
-    CCNet/Gopher trick); kept exact here so the DuckDB oracle is the
-    same computation.
-
-    Plan note: the explode projection carries ONLY the generator —
-    any sibling expression over ``shingles`` (e.g. ``size``) gets
-    collapsed into the generated-row projection and re-derives the
-    whole shingle array once per POSTING instead of once per doc
-    (measured 7× on the bench corpus). Per-doc sizes are joined onto
-    the aggregated pair result instead, which is smaller than the
-    posting list by the dedup factor. ``shingles`` injects a
-    caller-persisted frame (shared-sweep pattern)."""
-    sh = shingles if shingles is not None else query_scope().persist(doc_shingles(docs))
-    sizes = sh.select("doc_id", F.size("shingles").alias("n"))
-    ex = sh.select("doc_id", F.explode("shingles").alias("s"))
-    a = ex.select(F.col("doc_id").alias("doc_a"), "s")
-    b = ex.select(F.col("doc_id").alias("doc_b"), "s")
-    shared = (
-        a.join(b, "s")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    return (
-        shared.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")), "doc_b")
-        .withColumn(
-            "containment",
-            F.round(F.col("n_shared") / F.least("n_a", "n_b"), 6),
-        )
-        .filter(F.col("containment") >= threshold)
-        .select("doc_a", "doc_b", F.col("n_shared").cast("long").alias("n_shared"), "containment")
-    )
-
-
-def clean_documents(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
-    """The dedup pipeline's end product: the corpus with near-duplicate
-    clusters collapsed to one survivor each (the smallest doc_id of the
-    connected component). Non-clustered documents pass through
-    untouched; cluster members that aren't the canonical survivor are
-    anti-joined away."""
-    comps = dedup_components(docs, threshold)
-    drops = comps.filter(F.col("doc_id") != F.col("component")).select("doc_id")
-    return docs.join(drops, "doc_id", "left_anti").select(
-        "doc_id", "lang", "source", F.char_length("text").cast("long").alias("n_chars")
-    )
+    return _contamination(docs, hits)
 
 
 def sample_documents(docs: DataFrame, n: int = 100) -> DataFrame:
@@ -602,7 +597,7 @@ def sample_documents(docs: DataFrame, n: int = 100) -> DataFrame:
 CURATED_MAX_CONTAM = 0.2
 
 
-def curated_documents(docs: DataFrame, contamination: DataFrame | None = None) -> DataFrame:
+def curated_documents(docs: DataFrame) -> DataFrame:
     """The end-to-end training-corpus curation step, composed from the
     engine's own operators: keep a doc iff it is (1) the exact-dedup
     survivor of its content hash, (2) passes the quality gate
@@ -618,8 +613,7 @@ def curated_documents(docs: DataFrame, contamination: DataFrame | None = None) -
         F.col("keep_doc_id").alias("doc_id")
     )
     quality_ok = quality_filter(docs).filter(F.col("keep")).select("doc_id")
-    contam_tbl = docs_contamination(docs) if contamination is None else contamination
-    clean = contam_tbl.filter(
+    clean = docs_contamination(docs).filter(
         F.col("contamination_ratio") <= CURATED_MAX_CONTAM
     ).select("doc_id")
     return (
@@ -654,9 +648,7 @@ def weighted_sample_documents(docs: DataFrame, n: int = WEIGHTED_SAMPLE_N) -> Da
         .orderBy("_key", "doc_id")
         .limit(n)
     )
-    from pyspark.sql import Window as W
-
-    rank_w = W.orderBy("_key", "doc_id")
+    rank_w = Window.orderBy("_key", "doc_id")
     return keyed.select(
         "doc_id",
         "n_chars",
@@ -810,6 +802,7 @@ def _split_expr(key: F.Column, val_pct: int, test_pct: int) -> F.Column:
     )
 
 
+@scoped
 def split_assignments_grouped(
     docs: DataFrame,
     val_pct: int = VAL_PCT,
@@ -893,6 +886,46 @@ def pack_documents(
 DUP_SPAN_K = 8
 
 
+def _dup_grams(docs: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
+    """The token arrays (doc_id, t) of the non-empty docs, and the
+    (doc_id, pos, keeper) positions of every k-gram that occurs in two
+    or more documents, keeper being the smallest such doc_id.
+
+    Positional k-grams are md5-hashed to a fixed 32-char key before the
+    shuffle (bounded key width regardless of k), and the gram stream is
+    scope-persisted: the cross-doc dup detection and the coverage join
+    both consume it."""
+    toks = docs.select("doc_id", tokens("text").alias("t")).filter(F.size("t") > 0)
+    grams = query_scope().persist(
+        toks.filter(F.size("t") >= k).select(
+            "doc_id",
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(1), F.size("t") - (k - 1)),
+                    lambda i: F.md5(
+                        F.concat_ws(" ", *[F.element_at("t", i + j) for j in range(k)])
+                    ),
+                )
+            ).alias("pos", "gh"),
+        )
+    )
+    dup = (
+        grams.groupBy("gh")
+        .agg(F.count_distinct("doc_id").alias("nd"), F.min("doc_id").alias("keeper"))
+        .filter(F.col("nd") >= 2)
+        .select("gh", "keeper")
+    )
+    return toks, grams.join(dup, "gh").select("doc_id", "pos", "keeper")
+
+
+def _covered(grams: DataFrame, k: int) -> DataFrame:
+    """The distinct (doc_id, p) token positions the k-grams at
+    (doc_id, pos) cover."""
+    return grams.select(
+        "doc_id", F.explode(F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias("p")
+    ).distinct()
+
+
 @scoped
 def dup_span_stats(docs: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     """Exact duplicated-span coverage (the RefinedWeb / "exact
@@ -902,55 +935,20 @@ def dup_span_stats(docs: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     High coverage flags boilerplate and templated mirror pages that
     document-level MinHash misses when the rest of the page differs.
 
-    Scale shape: positional k-grams are md5-hashed to a fixed 32-char
-    key before the shuffle (bounded key width regardless of k), the
-    gram stream is scope-persisted because both the cross-doc dup
-    detection and the coverage join consume it, duplicated grams only
-    (a small fraction of the corpus) pay the k-fold coverage explode,
-    and coverage is de-duplicated on (doc_id, position) before the
-    final per-doc count. Work ∝ token volume + k·|dup grams|; no
-    windows, no driver collect."""
-    toks = docs.select("doc_id", tokens("text").alias("t")).filter(F.size("t") > 0)
-    sh = query_scope().persist(
-        toks.filter(F.size("t") >= k)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - (k - 1)),
-                    lambda i: F.md5(
-                        F.concat_ws(
-                            " ", *[F.element_at("t", i + j) for j in range(k)]
-                        )
-                    ),
-                )
-            ).alias("pos", "gh"),
-        )
-    )
-    dup = (
-        sh.groupBy("gh")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("gh")
-    )
-    cov = (
-        sh.join(dup, "gh")
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias("p"),
-        )
-        .distinct()
-    )
-    cnt = cov.groupBy("doc_id").agg(F.count("*").alias("n_dup"))
+    Scale shape: the ``_dup_grams`` stream; duplicated grams only (a
+    small fraction of the corpus) pay the k-fold coverage explode, and
+    coverage is de-duplicated on (doc_id, position) before the final
+    per-doc count. Work ∝ token volume + k·|dup grams|; no windows, no
+    driver collect."""
+    toks, dup = _dup_grams(docs, k)
+    cnt = _covered(dup, k).groupBy("doc_id").agg(F.count("*").alias("n_dup"))
+    n_dup = F.coalesce(F.col("n_dup"), F.lit(0))
     base = toks.select("doc_id", F.size("t").cast("long").alias("n_tokens"))
     return base.join(cnt, "doc_id", "left").select(
         "doc_id",
         "n_tokens",
-        F.coalesce(F.col("n_dup"), F.lit(0)).cast("long").alias("n_dup_tokens"),
-        F.round(
-            F.coalesce(F.col("n_dup"), F.lit(0)) / F.col("n_tokens").cast("double"),
-            6,
-        ).alias("dup_ratio"),
+        n_dup.cast("long").alias("n_dup_tokens"),
+        F.round(n_dup / F.col("n_tokens").cast("double"), 6).alias("dup_ratio"),
     )
 
 
@@ -964,54 +962,18 @@ def remove_dup_spans(docs: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     being destroyed everywhere. Returns the rewritten corpus:
     (doc_id, n_tokens, n_removed, cleaned_text).
 
-    Scale shape is dup_span_stats' plus the rebuild: positional grams
-    md5-hashed pre-shuffle (fixed key width), the gram stream
-    scope-persisted (dup detection + coverage both read it), only
-    duplicated grams pay the k-fold coverage explode, and the rewrite
-    is one anti-join on (doc, pos) followed by a per-doc ordered
-    re-assembly (sort_array over collect_list structs — grouped, never
-    a window over the token stream). Work ∝ token volume +
-    k·|dup grams|; no driver collect.
+    Scale shape is dup_span_stats' plus the rebuild: the rewrite is one
+    anti-join on (doc, pos) followed by a per-doc ordered re-assembly
+    (sort_array over collect_list structs — grouped, never a window
+    over the token stream). Work ∝ token volume + k·|dup grams|; no
+    driver collect.
 
     Cross-engine determinism: positions are integers, the keeper rule
     is a MIN, and re-assembly is a position-ordered concat — fully
     value-hash-oracled (oracles.py mirrors it with string_agg ORDER BY
     in DuckDB)."""
-    toks = docs.select("doc_id", tokens("text").alias("t")).filter(F.size("t") > 0)
-    sh = query_scope().persist(
-        toks.filter(F.size("t") >= k)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - (k - 1)),
-                    lambda i: F.md5(
-                        F.concat_ws(
-                            " ", *[F.element_at("t", i + j) for j in range(k)]
-                        )
-                    ),
-                )
-            ).alias("pos", "gh"),
-        )
-    )
-    dup = (
-        sh.groupBy("gh")
-        .agg(
-            F.count_distinct("doc_id").alias("nd"),
-            F.min("doc_id").alias("keeper"),
-        )
-        .filter(F.col("nd") >= 2)
-        .select("gh", "keeper")
-    )
-    cov = (
-        sh.join(dup, "gh")
-        .filter(F.col("doc_id") != F.col("keeper"))
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias("p"),
-        )
-        .distinct()
-    )
+    toks, dup = _dup_grams(docs, k)
+    cov = _covered(dup.filter(F.col("doc_id") != F.col("keeper")), k)
     tok_rows = toks.select("doc_id", F.posexplode("t").alias("p", "tok"))
     kept = tok_rows.join(cov, ["doc_id", "p"], "left_anti")
     cleaned = kept.groupBy("doc_id").agg(
@@ -1035,6 +997,18 @@ def remove_dup_spans(docs: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     )
 
 
+def _rate_sample(docs: DataFrame, key: str, rates: DataFrame) -> DataFrame:
+    """(doc_id, ``key``, accept_rate): accept each doc iff its
+    md5-derived uniform is ≤ its group's rate in the broadcast
+    (``key``, rate) table."""
+    return (
+        docs.select("doc_id", key, hash_unit("doc_id").alias("u"))
+        .join(F.broadcast(rates), key)
+        .filter(F.col("u") <= F.col("rate"))
+        .select("doc_id", key, F.round("rate", 6).alias("accept_rate"))
+    )
+
+
 TEMP_ALPHA = 0.5
 
 
@@ -1045,15 +1019,15 @@ def temperature_sample_documents(
     rule from multilingual/domain training blends — α=1 keeps natural
     proportions, α→0 approaches uniform): accept each doc with rate
     r_s = (n_min / n_s)^(1−α), so expected per-source counts are
-    ∝ n_s^α scaled to keep the smallest source intact. Generalizes
-    ``mixture_sample_documents`` (its equal-share rule is the α=0
-    point). Same scale shape: one count aggregate, a broadcast
-    |sources|-row rate table, one rate-filter scan — no windows, no
-    per-source sorts, and the identical hash-threshold form runs as a
-    streaming filter.
+    ∝ n_s^α scaled to keep the smallest source intact. Its α=0 point
+    is ``mixture_sample_documents``' equal-share rule. Scale shape: one
+    count aggregate, a broadcast |sources|-row rate table, one
+    rate-filter scan — no windows, no per-source sorts, and the
+    identical hash-threshold form runs as a streaming filter.
 
     Cross-engine exactness: the acceptance uniform is the shared
-    md5-derived value and the rate is sqrt(n_min/n_s) at α=0.5 —
+    md5-derived value and the rate is sqrt(n_min/n_s) at α=0.5 (and
+    n_min/n_s itself at α=0, where pow(x, 1.0) returns x exactly) —
     correctly-rounded IEEE ops both engines agree on bit-for-bit, so
     even this sampler is value-hash-oracled."""
     c = docs.groupBy("source").agg(F.count("*").alias("n"))
@@ -1064,41 +1038,19 @@ def temperature_sample_documents(
     # α=0.5 takes the exact path.
     rate = F.sqrt(ratio) if alpha == 0.5 else F.pow(ratio, F.lit(1.0 - alpha))
     rates = c.crossJoin(F.broadcast(mn)).select("source", rate.alias("rate"))
-    u = hash_unit("doc_id")
-    return (
-        docs.select("doc_id", "source", u.alias("u"))
-        .join(F.broadcast(rates), "source")
-        .filter(F.col("u") <= F.col("rate"))
-        .select("doc_id", "source", F.round("rate", 6).alias("accept_rate"))
-    )
+    return _rate_sample(docs, "source", rates)
 
 
 def mixture_sample_documents(docs: DataFrame) -> DataFrame:
     """Deterministic mixture rebalancing: downsample every source to
     the size of the smallest one (equal target shares — the uniform
     special case of training-blend reweighting), by accepting a doc
-    iff its md5-derived uniform falls under the source's computed
-    acceptance rate. Unlike ``stratified_sample_by_lang`` (fixed
-    per-stratum quota via a rank) this is RATE-based: no per-source
-    sort or window anywhere, so a source of any size costs one scan,
-    and the same hash-threshold form runs identically as a streaming
-    filter. The per-source rate table is a broadcast of |sources|
-    rows; both engines compare the identical IEEE-exact uniform
-    against the identical correctly-rounded division, so even the
-    sampler is value-hash checked."""
-    c = docs.groupBy("source").agg(F.count("*").alias("n"))
-    mn = c.agg(F.min("n").alias("mn"))
-    rates = (
-        c.crossJoin(F.broadcast(mn))
-        .select("source", (F.col("mn") / F.col("n").cast("double")).alias("rate"))
-    )
-    u = hash_unit("doc_id")
-    return (
-        docs.select("doc_id", "source", u.alias("u"))
-        .join(F.broadcast(rates), "source")
-        .filter(F.col("u") <= F.col("rate"))
-        .select("doc_id", "source", F.round("rate", 6).alias("accept_rate"))
-    )
+    iff its md5-derived uniform falls under the source's acceptance
+    rate n_min / n_s: ``temperature_sample_documents`` at α = 0.
+    Unlike ``stratified_sample_by_lang`` (fixed per-stratum quota via a
+    rank) this is RATE-based: no per-source sort or window anywhere,
+    so a source of any size costs one scan."""
+    return temperature_sample_documents(docs, alpha=0.0)
 
 
 @scoped
@@ -1113,35 +1065,25 @@ def neardup_recall_report(docs: DataFrame) -> DataFrame:
     containment apply different predicates entirely, and the report
     makes all three drifts measurable instead of assumed.
 
-    The truth set is persisted once; each method contributes ONE row
-    (pair count, hits = inner join on the (doc_a, doc_b) key, exact
-    precision/recall divisions rounded 6 dp) — so the output is
-    method-count-sized however large the corpus, and everything is
-    exact integers + one rounded division per column: value-hash
-    oracle-checked end to end, like every constituent (all four pair
-    operators are independently oracled, which is what makes this
-    dashboard itself oracle-able).
+    Each method contributes ONE row (pair count, hits = inner join on
+    the (doc_a, doc_b) key, exact precision/recall divisions rounded
+    6 dp) — so the output is method-count-sized however large the
+    corpus, and everything is exact integers + one rounded division
+    per column: value-hash oracle-checked end to end, like every
+    constituent (all four pair operators are independently oracled,
+    which is what makes this dashboard itself oracle-able).
 
-    The shingle tables (string form for jaccard/containment, hash form
-    for minhash) and the truth set are persisted ONCE in the report's
-    query scope and injected into every method — the shared-frame lesson of
-    ann_recall_report applied here from the start (each method would
-    otherwise re-tokenize and re-shingle the corpus)."""
-    # The string-shingle cache is expensive to WRITE (~25-char strings
-    # through columnar compression) but it feeds FOUR instantiations —
-    # both sides of the truth self-join and both sides of containment's
-    # — so caching still wins (uncached: 60s, cached: 11s at sf0.1).
-    scope = query_scope()
-    sh_str = scope.persist(doc_shingles(docs))
-    sh_hash = scope.persist(doc_shingle_hashes(docs))
-    truth = scope.persist(
-        ngram_jaccard_pairs(docs, shingles=sh_str).select("doc_a", "doc_b")
-    )
+    The report calls the public detectors inside its own query scope,
+    so they share the scope's shingle tables; the overlap count feeds
+    both the truth set and containment, so it is persisted here and
+    the posting self-join runs once."""
+    query_scope().persist(_overlap(docs))
+    truth = ngram_jaccard_pairs(docs).select("doc_a", "doc_b")
     total = truth.agg(F.count("*").alias("n_true"))
     methods = (
-        ("minhash_lsh", lambda d: minhash_lsh_dup_pairs(d, shingle_hashes=sh_hash)),
+        ("minhash_lsh", minhash_lsh_dup_pairs),
         ("simhash", simhash_dup_pairs),
-        ("containment", lambda d: ngram_containment_pairs(d, shingles=sh_str)),
+        ("containment", ngram_containment_pairs),
     )
     # r10 (VERDICT r9 item 6, guide §2.3/§5): each method's pair
     # stream previously materialized TWICE per execution — once for
@@ -1224,8 +1166,6 @@ def unimax_sample_documents(
     identically as a streaming filter. Value-hash-oracled like every
     sampler in the family: the only floats are one division both
     engines round identically and the IEEE-exact uniform."""
-    from pyspark.sql import Window
-
     c = docs.groupBy("lang").agg(F.count("*").alias("n"))
     tot = c.agg(
         F.sum("n").alias("total"), F.count("*").alias("n_langs")
@@ -1262,13 +1202,7 @@ def unimax_sample_documents(
             .alias("rate"),
         )
     )
-    u = hash_unit("doc_id")
-    return (
-        docs.select("doc_id", "lang", u.alias("u"))
-        .join(F.broadcast(rates), "lang")
-        .filter(F.col("u") <= F.col("rate"))
-        .select("doc_id", "lang", F.round("rate", 6).alias("accept_rate"))
-    )
+    return _rate_sample(docs, "lang", rates)
 
 
 PS_OVERLAP_K = 12
@@ -1305,42 +1239,6 @@ def prefix_suffix_overlap_pairs(docs: DataFrame, k: int = PS_OVERLAP_K) -> DataF
     )
 
 
-def clean_documents_keep_best(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
-    """Near-dup collapse keeping the BEST cluster member instead of the
-    smallest doc_id: within each connected component the survivor is
-    the doc with the highest model quality logit (ties → smaller
-    doc_id) — what a production curation pipeline actually wants from
-    dedup (drop the mirror with the broken markup, keep the clean
-    original). Composes two independently oracle-checked stages
-    (``dedup_components`` × ``textquality.quality_model_scores``);
-    ranking uses the ROUNDED logit both engines emit, so survivor
-    choice is engine-portable. The per-component window runs on
-    cluster members only (near-dup clusters are small by
-    construction); the corpus itself is touched by two anti-join
-    scans."""
-    from pyspark.sql import Window as W
-
-    from .textquality import quality_model_scores
-
-    comps = dedup_components(docs, threshold)
-    q = quality_model_scores(docs).select("doc_id", "quality_logit")
-    m = comps.join(q, "doc_id")
-    w = W.partitionBy("component").orderBy(
-        F.col("quality_logit").desc_nulls_last(), "doc_id"
-    )
-    drops = (
-        m.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") != 1)
-        .select("doc_id")
-    )
-    return docs.join(drops, "doc_id", "left_anti").select(
-        "doc_id",
-        "lang",
-        "source",
-        F.char_length("text").cast("long").alias("n_chars"),
-    )
-
-
 @scoped
 def docs_dedup_report(docs: DataFrame) -> DataFrame:
     """One-row dedup-pipeline observability report — the numbers a
@@ -1348,11 +1246,10 @@ def docs_dedup_report(docs: DataFrame) -> DataFrame:
     count and redundant-copy count, near-dup cluster membership, the
     contaminated-doc count, and the final curated survivor count.
     Every constituent (exact groups, components, contamination,
-    curated set) is its own oracle-checked registry query; this frame
-    is their one-row aggregate join (four broadcast one-row crosses —
-    output is ONE row whatever the corpus size)."""
-    from .textquality import quality_filter  # noqa: F401  (doc pointer)
-
+    curated set) is its own oracle-checked registry query, called
+    inside this report's scope; this frame is their one-row aggregate
+    join (four broadcast one-row crosses — output is ONE row whatever
+    the corpus size)."""
     base = docs.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.countDistinct(F.md5("text")).cast("long").alias("n_exact_groups"),
@@ -1366,19 +1263,18 @@ def docs_dedup_report(docs: DataFrame) -> DataFrame:
         F.countDistinct("component").cast("long").alias("n_neardup_clusters"),
     )
     # r10 (VERDICT r9 item 6): the contamination verdict table is
-    # persisted ONCE and shared with curated_documents. The r8
-    # measurement that pinned the double build ("shared form 4x
-    # slower") predates the doc_id-partitioned shingle layout; the
-    # refreshed A/B (min-of-3, same session) measured the shared form
-    # FASTER (8.29s vs 8.64s at sf0.1) — and it is the right shape at
-    # scale: one contamination scan instead of two.
-    contam_tbl = query_scope().persist(docs_contamination(docs))
+    # persisted ONCE; ``curated_documents`` rebuilds the same plan, so
+    # Spark's cache manager serves it this copy. The refreshed A/B
+    # (min-of-3, same session) measured the shared form FASTER (8.29s
+    # vs 8.64s at sf0.1) — and it is the right shape at scale: one
+    # contamination scan instead of two.
     contam = (
-        contam_tbl
+        query_scope()
+        .persist(docs_contamination(docs))
         .filter(F.col("contamination_ratio") > CURATED_MAX_CONTAM)
         .agg(F.count("*").cast("long").alias("n_contaminated"))
     )
-    curated = curated_documents(docs, contamination=contam_tbl).agg(
+    curated = curated_documents(docs).agg(
         F.count("*").cast("long").alias("n_curated")
     )
     return (
@@ -1481,56 +1377,40 @@ def dedup_incremental(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     every batch (the incremental-maintenance pattern of
     ``fact_events_incremental`` applied to LSH) — per-batch cost is
     then signature-build over the batch + one bucket equi-join against
-    the stored index + exact verification of colliding candidates;
+    the stored index + the exact ``_verify`` of colliding candidates;
     nothing rescans the established corpus text. Here both sides
-    derive from one scoped-persisted shingle-hash table because the
-    registry query owns no storage. Candidate (new, old) id pairs are
-    bounded by dup density × band count — KBs per million docs — so
-    they broadcast and the wide shingle arrays cross the wire once.
-    Output equals the exact cross-batch Jaccard join by the same
-    1-(1-j²)^16 LSH-recall argument as ``minhash_lsh_dup_pairs``
-    (miss p ≈ 8e-8 at j = 0.8; deterministic, parity-asserted)."""
+    derive from the scope's persisted shingle-hash table because the
+    registry query owns no storage. Output equals the exact cross-batch
+    Jaccard join by the same 1-(1-j²)^16 LSH-recall argument as
+    ``minhash_lsh_dup_pairs`` (miss p ≈ 8e-8 at j = 0.8;
+    deterministic, parity-asserted)."""
     is_new = F.col("doc_id") % INCR_MOD == 0
-    sh = query_scope().persist(doc_shingle_hashes(docs))
-    buckets = _band_buckets(minhash_signatures(sh, shingles=sh))
+    hs = doc_shingle_hashes(docs)
+    buckets = _band_buckets(hs)
     cand = (
         buckets.filter(is_new)
-        .withColumnRenamed("doc_id", "new_id")
+        .withColumnRenamed("doc_id", "doc_a")
         .join(
-            buckets.filter(~is_new).withColumnRenamed("doc_id", "old_id"),
+            buckets.filter(~is_new).withColumnRenamed("doc_id", "doc_b"),
             ["band_idx", "band_hash"],
         )
-        .select("new_id", "old_id")
+        .select("doc_a", "doc_b")
         .distinct()
-    )
-    a = sh.filter(is_new).select(
-        F.col("doc_id").alias("new_id"), F.col("hs").alias("sh_a")
-    )
-    b = sh.filter(~is_new).select(
-        F.col("doc_id").alias("old_id"), F.col("hs").alias("sh_b")
-    )
-    hits = (
-        a.join(F.broadcast(cand), "new_id")
-        .join(b, "old_id")
-        .withColumn("j", _jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("j") >= threshold)
-        .select("new_id", "old_id", "j")
     )
     # One groupBy (no per-new-doc window): best = lexicographic max of
     # (jaccard, -old_id) — max Jaccard, ties to the smallest old id.
     per = (
-        hits.groupBy("new_id")
+        _verify(hs, cand, threshold)
+        .groupBy(F.col("doc_a").alias("doc_id"))
         .agg(
             F.count("*").cast("long").alias("n_matches"),
-            F.max(
-                F.struct(F.col("j"), (-F.col("old_id")).alias("neg"))
-            ).alias("m"),
+            F.max(F.struct("jaccard", (-F.col("doc_b")).alias("neg"))).alias("m"),
         )
         .select(
-            F.col("new_id").alias("doc_id"),
+            "doc_id",
             "n_matches",
             (-F.col("m.neg")).cast("long").alias("best_match"),
-            F.col("m.j").alias("best_jaccard"),
+            F.col("m.jaccard").alias("best_jaccard"),
         )
     )
     return (
@@ -1547,6 +1427,32 @@ def dedup_incremental(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     )
 
 
+def _pair_crosstab(pairs: DataFrame, labels: DataFrame, col: str) -> DataFrame:
+    """(``col``_a, ``col``_b, n_pairs, avg_jaccard): verified near-dup
+    pairs counted by the unordered pair of their endpoints' ``col``
+    labels from the (doc_id, ``col``) frame ``labels``.
+
+    The mean is computed as an exact DECIMAL sum of the ROUNDED
+    per-pair Jaccards (both engines sum the same 6-decimal rationals in
+    any order — no float-order drift), then one final rounded divide."""
+    lab = labels.select("doc_id", F.col(col).alias("_l"))
+    a, b = f"{col}_a", f"{col}_b"
+    return (
+        pairs.join(lab.select(F.col("doc_id").alias("doc_a"), F.col("_l").alias("_la")), "doc_a")
+        .join(lab.select(F.col("doc_id").alias("doc_b"), F.col("_l").alias("_lb")), "doc_b")
+        .select(
+            F.least("_la", "_lb").alias(a),
+            F.greatest("_la", "_lb").alias(b),
+            F.col("jaccard").cast("decimal(18,8)").alias("_jd"),
+        )
+        .groupBy(a, b)
+        .agg(
+            F.count("*").cast("long").alias("n_pairs"),
+            F.round(F.sum("_jd").cast("double") / F.count("*"), 6).alias("avg_jaccard"),
+        )
+    )
+
+
 def dup_source_matrix(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Near-dup provenance crosstab: for every verified near-dup pair,
     which SOURCES are duplicating each other — the report that tells a
@@ -1559,33 +1465,8 @@ def dup_source_matrix(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     Jaccard at the threshold); two broadcast-sized joins against the
     (doc_id, source) projection — the pair list is dup-density-bounded
     and the source labels are a narrow column, so nothing wide
-    shuffles. The mean is computed as an exact DECIMAL sum of the
-    ROUNDED per-pair Jaccards (both engines sum the same 6-decimal
-    rationals in any order — no float-order drift), then one final
-    rounded divide."""
-    pairs = minhash_lsh_dup_pairs(docs, threshold)
-    src = docs.select("doc_id", "source")
-    labeled = (
-        pairs.join(
-            src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("_sa")),
-            "doc_a",
-        )
-        .join(
-            src.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("_sb")),
-            "doc_b",
-        )
-        .select(
-            F.least("_sa", "_sb").alias("source_a"),
-            F.greatest("_sa", "_sb").alias("source_b"),
-            F.col("jaccard").cast("decimal(18,8)").alias("_jd"),
-        )
-    )
-    return labeled.groupBy("source_a", "source_b").agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.round(
-            F.sum("_jd").cast("double") / F.count("*"), 6
-        ).alias("avg_jaccard"),
-    )
+    shuffles."""
+    return _pair_crosstab(minhash_lsh_dup_pairs(docs, threshold), docs, "source")
 
 
 def split_leakage_report(
@@ -1607,36 +1488,13 @@ def split_leakage_report(
     dup-density-bounded pair list. The production fix for a leaky
     report is upstream (content-hash splitting or cross-split dedup —
     ``dedup_incremental``'s shape with the train side as the index);
-    this op is the measurement. ``split`` injects an alternative
+    this op is the measurement. ``split`` audits an alternative
     (doc_id, split) assignment — the group-aware
     ``split_assignments_grouped`` audits to zero leaky rows through
     this parameter (r8)."""
-    pairs = minhash_lsh_dup_pairs(docs, threshold)
     sp = split_assignments(docs) if split is None else split
-    labeled = (
-        pairs.join(
-            sp.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("_pa")),
-            "doc_a",
-        )
-        .join(
-            sp.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("_pb")),
-            "doc_b",
-        )
-        .select(
-            F.least("_pa", "_pb").alias("split_a"),
-            F.greatest("_pa", "_pb").alias("split_b"),
-            F.col("jaccard").cast("decimal(18,8)").alias("_jd"),
-        )
-    )
-    return (
-        labeled.groupBy("split_a", "split_b")
-        .agg(
-            F.count("*").cast("long").alias("n_pairs"),
-            F.round(F.sum("_jd").cast("double") / F.count("*"), 6).alias(
-                "avg_jaccard"
-            ),
-        )
-        .withColumn("leaky", F.col("split_a") != F.col("split_b"))
+    return _pair_crosstab(minhash_lsh_dup_pairs(docs, threshold), sp, "split").withColumn(
+        "leaky", F.col("split_a") != F.col("split_b")
     )
 
 
@@ -1663,25 +1521,19 @@ def docs_ngram_novelty(docs: DataFrame) -> DataFrame:
     once and maintain incrementally, exactly like
     ``dedup_incremental``'s band index. Gram identity uses the
     package's 64-bit shingle hashes (collision odds as documented on
-    ``doc_shingle_hashes``)."""
-    # r9 (guide §5 caching rule): ``sh`` feeds BOTH the per-doc
-    # denominator and the exploded gram stream; unpersisted, the
-    # tokenize+shingle+hash pass ran twice per execution. The hash-array
-    # form is the documented cheap-to-cache representation
-    # (doc_shingle_hashes docstring).
-    sh = query_scope().persist(doc_shingle_hashes(docs))
+    ``doc_shingle_hashes``), read from the scope's persisted table,
+    which feeds both the denominator and the exploded gram stream."""
+    sh = doc_shingle_hashes(docs)
     base = sh.select("doc_id", F.size("hs").cast("long").alias("n_grams"))
     ex = sh.select("doc_id", F.explode("hs").alias("g"))
     first = ex.groupBy("g").agg(F.min("doc_id").alias("doc_id"))
     nov = first.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_novel")
     )
+    n_novel = F.coalesce("n_novel", F.lit(0))
     return base.join(nov, "doc_id", "left").select(
         "doc_id",
         "n_grams",
-        F.coalesce("n_novel", F.lit(0)).cast("long").alias("n_novel"),
-        F.round(
-            F.coalesce("n_novel", F.lit(0)) / F.col("n_grams").cast("double"),
-            6,
-        ).alias("novelty"),
+        n_novel.cast("long").alias("n_novel"),
+        F.round(n_novel / F.col("n_grams").cast("double"), 6).alias("novelty"),
     )

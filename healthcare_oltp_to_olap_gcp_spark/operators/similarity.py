@@ -2087,25 +2087,26 @@ def knn_graph_components(
     caps / dedups as units). One row per vector with ≥1 mutual edge:
     (vec_id, component = smallest reachable vec_id).
 
-    Pure composition of two oracled pieces: the mutual edge list
-    (already symmetric by construction — e(a,b) mutual ⟺ e(b,a)
-    mutual) feeds ``dedup.dedup_components``' pointer-jumping
-    min-label propagation verbatim; that loop's O(log diameter)
-    convergence, scalar-only driver checks and localCheckpoint
-    handling carry over unchanged. Work per round is two joins + a
-    groupBy on the |mutual| ≤ n·k edge list — linear in the edge list,
-    and the edge build is Θ(n^1.5) under the C ∝ √n rule the edge
-    builder documents (``n_centroids`` / ``n_probe`` pass straight
-    through to it, so a deploy can grow C with the corpus without
-    touching this wrapper)."""
-    from .dedup import dedup_components
+    Composition of the oracled edge list with the dedup family's
+    components loop: the mutual edge list (already symmetric by
+    construction — e(a,b) mutual ⟺ e(b,a) mutual) is the edge frame of
+    ``dedup.connected_components``, the pointer-jumping min-label
+    propagation the near-dup clusters use, with its O(log diameter)
+    convergence, scalar-only driver checks and localCheckpoint-ed
+    edges. Work per round is two joins + a groupBy on the
+    |mutual| ≤ n·k edge list — linear in the edge list, and the edge
+    build is Θ(n^1.5) under the C ∝ √n rule the edge builder documents
+    (``n_centroids`` / ``n_probe`` pass straight through to it, so a
+    deploy can grow C with the corpus without touching this
+    wrapper)."""
+    from .dedup import connected_components
 
     mutual = (
         knn_graph_edges(embeddings, k, n_centroids, n_probe)
         .filter(F.col("mutual"))
         .select(F.col("src_id").alias("doc_a"), F.col("dst_id").alias("doc_b"))
     )
-    return dedup_components(None, pairs=mutual).select(
+    return connected_components(mutual).select(
         F.col("doc_id").alias("vec_id"), "component"
     )
 

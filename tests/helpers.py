@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import re
 from contextlib import contextmanager
 from decimal import Decimal
 
@@ -44,6 +45,27 @@ def jobs_run(spark, group: str, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def plan_text(df) -> str:
+    """The executed plan of ``df`` as ``explain("formatted")`` prints
+    it: the node tree, then each node's details, numbered from the
+    leaves. ``executedPlan().toString()`` is truncated for large plans
+    and can drop nodes."""
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def plan_details(plan: str, name: str) -> list[str]:
+    """The details block of every operator called ``name`` (a regex) in
+    a formatted plan, in node-id order. The tree and the details both
+    name every node, so only the details headers (``(12)
+    BroadcastHashJoin``) are read: each node counts once."""
+    return [b for b in re.split(r"\n\s*\n", plan) if re.match(rf"\(\d+\) {name}\b", b)]
+
+
+def plan_nodes(plan: str, name: str) -> int:
+    """Operators called ``name`` (a regex) in a formatted plan."""
+    return len(plan_details(plan, name))
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:

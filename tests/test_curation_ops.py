@@ -11,6 +11,7 @@ from healthcare_oltp_to_olap_gcp_spark.catalog import table
 from healthcare_oltp_to_olap_gcp_spark.operators import dedup, similarity, textquality
 
 from .conftest import SF001
+from .helpers import plan_details, plan_text
 
 
 def _docs(spark, rows):
@@ -423,7 +424,7 @@ def test_recall_report_plans_one_result_window(spark):
     import re
 
     df = similarity.ann_recall_report(table(spark, SF001, "embeddings"))
-    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    plan = plan_text(df)
     windows = [
         re.sub(r"#\d+L?", "#", line)
         for line in plan.splitlines()
@@ -606,9 +607,10 @@ def test_contamination_bloom_equals_exact_and_prefilters(spark):
     exact = {r.doc_id: r for r in dedup.docs_contamination(docs).collect()}
     bloom = {r.doc_id: r for r in dedup.docs_contamination_bloom(docs).collect()}
     assert bloom == exact
-    plan = dedup.docs_contamination_bloom(docs)._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(dedup.docs_contamination_bloom(docs))
     assert "pmod" in plan and "xxhash64" in plan  # bucket prefilter present
-    assert plan.count("LeftSemi") >= 2  # bloom probe + exact verify
+    semi = [b for b in plan_details(plan, r"\w+Join") if "Join type: LeftSemi" in b]
+    assert len(semi) >= 2  # bloom probe + exact verify
 
 
 @pytest.mark.parametrize("n_centroids", [16, 64], ids=["fixed_C", "grown_C"])
@@ -1205,18 +1207,11 @@ def test_prototypicality_bucketed_has_no_label_only_window(spark):
     finer than the bare label (histogram table or (label, sim) tie
     sets), so reducer parallelism scales with the data instead of
     |labels|."""
-    plan = (
-        similarity.prototypicality_prune_bucketed(
-            table(spark, SF001, "embeddings")
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    plan = plan_text(
+        similarity.prototypicality_prune_bucketed(table(spark, SF001, "embeddings"))
     )
-    import re
-
-    for m in re.finditer(r"Window \[([^\]]*)\]", plan):
-        spec = m.group(1)
+    for block in plan_details(plan, "Window"):
+        spec = block.split("Arguments: [", 1)[1]
         keys = spec.split("windowspecdefinition(")[1].split(
             ", specifiedwindowframe"
         )[0]

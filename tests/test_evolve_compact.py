@@ -19,7 +19,7 @@ from healthcare_oltp_to_olap_gcp_spark.sources.evolve import (
 )
 
 from .conftest import SF001
-from .helpers import normalize
+from .helpers import normalize, plan_nodes, plan_text
 
 V2_SCHEMA = T.StructType(
     [
@@ -77,8 +77,7 @@ def test_conform_projection(spark):
     assert out.schema["value"].dataType == T.DoubleType()
     assert out.filter(F.col("quality_flag").isNotNull()).count() == 0
     # pure projection: no exchange in the plan
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    assert plan_nodes(plan_text(out), r"\w*Exchange") == 0
 
 
 def test_compact_reduces_files_preserves_content(spark, tmp_path):

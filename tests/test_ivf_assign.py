@@ -31,6 +31,7 @@ from healthcare_oltp_to_olap_gcp_spark.operators.similarity import (
 from healthcare_oltp_to_olap_gcp_spark.functions.vectors import dot
 
 from .conftest import SF001
+from .helpers import plan_nodes, plan_text
 
 
 def _emb(spark):
@@ -111,8 +112,7 @@ def _n_windows(df) -> int:
     # count true Window exec nodes only — "WindowGroupLimit" is the
     # rank-filter pushdown Spark adds below a top-k window, not a
     # per-partition shuffle of its own
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.count("Window [")
+    return plan_nodes(plan_text(df), "Window")
 
 
 def test_ivf_flat_plan_has_single_topk_window(spark):
@@ -124,11 +124,9 @@ def test_knn_graph_edges_plan_has_no_assignment_window(spark):
     # self-join, so the ONE per-src top-k window can print twice —
     # what must be gone is any window partitioned on the assignment
     # key (vec_id), the old n·C shuffle
-    plan = (
-        knn_graph_edges(_emb(spark))._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = plan_text(knn_graph_edges(_emb(spark)))
     assert "windowspecdefinition(vec_id" not in plan, plan
-    assert plan.count("Window [") <= 2
+    assert plan_nodes(plan, "Window") <= 2
 
 
 def test_semdedup_plan_has_no_window(spark):

@@ -16,7 +16,7 @@ from healthcare_oltp_to_olap_gcp_spark.operators import (
 from healthcare_oltp_to_olap_gcp_spark.oracles import ORACLE_SQL
 
 from .conftest import SF001, SF01
-from .helpers import normalize, run_oracle, session_confs
+from .helpers import normalize, plan_details, plan_nodes, plan_text, run_oracle, session_confs
 
 
 @pytest.mark.fullsweep
@@ -307,8 +307,8 @@ def test_token_typo_pairs_no_vocab_broadcast(spark):
     docs = table(spark, SF001, "documents")
     with session_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         pairs = textquality.token_typo_pairs(docs)
-        plan = pairs._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in plan, plan
+        plan = plan_text(pairs)
+        assert plan_nodes(plan, "BroadcastExchange") == 0, plan
 
 
 def test_conf_block_restores_the_session_broadcast_threshold(spark):
@@ -1296,11 +1296,13 @@ def test_top_k_one_equals_the_row_number_survivor_rule(spark):
 
 def test_top_k_plans_a_window_group_limit(spark):
     """The cut plans as WindowGroupLimit (Partial before the shuffle,
-    Final after it): the map-side cut a partition-local top-k builds on."""
+    Final after it): the map-side cut a partition-local top-k builds on.
+    The formatted plan numbers its nodes from the leaves, so the
+    Partial cut comes first."""
     from healthcare_oltp_to_olap_gcp_spark.functions.rank import top_k
 
     for rank in (None, "rank"):
         got = top_k(_rank_rows(spark).repartition(4), ["g"], ["v", "id"], 2, rank=rank)
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        limits = [ln for ln in plan.splitlines() if "WindowGroupLimit" in ln]
-        assert [ln.rsplit(", ", 1)[-1] for ln in limits] == ["Final", "Partial"], plan
+        plan = plan_text(got)
+        limits = plan_details(plan, "WindowGroupLimit")
+        assert [b.rsplit(", ", 1)[-1] for b in limits] == ["Partial", "Final"], plan

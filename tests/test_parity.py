@@ -76,6 +76,39 @@ RETRIEVAL_KEYS = [
     "retrieval_quality_report",
 ]
 
+# Every oracled query of the near-dup pipeline (operators/dedup: one
+# shingle table, one overlap count, one exact verify, one components
+# loop), the reports composed over it and the samplers that share its
+# rate-filter tail.
+DEDUP_KEYS = [
+    "dedup_exact",
+    "ngram_dup_pairs",
+    "minhash_lsh_dup_pairs",
+    "ngram_containment_pairs",
+    "simhash_dup_pairs",
+    "dedup_components",
+    "clean_documents",
+    "clean_documents_keep_best",
+    "split_assignments_grouped",
+    "dedup_incremental",
+    "dup_source_matrix",
+    "split_leakage_report",
+    "neardup_recall_report",
+    "docs_dedup_report",
+    "docs_contamination",
+    "docs_contamination_bloom",
+    "curated_documents",
+    "dup_span_stats",
+    "docs_remove_dup_spans",
+    "docs_ngram_novelty",
+    "knn_graph_components",
+    "mixture_sample_documents",
+    "temperature_sample_documents",
+    "unimax_sample_documents",
+    "prefix_suffix_overlap_pairs",
+    "dedup_segments",
+]
+
 # The refresh cycle's monitoring views and sanity checks
 # (plans/monitoring, plans/star).
 REFRESH_KEYS = [
@@ -124,20 +157,9 @@ SMOKE_KEYS = [
     "ivf_probe_sweep",
     "ann_index_retrain",
     "ann_filtered_topk",
-    "knn_graph_components",
     "semdedup_embeddings",
     # dedup / curation family
-    "ngram_dup_pairs",
-    "minhash_lsh_dup_pairs",
-    "simhash_dup_pairs",
-    "ngram_containment_pairs",
-    "neardup_recall_report",
-    "dedup_components",
-    "docs_contamination",
-    "curated_documents",
-    "docs_dedup_report",
-    "clean_documents_keep_best",
-    "docs_ngram_novelty",
+    *DEDUP_KEYS,
     # text quality / tokenizers / samplers
     "docs_quality_filter",
     "docs_bigram_perplexity",
@@ -175,6 +197,14 @@ def test_ann_parity_on_empty_tables(spark, empty_dir, name):
     """On empty tables the top-k lists and the balance report have no
     rows, and the recall and retrain reports one row per method or
     index state with zero counts, as their oracles do."""
+    assert_parity(spark, name, empty_dir)
+
+
+@pytest.mark.parametrize("name", DEDUP_KEYS)
+def test_dedup_parity_on_empty_tables(spark, empty_dir, name):
+    """On empty tables the pair lists, verdict tables, clusters and
+    samples have no rows, and the recall and dedup reports one row per
+    method or one row of zero counts, as their oracles do."""
     assert_parity(spark, name, empty_dir)
 
 

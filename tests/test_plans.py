@@ -5,7 +5,6 @@ appear in the executed plan, not just in docstrings."""
 from __future__ import annotations
 
 import datetime as dt
-import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,22 +15,12 @@ from healthcare_oltp_to_olap_gcp_spark.functions.timewindow import epoch_micros
 from healthcare_oltp_to_olap_gcp_spark.plans import monitoring
 
 from .conftest import SF001
-from .helpers import jobs_run
+from .helpers import jobs_run, plan_nodes, plan_text
 
 
 def _plan(spark, name: str) -> str:
-    """The executed plan as ``explain("formatted")`` prints it: the node
-    tree, then each node's details. ``executedPlan().toString()`` is
-    truncated for large plans and can drop nodes."""
-    df = QUERIES[name](spark, SF001)
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
-def _nodes(plan: str, name: str) -> int:
-    """Operators called ``name`` in a formatted plan, each counted once:
-    the tree and the details both name every node, so only the details
-    headers (``(12) BroadcastHashJoin``) are read."""
-    return len(re.findall(rf"^\(\d+\) {name}\b", plan, re.M))
+    """The formatted executed plan of registry query ``name`` at sf0.001."""
+    return plan_text(QUERIES[name](spark, SF001))
 
 
 def test_star_never_shuffles_the_fact(spark):
@@ -39,7 +28,7 @@ def test_star_never_shuffles_the_fact(spark):
     # shuffle below the fact, the star adds no exchange and no join
     fact = _plan(spark, "fact_events")
     plan = _plan(spark, "fact_events_star")
-    assert _nodes(plan, "Exchange") == _nodes(fact, "Exchange")
+    assert plan_nodes(plan, "Exchange") == plan_nodes(fact, "Exchange")
     assert "Join" not in plan
 
 
@@ -49,9 +38,9 @@ def test_sanity_row_counts_dedups_the_events_once(spark):
     # the final count's exchange
     fact = _plan(spark, "fact_events")
     plan = _plan(spark, "sanity_row_counts")
-    assert _nodes(plan, "Scan parquet") == 1
-    assert _nodes(plan, "Window") == 1
-    assert _nodes(plan, "Exchange") == _nodes(fact, "Exchange") + 1
+    assert plan_nodes(plan, "Scan parquet") == 1
+    assert plan_nodes(plan, "Window") == 1
+    assert plan_nodes(plan, "Exchange") == plan_nodes(fact, "Exchange") + 1
 
 
 def test_q5_broadcasts_dims(spark):
@@ -84,7 +73,7 @@ def test_incremental_fact_single_final_window(spark):
     """base ∪ delta re-dedup: exactly two window (row_number) passes —
     one for the base fact, one for the merge — and no extra joins."""
     plan = _plan(spark, "fact_events_incremental")
-    assert _nodes(plan, "RunningWindowFunction") + _nodes(plan, "Window") >= 2
+    assert plan_nodes(plan, "RunningWindowFunction") + plan_nodes(plan, "Window") >= 2
 
 
 def test_daily_rollup_incremental_pushes_cutoff_and_merges(spark):
@@ -132,7 +121,7 @@ def test_q7_broadcasts_both_nation_sides(spark):
     """Customer and supplier shrink to the 2-nation filter before any
     fact join; both must arrive broadcast."""
     plan = _plan(spark, "q7_volume_shipping")
-    assert _nodes(plan, "BroadcastHashJoin") >= 2
+    assert plan_nodes(plan, "BroadcastHashJoin") >= 2
 
 
 def test_containment_join_is_hash_not_nested_loop(spark):
@@ -164,7 +153,7 @@ def test_q20_broadcasts_part_filter_and_threshold(spark):
     lineitem must shuffle only for its own aggregation, never SMJ
     against a dim."""
     plan = _plan(spark, "q20_promotable_suppliers")
-    assert _nodes(plan, "BroadcastHashJoin") >= 2
+    assert plan_nodes(plan, "BroadcastHashJoin") >= 2
 
 
 def test_q21_semi_anti_share_order_key(spark):
@@ -188,7 +177,7 @@ def test_2pass_percentiles_all_broadcast_no_smj(spark):
     must all be partitioned (per-type cumulative / per-bucket rank)."""
     plan = _plan(spark, "value_percentiles_2pass")
     assert "SortMergeJoin" not in plan, plan
-    assert _nodes(plan, "BroadcastHashJoin") >= 5
+    assert plan_nodes(plan, "BroadcastHashJoin") >= 5
     for frag in plan.split("windowspecdefinition(")[1:]:
         assert frag.startswith("event_type"), frag[:80]
 
@@ -209,7 +198,7 @@ def test_rfm_has_no_global_sort_or_window(spark):
     passes were single-reducer sorts at 100 TB)."""
     plan = _plan(spark, "customer_rfm_segments")
     assert "Window" not in plan, plan
-    assert "TakeOrdered" in plan or _nodes(plan, "Sort") == 0, plan
+    assert "TakeOrdered" in plan or plan_nodes(plan, "Sort") == 0, plan
 
 
 @pytest.mark.fullsweep
@@ -226,7 +215,7 @@ def test_chunk_documents_no_shuffle(spark):
     """Chunking is a pure map stage: no Exchange beyond the explicit
     repartition of the single-file test input."""
     plan = _plan(spark, "chunk_documents")
-    assert _nodes(plan, "Exchange") <= 1  # only the input-spread repartition
+    assert plan_nodes(plan, "Exchange") <= 1  # only the input-spread repartition
 
 
 def test_ivf_flat_broadcasts_centroids(spark):

@@ -16,7 +16,7 @@ from healthcare_oltp_to_olap_gcp_spark.plans.refresh import refresh_model
 from healthcare_oltp_to_olap_gcp_spark.sources import replicate
 
 from .conftest import SF001
-from .helpers import jobs_run
+from .helpers import jobs_run, plan_text
 
 
 def test_overlapping_windows_dedup_to_exact_source(spark, tmp_path):
@@ -114,7 +114,7 @@ def test_refresh_model_builds_consistent_star(spark, tmp_path):
     parts = [p for p in os.listdir(paths["fact_events_star"]) if p.startswith("date_key=")]
     assert len(parts) >= 25  # ~30 days of events
     # partition pruning reaches the scan
-    plan = star_df.filter(F.col("date_key") == "2024-01-05")._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(star_df.filter(F.col("date_key") == "2024-01-05"))
     assert "PartitionFilters: [isnotnull(date_key" in plan
 
 

@@ -15,6 +15,7 @@ from healthcare_oltp_to_olap_gcp_spark.operators import retrieval
 from healthcare_oltp_to_olap_gcp_spark.session import scoped
 
 from .conftest import SF001
+from .helpers import plan_text
 
 
 def _rank_rule(dfs: list[int]) -> int:
@@ -55,10 +56,6 @@ def test_theta_of_an_empty_vocabulary_is_null(spark):
     assert _theta_of(spark, []) is None
 
 
-def _formatted(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
 def _stage1_cache_reads(df) -> int:
     """Reads of a cached (query_id, doc_id, score, rank) list — the
     BM25 stage-1 list — in ``df``'s formatted plan."""
@@ -66,7 +63,7 @@ def _stage1_cache_reads(df) -> int:
         re.findall(
             r"^\(\d+\) InMemoryRelation\n"
             r"Arguments: \[query_id#\d+L?, doc_id#\d+L?, score#\d+, rank#\d+L?\]",
-            _formatted(df),
+            plan_text(df),
             re.M,
         )
     )

@@ -14,7 +14,7 @@ import pytest
 from healthcare_oltp_to_olap_gcp_spark.catalog import TABLES, table
 
 from .conftest import SF01
-from .helpers import assert_parity, session_confs
+from .helpers import assert_parity, plan_nodes, plan_text, session_confs
 
 # Operators whose shuffle key is user_id (window sorts / aggregations
 # partition on the skewed key).
@@ -90,8 +90,8 @@ def test_aqe_splits_skewed_join(spark, skew_dir):
         joined = views.join(purchases, "user_id").groupBy().count()
         [row] = joined.collect()
         assert row["count"] > 0
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "skew=true" in plan, plan
+        plan = plan_text(joined)
+        assert plan_nodes(plan, r"SortMergeJoin\(skew=true") >= 1, plan
 
 
 @pytest.fixture(scope="module")
