@@ -1379,14 +1379,16 @@ def dedup_incremental(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     then signature-build over the batch + one bucket equi-join against
     the stored index + the exact ``_verify`` of colliding candidates;
     nothing rescans the established corpus text. Here both sides
-    derive from the scope's persisted shingle-hash table because the
-    registry query owns no storage. Output equals the exact cross-batch
+    read one band-bucket frame persisted in the query scope (built from
+    its shingle-hash table) because the registry query owns no
+    storage. Output equals the exact cross-batch
     Jaccard join by the same 1-(1-j²)^16 LSH-recall argument as
     ``minhash_lsh_dup_pairs`` (miss p ≈ 8e-8 at j = 0.8;
     deterministic, parity-asserted)."""
     is_new = F.col("doc_id") % INCR_MOD == 0
     hs = doc_shingle_hashes(docs)
-    buckets = _band_buckets(hs)
+    # a bucket self-join would re-derive the signatures on each side
+    buckets = query_scope().persist(_band_buckets(hs))
     cand = (
         buckets.filter(is_new)
         .withColumnRenamed("doc_id", "doc_a")

@@ -4,14 +4,12 @@ rerank and fusion cascades, and the index reports.
 
 Every lexical ranker is one pipeline, index → probe → cut:
 
-1. the *index* (``_index``): the corpus tokenized once into postings
-   (unit, term, tf, dl). The unit is a document, or a (document,
-   chunk) passage for MaxP. The postings are hash-partitioned by
-   doc_id and persisted per query scope, and the unit length dl rides
-   every posting row (Lucene's per-document norms). The vocabulary
-   statistics — df, cf, the unit count N and the token total — are
-   computed in one place (``_vocab``), and the df-cap keeps the terms
-   whose df is at most θ, the median df (``_theta``);
+1. the *index* (``corpus.index``): the corpus tokenized once into
+   postings (unit, term, tf, dl), persisted per query scope and shared
+   with the text statistics. The vocabulary statistics — df, cf, the
+   unit count N and the token total — come from
+   ``corpus.vocabulary``, and the df-cap keeps the terms whose df is
+   at most θ, the median df (``corpus.df_theta``);
 2. one *probe* (``_probe``): the postings ⋈ a broadcast query side
    (query_id, term, the term's inputs and the one-row corpus stats) →
    the self-match filter → a per-row contribution rounded to
@@ -61,15 +59,14 @@ LLM-pipeline extension surface.
 from __future__ import annotations
 
 import itertools
-from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rank import top_k
-from ..functions.text import tokens
 from ..session import query_scope, scoped
+from .corpus import Index, df_theta, index, vocabulary
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -78,102 +75,19 @@ DEFAULT_K = 10
 RERANK_M = 25  # first-stage candidate depth per query
 
 
-class _Index(NamedTuple):
-    """A postings index: ``postings`` (*unit, term, tf, dl), persisted;
-    ``unit`` its unit key; ``units`` one row per unit (N counts them)."""
-
-    postings: DataFrame
-    unit: tuple[str, ...]
-    units: DataFrame
-
-
-def _index(docs: DataFrame, passages: bool = False) -> _Index:
-    """The postings of ``docs``, tokenized once per query scope and
-    persisted. The unit is the document, or with ``passages`` the
-    ``textquality.chunk_documents`` chunk (doc_id, chunk_idx).
-
-    Both unit frames are hash-partitioned by doc_id before the explode,
-    so the (unit, term) aggregation and the unit-length window need no
-    further exchange, and later doc-keyed consumers reuse the
-    partitioning. An empty document has no postings but counts in N;
-    every chunk holds at least one token, so the chunks are the
-    postings' distinct units."""
+def _persist_vocab(ix: Index, df_cap: bool) -> None:
+    """Persist ``corpus.vocabulary``'s frames for a caller that probes
+    more than once (RM3's two passes, the quality report's methods), so
+    the aggregations and the θ cut run once per query scope. Spark's
+    cache manager matches plans, so every later ``vocabulary`` call
+    reads these copies."""
     scope = query_scope()
-
-    def build() -> _Index:
-        if passages:
-            from .textquality import chunk_documents
-
-            unit, text = ("doc_id", "chunk_idx"), "chunk_text"
-            src = chunk_documents(docs)  # hash-partitioned by doc_id
-        else:
-            par = docs.sparkSession.sparkContext.defaultParallelism
-            unit, text = ("doc_id",), "text"
-            src = docs.repartition(par, "doc_id")
-        postings = scope.persist(
-            src.select(*unit, F.explode(tokens(text)).alias("term"))
-            .groupBy(*unit, "term")
-            .agg(F.count("*").alias("tf"))
-            .withColumn("dl", F.sum("tf").over(Window.partitionBy(*unit)))
-        )
-        units = postings.select(*unit).distinct() if passages else docs
-        return _Index(postings, unit, units)
-
-    return scope.memo(("index", docs, passages), build)
-
-
-def _theta() -> Column:
-    """The df-cap threshold θ, one aggregate over a frame with a ``df``
-    column: the ⌈V/2⌉-th smallest df of a V-term vocabulary (a discrete
-    median, an exact integer), NULL on an empty vocabulary. The df-cap
-    keeps df ≤ θ, and ``bm25_index_stats_report`` reports θ as
-    df_median.
-
-    Production caps drop terms above a fixed corpus fraction (df > N/4
-    or so). The synthetic corpus has a 31-term vocabulary whose df is
-    near-uniform at ~0.8·N, so a fraction cap would drop everything or
-    nothing; the median is a data-fitted threshold (the convention
-    semdedup and simhash use), so both the kept and the dropped paths
-    run at every SF."""
-    return F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY df)").cast("long")
-
-
-def _vocab(ix: _Index, df_cap: bool = False) -> tuple[DataFrame, DataFrame]:
-    """The vocabulary (term, df, cf) and the one-row corpus stats
-    (n_docs, total_tokens) of ``ix``: df counts the units holding a
-    term and cf its occurrences; n_docs counts the units and
-    total_tokens sums tf over the postings. ``df_cap`` keeps the terms
-    with df ≤ ``_theta``. All exact integers."""
-    p = ix.postings
-    vocab = p.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("tf").cast("long").alias("cf")
-    )
-    if df_cap:
-        theta = vocab.agg(_theta().alias("_theta"))
-        vocab = (
-            vocab.crossJoin(F.broadcast(theta))
-            .filter(F.col("df") <= F.col("_theta"))
-            .drop("_theta")
-        )
-    stats = ix.units.agg(F.count("*").alias("n_docs")).crossJoin(
-        p.agg(F.sum("tf").cast("long").alias("total_tokens"))
-    )
-    return vocab, stats
-
-
-def _persist_vocab(ix: _Index, df_cap: bool) -> None:
-    """Persist ``_vocab``'s frames for a caller that probes more than
-    once (RM3's two passes, the quality report's methods), so the
-    aggregations and the θ cut run once per query scope. Spark's cache
-    manager matches plans, so every later ``_vocab`` call reads these
-    copies."""
-    scope = query_scope()
-    vocab, stats = _vocab(ix, df_cap)
+    vocab, stats = vocabulary(ix, df_cap)
     scope.memo(("vocab", ix.postings, df_cap), lambda: scope.persist(vocab))
     scope.memo(("stats", ix.postings), lambda: scope.persist(stats))
 
 
-def _query_terms(ix: _Index, workload: DataFrame | None = None) -> DataFrame:
+def _query_terms(ix: Index, workload: DataFrame | None = None) -> DataFrame:
     """(query_id, term): the distinct terms of every query-slice
     document, cut to the query ids of ``workload`` when given."""
     qt = ix.postings.filter(F.col("doc_id") % QUERY_MOD == 0).select(
@@ -186,13 +100,13 @@ def _query_terms(ix: _Index, workload: DataFrame | None = None) -> DataFrame:
     return qt
 
 
-def _query_side(ix: _Index, qt: DataFrame, df_cap: bool = False) -> DataFrame:
+def _query_side(ix: Index, qt: DataFrame, df_cap: bool = False) -> DataFrame:
     """The probe's broadcast side for the vocabulary-scored rankers:
     the query terms ``qt`` (query_id, term, …) joined to their
     vocabulary row and crossed with the one-row corpus stats. The inner
     join drops every term the df-cap removed, so a capped term never
     expands its posting list. |qt| rows, bounded by the workload."""
-    vocab, stats = _vocab(ix, df_cap)
+    vocab, stats = vocabulary(ix, df_cap)
     return vocab.join(F.broadcast(qt), "term").crossJoin(F.broadcast(stats))
 
 
@@ -272,7 +186,7 @@ def bm25_topk(
 
     ``df_cap=True`` is the SCALE TWIN (registered as
     ``bm25_dfcap_topk``): terms whose df is above the median vocabulary
-    df (``_theta``) are dropped before the probe — the stopword/WAND
+    df (``df_theta``) are dropped before the probe — the stopword/WAND
     style cut every posting-list operator in this package documents.
     The cut bounds per-query work by the capped posting lengths (the
     boilerplate lists that explode Σ df under corpus growth are exactly
@@ -288,7 +202,7 @@ def bm25_topk(
     every-50th-doc slice: a deployed retrieval service's workload is a
     fixed query stream whose size does not grow with the corpus (see
     ``bm25_workload_topk``)."""
-    ix = _index(docs)
+    ix = index(docs)
     side = _query_side(ix, _query_terms(ix, workload), df_cap)
     return _rank_topk(_probe(ix.postings, side, _okapi()), k)
 
@@ -302,7 +216,7 @@ def bm25_candidate_rows(docs: DataFrame, df_cap: bool = False) -> int:
     vocabularies to show the cap is a growth cut, not a constant
     factor. It counts the probe's own candidate frame, so the proxy
     cannot drift from the scorer."""
-    ix = _index(docs)
+    ix = index(docs)
     return _candidates(ix.postings, _query_side(ix, _query_terms(ix), df_cap)).count()
 
 
@@ -375,7 +289,7 @@ def bm25_chunk_maxp_topk(
     is the shared Okapi contribution; the MaxP argmax is a
     (score, -chunk_idx) struct max — full value-hash oracle, chunking
     mirrored in DuckDB via list_slice."""
-    ix = _index(docs, passages=True)
+    ix = index(docs, passages=True)
     side = _query_side(ix, _query_terms(ix))
     chunk_scored = _probe(ix.postings, side, _okapi(), carry=("chunk_idx",))
     best = F.max(F.struct(F.col("_s").alias("s"), (-F.col("chunk_idx")).alias("negidx")))
@@ -405,7 +319,7 @@ def bm25_index_stats_report(docs: DataFrame) -> DataFrame:
 
     Columns: n_docs / vocab_size / n_postings / total_tokens / avgdl;
     df_max + top_term_share (the worst list's reach — df_max/n_docs);
-    df_median — the df-cap's own θ (``_theta``), so the report shows
+    df_median — the df-cap's own θ (``df_theta``), so the report shows
     the operator's knob; and capped_postings_share — the exact fraction
     of posting rows the df-cap twin drops (terms with df > θ), i.e. the
     probe work a deployment saves by switching ``bm25_topk`` →
@@ -416,12 +330,12 @@ def bm25_index_stats_report(docs: DataFrame) -> DataFrame:
     capped rows = Σ_{df > θ} df are vocabulary sums); output is one
     row. All-integer counts + three rounded ratios ⇒ full value-hash
     oracle."""
-    vocab, stats = _vocab(_index(docs))
+    vocab, stats = vocabulary(index(docs))
     shape = vocab.agg(
         F.count("*").alias("vocab_size"),
         F.coalesce(F.sum("df"), F.lit(0)).cast("long").alias("n_postings"),
         F.max("df").cast("long").alias("df_max"),
-        _theta().alias("df_median"),
+        df_theta().alias("df_median"),
     )
     capped = vocab.crossJoin(F.broadcast(shape.select("df_median"))).agg(
         F.sum(F.when(F.col("df") > F.col("df_median"), F.col("df")).otherwise(0))
@@ -525,8 +439,8 @@ def _wand_candidates(docs: DataFrame, k: int):
          unioned with the seed docs.
     Queries with fewer than k seed candidates get no θ row and keep
     every term essential (falls back to the exact full probe)."""
-    ix = _index(docs)
-    vocab, stats = _vocab(ix)
+    ix = index(docs)
+    vocab, stats = vocabulary(ix)
     scope = query_scope()
     qt = scope.persist(_query_terms(ix))
     contrib = scope.persist(_contributions(ix.postings, vocab, stats, qt))
@@ -748,7 +662,7 @@ def bm25_index_incremental(docs: DataFrame) -> DataFrame:
     established text. All-integer ⇒ trivially exact value-hash
     oracle."""
     is_new = F.col("doc_id") % BM25_INCR_MOD == 0
-    tf = _index(docs).postings
+    tf = index(docs).postings
     est = (
         tf.filter(~is_new)
         .groupBy("term")
@@ -844,7 +758,7 @@ def retrieval_quality_report(
     _reuse_rerank_vectors(embeddings, corpus, qs)
     # before any stage-1 list persists its plan: both stage-1 probes
     # and RM3's second pass read the uncapped vocabulary and the stats
-    _persist_vocab(_index(docs), False)
+    _persist_vocab(index(docs), False)
     # per-query ideal DCG over its |truth| positions (k when the corpus
     # has at least k+1 docs; exact either way)
     per_q_truth = truth.groupBy("query_id").agg(F.count("*").alias("n_rel"))
@@ -1082,9 +996,9 @@ def rm3_expansion_topk(
     expansion), and pass 2's probe carries only capped terms, bounding
     its posting expansion the same way. Separately value-hash-oracled,
     like bm25_dfcap/rerank_dfcap."""
-    ix = _index(docs)
+    ix = index(docs)
     _persist_vocab(ix, df_cap)
-    vocab, _ = _vocab(ix, df_cap)
+    vocab, _ = vocabulary(ix, df_cap)
     fb = _stage1(docs, df_cap, fb_m).select("query_id", "doc_id")
     # under the cap, only capped-vocabulary terms take part anywhere
     # (relevance model, original query model, second pass)
@@ -1176,7 +1090,7 @@ def lm_dirichlet_topk(docs: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     association order as the DuckDB oracle, round 6 dp per row, and
     sum as exact DECIMAL — the scores and the (score DESC, doc_id)
     ranking are bit-reproducible, full value-hash oracle."""
-    ix = _index(docs)
+    ix = index(docs)
     qt = ix.postings.filter(F.col("doc_id") % QUERY_MOD == 0).select(
         F.col("doc_id").alias("query_id"),
         "term",
@@ -1224,8 +1138,8 @@ def tfidf_doc_similarity_topk(docs: DataFrame, k: int = DEFAULT_K) -> DataFrame:
     whose every term is corpus-ubiquitous (df = N ⇒ zero vector) have
     undefined cosine and are excluded from both sides, in both
     engines, by the ``nrm > 0`` guard."""
-    ix = _index(docs)
-    vocab, stats = _vocab(ix)
+    ix = index(docs)
+    vocab, stats = vocabulary(ix)
     weighted = query_scope().persist(
         ix.postings.join(F.broadcast(vocab), "term")
         .crossJoin(F.broadcast(stats))

@@ -4,14 +4,27 @@ scoring, language-ID heuristic, fingerprints.
 Everything JVM-side via higher-order functions (SURVEY §4) except the
 winnowing fingerprint, which is an Arrow-batched Pandas UDF (rolling
 hashes are genuinely imperative).
+
+The term-count statistics are one pipeline, postings → vocabulary →
+per-key aggregate, over the corpus's one term-count table
+(operators/corpus, shared with the lexical rankers): per-document
+counts are the postings' tf, corpus counts the vocabulary's cf and df,
+per-source counts the postings joined on (doc_id, source). The
+adjacent-pair stream is ``_bigrams`` and the two log-log fits share
+``_loglog_fit``. The row-local signals (quality, langid, repetition,
+Gopher rules, chunking, mixture weights, the model logit) stay
+per-row projections: exploding them would add shuffles.
 """
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.window import Window
 
 from ..functions.localframe import local_frame
 from ..functions.rank import top_k
@@ -29,6 +42,103 @@ from ..functions.text import (
     tokens,
 )
 from ..session import query_scope, scoped
+from .corpus import index, postings, term_counts
+
+
+def _vocab(docs: DataFrame) -> DataFrame:
+    """(term, df, cf): the vocabulary of ``docs``' postings — the
+    documents holding each term and its occurrences."""
+    return term_counts(postings(docs))
+
+
+def _word_counts(docs: DataFrame) -> DataFrame:
+    """(term, n): the corpus occurrences of each token, exploded from
+    the scan as it is partitioned — the word table of the keys that
+    need no per-document count and run their own stages over it (the
+    typo vocabulary and the two tokenizer trainers). Read from the
+    postings, it would cost them the doc_id exchange as one more
+    stage."""
+    return (
+        docs.select(F.explode(tokens("text")).alias("term"))
+        .groupBy("term")
+        .agg(F.count("*").alias("n"))
+    )
+
+
+def _bigrams(toks: Column) -> Column:
+    """The adjacent-token pairs of the token array ``toks`` as (x, y)
+    structs, in order: n − 1 pairs for n ≥ 2 tokens, none otherwise.
+    A per-row higher-order transform, so the stream costs no shuffle."""
+    return F.filter(
+        F.transform(
+            toks,
+            lambda t, i: F.when(
+                i < F.size(toks) - 1,
+                F.struct(t.alias("x"), F.element_at(toks, i + 2).alias("y")),
+            ),
+        ),
+        lambda s: s.isNotNull(),
+    )
+
+
+def _moments(
+    points: DataFrame, x: Column, y: Column, *keys: str, dec: str = "decimal(18,8)"
+) -> DataFrame:
+    """Per ``keys`` group of ``points``: n and the sums sx, sy, sxy,
+    sxx, syy of the points rounded to 8 dp and summed as exact
+    ``dec`` DECIMAL (order-independent), then as doubles the
+    closed-form cov, varx and vary (n·Σxy − Σx·Σy, …), in the order
+    the oracles mirror."""
+    terms = {"x": x, "y": y, "xy": x * y, "xx": x * x, "yy": y * y}
+    rounded = [F.round(v, 8).cast(dec).alias(k) for k, v in terms.items()]
+    agg = (
+        points.select(*keys, *rounded)
+        .groupBy(*keys)
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            *[F.sum(k).cast("double").alias(f"s{k}") for k in terms],
+        )
+    )
+    n, s = F.col("n").cast("double"), lambda k: F.col(f"s{k}")
+    return agg.select(
+        "*",
+        (n * s("xy") - s("x") * s("y")).alias("cov"),
+        (n * s("xx") - s("x") * s("x")).alias("varx"),
+        (n * s("yy") - s("y") * s("y")).alias("vary"),
+    )
+
+
+def _loglog_fit(points: DataFrame, x: Column, y: Column) -> DataFrame:
+    """OLS of ln ``y`` on ln ``x`` over the rows of ``points``
+    (``_moments``): one row (n, slope, intercept, r2). slope and
+    intercept are NULL when every x is equal, r2 also when every y
+    is."""
+    m = _moments(points, F.log(x.cast("double")), F.log(y.cast("double")))
+    cov, varx, vary = F.col("cov"), F.col("varx"), F.col("vary")
+    slope = cov / varx
+    intercept = (F.col("sy") - slope * F.col("sx")) / F.col("n").cast("double")
+    return m.select(
+        "n",
+        F.when(varx > 0, slope).alias("slope"),
+        F.when(varx > 0, intercept).alias("intercept"),
+        F.when((varx > 0) & (vary > 0), (cov * cov) / (varx * vary)).alias("r2"),
+    )
+
+
+def _top_cf(docs: DataFrame, v: int) -> DataFrame:
+    """(r, c): the ``v`` most frequent terms of the vocabulary, c their
+    cf and r their rank 1..v (c desc, then term) — a TakeOrdered cut
+    (never a global sort), then a window over at most ``v`` rows."""
+    order = (F.col("cf").desc(), "term")
+    return (
+        _vocab(docs)
+        .orderBy(*order)
+        .limit(v)
+        .select(
+            F.row_number().over(Window.orderBy(*order)).alias("r"),
+            F.col("cf").alias("c"),
+        )
+    )
 
 
 def token_stats(docs: DataFrame) -> DataFrame:
@@ -146,16 +256,11 @@ def fingerprints(docs: DataFrame) -> DataFrame:
 
 def token_freq(docs: DataFrame) -> DataFrame:
     """Corpus-wide token frequency table (the wordcount of LLM-data
-    pipelines): total occurrences + document frequency per token.
-    One explode + one shuffle; partial aggregation does the heavy
-    lifting map-side."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    tok = docs.repartition(par).select(
-        "doc_id", F.explode(tokens("text")).alias("term")
-    )
-    return tok.groupBy("term").agg(
-        F.count("*").alias("n_occurrences"),
-        F.countDistinct("doc_id").alias("doc_freq"),
+    pipelines): total occurrences + document frequency per token — the
+    vocabulary's cf and df. One term-keyed aggregation of the scope's
+    postings; partial aggregation does the heavy lifting map-side."""
+    return _vocab(docs).select(
+        "term", F.col("cf").alias("n_occurrences"), F.col("df").alias("doc_freq")
     )
 
 
@@ -249,18 +354,13 @@ def token_entropy(docs: DataFrame) -> DataFrame:
     so the aggregate is order-independent and engine-portable; the two
     remaining float ops (one divide, one subtract) happen once per
     output row."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    # r9: hash by doc_id — the (doc_id, term) count and the per-doc
-    # rollup then need no further exchange (subset rule, guide §2.4)
-    tok = docs.repartition(par, "doc_id").select(
-        "doc_id", F.explode(tokens("text")).alias("term")
-    )
-    cnt = tok.groupBy("doc_id", "term").agg(F.count("*").alias("c"))
-    agg = cnt.groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("n_tokens"),
+    # the postings are hash-partitioned by doc_id, so the per-doc
+    # rollup needs no exchange
+    agg = postings(docs).groupBy("doc_id").agg(
+        F.sum("tf").cast("long").alias("n_tokens"),
         F.count("*").alias("distinct_tokens"),
         F.sum(
-            F.round(F.col("c") * F.log("c"), 8).cast("decimal(18,8)")
+            F.round(F.col("tf") * F.log("tf"), 8).cast("decimal(18,8)")
         ).alias("_clnc"),
     )
     return agg.select(
@@ -275,18 +375,13 @@ def token_entropy(docs: DataFrame) -> DataFrame:
 
 def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-k TF-IDF terms per document: tf * ln((N+1)/(df+1)),
-    deterministic tiebreak on the term."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    # r9: hash by doc_id — the (doc_id, term) tf, the distinct, and
-    # the per-doc window all reuse the layout (guide §2.4)
-    tok = docs.repartition(par, "doc_id").select(
-        "doc_id", F.explode(tokens("text")).alias("term")
-    )
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    df = tok.distinct().groupBy("term").agg(F.count("*").alias("df"))
+    deterministic tiebreak on the term. tf is the postings', df the
+    vocabulary's; the per-doc window reuses the postings' doc_id
+    layout."""
+    df = _vocab(docs).select("term", "df")
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     scored = (
-        tf.join(F.broadcast(df), "term")
+        postings(docs).join(F.broadcast(df), "term")
         .crossJoin(F.broadcast(n_docs))
         .withColumn(
             "score",
@@ -319,9 +414,7 @@ def token_typo_pairs(docs: DataFrame, max_dist: int = 1) -> DataFrame:
     theorem is per-deletion-depth)."""
     if max_dist != 1:
         raise ValueError("token_typo_pairs blocking supports max_dist=1 only")
-    vocab = (
-        docs.select(F.explode(tokens("text")).alias("term")).distinct()
-    )
+    vocab = _word_counts(docs).select("term")
     # term itself + all 1-deletion variants, deduplicated per term
     variants = vocab.select(
         "term",
@@ -476,22 +569,14 @@ def rare_token_ratio(docs: DataFrame, df_max: int = RARE_DF_MAX) -> DataFrame:
     identifiers, or language the corpus doesn't otherwise contain —
     a standard curation signal next to entropy and repetition.
 
-    Scale shape: one explode + distinct (the same (doc_id, term) stream
-    ``tfidf_top_terms`` builds), a token-keyed doc-frequency aggregate,
-    and one join back on the token key — work ∝ corpus token volume
-    with map-side partial aggregation; no window, no driver collect.
-    All outputs are exact integers + one rounded double division."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    # r9: hash by doc_id — the (doc_id, term) distinct needs no
-    # second exchange (subset rule, guide §2.4)
-    tok = (
-        docs.repartition(par, "doc_id")
-        .select("doc_id", F.explode(tokens("text")).alias("term"))
-        .distinct()
-    )
-    df = tok.groupBy("term").agg(F.count("*").alias("df"))
+    Scale shape: the scope's postings (one row per (doc_id, term), the
+    stream ``tfidf_top_terms`` reads), the vocabulary's df, and one
+    join back on the token key — work ∝ corpus token volume with
+    map-side partial aggregation; no window, no driver collect. All
+    outputs are exact integers + one rounded double division."""
     per_doc = (
-        tok.join(df, "term")
+        postings(docs)
+        .join(_vocab(docs).select("term", "df"), "term")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("distinct_tokens"),
@@ -527,16 +612,6 @@ def token_bigram_rates(docs: DataFrame, k: int = BIGRAM_TOP_K) -> DataFrame:
     corpus; top-k is TakeOrdered (count desc, then bigram) — never a
     single-partition global sort."""
     toks = tokens("text")
-    bigrams = F.filter(
-        F.transform(
-            toks,
-            lambda t, i: F.when(
-                i < F.size(toks) - 1,
-                F.struct(t.alias("x"), F.element_at(toks, i + 2).alias("y")),
-            ),
-        ),
-        lambda s: s.isNotNull(),
-    )
     par = docs.sparkSession.sparkContext.defaultParallelism
     base = docs.repartition(par)
     uni = (
@@ -545,7 +620,7 @@ def token_bigram_rates(docs: DataFrame, k: int = BIGRAM_TOP_K) -> DataFrame:
         .agg(F.count("*").alias("n"))
     )
     bi = (
-        base.select(F.explode(bigrams).alias("b"))
+        base.select(F.explode(_bigrams(toks)).alias("b"))
         .select(F.col("b.x").alias("x"), F.col("b.y").alias("y"))
         .groupBy("x", "y")
         .agg(F.count("*").alias("n_xy"))
@@ -628,7 +703,6 @@ def quality_model_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-@scoped
 def source_kl(docs: DataFrame) -> DataFrame:
     """Per-source KL divergence of the source's unigram distribution
     against the whole-corpus distribution — the drift/outlier signal
@@ -641,19 +715,21 @@ def source_kl(docs: DataFrame) -> DataFrame:
     DECIMAL (the ``token_entropy`` pattern) so the aggregate is
     order-independent and engine-portable.
 
-    Scale shape: one explode + (source, term) partial-agg, a term-keyed
+    Scale shape: the scope's postings joined on (doc_id, source) and
+    rolled up per (source, term) with map-side partials, a term-keyed
     corpus rollup derived FROM that table (second small agg, not a
     second scan), one term-keyed join, and a broadcast of the tiny
     per-source totals. Work is proportional to corpus token volume;
     no windows, no driver collect."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    tok = docs.repartition(par).select(
-        "source", F.explode(tokens("text")).alias("term")
-    )
     # Four consumers derive from the (source, term) counts (corpus
-    # rollup, per-source totals, grand total, contribution join) —
-    # persist so the explode+partial-agg subtree runs once.
-    st = query_scope().persist(tok.groupBy("source", "term").agg(F.count("*").alias("c_st")))
+    # rollup, per-source totals, grand total, contribution join); their
+    # plans reuse its exchanges.
+    st = (
+        postings(docs)
+        .join(docs.select("doc_id", "source"), "doc_id")
+        .groupBy("source", "term")
+        .agg(F.sum("tf").cast("long").alias("c_st"))
+    )
     s_tot = st.groupBy("source").agg(
         F.sum("c_st").cast("long").alias("n_s"),
         F.count("*").cast("long").alias("distinct_terms"),
@@ -692,7 +768,6 @@ def source_kl(docs: DataFrame) -> DataFrame:
     )
 
 
-@scoped
 def docs_perplexity(docs: DataFrame) -> DataFrame:
     """CCNet-style unigram-LM perplexity filtering: score every document
     by its cross-entropy under the corpus's own unigram distribution —
@@ -705,26 +780,20 @@ def docs_perplexity(docs: DataFrame) -> DataFrame:
     DECIMAL (order-independent, engine-portable); ln/exp appear once
     per output row.
 
-    Scale shape: one explode into (doc, term) counts (scope-persisted —
-    the corpus frequency table derives from it, no second scan), a
-    term-keyed join, per-doc aggregation, and a one-row broadcast of
-    the grand total. Work ∝ corpus token volume."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    # r9: hash by doc_id — the persisted (doc_id, term) counts build
-    # with one exchange and the per-doc rollup reuses the layout
-    tok = docs.repartition(par, "doc_id").select(
-        "doc_id", F.explode(tokens("text")).alias("term")
-    )
-    dt = query_scope().persist(tok.groupBy("doc_id", "term").agg(F.count("*").alias("c_dt")))
-    freq = dt.groupBy("term").agg(F.sum("c_dt").cast("long").alias("c_t"))
+    Scale shape: the scope's (doc, term) postings, the vocabulary's
+    cf derived from them (no second scan), a term-keyed join, per-doc
+    aggregation, and a one-row broadcast of the grand total. Work ∝
+    corpus token volume."""
+    freq = _vocab(docs).select("term", F.col("cf").alias("c_t"))
     n_all = freq.agg(F.sum("c_t").cast("long").alias("n_all"))
     per_doc = (
-        dt.join(freq, "term")
+        postings(docs)
+        .join(freq, "term")
         .groupBy("doc_id")
         .agg(
-            F.sum("c_dt").cast("long").alias("n_tokens"),
+            F.sum("tf").cast("long").alias("n_tokens"),
             F.sum(
-                F.round(F.col("c_dt") * F.log("c_t"), 8).cast("decimal(18,8)")
+                F.round(F.col("tf") * F.log("c_t"), 8).cast("decimal(18,8)")
             ).alias("_sl"),
         )
     )
@@ -752,8 +821,6 @@ def docs_ccnet_buckets(docs: DataFrame) -> DataFrame:
     flip a bucket (the value_percentiles parity argument). At 100 TB
     swap in approx_percentile for the boundary pass; buckets are a
     one-scan CASE either way."""
-    # docs_perplexity's persisted (doc, term) counts share this scope,
-    # so they stay cached while pp itself materializes.
     pp = query_scope().persist(docs_perplexity(docs))
     b = pp.agg(
         F.round(F.expr("percentile(perplexity, 0.3333333333333333)"), 6).alias("b1"),
@@ -778,18 +845,9 @@ def _hashed_grams(docs: DataFrame, n_buckets: int) -> DataFrame:
     """(doc_id, lang, bucket) stream: word unigrams + adjacent bigrams,
     md5-hashed into ``n_buckets`` buckets — DSIR's feature space. Built
     per-row with zero-shuffle higher-order transforms (the
-    token_bigram_rates gram idiom)."""
+    ``_bigrams`` stream, each pair joined by a space)."""
     toks = tokens("text")
-    bigrams = F.filter(
-        F.transform(
-            toks,
-            lambda t, i: F.when(
-                i < F.size(toks) - 1,
-                F.concat_ws(" ", t, F.element_at(toks, i + 2)),
-            ),
-        ),
-        lambda s: s.isNotNull(),
-    )
+    bigrams = F.transform(_bigrams(toks), lambda b: F.concat_ws(" ", b["x"], b["y"]))
     par = docs.sparkSession.sparkContext.defaultParallelism
     return docs.repartition(par).select(
         "doc_id",
@@ -904,50 +962,18 @@ ZIPF_TOP_V = 500
 
 def token_zipf_fit(docs: DataFrame, v: int = ZIPF_TOP_V) -> DataFrame:
     """Zipf-law fit over the top-``v`` token frequencies: OLS of
-    ln(freq) on ln(rank) — the one-row corpus health check (natural
-    text sits near slope −1; a badly skewed or templated corpus
-    doesn't). Log-log points are rounded then summed as exact DECIMAL
-    (order-independent); the closed-form slope/intercept/r² arithmetic
-    runs once on the one-row aggregate in an order mirrored by the
-    oracle.
+    ln(freq) on ln(rank) (``_loglog_fit``) — the one-row corpus health
+    check (natural text sits near slope −1; a badly skewed or
+    templated corpus doesn't).
 
-    Scale shape: one explode + term count (map-side partials), a
-    TakeOrdered top-``v`` cut (never a global sort), then a window
-    over exactly ``v`` rows — bounded whatever the corpus size."""
-    from pyspark.sql import Window
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    tok = docs.repartition(par).select(F.explode(tokens("text")).alias("term"))
-    freq = tok.groupBy("term").agg(F.count("*").alias("c"))
-    top = freq.orderBy(F.col("c").desc(), "term").limit(v)
-    w = Window.orderBy(F.col("c").desc(), "term")
-    lr = F.log(F.col("r").cast("double"))
-    lc = F.log(F.col("c").cast("double"))
-    pts = top.select(F.row_number().over(w).alias("r"), "c").select(
-        F.round(lr, 8).cast("decimal(18,8)").alias("x"),
-        F.round(lc, 8).cast("decimal(18,8)").alias("y"),
-        F.round(lr * lc, 8).cast("decimal(18,8)").alias("xy"),
-        F.round(lr * lr, 8).cast("decimal(18,8)").alias("xx"),
-        F.round(lc * lc, 8).cast("decimal(18,8)").alias("yy"),
-    )
-    agg = pts.agg(
-        F.count("*").cast("long").alias("n_terms"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum("xy").cast("double").alias("sxy"),
-        F.sum("xx").cast("double").alias("sxx"),
-        F.sum("yy").cast("double").alias("syy"),
-    )
-    n = F.col("n_terms").cast("double")
-    cov = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = n * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = cov / varx
-    return agg.select(
-        "n_terms",
-        F.round(slope, 6).alias("zipf_slope"),
-        F.round((F.col("sy") - slope * F.col("sx")) / n, 6).alias("zipf_intercept"),
-        F.round((cov * cov) / (varx * vary), 6).alias("r2"),
+    Scale shape: the vocabulary's cf (map-side partials), a TakeOrdered
+    top-``v`` cut (never a global sort), then a window over exactly
+    ``v`` rows — bounded whatever the corpus size."""
+    return _loglog_fit(_top_cf(docs, v), F.col("r"), F.col("c")).select(
+        F.col("n").alias("n_terms"),
+        F.round("slope", 6).alias("zipf_slope"),
+        F.round("intercept", 6).alias("zipf_intercept"),
+        F.round("r2", 6).alias("r2"),
     )
 
 
@@ -986,27 +1012,14 @@ def docs_bigram_perplexity(docs: DataFrame) -> DataFrame:
     and are excluded on both engines.
 
     Scale shape: bigrams are built per-row with a zero-shuffle
-    higher-order transform; (doc, x, y) counts are scope-persisted —
-    the corpus bigram table AND its prefix rollup both derive from
-    them; joins run bigram- and prefix-keyed with map-side partials."""
+    higher-order transform (``_bigrams``); (doc, x, y) counts are
+    scope-persisted — the corpus bigram table AND its prefix rollup
+    both derive from them; joins run bigram- and prefix-keyed with
+    map-side partials."""
     par = docs.sparkSession.sparkContext.defaultParallelism
-    toks = tokens("text")
-    pairs = F.filter(
-        F.transform(
-            toks,
-            lambda t, i: F.when(
-                i < F.size(toks) - 1,
-                F.struct(
-                    F.element_at(toks, i + 1).alias("x"),
-                    F.element_at(toks, i + 2).alias("y"),
-                ),
-            ),
-        ),
-        lambda s: s.isNotNull(),
-    )
     bi = (
         docs.repartition(par, "doc_id")
-        .select("doc_id", F.explode(pairs).alias("b"))
+        .select("doc_id", F.explode(_bigrams(tokens("text"))).alias("b"))
         .select("doc_id", F.col("b.x").alias("x"), F.col("b.y").alias("y"))
     )
     dxy = query_scope().persist(
@@ -1050,19 +1063,11 @@ def vocab_coverage(
     occurrences the top-V vocabulary covers, for V in ``sizes`` — the
     number that decides a vocab size before training a tokenizer.
 
-    Scale shape: one term count (map-side partials), a TakeOrdered
+    Scale shape: the vocabulary's cf (map-side partials), a TakeOrdered
     top-max(V) cut (never a global sort), a window over ≤ max(V) rows,
     one conditional aggregate per V in a single pass, and a one-row
     broadcast of the corpus total; output is |sizes| rows."""
-    from pyspark.sql import Window
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    tok = docs.repartition(par).select(F.explode(tokens("text")).alias("term"))
-    freq = tok.groupBy("term").agg(F.count("*").alias("c"))
-    top = freq.orderBy(F.col("c").desc(), "term").limit(max(sizes))
-    w = Window.orderBy(F.col("c").desc(), "term")
-    ranked = top.withColumn("r", F.row_number().over(w))
-    agg = ranked.agg(
+    agg = _top_cf(docs, max(sizes)).agg(
         *[
             F.sum(F.when(F.col("r") <= v, F.col("c")))
             .cast("long")
@@ -1070,7 +1075,7 @@ def vocab_coverage(
             for v in sizes
         ]
     )
-    total = freq.agg(F.sum("c").cast("long").alias("n_total"))
+    total = _vocab(docs).agg(F.sum("cf").cast("long").alias("n_total"))
     stack_args = ", ".join(f"{v}L, c{v}" for v in sizes)
     return (
         agg.crossJoin(F.broadcast(total))
@@ -1136,23 +1141,19 @@ def cms_token_counts(
     memory regardless of vocabulary (the exact groupBy this query also
     carries is the AUDIT side, not the sketch side). Bucket hashes are
     md5-derived (engine-shared), so the whole sketch — including its
-    collision errors — is deterministic and value-hash-oracled."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    tok = docs.repartition(par).select(F.explode(tokens("text")).alias("term"))
+    collision errors — is deterministic and value-hash-oracled. Both
+    sides read the vocabulary: each term adds its cf to its ``depth``
+    counters, the same sums as one increment per occurrence."""
+    vocab = _vocab(docs).select("term", F.col("cf").alias("true_count"))
     j = F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("j")
     bucket = (hash32(F.concat_ws(":", F.col("j"), F.col("term"))) % width).alias("bucket")
     counters = (
-        tok.select("term", j)
-        .select("j", bucket)
+        vocab.select("term", "true_count", j)
+        .select("j", bucket, "true_count")
         .groupBy("j", "bucket")
-        .agg(F.count("*").alias("c"))
+        .agg(F.sum("true_count").alias("c"))
     )
-    true_top = (
-        tok.groupBy("term")
-        .agg(F.count("*").alias("true_count"))
-        .orderBy(F.col("true_count").desc(), "term")
-        .limit(k)
-    )
+    true_top = vocab.orderBy(F.col("true_count").desc(), "term").limit(k)
     probes = true_top.select("term", "true_count", j).select(
         "term", "true_count", "j", bucket
     )
@@ -1271,11 +1272,7 @@ def bpe_merges(
     Returns (merge_rank, left, right, pair_count) — rank 0 is the
     first, most frequent merge."""
     spark = docs.sparkSession
-    words = (
-        docs.select(F.explode(tokens("text")).alias("term"))
-        .groupBy("term")
-        .agg(F.count("*").alias("n"))
-    )
+    words = _word_counts(docs)
     # Materialize the initial vocab eagerly: every round's argmax would
     # otherwise re-run the corpus scan + word groupBy from parquet
     # (measured 18.7s -> ~4s at sf0.1 for 20 merges), and re-checkpoint
@@ -1371,10 +1368,11 @@ def bpe_encode(
     millions at 100 TB, never the corpus), each merge one JVM
     ``F.aggregate`` fold (no Python, no shuffle), lineage
     localCheckpoint-ed every ``checkpoint_every`` merges so expression
-    depth stays bounded at production merge counts. The corpus is
-    touched exactly twice: one (doc_id, word) count shuffle and one
-    encoded-length join back (word-keyed hash join; the HOT words an
-    AQE skew split handles like any power-law key). Driver traffic is
+    depth stays bounded at production merge counts. The (doc_id, word)
+    counts are the scope's postings and the words their vocabulary;
+    the corpus meets the encoding in one encoded-length join back
+    (word-keyed hash join; the HOT words an AQE skew split handles like
+    any power-law key). Driver traffic is
     the merge table itself (≤ n_merges rows — a model artifact, like
     pq_trained's codebook), never word or corpus rows.
 
@@ -1389,15 +1387,8 @@ def bpe_encode(
         .orderBy("merge_rank")
         .collect()
     ]
-    wc = (
-        docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("cnt"))
-    )
-    wc = query_scope().persist(wc)
-    enc = wc.select("term").distinct().select(
-        "term", F.split("term", "").alias("syms")
-    )
+    wc = index(docs).postings.select("doc_id", "term", F.col("tf").alias("cnt"))
+    enc = _vocab(docs).select("term", F.split("term", "").alias("syms"))
     for i, (a, b) in enumerate(ranked):
         if checkpoint_every and i and i % checkpoint_every == 0:
             enc = enc.localCheckpoint()
@@ -1467,8 +1458,6 @@ def quality_auc_report(docs: DataFrame) -> DataFrame:
     rounded one). A global per-row sort would be the naive plan; this
     one's sort touches the bin table. NULL-score rows (empty docs)
     drop per scorer before counting."""
-    from pyspark.sql import Window as W
-
     q = quality_scores(docs)
     m = quality_model_scores(docs).select("doc_id", "quality_logit")
     lab = quality_filter(docs).select("doc_id", F.col("keep").alias("label"))
@@ -1495,10 +1484,8 @@ def quality_auc_report(docs: DataFrame) -> DataFrame:
         F.count(F.when(F.col("label"), F.lit(1))).alias("p"),
         F.count(F.when(~F.col("label"), F.lit(1))).alias("n"),
     )
-    w = (
-        W.partitionBy("scorer")
-        .orderBy("score")
-        .rowsBetween(W.unboundedPreceding, -1)
+    w = Window.partitionBy("scorer").orderBy("score").rowsBetween(
+        Window.unboundedPreceding, -1
     )
     c = bins.withColumn("cn", F.coalesce(F.sum("n").over(w), F.lit(0)))
     agg = c.groupBy("scorer").agg(
@@ -1556,27 +1543,8 @@ def quality_signal_corr(docs: DataFrame) -> DataFrame:
         .select("p.*")
         .filter(F.col("x").isNotNull() & F.col("y").isNotNull())
     )
-    pts = e.select(
-        "sig_a",
-        "sig_b",
-        F.round(F.col("x"), 8).cast("decimal(38,8)").alias("x"),
-        F.round(F.col("y"), 8).cast("decimal(38,8)").alias("y"),
-        F.round(F.col("x") * F.col("y"), 8).cast("decimal(38,8)").alias("xy"),
-        F.round(F.col("x") * F.col("x"), 8).cast("decimal(38,8)").alias("xx"),
-        F.round(F.col("y") * F.col("y"), 8).cast("decimal(38,8)").alias("yy"),
-    )
-    agg = pts.groupBy("sig_a", "sig_b").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum("xy").cast("double").alias("sxy"),
-        F.sum("xx").cast("double").alias("sxx"),
-        F.sum("yy").cast("double").alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    cov = nd * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = nd * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = nd * F.col("syy") - F.col("sy") * F.col("sy")
+    agg = _moments(e, F.col("x"), F.col("y"), "sig_a", "sig_b", dec="decimal(38,8)")
+    cov, varx, vary = F.col("cov"), F.col("varx"), F.col("vary")
     return agg.select(
         "sig_a",
         "sig_b",
@@ -1603,31 +1571,22 @@ def vocab_growth_fit(docs: DataFrame, bucket: int = VOCAB_BUCKET_DOCS) -> DataFr
     each term is attributed to the bucket of its FIRST occurrence
     (min doc_id — one map-side-combined aggregation, the same
     first-occurrence map discipline as the novelty operator), token
-    counts roll up per bucket, and the cumulative window + the log-log
-    OLS run over the bucket table only. With the deploy convention
+    counts roll up per bucket — both order-free aggregates of the
+    scope's postings — and the cumulative window + the log-log OLS
+    (``_loglog_fit``) run over the bucket table only. With the deploy convention
     bucket ∝ corpus/1024 the checkpoint table is bounded, so the one
     ordered window never sees data-scale rows (the raw per-doc
     formulation would drag every doc through a single-partition
     window). Log-log points are rounded then summed as exact DECIMAL
     (zipf-fit convention); output is ONE row: n_points, heaps_k,
     heaps_beta, r2."""
-    from pyspark.sql import Window
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    tok = docs.repartition(par).select(
-        (F.col("doc_id") / bucket).cast("long").alias("b"),
-        F.col("doc_id"),
-        F.explode(tokens("text")).alias("term"),
-    )
-    toks_per_bucket = tok.groupBy("b").agg(
-        F.count("*").alias("n_tok")
-    )
-    first = tok.groupBy("term").agg(F.min("doc_id").alias("_fd"))
-    new_per_bucket = first.groupBy(
-        (F.col("_fd") / bucket).cast("long").alias("b")
-    ).agg(F.count("*").alias("n_new"))
+    p = postings(docs)
+    b = (F.col("doc_id") / bucket).cast("long").alias("b")
+    toks_per_bucket = p.groupBy(b).agg(F.sum("tf").alias("n_tok"))
+    first = p.groupBy("term").agg(F.min("doc_id").alias("doc_id"))
+    new_per_bucket = first.groupBy(b).agg(F.count("*").alias("n_new"))
     w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
-    pts0 = (
+    pts = (
         toks_per_bucket.join(new_per_bucket, "b", "left")
         .select("b", "n_tok", F.coalesce("n_new", F.lit(0)).alias("n_new"))
         .select(
@@ -1637,37 +1596,11 @@ def vocab_growth_fit(docs: DataFrame, bucket: int = VOCAB_BUCKET_DOCS) -> DataFr
         )
         .filter((F.col("cum_tok") > 0) & (F.col("cum_vocab") > 0))
     )
-    lx = F.log(F.col("cum_tok").cast("double"))
-    ly = F.log(F.col("cum_vocab").cast("double"))
-    pts = pts0.select(
-        F.round(lx, 8).cast("decimal(18,8)").alias("x"),
-        F.round(ly, 8).cast("decimal(18,8)").alias("y"),
-        F.round(lx * ly, 8).cast("decimal(18,8)").alias("xy"),
-        F.round(lx * lx, 8).cast("decimal(18,8)").alias("xx"),
-        F.round(ly * ly, 8).cast("decimal(18,8)").alias("yy"),
-    )
-    agg = pts.agg(
-        F.count("*").cast("long").alias("n_points"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum("xy").cast("double").alias("sxy"),
-        F.sum("xx").cast("double").alias("sxx"),
-        F.sum("yy").cast("double").alias("syy"),
-    )
-    n = F.col("n_points").cast("double")
-    cov = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = n * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = cov / varx
-    return agg.select(
-        "n_points",
-        F.when(
-            varx > 0, F.round(F.exp((F.col("sy") - slope * F.col("sx")) / n), 6)
-        ).alias("heaps_k"),
-        F.when(varx > 0, F.round(slope, 6)).alias("heaps_beta"),
-        F.when(
-            (varx > 0) & (vary > 0), F.round((cov * cov) / (varx * vary), 6)
-        ).alias("r2"),
+    return _loglog_fit(pts, F.col("cum_tok"), F.col("cum_vocab")).select(
+        F.col("n").alias("n_points"),
+        F.round(F.exp("intercept"), 6).alias("heaps_k"),
+        F.round("slope", 6).alias("heaps_beta"),
+        F.round("r2", 6).alias("r2"),
     )
 
 
@@ -1921,6 +1854,26 @@ def _uni_logprobs(counts: dict) -> dict:
     return {p: math.log((c + 1) / tot) for p, c in counts.items()}
 
 
+def _piece_counts(words: DataFrame, pieces) -> DataFrame:
+    """(piece, c) of a (term, n) words table: c sums the word counts n
+    over every piece ``pieces(term)`` yields — one mapInPandas pass
+    (per-batch dict partials) and one map-side-combined aggregation."""
+
+    def count(batches):
+        for pdf in batches:
+            acc: dict = {}
+            for term, n in zip(pdf["term"], pdf["n"]):
+                for p in pieces(term):
+                    acc[p] = acc.get(p, 0) + int(n)
+            yield pd.DataFrame({"piece": list(acc), "c": list(acc.values())})
+
+    return (
+        words.mapInPandas(count, "piece string, c long")
+        .groupBy("piece")
+        .agg(F.sum("c").cast("long").alias("c"))
+    )
+
+
 @scoped
 def unigram_lm_vocab(
     docs: DataFrame, em_rounds: int = UNI_EM_ROUNDS
@@ -1952,33 +1905,17 @@ def unigram_lm_vocab(
     table against a pure-python reference running the identical
     algorithm, at two SFs."""
     spark = docs.sparkSession
-    words_df = query_scope().persist(
-        docs.select(F.explode(tokens("text")).alias("term"))
-        .groupBy("term")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
+    words_df = query_scope().persist(_word_counts(docs))
     # seed counts are distributable (substring counts + sum): one more
     # mapInPandas pass over the words table, so the driver only ever
     # sees piece tables, never word rows.
-
-    def _substr_counts(batches):
-        for pdf in batches:
-            counts: dict = {}
-            for term, n in zip(pdf["term"], pdf["n"]):
-                ln = len(term)
-                for j in range(ln):
-                    for i in range(j + 1, min(j + UNI_MAX_PIECE_LEN, ln) + 1):
-                        p = term[j:i]
-                        counts[p] = counts.get(p, 0) + int(n)
-            yield pd.DataFrame(
-                {"piece": list(counts), "c": list(counts.values())}
-            )
-
-    seed_schema = "piece string, c long"
-    seed_agg = (
-        words_df.mapInPandas(_substr_counts, seed_schema)
-        .groupBy("piece")
-        .agg(F.sum("c").cast("long").alias("c"))
+    seed_agg = _piece_counts(
+        words_df,
+        lambda t: (
+            t[j:i]
+            for j in range(len(t))
+            for i in range(j + 1, min(j + UNI_MAX_PIECE_LEN, len(t)) + 1)
+        ),
     )
     singles = {
         r.piece: r.c for r in seed_agg.filter(F.length("piece") == 1).collect()
@@ -1993,24 +1930,8 @@ def unigram_lm_vocab(
     counts = {**singles, **multi}
     for _ in range(em_rounds):
         logp = _uni_logprobs(counts)
-
-        def _estep(batches, logp=logp):
-            for pdf in batches:
-                acc: dict = {}
-                for term, n in zip(pdf["term"], pdf["n"]):
-                    for p in _uni_viterbi(term, logp, UNI_MAX_PIECE_LEN):
-                        acc[p] = acc.get(p, 0) + int(n)
-                yield pd.DataFrame(
-                    {"piece": list(acc), "c": list(acc.values())}
-                )
-
-        new = {
-            r.piece: r.c
-            for r in words_df.mapInPandas(_estep, seed_schema)
-            .groupBy("piece")
-            .agg(F.sum("c").cast("long").alias("c"))
-            .collect()
-        }
+        segment = functools.partial(_uni_viterbi, logp=logp, max_len=UNI_MAX_PIECE_LEN)
+        new = {r.piece: r.c for r in _piece_counts(words_df, segment).collect()}
         kept_multi = sorted(
             ((p, c) for p, c in new.items() if len(p) > 1),
             key=lambda t: (-t[1], t[0]),
@@ -2040,8 +1961,9 @@ def unigram_encode(docs: DataFrame, vocab: DataFrame | None = None) -> DataFrame
     comparable to ``bpe_encode_documents``' columns).
 
     Scale shape mirrors bpe_encode: segmentation is word-local, so the
-    Viterbi UDF runs over DISTINCT words only; the corpus is touched
-    for one (doc_id, word) count shuffle and one word-keyed join back.
+    Viterbi UDF runs over DISTINCT words only (the vocabulary), and the
+    (doc_id, word) counts are the scope's postings, joined back once by
+    word.
     The piece table rides in as a closure broadcast (model artifact).
     Rows-only (inherits the trainer); per-word segmentations pinned
     against the shared ``_uni_viterbi`` in tests."""
@@ -2057,14 +1979,8 @@ def unigram_encode(docs: DataFrame, vocab: DataFrame | None = None) -> DataFrame
                 out.append((term, len(seg)))
             yield pd.DataFrame(out, columns=["term", "n_pieces_w"])
 
-    wc = query_scope().persist(
-        docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    enc = wc.select("term").distinct().mapInPandas(
-        _enc, "term string, n_pieces_w long"
-    )
+    wc = index(docs).postings.select("doc_id", "term", F.col("tf").alias("cnt"))
+    enc = _vocab(docs).select("term").mapInPandas(_enc, "term string, n_pieces_w long")
     per_doc = (
         wc.join(enc, "term")
         .groupBy("doc_id")

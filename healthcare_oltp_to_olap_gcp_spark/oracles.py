@@ -115,15 +115,36 @@ def _dsum(expr: str) -> str:
     return _DSUM.format(expr=expr)
 
 
-_JACCARD_PAIRS = f"""
-WITH {SHINGLES_CTE},
-pairs AS (
+# The exact all-pairs Jaccard of the shingle sets, materialized once:
+# DuckDB would otherwise re-evaluate it inside every recursive step of
+# the components CTE that reads it.
+_PAIRS_CTE = f"""{SHINGLES_CTE},
+pairs AS MATERIALIZED (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
     ROUND(len(list_intersect(a.s, b.s)) / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE), 6) AS jaccard
   FROM shf a JOIN shf b ON a.doc_id < b.doc_id
-)
+)"""
+
+_JACCARD_PAIRS = f"""
+WITH {_PAIRS_CTE}
 SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= 0.8
 """
+
+# The near-dup components (threshold 0.8) of operators/dedup
+# .dedup_components: ``comp`` (doc_id, component = the smallest doc_id
+# the pair graph reaches) over every document with a near-dup. Format
+# it after ``WITH RECURSIVE``.
+_COMPONENTS_CTE = f"""{_PAIRS_CTE},
+dup AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.8),
+edges AS MATERIALIZED (SELECT doc_a AS a, doc_b AS b FROM dup
+                       UNION SELECT doc_b, doc_a FROM dup),
+nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
+reach(src, dst) AS (
+  SELECT doc_id, doc_id FROM nodes
+  UNION
+  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
+),
+comp AS (SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src)"""
 
 # Mirrors functions/vectors.normalized + dot: element-wise divide by the
 # vector norm once, then a single sequential-fold dot per pair.
@@ -530,38 +551,11 @@ FROM d
     # (deterministic; recall deficit ≈ 8e-8, asserted in tests).
     "minhash_lsh_dup_pairs": _JACCARD_PAIRS,
     "dedup_components": f"""
-WITH RECURSIVE {SHINGLES_CTE},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-    ROUND(len(list_intersect(a.s, b.s)) / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE), 6) AS jaccard
-  FROM shf a JOIN shf b ON a.doc_id < b.doc_id
-),
-dup AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.8),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM dup UNION SELECT doc_b, doc_a FROM dup),
-nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-)
-SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src
+WITH RECURSIVE {_COMPONENTS_CTE}
+SELECT doc_id, component FROM comp
 """,
     "clean_documents": f"""
-WITH RECURSIVE {SHINGLES_CTE},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-    ROUND(len(list_intersect(a.s, b.s)) / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE), 6) AS jaccard
-  FROM shf a JOIN shf b ON a.doc_id < b.doc_id
-),
-dup AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.8),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM dup UNION SELECT doc_b, doc_a FROM dup),
-nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-),
-comp AS (SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src),
+WITH RECURSIVE {_COMPONENTS_CTE},
 drops AS (SELECT doc_id FROM comp WHERE doc_id <> component)
 SELECT d.doc_id, d.lang, d.source, CAST(length(d.text) AS BIGINT) AS n_chars
 FROM documents d
@@ -1737,21 +1731,7 @@ def _split_grouped_oracle() -> str:
     t_test = HASH_DOMAIN * TEST_PCT // 100
     t_val = HASH_DOMAIN * (TEST_PCT + VAL_PCT) // 100
     return f"""
-WITH RECURSIVE {SHINGLES_CTE},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-    ROUND(len(list_intersect(a.s, b.s)) / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE), 6) AS jaccard
-  FROM shf a JOIN shf b ON a.doc_id < b.doc_id
-),
-dup AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.8),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM dup UNION SELECT doc_b, doc_a FROM dup),
-nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-),
-comp AS (SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src),
+WITH RECURSIVE {_COMPONENTS_CTE},
 g AS (
   SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS group_key
   FROM documents d LEFT JOIN comp c USING (doc_id)
@@ -2621,24 +2601,7 @@ FROM agg
 # component CTE x the rounded model logit; survivor = max logit
 # (NULLS LAST), ties to the smaller doc_id.
 ORACLE_SQL["clean_documents_keep_best"] = f"""
-WITH RECURSIVE {SHINGLES_CTE},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-    ROUND(len(list_intersect(a.s, b.s))
-          / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE), 6)
-      AS jaccard
-  FROM shf a JOIN shf b ON a.doc_id < b.doc_id
-),
-dup AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.8),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM dup
-          UNION SELECT doc_b, doc_a FROM dup),
-nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-),
-comp AS (SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src),
+WITH RECURSIVE {_COMPONENTS_CTE},
 q AS (SELECT doc_id, quality_logit FROM ({ORACLE_SQL["docs_quality_model"]})),
 m AS (SELECT c.doc_id, c.component, q.quality_logit
       FROM comp c JOIN q USING (doc_id)),
@@ -2700,24 +2663,7 @@ FROM documents GROUP BY 1, 2
 # (operators/dedup.docs_dedup_report): scalar rollups of the exact-dup,
 # component, contamination and curated oracles.
 ORACLE_SQL["docs_dedup_report"] = f"""
-WITH RECURSIVE {SHINGLES_CTE},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-    ROUND(len(list_intersect(a.s, b.s))
-          / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE), 6)
-      AS jaccard
-  FROM shf a JOIN shf b ON a.doc_id < b.doc_id
-),
-dup AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.8),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM dup
-          UNION SELECT doc_b, doc_a FROM dup),
-nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-),
-comp AS (SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src)
+WITH RECURSIVE {_COMPONENTS_CTE}
 SELECT
   (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_docs,
   (SELECT CAST(COUNT(DISTINCT md5(text)) AS BIGINT) FROM documents)

@@ -58,3 +58,12 @@ def test_recall_report_counts_the_postings_once(spark):
         if re.search(r"^Left keys \[1\]: \[s#\d+\]$", b, re.M)
     ]
     assert len(self_joins) == 1, self_joins
+
+
+def test_incremental_dedup_computes_the_signatures_once(spark):
+    """Both sides of the new × old band-bucket join read one persisted
+    bucket frame: the plan holds one signature projection, not one per
+    side."""
+    plan = plan_text(dedup.dedup_incremental(table(spark, SF001, "documents")))
+    signatures = [b for b in plan_details(plan, "Project") if "array_min(" in b]
+    assert len(signatures) == 1, signatures

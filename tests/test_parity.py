@@ -109,6 +109,46 @@ DEDUP_KEYS = [
     "dedup_segments",
 ]
 
+# Every oracled text statistic (operators/textquality: the term-count
+# keys read the scope's postings and vocabulary of operators/corpus,
+# the row-local signals stay per-row projections).
+TEXT_KEYS = [
+    "docs_fingerprint",
+    "docs_token_stats",
+    "docs_quality",
+    "docs_langid",
+    "docs_pii_scrub",
+    "docs_repetition",
+    "winnow_fingerprint",
+    "token_freq",
+    "token_typo_pairs",
+    "tfidf_top_terms",
+    "token_entropy",
+    "chunk_documents",
+    "docs_quality_filter",
+    "docs_source_stats",
+    "docs_rare_token_ratio",
+    "token_bigram_rates",
+    "docs_quality_model",
+    "docs_source_kl",
+    "docs_perplexity",
+    "token_zipf_fit",
+    "docs_length_histogram",
+    "docs_bigram_perplexity",
+    "vocab_coverage",
+    "langid_confusion",
+    "cms_token_counts",
+    "dsir_importance_weights",
+    "dsir_sample_documents",
+    "docs_ccnet_buckets",
+    "quality_signal_corr",
+    "vocab_growth_fit",
+    "quality_auc_report",
+    "gopher_quality_rules",
+    "domain_mixture_weights",
+    "dataset_card_report",
+]
+
 # The refresh cycle's monitoring views and sanity checks
 # (plans/monitoring, plans/star).
 REFRESH_KEYS = [
@@ -160,11 +200,8 @@ SMOKE_KEYS = [
     "semdedup_embeddings",
     # dedup / curation family
     *DEDUP_KEYS,
-    # text quality / tokenizers / samplers
-    "docs_quality_filter",
-    "docs_bigram_perplexity",
-    "token_entropy",
-    "chunk_documents",
+    # text statistics and samplers
+    *TEXT_KEYS,
     "weighted_sample_documents",
     # streaming drains + multimodal
     "fact_events_streamed",
@@ -205,6 +242,14 @@ def test_dedup_parity_on_empty_tables(spark, empty_dir, name):
     """On empty tables the pair lists, verdict tables, clusters and
     samples have no rows, and the recall and dedup reports one row per
     method or one row of zero counts, as their oracles do."""
+    assert_parity(spark, name, empty_dir)
+
+
+@pytest.mark.parametrize("name", TEXT_KEYS)
+def test_text_parity_on_empty_tables(spark, empty_dir, name):
+    """On empty tables the per-document and per-term tables have no
+    rows, and the corpus fits, the coverage curve and the scorer
+    reports their oracles' rows of zero counts and NULL statistics."""
     assert_parity(spark, name, empty_dir)
 
 

@@ -11,7 +11,7 @@ import re
 import pytest
 
 from healthcare_oltp_to_olap_gcp_spark.catalog import table
-from healthcare_oltp_to_olap_gcp_spark.operators import retrieval
+from healthcare_oltp_to_olap_gcp_spark.operators import corpus, retrieval
 from healthcare_oltp_to_olap_gcp_spark.session import scoped
 
 from .conftest import SF001
@@ -27,7 +27,7 @@ def _theta_of(spark, dfs: list[int]):
     vocab = spark.createDataFrame(
         [(f"t{i}", d) for i, d in enumerate(dfs)], "term string, df long"
     )
-    return vocab.agg(retrieval._theta().alias("theta")).first().theta
+    return vocab.agg(corpus.df_theta().alias("theta")).first().theta
 
 
 @pytest.mark.parametrize(
